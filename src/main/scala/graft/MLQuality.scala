@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Per-round model-quality artifact (`runMain graft.MLQuality [rows] [out]`):
   * runs the reference protocol — seeded 500k-flight corpus
-  * ([[graft.sources.FlightsGenerator]]), clean + plane join, the 25-stage
-  * pipeline, depth-15/60-bin decision tree (reference `src/main/main.py`
-  * lifecycle, hyperparameters from `Model.ipynb`) — and writes
-  * `MLQUALITY.json` with MAE / RMSE / ±10-min label accuracy / top
-  * feature importances, checked against the tolerances the reference
+  * ([[graft.sources.FlightsGenerator]]), clean + plane join, the
+  * five-stage feature pipeline, depth-15/60-bin decision tree (reference
+  * `src/main/main.py` lifecycle, hyperparameters from `Model.ipynb`) —
+  * and writes `MLQUALITY.json` with MAE / RMSE / ±10-min label accuracy /
+  * top feature importances, checked against the tolerances the reference
   * publishes (`README.md:94-95`: MAE 8.07, RMSE 12.87; the seeded
   * synthetic corpus is MORE learnable, so the published numbers are hard
   * upper bounds for a healthy pipeline — round-1 measured 6.84 / 8.83).

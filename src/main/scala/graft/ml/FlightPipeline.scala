@@ -5,19 +5,26 @@ import org.apache.spark.ml.feature.{OneHotEncoder, RobustScaler, StringIndexer, 
 
 import graft.operators.Features
 
-/** M1-M6: the reference's 25-stage feature pipeline
-  * (`/root/reference/src/main/helper_methods.py:252-278`), parameter-exact:
+/** M1-M6: the reference's feature pipeline
+  * (`src/main/helper_methods.py:252-278` in the reference), parameter-exact,
+  * as five stages:
   *
-  *  - per categorical: StringIndexer(handleInvalid=keep) → `<c>_index`,
-  *    OneHotEncoder → `<c>_ONEHOT`
+  *  - one multi-column StringIndexer(handleInvalid=keep, frequencyDesc)
+  *    over every categorical → `<c>_index`
+  *  - one multi-column OneHotEncoder → `<c>_ONEHOT`
   *  - VectorAssembler(numeric, handleInvalid=skip) → `COMBINED_vec`
   *  - RobustScaler(withScaling=true, withCentering=false, 0.25/0.75)
   *    → `scaledFeatures`
   *  - VectorAssembler(ONEHOTs :+ scaledFeatures) → `features`
   *
+  * The reference builds one indexer and one encoder per categorical (25
+  * stages). A multi-column StringIndexer runs the same per-column
+  * frequency count and label ordering as a single-column one, so labels,
+  * output columns and `features` vectors are identical
+  * (`FlightPipelineSpec`); the fused stages fit all label sets in one
+  * aggregate job and save/load 5 stage directories instead of 25.
   * All stages are Spark-ML built-ins; fit/transform run as distributed
-  * Catalyst jobs (one distinct-count job per StringIndexer, one
-  * quantile-summaries job for the scaler).
+  * Catalyst jobs.
   */
 object FlightPipeline {
 
@@ -25,14 +32,15 @@ object FlightPipeline {
       categoricalFeatures: Seq[String] = Features.totalCategoricalFeatures,
       numericFeatures: Seq[String] = Features.importantNumericFeatures): Pipeline = {
 
-    val perCategorical = categoricalFeatures.flatMap { c =>
-      val indexer = new StringIndexer()
-        .setInputCol(c).setOutputCol(s"${c}_index")
-        .setHandleInvalid("keep")
-      val encoder = new OneHotEncoder()
-        .setInputCols(Array(s"${c}_index")).setOutputCols(Array(s"${c}_ONEHOT"))
-      Seq(indexer, encoder)
-    }
+    val indexCols = categoricalFeatures.map(c => s"${c}_index").toArray
+    val oneHotCols = categoricalFeatures.map(c => s"${c}_ONEHOT").toArray
+
+    val indexer = new StringIndexer()
+      .setInputCols(categoricalFeatures.toArray).setOutputCols(indexCols)
+      .setHandleInvalid("keep")
+
+    val encoder = new OneHotEncoder()
+      .setInputCols(indexCols).setOutputCols(oneHotCols)
 
     val numericAssembler = new VectorAssembler()
       .setInputCols(numericFeatures.toArray)
@@ -45,10 +53,10 @@ object FlightPipeline {
       .setLower(0.25).setUpper(0.75)
 
     val finalAssembler = new VectorAssembler()
-      .setInputCols((categoricalFeatures.map(c => s"${c}_ONEHOT") :+ "scaledFeatures").toArray)
+      .setInputCols(oneHotCols :+ "scaledFeatures")
       .setOutputCol("features")
 
     new Pipeline().setStages(
-      (perCategorical ++ Seq(numericAssembler, scaler, finalAssembler)).toArray)
+      Array(indexer, encoder, numericAssembler, scaler, finalAssembler))
   }
 }

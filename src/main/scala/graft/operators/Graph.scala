@@ -185,12 +185,9 @@ object Graph {
     // edge set for that join EVERY round once the node relation is too
     // big to broadcast (exchange reuse never crosses the checkpoint
     // boundary between iterations). One extra build shuffle buys
-    // `iters` join-side exchanges of the edge set. The twin DOUBLES the
-    // cached edge footprint — MEMORY_AND_DISK rather than the cache()
-    // default, so on memory-pressed executors the twin spills instead
-    // of evicting other cached relations and re-deriving per round.
-    val adjByDst = adj.repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // `iters` join-side exchanges of the edge set; the twin doubles the
+    // cached edge footprint.
+    val adjByDst = adj.repartition(col("dst")).cache()
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct().cache()
     val nCount = nodes.agg(count(lit(1)).as("n"))

@@ -115,6 +115,21 @@ class FlightModelSpec extends SparkSpec {
     }
   }
 
+  test("evaluate: None without a non-null pair; MAE/RMSE over the non-null pairs") {
+    def pairs(rows: (Option[Double], Option[Double])*) =
+      rows.toDF("prediction", FlightModel.TargetCol)
+    assert(FlightModel.evaluate(pairs()).isEmpty)
+    assert(FlightModel.evaluate(
+      pairs((Some(1.0), None), (None, Some(2.0)), (None, None))).isEmpty)
+    // d = 3, -4, 0 over the three complete pairs; the null ArrDelay row
+    // drops out: MAE = 7/3, RMSE = sqrt(25/3)
+    val Some((mae, rmse)) = FlightModel.evaluate(pairs(
+      (Some(10.0), Some(7.0)), (Some(0.0), Some(4.0)), (Some(5.0), Some(5.0)),
+      (Some(3.0), None)))
+    assert(math.abs(mae - 7.0 / 3.0) < 1e-12)
+    assert(math.abs(rmse - math.sqrt(25.0 / 3.0)) < 1e-12)
+  }
+
   test("label thresholds: >=10 delayed, <=-10 early, else on time") {
     val df = Seq(-15.0, -10.0, -9.9, 0.0, 9.9, 10.0, 42.0).toDF("prediction")
       .withColumn("ArrDelay", col("prediction").cast("int"))
