@@ -12,66 +12,44 @@ import org.apache.spark.sql.SparkSession
   * service init) so the per-query numbers measure the plans, not JVM
   * startup. */
 object Bench {
+
+  /** Seconds to run gate `name` on `dir` through the noop sink, or -1
+    * when it fails. [[ScaleBench]] times its sweep with the same call. */
+  def runOne(spark: SparkSession, name: String, dir: String): Double = {
+    val t0 = System.nanoTime()
+    try SparkEntry.queries(name)(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name@$dir failed: ${e.getMessage}")
+      return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Contention sentinel: a FIXED single-thread CPU probe (pure JVM
+    * long-mix loop, no Spark, no IO). Its nominal wall is a property of
+    * the HOST, not the engine: on a quiet machine every sample is flat;
+    * in a shared host's degraded windows it inflates with the same
+    * factor the queries do. Committed next to the timings, it lets a
+    * reader NORMALIZE cross-round totals instead of guessing which round
+    * ran contended (rounds 10 and 11 both lacked a clean window and
+    * their totals were incomparable until a same-session re-measure). */
+  def calibrate(): Double = {
+    val t0 = System.nanoTime()
+    var x = 0x9e3779b97f4a7c15L
+    var i = 0
+    while (i < 300000000) { // ~0.5 s nominal, deterministic work
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      i += 1
+    }
+    if (x == 42L) println("") // defeat dead-code elimination
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // activate the graft extensions (SQL function registration + the
-      // TopKWindowRewrite optimizer rule): grouped top-k windows over
-      // (score DESC [, tie]) become bounded-heap aggregates — k rows per
-      // group per partition reach the exchange instead of every row
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ObjectHashAggregate falls back to SORT-based aggregation past 128
-      // in-memory keys per task — that re-sorts the full input and costs
-      // 2.4x at the 10M recall-panel rung. The typed aggregates this
-      // engine leans on (TopKAgg k-heaps, KMV k-sets) have BOUNDED
-      // buffers, so thousands of keys per task are a few MB; raise the
-      // threshold so the heap path stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever; Spark's default guard (65536) sits far
-      // above the real HotSpot limit (DontCompileHugeMethods)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // contention sentinel: a FIXED single-thread CPU probe (pure JVM
-    // long-mix loop, no Spark, no IO) timed before the first rep and
-    // after every rep. Its nominal wall is a property of the HOST, not
-    // the engine — on a quiet machine every sample is flat; in this
-    // VM's documented degraded windows it inflates with the same factor
-    // the queries do. Committed per-rep, it lets the driver/judge
-    // NORMALIZE cross-round totals instead of guessing which round ran
-    // contended (rounds 10 and 11 both lacked a clean window and their
-    // totals were incomparable until a same-session re-measure).
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < 300000000) { // ~0.5 s nominal, deterministic work
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      if (x == 42L) println("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession("graft-bench")
+    def runOne(name: String): Double = Bench.runOne(spark, name, sfDir)
 
     // warm-up (untimed): one cheap query per fixture family, so first-touch
     // costs (codegen compiler, JIT of interpreted HOF paths, parquet footer

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-round model-quality artifact (`runMain graft.MLQuality [rows] [out]`):
@@ -35,32 +34,12 @@ object MLQuality {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(500000L)
     val out = args.lift(1).getOrElse("MLQUALITY.json")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // activate the graft extensions (SQL function registration + the
-      // TopKWindowRewrite optimizer rule): grouped top-k windows over
-      // (score DESC [, tie]) become bounded-heap aggregates — k rows per
-      // group per partition reach the exchange instead of every row
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ObjectHashAggregate falls back to SORT-based aggregation past 128
-      // in-memory keys per task — that re-sorts the full input and costs
-      // 2.4x at the 10M recall-panel rung. The typed aggregates this
-      // engine leans on (TopKAgg k-heaps, KMV k-sets) have BOUNDED
-      // buffers, so thousands of keys per task are a few MB; raise the
-      // threshold so the heap path stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever; Spark's default guard (65536) sits far
-      // above the real HotSpot limit (DontCompileHugeMethods)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-mlquality")
+    // the seeded protocol depends on the shuffle layout: the cleaning
+    // step's dropDuplicates("unique_id") feeds the partition-seeded
+    // sample and randomSplit, so the committed MLQUALITY.json numbers
+    // hold at 32 shuffle partitions only, whatever the core count
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     val t0 = System.nanoTime()
     val flights = graft.sources.FlightsGenerator.flights(spark, rows,

@@ -1,38 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named gated queries
   * (all of them when no names are given) — the per-operator scale audit
   * the build brief asks for (pushed filters, shuffle count, broadcast
   * choices, codegen spans). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // activate the graft extensions (SQL function registration + the
-      // TopKWindowRewrite optimizer rule): grouped top-k windows over
-      // (score DESC [, tie]) become bounded-heap aggregates — k rows per
-      // group per partition reach the exchange instead of every row
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ObjectHashAggregate falls back to SORT-based aggregation past 128
-      // in-memory keys per task — that re-sorts the full input and costs
-      // 2.4x at the 10M recall-panel rung. The typed aggregates this
-      // engine leans on (TopKAgg k-heaps, KMV k-sets) have BOUNDED
-      // buffers, so thousands of keys per task are a few MB; raise the
-      // threshold so the heap path stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever; Spark's default guard (65536) sits far
-      // above the real HotSpot limit (DontCompileHugeMethods)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-plan-audit")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

@@ -93,18 +93,7 @@ object ScaleBench {
     val outDir = args.lift(1).getOrElse("/root/repo/tmp/sf1")
     val names = args.lift(2).map(_.split(",").toSeq).getOrElse(DefaultQueries)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-scale-bench")
 
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
@@ -134,44 +123,21 @@ object ScaleBench {
       java.nio.file.Files.write(marker.toPath, (markerWant + "\n").getBytes("UTF-8"))
     } else println(s"[scalebench] reusing fixture at $outDir ($markerHave)")
 
-    def runOne(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[scalebench] $name@$dir failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // contention sentinel (same probe as Bench.calibrate): one sample
-    // per query, committed — a sweep runs long enough to cross this
-    // VM's degraded windows, and a per-query sentinel tells a reader
-    // WHICH ratios were measured under contention
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < 300000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      if (x == 42L) println("")
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // warm-up both fixtures (codegen, parquet footers) before timing
-    runOne(names.last, srcDir); runOne(names.last, outDir)
-    calibrate() // JIT the probe loop
+    Bench.runOne(spark, names.last, srcDir); Bench.runOne(spark, names.last, outDir)
+    Bench.calibrate() // JIT the probe loop
     def best(name: String, dir: String): Double = {
-      val xs = (1 to reps).map(_ => runOne(name, dir)).filter(_ >= 0)
+      val xs = (1 to reps).map(_ => Bench.runOne(spark, name, dir)).filter(_ >= 0)
       if (xs.isEmpty) -1.0 else xs.min
     }
     val rows = names.map { n =>
       val a = best(n, srcDir)
       val b = best(n, outDir)
-      val c = calibrate()
+      // contention sentinel: one sample per query, committed — a sweep
+      // runs long enough to cross a shared host's degraded windows, and
+      // a per-query sentinel tells a reader WHICH ratios were measured
+      // under contention
+      val c = Bench.calibrate()
       val ratio = if (a > 0 && b > 0) b / a else -1.0
       println(f"[scalebench] $n%-22s sf0.1=$a%7.2f s  sf1=$b%7.2f s  ratio=$ratio%5.2f calib=$c%4.2f")
       (n, a, b, ratio, c)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,35 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (dev-loop subset runs)
     val only: Set[String] = args.drop(2).headOption
       .map(_.split(',').toSet).getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // activate the graft extensions (SQL function registration + the
-      // TopKWindowRewrite optimizer rule): grouped top-k windows over
-      // (score DESC [, tie]) become bounded-heap aggregates — k rows per
-      // group per partition reach the exchange instead of every row
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ObjectHashAggregate falls back to SORT-based aggregation past 128
-      // in-memory keys per task — that re-sorts the full input and costs
-      // 2.4x at the 10M recall-panel rung. The typed aggregates this
-      // engine leans on (TopKAgg k-heaps, KMV k-sets) have BOUNDED
-      // buffers, so thousands of keys per task are a few MB; raise the
-      // threshold so the heap path stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // nano-generation events.parquet reads as epoch-nano longs (the
-      // micro-generation converts at IO.epochNanos instead; both end
-      // as the same BIGINT convention)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever; Spark's default guard (65536) sits far
-      // above the real HotSpot limit (DontCompileHugeMethods)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -38,34 +38,8 @@ object TrainApp {
     finally spark.stop()
   }
 
-  def session(appName: String = "FlightDelayPredictionApp"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .appName(appName)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the SAME planner configuration every driver-contract session runs
-      // (Verify/Bench/DevProbe/EntrySmoke/MLQuality/PlanAudit/test): the
-      // graft extensions register the SQL functions and the
-      // TopKWindowRewrite optimizer rule, and the raised fallback
-      // threshold keeps bounded-buffer typed aggregates hash-based. A
-      // production session outside this config would silently plan
-      // DIFFERENT (verified-nowhere) physical plans — the exact
-      // injected-but-never-active divergence round 9 closed elsewhere.
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR") // reference log level (log4j.properties)
-    s
-  }
+  def session(appName: String = "FlightDelayPredictionApp"): SparkSession =
+    graft.GraftSession(appName)
 
   def run(spark: SparkSession, inputPath: String, outputDir: String,
       countOnly: Boolean, planePath: Option[String], testFile: Option[String],

@@ -57,8 +57,8 @@ object Calibration {
     * no shuffle, no UDF, and crucially NO higher-order function: the
     * earlier `filter(ths, t -> t <= score)` form was CodegenFallback,
     * dropping the whole serving projection to interpreted eval (the
-    * round-8 quantizer defect class; fused-vs-HOF ratio measured at the
-    * 10M `DevProbe calibrate` rung). Scores below the first threshold
+    * round-8 quantizer defect class; fused-vs-HOF ratio measured at a
+    * 10M-row rung, SURVEY §8.12). Scores below the first threshold
     * clamp to the first rate (standard isotonic extrapolation clamps
     * both ends; above-range scores take the last rate by the same
     * rule). Comparisons are on shared doubles, so a DuckDB twin

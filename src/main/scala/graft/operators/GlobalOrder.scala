@@ -60,10 +60,16 @@ object GlobalOrder {
       .sortWithinPartitions(cols: _*)
     val rdd = org.apache.spark.sql.graftbridge.ColumnBridge.internalRdd(ranged)
     val wi = weightIdx
+    val wName = if (wi < 0) "" else ranged.columns(wi)
     val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
       var s = 0L
       if (wi < 0) it.foreach(_ => s += 1L)
-      else it.foreach(r => s += r.getLong(wi))
+      else it.foreach { r =>
+        // UnsafeRow.getLong reads a null as 0: fail instead of summing it
+        if (r.isNullAt(wi)) throw new IllegalArgumentException(
+          s"weight column `$wName` holds a null; prefix sums need non-null weights")
+        s += r.getLong(wi)
+      }
       Iterator((i, s))
     }.collect().sortBy(_._1).map(_._2)
     val starts = totals.scanLeft(0L)(_ + _)
@@ -99,7 +105,8 @@ object GlobalOrder {
     *
     * Same cost model: one range shuffle + a per-partition Long-pair
     * counting job whose collected state is partition-count-sized.
-    * `weightCol` must be integral and non-null.
+    * `weightCol` must be BIGINT and non-null; a null weight fails the
+    * call instead of counting as 0.
     */
   def withPrefixSum(df: DataFrame, orderCols: Seq[String],
       weightCol: String, out: String = "prefix_sum",

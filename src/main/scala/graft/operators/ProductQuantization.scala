@@ -168,8 +168,6 @@ object ProductQuantization {
 
   /** codes expression — the [[encode]] projection as a reusable column
     * (m fused nearest-centroid argmins over slices; map-side). */
-  def encodeCodes(vec: Column, model: PQModel): Column = codesExpr(vec, model)
-
   private def codesExpr(vec: Column, model: PQModel): Column = {
     val sub = model.subDim
     array((0 until model.m).map(j =>

@@ -155,7 +155,7 @@ class FullBatteryPlanAudit extends SparkSpec {
   // Spark's array higher-order functions (transform/aggregate/filter/
   // zip_with/exists/…) are CodegenFallback: ANY projection containing one
   // drops to interpreted per-element expression dispatch — measured 15×
-  // (isotonic apply, 256-bin fit, DevProbe calibrate 10M) to 30× (int8
+  // (isotonic apply, 256-bin fit, 10M rows, SURVEY §8.12) to 30× (int8
   // quantizer, round-8 50M rung). The standing rule bans them from
   // data-sized per-row paths; this audit is the rule's enforcement: a new
   // query that plans a lambda must either fuse (native expression — see

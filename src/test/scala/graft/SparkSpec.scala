@@ -3,39 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per suite via lazy val). */
+/** Shared local SparkSession for all suites (one per suite via lazy val).
+  * Built by [[GraftSession]] like every main; build.sbt pins the forked
+  * test JVM to `SPARK_GRAFT_CPUS=4`, so suites run on `local[4]` with 4
+  * shuffle partitions on any host. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // activate the graft extensions (SQL function registration + the
-      // TopKWindowRewrite optimizer rule): grouped top-k windows over
-      // (score DESC [, tie]) become bounded-heap aggregates — k rows per
-      // group per partition reach the exchange instead of every row
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // ObjectHashAggregate falls back to SORT-based aggregation past 128
-      // in-memory keys per task — that re-sorts the full input and costs
-      // 2.4x at the 10M recall-panel rung. The typed aggregates this
-      // engine leans on (TopKAgg k-heaps, KMV k-sets) have BOUNDED
-      // buffers, so thousands of keys per task are a few MB; raise the
-      // threshold so the heap path stays hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // stages whose generated method exceeds the JVM's 8 KB JIT
-      // bytecode cap must FALL BACK (non-WSCG) instead of running
-      // interpreted forever; Spark's default guard (65536) sits far
-      // above the real HotSpot limit (DontCompileHugeMethods)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession("graft-test")
 }

@@ -51,6 +51,11 @@ class TrainAppSpec extends SparkSpec {
         "graft.functions.GraftExtensions")
       assert(app.conf.get(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "4096")
+      assert(app.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000")
+      assert(app.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(app.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(app.conf.get("spark.sql.shuffle.partitions") ==
+        graft.GraftSession.cores.toString)
       // a grouped top-k window planned IN THE APP SESSION rewrites to the
       // bounded-heap aggregate — the plan users actually get
       import app.implicits._

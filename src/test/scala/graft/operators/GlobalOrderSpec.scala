@@ -45,6 +45,17 @@ class GlobalOrderSpec extends SparkSpec {
     assert(run(7) == expect)
   }
 
+  test("prefix sum fails fast on a null weight instead of counting it as 0") {
+    val df = Seq((1L, 1L, Some(2L)), (2L, 2L, None), (3L, 3L, Some(4L)))
+      .toDF("v", "id", "w")
+    val e = intercept[Exception](
+      GlobalOrder.withPrefixSum(df, Seq("v", "id"), "w", "ps").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("weight column `w` holds a null")),
+      msgs.mkString("\n"))
+  }
+
   test("abcClassification: inclusive cumulative-share cuts, exact cents") {
     // revenues 50, 30, 15, 5 → shares 0.5, 0.8, 0.95, 1.0 → A A B C
     val df = Seq(("p1", 50.0), ("p2", 30.0), ("p3", 15.0), ("p4", 5.0))
