@@ -1,15 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import graft.gates._
+import graft.gates.Shared.t
+
+/** Gate registry — see SURVEY.md §7.
   *
-  * Every implemented operator from SURVEY.md §2 gets one entry in [[queries]]
-  * (a `(SparkSession, sfDir) => DataFrame`) and, when SQL-expressible, a
-  * matching DuckDB oracle in [[oracleSql]]. Column names/aliases MUST match
-  * between the two — the driver sorts columns by name before hashing.
+  * Every implemented operator from SURVEY.md §2 is one [[Gate]]: its name,
+  * its `(SparkSession, sfDir) => DataFrame` and, when SQL-expressible, its
+  * DuckDB oracle (else the reason it has none), side by side in a family
+  * file under `graft.gates`. [[queries]] and [[oracleSql]] are derived from
+  * [[gates]]. Column names/aliases MUST match between a gate and its oracle
+  * — the compare sorts columns by name before hashing.
   *
   * Cross-engine determinism rules used throughout (so value hashes match
   * bit-for-bit between Spark and DuckDB):
@@ -28,88 +32,6 @@ import org.apache.spark.sql.functions._
   *  - Every result has a deterministic ORDER BY on a unique key.
   */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.IO.table(spark, dir, name)
-
-  /** Scratch path for sink round-trip queries, keyed by the input dir so
-    * two concurrent gate/test runs on one host (different sfDirs) never
-    * delete or overwrite each other's data mid-query. Same-sfDir runs
-    * still share a path — that is the per-(sfDir) cache behavior the IVF
-    * index fixture uses deliberately. */
-  private def tmpFor(dir: String, name: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-
-  /** Catalog-object suffix with the same per-(sfDir) isolation as
-    * [[tmpFor]] (table names collide across concurrent runs too). */
-  private def runToken(dir: String): String =
-    Integer.toHexString(dir.hashCode)
-
-  /** Wide variant for per-row compute-heavy queries: the fixture tables are
-    * single-file/single-row-group parquet — an unsplittable scan, so every
-    * stage before the first exchange runs as ONE task no matter how many
-    * cores exist. One cheap round-robin exchange spreads the expensive
-    * projection across the cluster; on a real multi-file dataset
-    * (partitions ≥ cores) the fan-out is a no-op. */
-  private def tw(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = t(spark, dir, name)
-    val p = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
-  /** Pre-built IVF index fixture: quantizer training + corpus assignment
-    * run ONCE per (sfDir) and land on disk as a cid-partitioned parquet
-    * (the "stored bucketed by list" layout a deployed IVF index uses) +
-    * a centroid table. The gated query then measures what a deployment
-    * pays per query — centroid argmax + a partition-pruned probe of the
-    * nprobe lists — not the offline index build. */
-  private final case class IvfIdx(listsDir: String,
-      centroids: Seq[(Int, Seq[Float])], query: Array[Float])
-  private val ivfIndexCache = new java.util.concurrent.ConcurrentHashMap[String, IvfIdx]()
-  private def ivfIndex(s: SparkSession, dir: String): IvfIdx =
-    ivfIndexCache.computeIfAbsent(dir, _ => {
-      val sim = graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val centroids = sim.trainCentroids(emb, "embedding", k = 8, maxIter = 5)
-      val assigned = sim.ivfAssign(emb, "vec_id", "embedding", centroids)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_index_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-      graft.sources.IO.writePartitioned(assigned, s"$out/lists", Seq("cid"))
-      // centroid table + fixture query vector are config-sized — they live
-      // with the index as driver-side data (a deployment ships them with
-      // the model artifact), so the probe pays no lookup jobs for them
-      val cents = centroids.collect().map(r =>
-        (r.getInt(0), r.getSeq[Float](1))).toSeq
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      IvfIdx(s"$out/lists", cents, q)
-    })
-
-  /** Order-independent exact sum of a float column: decimal accumulate,
-    * double result. */
-  /** Shared engine side of the two ANN contract gates (the twin of
-    * [[annContractOracleSql]]): the exact brute-force top-k rows
-    * carrying the contract panel — the ANN probe returned exactly k
-    * rows AND recall@k ≥ 0.8 — so the approximation stays engine-side
-    * while its CONTRACT is hash-gated. */
-  private def annContractGate(brute: DataFrame, ann: DataFrame,
-      minHits: Int): DataFrame = {
-    val panel = brute
-      .join(ann.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("__hits"))
-      .crossJoin(ann.agg(count(lit(1)).as("ann_k")))
-      .select(col("ann_k"), (col("__hits") >= minHits).as("recall_ok"))
-    brute.crossJoin(broadcast(panel))
-      .orderBy(col("cos").desc, col("vec_id"))
-  }
-
-  private def dsum(c: Column, scale: Int = 6): Column =
-    sum(c.cast(s"decimal(38,$scale)")).cast("double")
-
-  /** Exact mean built from the decimal sum (same bits in both engines). */
-  private def davg(c: Column, scale: Int = 6): Column =
-    dsum(c, scale) / count(c)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     *
@@ -131,8923 +53,24 @@ object SparkEntry {
       .orderBy(col("l_returnflag"))
   }
 
-  /** One per implemented operator from SURVEY.md §2 (IDs in comments). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ───────────────────────── scans (§2.1) ─────────────────────────
-    // S1/S4 + A3: parquet scan + count action (helper_methods.py:372-380)
-    "q_s_scan_count" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(count(lit(1)).as("n"))),
-
-    // S1/S2: the CSV reader surface hash-gated — a seeded fixture
-    // written at dump time (same bytes plain + bz2); Spark reads the
-    // BZ2 side through the full option set (header, inferSchema,
-    // nullValue=NA, quoted embedded commas, transparent decompress),
-    // the oracle reads the PLAIN side with DuckDB's read_csv — so the
-    // whole reader config is what the hash compares. Prices are exact
-    // quarters: decimal-sum parity is trivial by construction.
-    "q_s_csv" -> ((s, dir) => {
-      val (_, bz2) = graft.sources.IO.seededCsvFixture()
-      graft.sources.IO.readCsv(s, bz2)
-        .groupBy(col("grp"))
-        .agg(count(lit(1)).as("n"),
-          count(col("qty")).as("n_qty"),
-          sum(col("qty")).cast("bigint").as("sum_qty"),
-          sum(col("price").cast("decimal(38,6)")).cast("double").as("sum_price"),
-          count(col("note")).as("n_note"))
-        .orderBy(col("grp"))
-    }),
-
-    // ─────────────────── projection / filters (§2.2) ───────────────────
-    // P3: narrow projection (dataset_utils.py:145)
-    "q_p3_project" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"), col("p_name"), col("p_retailprice"))
-        .orderBy(col("p_partkey"))),
-
-    // P4: selectExpr SQL-expression projection (helper_methods.py:162)
-    "q_p4_selectexpr" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .selectExpr("max(l_extendedprice) / min(l_extendedprice) AS price_ratio")),
-
-    // P5 + P6: conjunctive null/value predicates (dataset_utils.py:123-124)
-    "q_p5_filter_conj" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_quantity").isNotNull && col("l_discount") > 0.05 &&
-          col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
-
-    // P7: string-expression filter through the Catalyst SQL parser
-    // (helper_methods.py:176)
-    "q_p7_sql_filter" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .filter("o_totalprice > 150000.0")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
-
-    // P8 / F9: IN-list filter (dataset_utils.py:15-17, custom_features.py:55)
-    "q_p8_isin" -> ((s, dir) =>
-      t(s, dir, "part")
-        .filter(col("p_brand").isin("Brand#1", "Brand#7", "Brand#13"))
-        .select(col("p_partkey"), col("p_brand"))
-        .orderBy(col("p_partkey"))),
-
-    // P9 rewrite: ALL per-column null counts in one pass
-    // (vs one job per column, helper_methods.py:68 — SURVEY §4.3)
-    "q_p9_null_counts" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("nn_qty"),
-        sum(when(col("l_discount").isNull, 1L).otherwise(0L)).as("nn_discount"),
-        sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)).as("nn_ship"))),
-
-    // ───────────────────────── joins (§2.3) ─────────────────────────
-    // J1: fact ⋈ broadcast dim + aggregate (dataset_utils.py:47-50)
-    "q_j1_dim_join" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"), "inner")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // J1 at fact-fact scale: lineitem ⋈ orders (shuffle join path; at 100 TB
-    // this is the bucketed/sort-merge join, not a broadcast)
-    "q_j1_fact_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      li.join(o, li("l_orderkey") === o("o_orderkey"), "inner")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("sum_qty"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // J2: anti-join — keys on the left with no match on the right
-    // (rewrite of the reference's collect+isin, dataset_utils.py:12-17).
-    // Every fixture custkey has an order, so 25 MISSING keys are planted
-    // (negative, derived from nation — deterministic, order-free) to make
-    // the gate non-vacuous: a broken anti-join can no longer hash-match
-    // on an empty output.
-    "q_j2_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"))
-      val planted = t(s, dir, "nation")
-        .select((-col("n_nationkey").cast("bigint") - lit(1L)).as("c_custkey"))
-      val o = t(s, dir, "orders")
-      c.union(planted)
-        .join(o, col("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J2 dual: semi-join (EXISTS)
-    "q_j_semi" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J1 chained: star-schema dim chain, both dims broadcast
-    "q_j_multi_dim" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy(col("r_name"))
-    }),
-
-    // ─────────────────────── aggregations (§2.4) ───────────────────────
-    // A1: group-by + mean, exact decimal-sum mean (helper_methods.py:159)
-    "q_a1_group_mean" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag"))),
-
-    // A2 + A10: global scalar aggregate panel (helper_methods.py:332, main.py:38)
-    "q_a2_global_stats" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        count(lit(1)).as("n"),
-        dsum(col("l_extendedprice")).as("sum_price"),
-        davg(col("l_extendedprice")).as("avg_price"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"))),
-
-    // A4 rewrite: all distinct counts in ONE aggregate job
-    // (vs one job per column, helper_methods.py:60-61 — SURVEY §4.3)
-    "q_a4_distinct_counts" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        countDistinct(col("l_returnflag")).as("d_flag"),
-        countDistinct(col("l_linestatus")).as("d_status"),
-        countDistinct(col("l_partkey")).as("d_part"))),
-
-    // A5: exact interpolated percentiles (approxQuantile with relErr=0,
-    // helper_methods.py:70; both engines interpolate linearly)
-    "q_a5_percentiles" -> ((s, dir) =>
-      t(s, dir, "lineitem").selectExpr(
-        "percentile(l_quantity, array(0.05D, 0.25D, 0.5D, 0.75D, 0.95D)) AS q")
-        .selectExpr(
-          "element_at(q, 1) AS p05", "element_at(q, 2) AS p25",
-          "element_at(q, 3) AS p50", "element_at(q, 4) AS p75",
-          "element_at(q, 5) AS p95")),
-
-    // A6: Pearson correlation (helper_methods.py:69), rounded — the moment
-    // accumulation order differs between engines
-    "q_a6_corr" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"),
-        round(corr(col("l_discount"), col("l_tax")), 6).as("corr_disc_tax"))),
-
-    // A8: frequency crosstab in long form (generate_report_figures.py:43-44)
-    "q_a8_crosstab" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("source"))),
-
-    // A9: mean of a measure by group, exact (generate_report_figures.py:122)
-    "q_a9_group_means" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), davg(col("value")).as("avg_value"))
-        .orderBy(col("event_type"))),
-
-    // A-rollup: hierarchical subtotals (SURVEY §2.4 "built-in if needed");
-    // null group markers are coalesced to a sentinel so cross-engine NULL
-    // ordering never matters
-    "q_a_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("qty"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("ls"),
-          col("n"), col("qty"))
-        .orderBy(col("rf"), col("ls"))),
-
-    // A-cube: full cross-dimensional subtotals
-    "q_a_cube" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("ls"), col("n"))
-        .orderBy(col("rf"), col("ls"))),
-
-    // A8-wide: static pivot (fixed value list keeps the schema static)
-    "q_a8_pivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .pivot("l_linestatus", Seq("F", "O", "P"))
-        .count()
-        .na.fill(0L)
-        .orderBy(col("l_returnflag"))),
-
-    // A6-matrix: full pairwise Pearson correlation matrix in one aggregate
-    // pass (helper_methods.py:82-90 does it via toPandas().corr() on a
-    // sample; here it is distributed), rounded for cross-engine moments
-    "q_a6_corr_matrix" -> ((s, dir) =>
-      graft.operators.Profiling.correlationMatrix(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .select(col("col_a"), col("col_b"), round(col("corr"), 6).as("corr"))
-        .orderBy(col("col_a"), col("col_b"))),
-
-    // A8-norm: row-normalized crosstab — the reference's
-    // pd.crosstab(..., normalize='index') (generate_report_figures.py:44)
-    "q_a8_crosstab_norm" -> ((s, dir) =>
-      graft.operators.Profiling.crosstabNormalized(
-          t(s, dir, "lineitem"), "l_returnflag", "l_linestatus")
-        .select(col("l_returnflag"),
-          round(col("F"), 6).as("F"), round(col("O"), 6).as("O"))
-        .orderBy(col("l_returnflag"))),
-
-    // A-histogram: equal-width bucketed counts (width_bucket semantics) —
-    // the data side of the residual histogram (generate_report_figures.py:113)
-    "q_a_histogram" -> ((s, dir) =>
-      graft.operators.Profiling.histogram(t(s, dir, "lineitem"),
-        "l_extendedprice", lo = 0.0, hi = 110000.0, bins = 11)
-        .orderBy(col("bucket"))),
-
-    // A11: MAE/RMSE as pure SQL aggregates (helper_methods.py:346-369);
-    // prediction is a deterministic synthetic column
-    "q_a11_reg_metrics" -> ((s, dir) => {
-      val d = col("l_quantity") * lit(1000.0) - col("l_extendedprice")
-      tw(s, dir, "lineitem").agg(
-        (dsum(abs(d)) / count(lit(1))).as("mae"),
-        sqrt(dsum(d * d) / count(lit(1))).as("rmse"))
-    }),
-
-    // ──────────────────────── windows (§2.5) ────────────────────────
-    // W1: row_number over (partition, order) — dedup-rank pattern
-    // (helper_methods.py:171-179)
-    "q_w1_row_number" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("event_id"), col("user_id"), col("rn"))
-        .orderBy(col("event_id"))
-    }),
-
-    // W-topk-long: grouped top-k whose primary is a LONG (ids-as-scores,
-    // timestamps, counters — the most common remaining top-k idiom).
-    // The coalesce proves non-nullability (parquet columns read as
-    // nullable), so TopKWindowRewrite plans the bounded-heap aggregate
-    // on RAW long keys — lossless above 2^53, where the double embedding
-    // collides; FullBatteryPlanAudit's heap-plan test pins the rewrite
-    // actually firing here.
-    "q_w_topk_long" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(coalesce(col("o_orderkey"), lit(Long.MinValue)).desc)
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("o_orderpriority"), col("o_orderkey"), col("rn"))
-        .orderBy(col("o_orderpriority"), col("rn"))
-    }),
-
-    // W-topk-rank: the ties-aware grouped top-k idiom — rank() <= k,
-    // where ties at the k-th boundary ALL survive (the output legally
-    // exceeds k rows per group: ~390 rank-1 rows per returnflag here).
-    // NOT heap-expressible; TopKWindowRewrite plans the threshold
-    // aggregate RankTopKAgg (buffer O(k + group output), no full-group
-    // sort anywhere); FullBatteryPlanAudit pins the rewrite firing.
-    // Unlike row_number top-k, the output SET is fully deterministic —
-    // no arbitrary tie-pick — so the oracle needs no tiebreaker column.
-    "q_w_topk_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("l_quantity").desc)
-      t(s, dir, "lineitem")
-        .withColumn("rk", rank().over(w))
-        .filter(col("rk") <= 2)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("rk"))
-        .orderBy(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // W-topk-dense: dense_rank() <= k — all rows of the k largest
-    // DISTINCT key values per group (no rank skipping). Bucketed price
-    // (floor/10000) gives a small int key domain so several rows share
-    // each kept bucket; same threshold-aggregate plan as q_w_topk_rank.
-    "q_w_topk_dense" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("price_bucket").desc)
-      t(s, dir, "orders")
-        .withColumn("price_bucket",
-          floor(col("o_totalprice") / 10000).cast("int"))
-        .withColumn("dr", dense_rank().over(w))
-        .filter(col("dr") <= 2)
-        .select(col("o_orderpriority"), col("o_orderkey"),
-          col("price_bucket"), col("dr"))
-        .orderBy(col("o_orderpriority"), col("o_orderkey"))
-    }),
-
-    // W2 rewrite: per-row global max WITHOUT the reference's unpartitioned
-    // window (dataset_utils.py:55-60) — scalar agg + broadcast cross join;
-    // the fact side keeps its partitioning at any scale
-    "q_w2_global_max_share" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val mx = o.agg(max(col("o_totalprice")).as("__max_total"))
-      o.crossJoin(broadcast(mx))
-        .select(col("o_orderkey"),
-          (col("o_totalprice") / col("__max_total")).as("price_share"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // W3: lag over (partition, order) (notebook cell 26)
-    "q_w3_lag" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("event_id"),
-          coalesce(lag(col("value"), 1).over(w), lit(-1.0)).as("prev_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // W-stacked: batch sessionization — lag marks gap starts, running sum
-    // numbers the sessions (the batch twin of the streaming
-    // flatMapGroupsWithState sessionizer; 30-min gap on epoch-nano ts)
-    "q_w_sessionize" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val gapStart = when(
-        col("ts") - lag(col("ts"), 1).over(w) > 1800000000000L, 1).otherwise(0)
-      t(s, dir, "events")
-        .withColumn("session_idx",
-          sum(gapStart).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("long"))
-        .select(col("event_id"), col("user_id"), col("session_idx"))
-        .orderBy(col("event_id"))
-    }),
-
-    // W-funnel: strict-order multi-step funnel over a sparse event slice
-    // — ONE user-keyed shuffle + a per-user HOF fold instead of one
-    // self-join per step; greedy-earliest matching, ties rejected. The
-    // oracle is the equivalent conditional-min CTE chain. Timestamps
-    // truncate to MICROSECONDS first (DuckDB's parquet reader drops
-    // sub-µs), so ordering, ties, and delta sums agree bit-for-bit.
-    "q_w_funnel" -> ((s, dir) =>
-      graft.operators.Funnel.summary(
-          t(s, dir, "events").where(col("event_id") % 7 === 0)
-            .withColumn("ts_us", expr("ts DIV 1000")),
-          "user_id", "event_type", "ts_us",
-          Seq("view", "signup", "click", "purchase"))
-        .withColumnRenamed("sum_delta_ns", "sum_delta_us")),
-
-    // W-frame: running sum over ROWS UNBOUNDED PRECEDING..CURRENT, exact
-    "q_w_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("event_id"),
-          sum(col("value").cast("decimal(18,2)")).over(w).cast("double").as("run_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ─────────────── dedup / sort / limit / sample (§2.6) ───────────────
-    // D1: distinct projection (dropDuplicates semantics on the projected key)
-    "q_d1_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .distinct()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    // D2: seeded Bernoulli sample (helper_methods.py:44) — engine-specific
-    // RNG, so no SQL oracle; driver records a rows-only check
-    "q_d2_sample" -> ((s, dir) =>
-      t(s, dir, "lineitem").sample(0.1, 42L)
-        .agg(count(lit(1)).as("n"))),
-
-    // D5 + D7: distributed top-k (TakeOrderedAndProject)
-    "q_d5_topk" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))),
-
-    // D7: full descending sort (small dim)
-    "q_d7_sort_desc" -> ((s, dir) =>
-      t(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))
-        .orderBy(col("n_name").desc)),
-
-    // ─────────────────────── set ops (§2.7) ───────────────────────
-    // SO1: EXCEPT DISTINCT (dataset_utils.py:14). Same planted-key
-    // de-vacuation as q_j2_anti: every custkey appears in orders, so 25
-    // negative keys ride the left side to keep the output non-empty.
-    "q_so1_except" -> ((s, dir) =>
-      t(s, dir, "customer").select(col("c_custkey").as("key"))
-        .union(t(s, dir, "nation")
-          .select((-col("n_nationkey").cast("bigint") - lit(1L)).as("key")))
-        .except(t(s, dir, "orders").select(col("o_custkey").as("key")))
-        .orderBy(col("key"))),
-
-    // SO: UNION DISTINCT + INTERSECT counts in one row
-    "q_so2_union_intersect" -> ((s, dir) => {
-      val ck = t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      val nk = t(s, dir, "nation").select(col("n_nationkey").as("k"))
-      val u = ck.union(nk).distinct().agg(count(lit(1)).as("n_union"))
-      val i = ck.intersect(nk).agg(count(lit(1)).as("n_intersect"))
-      u.crossJoin(i)
-    }),
-
-    // SO-all: multiset set ops — EXCEPT ALL / INTERSECT ALL keep
-    // duplicate multiplicity (the DISTINCT variants above collapse it);
-    // lineitem's repeated (orderkey) values make multiplicity observable
-    "q_so_all" -> ((s, dir) => {
-      val a = t(s, dir, "lineitem").filter(col("l_linenumber") <= 4)
-        .select(col("l_orderkey").as("key"))
-      val b = t(s, dir, "lineitem").filter(col("l_linenumber") >= 3)
-        .select(col("l_orderkey").as("key"))
-      a.exceptAll(b).groupBy(col("key")).agg(count(lit(1)).as("n_except"))
-        .join(a.intersectAll(b).groupBy(col("key"))
-          .agg(count(lit(1)).as("n_intersect")), Seq("key"), "full_outer")
-        .select(col("key"),
-          coalesce(col("n_except"), lit(0L)).as("n_except"),
-          coalesce(col("n_intersect"), lit(0L)).as("n_intersect"))
-        .orderBy(col("key"))
-    }),
-
-    // J-outer: full-outer join — both unmatched sides surface with nulls
-    // (the only outer shape not already gated); per-side null census
-    // proves the preserved rows
-    "q_j_outer" -> ((s, dir) => {
-      val odd = t(s, dir, "nation").filter(col("n_nationkey") % 2 === 1)
-        .select(col("n_nationkey").as("k"), col("n_name"))
-      val low = t(s, dir, "nation").filter(col("n_nationkey") < 13)
-        .select(col("n_nationkey").as("k"), col("n_regionkey"))
-      odd.join(low, Seq("k"), "full_outer")
-        .select(col("k"), col("n_name"), col("n_regionkey"))
-        .orderBy(col("k"))
-    }),
-
-    // ─────────────── scalar-function battery (§2.8, F1-F12) ───────────────
-    // F1 concat_ws, F2 regexp_replace, F3 substring, F4 cast, F5 when,
-    // F6 sin (rounded), F7 arithmetic incl. integer div/mod on epoch nanos,
-    // F8 lit, F9 isin, F11 alias, F12 comparisons — one per-row battery
-    "q_f_expr_battery" -> ((s, dir) =>
-      tw(s, dir, "events").select(
-        col("event_id"),
-        concat_ws("_", col("user_id"), col("event_type")).as("uid"),
-        regexp_replace(col("props"), "[^0-9]", "").as("digits"),
-        substring(col("event_type"), 1, 2).as("et2"),
-        col("value").cast("int").as("val_int"),
-        when(col("value").isNull, "null")
-          .when(col("value") < 50, "low")
-          .when(col("value") < 150, "mid")
-          .otherwise("high").as("bucket"),
-        expr("CAST((ts DIV 60000000000) % 1440 AS INT)").as("minute_of_day"),
-        round(sin(lit(2 * math.Pi) *
-          expr("CAST((ts DIV 60000000000) % 1440 AS INT)") / lit(1440.0)), 6)
-          .as("minute_sin"),
-        (col("value") % 100.0).as("val_mod"),
-        lit(1).as("one"),
-        col("event_type").isin("signup", "error").as("is_sig"))
-        .orderBy(col("event_id"))),
-
-    // F1 composite key on its own (dataset_utils.py:131-134)
-    "q_f1_unique_id" -> ((s, dir) =>
-      tw(s, dir, "orders")
-        .select(col("o_orderkey"),
-          concat_ws("_", col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-            .as("unique_id"))
-        .orderBy(col("o_orderkey"))),
-
-    // F-json: semi-structured extraction from the props JSON column
-    // (get_json_object path expression + typed cast + aggregation)
-    "q_f_json" -> ((s, dir) =>
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("k")).cast("long").as("sum_k"),
-          max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))),
-
-    // F-array: explode/collect round trip — per-user sorted distinct event
-    // types joined to a string (string output: array renderings differ
-    // between engines' dataframe bridges)
-    "q_f_array_agg" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(concat_ws(",", sort_array(collect_set(col("event_type"))))
-          .as("types"))
-        .orderBy(col("user_id"))),
-
-    // F-date: year/month extraction from a timestamp column
-    "q_f_date_parts" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(year(col("l_shipdate")).as("y"), month(col("l_shipdate")).as("m"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("y"), col("m"))),
-
-    // ──────────────────────── UDF surface (§2.9) ────────────────────────
-    // U1: the reference's Python time-of-day UDF as a registered Scala UDF
-    // (custom_features.py:7-36); oracle is the equivalent CASE expression —
-    // proves UDF output matches the native path
-    "q_u1_udf_tod" -> ((s, dir) => {
-      graft.operators.Features.registerTimeOfDayUdf(s)
-      tw(s, dir, "events")
-        .withColumn("h", expr("CAST((ts DIV 3600000000000) % 24 AS INT)"))
-        .withColumn("tod", call_udf("categorize_time", col("h")))
-        .groupBy(col("tod")).agg(count(lit(1)).as("n"))
-        .orderBy(col("tod"))
-    }),
-
-    // ───────── training-data-pipeline extensions (documents/embeddings) ─────────
-    // X-dedup: exact-dup census over the corpus
-    "q_x_dedup_exact" -> ((s, dir) =>
-      t(s, dir, "documents").agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("text")).as("n_unique"))),
-
-    // X-text: token counting (whitespace + BPE-ish regex)
-    "q_x_tokens" -> ((s, dir) =>
-      tw(s, dir, "documents").select(
-        col("doc_id"),
-        graft.operators.TextAnalysis.wsTokenCount(col("text")).as("n_ws"),
-        graft.operators.TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish"))
-        .orderBy(col("doc_id"))),
-
-    // X-text: quality scoring (length/punct/stopword ratios + composite)
-    "q_x_quality" -> ((s, dir) =>
-      graft.operators.TextAnalysis.withQualitySignals(tw(s, dir, "documents"), "text")
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("punct_ratio"), 6).as("pr"),
-          round(col("stopword_ratio"), 6).as("sr"),
-          round(col("quality_score"), 6).as("score"))
-        .orderBy(col("doc_id"))),
-
-    // X-text: language-ID heuristic (marker-word argmax)
-    // every 25th doc is replaced by an UNSEGMENTED Chinese paragraph: the
-    // char-level CJK fallback must classify it zh in both engines (the
-    // oracle counts zh marker chars with a char class — RE2's \b cannot
-    // match inside an ideograph run)
-    "q_x_langid" -> ((s, dir) => {
-      val zhDoc = lit("这是一个没有空格的中文测试文档他说的话我不在乎但是有人了解这个情况")
-      val d = tw(s, dir, "documents").withColumn("sample",
-        when(pmod(col("doc_id"), lit(25L)) === 3, zhDoc).otherwise(col("text")))
-      graft.operators.TextAnalysis.withLanguageId(d, "sample")
-        .select(col("doc_id"), col("lang_guess"), col("hits_en"), col("hits_zh"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-sim: brute-force cosine top-k against the vec_id=0 embedding —
-    // the exact ANN baseline (fused native cosine expression)
-    "q_x_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      graft.operators.Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-    }),
-
-    // X-negatives: hard-negative mining for contrastive training —
-    // bounded broadcast anchor batch × one linear corpus scan
-    // (label-mismatch filtered map-side), per-anchor top-3 window
-    "q_x_hard_negatives" -> ((s, dir) =>
-      graft.operators.Similarity.hardNegatives(
-          t(s, dir, "embeddings"), "vec_id", "embedding", "label",
-          col("vec_id") < 10, k = 3)
-        .orderBy(col("qid"), col("rank"))),
-
-    // X-text: winnowed 64-bit document fingerprint over the PLANTED
-    // corpus — xxhash64 is engine-specific, so the oracle is the
-    // independently-computed golden VALUES table
-    // ([[graft.operators.HashGoldens]]: plain-Scala shingle → min-k →
-    // roll-up sharing only the XXH64 primitive). Any plumbing
-    // regression (shingling, distinctness, selection, roll-up chain)
-    // lands off-golden and is hash-visible.
-    "q_x_fingerprint" -> ((s, dir) =>
-      graft.operators.HashGoldens.corpusDF(s)
-        .select(col("doc_id"),
-          graft.operators.TextAnalysis.fingerprint64(col("text")).as("fp"))
-        .orderBy(col("doc_id"))),
-
-    // X-dedup: SimHash fingerprints over the planted corpus, golden-
-    // oracled (same scheme; tokenization + vote loop gated)
-    "q_x_simhash" -> ((s, dir) =>
-      graft.operators.Dedup.withSimhash(
-        graft.operators.HashGoldens.corpusDF(s), "text")
-        .select("doc_id", "fp").orderBy(col("doc_id"))),
-
-    // X-simhash-md5: the fully-ORACLED SimHash twin — 60-bit md5 token
-    // hashes, ±1 bit votes, pure HOFs in both engines (the last sketch
-    // family to gain an oracled twin; the native xxhash64 expression
-    // above stays the production path)
-    "q_x_simhash_md5" -> ((s, dir) =>
-      tw(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          graft.operators.Dedup.simhash60Md5(col("text")).as("fp"))
-        .orderBy(col("doc_id"))),
-
-    // X-dedup: MinHash LSH band table over the planted corpus, golden-
-    // oracled (shingle → 32-seed signature → 8-band salted hash all
-    // reproduced independently driver-side)
-    "q_x_minhash_bands" -> ((s, dir) => {
-      val d = graft.operators.HashGoldens.corpusDF(s)
-      val sig = d.select(col("doc_id"),
-        graft.operators.Dedup.minhashSignature(
-          graft.operators.Dedup.shingles(col("text"), 3), 32).as("sig"))
-      graft.operators.Dedup.lshBands(sig, "doc_id", "sig", 32, 8)
-        .orderBy(col("doc_id"), col("band_idx"))
-    }),
-
-    // X-dedup: MD5-based MinHash near-dup candidates — the cross-engine-
-    // hashable twin of q_x_minhash_bands. Per (doc, seed) the sketch is
-    // min over shingles of md5(seed ':' shingle); fixed-length lowercase
-    // hex compares lexicographically == numerically in BOTH engines, so
-    // the whole sketch (and the (seed, minhash)-bucket candidate join
-    // behind it) is DuckDB-oracled hash-exact. Plan shape is the real
-    // near-dup shape at scale: explode → map-side-combined min per
-    // (doc, seed) → bucket self-join on (seed, hash) — never O(n²).
-    "q_x_minhash_md5" -> ((s, dir) => {
-      val shingled = t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(graft.operators.Dedup.shingles(col("text"), 3)).as("sh"))
-      // 8 parallel min-aggregates over ONE pass of the exploded shingles
-      // (a seed-explode would push every shingle row through the shuffle
-      // 8×); the wide row then unpivots to (seed, h) for the bucket join
-      val minAggs = (0 until 8).map(i =>
-        min(md5(concat_ws(":", lit(i), col("sh")))).as(s"h$i"))
-      val wide = shingled.groupBy(col("doc_id"))
-        .agg(minAggs.head, minAggs.tail: _*)
-      val mins = wide.select(col("doc_id"),
-        posexplode(array((0 until 8).map(i => col(s"h$i")): _*))
-          .as(Seq("seed", "h")))
-      val a = mins.select(col("seed"), col("h"), col("doc_id").as("id1"))
-      val b = mins.select(col("seed"), col("h"), col("doc_id").as("id2"))
-      a.join(b, Seq("seed", "h"))
-        .filter(col("id1") < col("id2"))
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).cast("bigint").as("n_shared_slots"))
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // X-pq: product quantization — the memory side of billion-scale
-    // ANN (IVF prunes which vectors a probe touches; PQ shrinks what
-    // each probe costs to m byte codes + table lookups). Subspace
-    // codebooks train on the ALREADY-ORACLED k-means loop over vector
-    // slices; encode is the fused nearest-centroid per slice
-    // (map-side); ADC distance folds m literal-table lookups and plans
-    // as TakeOrderedAndProject. The generated oracle re-encodes every
-    // vector independently from the inlined codebooks.
-    "q_x_pq" -> ((s, dir) => {
-      val pq = graft.operators.ProductQuantization
-      val emb = t(s, dir, "embeddings")
-      val (model, qv) = pq.gateModel(emb, dir)
-      pq.adcTopK(pq.encode(emb, "vec_id", "embedding", model),
-        "vec_id", "codes", model, qv, 10)
-    }),
-
-    // X-opq: OPTIMIZED product quantization (Ge et al., CVPR'13, one
-    // non-parametric alternation) — rotate the space (orthogonal
-    // Procrustes against the raw-PQ reconstruction) so the same m×k
-    // code budget cuts more error. Composition of three already-gated
-    // pieces: the oracled k-means loop, the dim² Procrustes moment fit,
-    // the fused nearest-centroid encode. Output: mean squared
-    // reconstruction error under raw PQ vs OPQ (the training objective)
-    // — the oracle independently re-encodes every vector against BOTH
-    // inlined codebooks and re-derives both distortions.
-    "q_x_opq" -> ((s, dir) =>
-      graft.operators.ProductQuantization.opqGate(
-        t(s, dir, "embeddings"), dir)),
-
-    // X-opq-serve: the OPQ SERVE shape an ANN user actually runs —
-    // rotate the query (driver, model-sized), rotate+encode the corpus
-    // map-side (fused argmins over rotated slices), ADC top-k against
-    // the OPQ codebooks via the rotated query's literal lookup tables
-    // (TakeOrderedAndProject bounded heap; zero pre-top-k shuffles).
-    // Same per-dir trained model as q_x_opq (shared memo); the oracle
-    // re-derives rotation → assignment → ADC fold end to end.
-    "q_x_opq_serve" -> ((s, dir) =>
-      graft.operators.ProductQuantization.opqServeGate(
-        t(s, dir, "embeddings"), dir)),
-
-    // X-mix: temperature-reweighted source mixing (the LLM-pretraining
-    // data-mix): per-source rates ∝ sqrt(n_s)/n_s computed in-plan
-    // (sqrt is IEEE-exact → bit-identical cross-engine), keep decision
-    // is the content-hash uniform — deterministic, monotone in the
-    // budget, no RNG. The skewed source split is derived (the fixture's
-    // sources are uniform); gate hashes per-source kept-counts + id sums
-    "q_x_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .withColumn("mix_src",
-          when(col("doc_id") < 350, "web")
-            .when(col("doc_id") < 450, "books").otherwise("code"))
-      graft.operators.Sampling.temperatureMix(d, "mix_src", "doc_id",
-          targetRows = 250, salt = "mix")
-        .groupBy(col("mix_src"))
-        .agg(count(lit(1)).cast("bigint").as("n_kept"),
-          sum(col("doc_id")).cast("bigint").as("sum_id"))
-        .orderBy(col("mix_src"))
-    }),
-
-    // X-setjoin: EXACT set-similarity self-join via prefix filtering
-    // (All-Pairs/PPJoin) — recall-1 complement to MinHash-LSH: tokens
-    // sort by global rarity, only each doc's `n - ceil(t·n) + 1`-token
-    // prefix is indexed (completeness guaranteed by the prefix
-    // principle), candidates equi-join on prefix tokens + length
-    // filter, exact Jaccard verifies survivors only
-    // (gate runs on the stable doc_id < 500 slice: the fixture corpus
-    // is a near-clone family — tiny shared vocabulary — so the TRUE
-    // >=0.8 pair set grows ~quadratically with the doc count; the
-    // slice keeps the hash gate's result set bounded across SFs while
-    // exercising the full operator. Adversarial-vocab pruning behavior
-    // is SetSimJoinSpec's stopword test.)
-    "q_x_setjoin" -> ((s, dir) =>
-      graft.operators.SetSimJoin.jaccardJoin(
-          t(s, dir, "documents").filter(col("doc_id") < 500),
-          "doc_id", "text", 0.8)
-        .orderBy(col("id1"), col("id2"))),
-
-    // X-text: MD5 winnow fingerprint — the cross-engine twin of the
-    // xxhash64 min-k sketch (q_x_fingerprint stays rows-only): the 4
-    // smallest distinct md5(shingle) values per doc, ranked. Same
-    // fixed-length-hex ordering argument as q_x_minhash_md5, so fully
-    // DuckDB-oracled.
-    "q_x_fingerprint_md5" -> ((s, dir) => {
-      val hashed = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          explode(graft.operators.Dedup.shingles(col("text"), 3)).as("sh"))
-        .select(col("doc_id"), md5(col("sh")).as("h"))
-        .distinct()
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("h"))
-      hashed.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 4)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // SQL entry path: temp views + spark.sql through the full parser
-    // (same Catalyst pipeline; proves the SQL front door)
-    "q_sql_entry" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS n,
-          |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-          |FROM v_lineitem JOIN v_orders ON l_orderkey = o_orderkey
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // X-capstone: composed training-data pipeline — quality gate + language
-    // gate + exact dedup (keep lowest doc_id per distinct text). The dedup
-    // groups on xxhash64(text) with a salted-hash collision verify
-    // (Dedup.distinctMinIds): the shuffle carries 24-byte keys, not bodies.
-    "q_x_pipeline" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      val scored = ta.withLanguageId(
-        ta.withQualitySignals(tw(s, dir, "documents"), "text"), "text")
-      graft.operators.Dedup.distinctMinIds(
-          scored.filter(col("quality_score") >= 0.5 && col("lang_guess") === "en"),
-          "doc_id", "text")
-        .select(col("id").as("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // J-asof: point-in-time lookup — every event joined to the latest
-    // 'purchase' event of the same user at or before it (AsOfJoin: tagged
-    // union + running last() — ONE shuffle on the key; DuckDB's native
-    // ASOF JOIN is the oracle)
-    "q_j_asof" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("rt"), col("value").as("rv"))
-      graft.operators.AsOfJoin.backward(
-        e.select(col("event_id"), col("user_id"), col("ts")),
-        purchases, Seq("user_id"), "ts", "rt", Seq("rv"))
-        .select(col("event_id"),
-          coalesce(col("asof_rv"), lit(-1.0)).as("prev_purchase_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // J-asof-fwd: the forward dual — every event joined to the EARLIEST
-    // 'purchase' of the same user at or after it (DuckDB ASOF with <=)
-    "q_j_asof_fwd" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("rt"), col("value").as("rv"))
-      graft.operators.AsOfJoin.forward(
-        e.select(col("event_id"), col("user_id"), col("ts")),
-        purchases, Seq("user_id"), "ts", "rt", Seq("rv"))
-        .select(col("event_id"),
-          coalesce(col("asof_rv"), lit(-1.0)).as("next_purchase_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // X-dedup: exact word-3-gram Jaccard on explicit candidate pairs (the
-    // verify stage every sketch method shares) — fully DuckDB-oracled,
-    // unlike the hash-sketch stages
-    "q_x_ngram_jaccard" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = d.select(col("doc_id").as("id1"))
-        .filter(col("id1") % 2 === 0)
-        .withColumn("id2", col("id1") + 1)
-        .join(d.select(col("doc_id").as("id2")), "id2")
-        .select("id1", "id2")
-      graft.operators.Dedup.ngramJaccard(pairs, d, "doc_id", "text", 3)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id1"))
-    }),
-
-    // ST: batch twin of the streaming windowed aggregation — event-time
-    // tumbling 1-hour buckets (graft.streaming.EventStreams; the streaming
-    // variant adds the watermark and runs on readStream sources)
-    "q_st_window_counts" -> ((s, dir) =>
-      graft.streaming.EventStreams.windowedTypeCountsBatch(t(s, dir, "events"))),
-
-    // ST: native session_window aggregation — dynamic-gap sessions as a
-    // first-class aggregate (the built-in twin of the stateful
-    // sessionize); same plan runs batch and watermarked-streaming. Merge
-    // rule: windows that overlap or TOUCH merge (delta <= gap), pinned in
-    // EventStreamsSpec; oracle assigns sessions with the lag/cumsum
-    // delta > gap rule over µs-truncated timestamps.
-    "q_st_sessions" -> ((s, dir) =>
-      graft.streaming.EventStreams.sessionWindowsBatch(
-        t(s, dir, "events").where(col("ts").isNotNull))),
-
-    // ST: batch twin of the watermarked stream-stream interval join —
-    // clicks to same-user purchases within the last hour (equi-join on the
-    // user key, time range as a filter; the streaming variant bounds state
-    // via watermarks on both sides)
-    "q_st_interval_join" -> ((s, dir) =>
-      graft.streaming.EventStreams.intervalJoinBatch(t(s, dir, "events"))),
-
-    // X-multimodal: binary media columns + typed metadata — REAL BMP/WAV/
-    // Y4M header+signal decode plus compressed JPEG/PNG decode via the
-    // JDK's javax.imageio, feature extraction through the batched
-    // mapPartitions seam, and explode-style frame sampling, aggregated
-    // per kind. ORACLED against independently-computed goldens
-    // ([[Multimodal.goldens]]: closed-form stats from the generation
-    // parameters, no parser in the loop; jpeg via a separate raster-band
-    // decode) inlined as the oracle's VALUES table. The signal average is
-    // a decimal SUM divided in DOUBLE (order-invariant — the repo
-    // float-parity rule), so a decode regression is hash-visible.
-    "q_x_multimodal" -> ((s, dir) => {
-      val mm = graft.operators.Multimodal
-      val media = mm.syntheticMedia(s, 300).cache()
-      val feats = mm.extractFeatures(media, dim = 16)
-      val decoded = mm.decodeMedia(media)
-      val frames = mm.sampleFrames(media, fps = 1.0)
-      feats.groupBy(col("kind"))
-        .agg(count(lit(1)).as("n"), sum(col("n_bytes")).as("total_bytes"))
-        .join(
-          decoded.groupBy(col("kind"))
-            .agg(sum(when(col("ok"), 1L).otherwise(0L)).as("n_decoded"),
-              round(
-                sum(when(col("ok"), col("signal_stat"))
-                  .cast("decimal(27,12)")).cast("double") /
-                  sum(when(col("ok"), 1L).otherwise(0L)),
-                3).as("avg_signal")),
-          Seq("kind"), "left")
-        .join(
-          frames.groupBy(lit("video").as("kind"))
-            .agg(count(lit(1)).as("n_frames")),
-          Seq("kind"), "left")
-        .na.fill(0L, Seq("n_frames"))
-        .orderBy(col("kind"))
-    }),
-
-    // X-h264: COMPRESSED-video structural decode — Annex-B NAL walk,
-    // exp-Golomb SPS parse (profile/level/dims/crop/VUI-fps), per-picture
-    // frame counting via first_mb_in_slice, IDR detection, and the
-    // keyframe byte-range index (the seek table that makes keyframe
-    // sampling over object storage a range-GET, not a decode). ORACLED
-    // against closed-form goldens ([[H264.goldens]]: generation
-    // parameters + exp-Golomb length arithmetic, no parser in the loop);
-    // the index side is cross-checked in-plan (n_index_consistent: the
-    // NAL-walk frame count must equal the SPS-side parse's per media).
-    // Pixel-level slice decode stays behind the documented codec seam.
-    "q_x_h264" -> ((s, dir) => {
-      val h = graft.operators.H264
-      val media = h.syntheticH264(s, 120).cache()
-      val sizes = media.toDF().select(col("media_id"),
-        length(col("bytes")).cast("long").as("n_bytes"))
-      val dec = h.decodeH264(media)
-      val kfAgg = h.keyframeIndex(media).groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_indexed"))
-      dec.join(sizes, Seq("media_id"))
-        .join(kfAgg, Seq("media_id"), "left")
-        .na.fill(0L, Seq("n_indexed"))
-        .groupBy(col("profile_idc"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("ok"), 1L).otherwise(0L)).as("n_decoded"),
-          sum(col("n_bytes")).as("total_bytes"),
-          sum(col("width").cast("long")).as("sum_width"),
-          sum(col("height").cast("long")).as("sum_height"),
-          sum(col("n_frames").cast("long")).as("n_frames"),
-          sum(col("n_idr").cast("long")).as("n_idr"),
-          sum(col("n_vcl").cast("long")).as("n_vcl"),
-          sum(col("duration_ms").cast("long")).as("duration_ms"),
-          round(sum(col("avg_vcl_bytes").cast("decimal(27,12)"))
-            .cast("double") / count(lit(1)), 3).as("avg_vcl_bytes"),
-          sum(when(col("n_frames") === col("n_indexed"), 1L).otherwise(0L))
-            .as("n_index_consistent"))
-        .orderBy(col("profile_idc"))
-    }),
-
-    // X-adts: COMPRESSED-audio structural decode — the AAC counterpart
-    // of q_x_h264: ADTS syncword walk, fixed-header parse (profile /
-    // sampling-frequency-index table / channel config), frame-length
-    // hop, 1024-samples-per-block duration. ORACLED against closed-form
-    // goldens ([[Adts.goldens]] — pure generation-parameter arithmetic,
-    // no parser in the loop). Spectral/Huffman decode stays behind the
-    // per-batch codec seam.
-    "q_x_adts" -> ((s, dir) => {
-      val a = graft.operators.Adts
-      val media = a.syntheticAdts(s, 150).cache()
-      val sizes = media.toDF().select(col("media_id"),
-        length(col("bytes")).cast("long").as("n_bytes"))
-      a.decodeAdts(media).join(sizes, Seq("media_id"))
-        .groupBy(col("sample_rate"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("ok"), 1L).otherwise(0L)).as("n_decoded"),
-          sum(col("n_bytes")).as("total_bytes"),
-          sum(col("n_channels").cast("long")).as("sum_channels"),
-          sum(col("n_frames").cast("long")).as("n_frames"),
-          sum(col("n_samples")).as("n_samples"),
-          sum(col("duration_ms").cast("long")).as("duration_ms"),
-          round(sum(col("avg_frame_bytes").cast("decimal(27,12)"))
-            .cast("double") / count(lit(1)), 3).as("avg_frame_bytes"))
-        .orderBy(col("sample_rate"))
-    }),
-
-    // X-mp4: ISO-BMFF container probe — the at-rest format video
-    // corpora arrive in: box-tree walk (32/64-bit sizes), per-track
-    // tkhd/mdhd/hdlr/stsd/stts parse, and the avcC decoder-config
-    // record whose embedded SPS runs through H264.parseSps so
-    // container-declared dims are CROSS-CHECKED against the bitstream
-    // (`sps_consistent`). ORACLED against closed-form goldens
-    // ([[Mp4.goldens]]); sample data (mdat) is never read — the probe
-    // is the few-KB range-GET that inventories a 100 TB corpus.
-    "q_x_mp4" -> ((s, dir) => {
-      val m = graft.operators.Mp4
-      val media = m.syntheticMp4(s, 100).cache()
-      val sizes = media.toDF().select(col("media_id"),
-        length(col("bytes")).cast("long").as("file_bytes"))
-      m.probeMp4(media).join(sizes, Seq("media_id"))
-        .groupBy(col("codec"))
-        .agg(
-          count(lit(1)).as("n"),
-          // one file total per media item: attribute bytes to the video row
-          sum(when(col("codec") === "avc1", col("file_bytes"))
-            .otherwise(0L)).as("total_bytes"),
-          sum(col("width").cast("long")).as("sum_width"),
-          sum(col("height").cast("long")).as("sum_height"),
-          sum(col("sample_rate").cast("long")).as("sum_rate"),
-          sum(col("n_channels").cast("long")).as("sum_channels"),
-          sum(col("n_samples")).as("n_samples"),
-          sum(col("duration_ms").cast("long")).as("duration_ms"),
-          sum(when(col("codec") === "avc1" &&
-            col("sps_width") === col("width") &&
-            col("sps_height") === col("height"), 1L).otherwise(0L))
-            .as("sps_consistent"))
-        .orderBy(col("codec"))
-    }),
-
-    // X-sim: hyperplane-LSH ANN top-k, gated through its recall
-    // contract (SimilaritySpec additionally asserts recall on planted
-    // fixtures)
-    "q_x_lsh_topk" -> ((s, dir) => {
-      // ERROR-CONTRACT oracled (the HLL within_bound pattern): the
-      // output rows are the EXACT brute-force top-10 (fully DuckDB-
-      // verified values) carrying the ANN contract panel — the LSH
-      // probe returned exactly k rows AND recall@10 >= 0.8 — which the
-      // oracle asserts as literals. The approximation stays engine-
-      // side; its CONTRACT is hash-gated.
-      val sim = graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val brute = sim.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-      val ann = sim.lshTopK(emb, "vec_id", "embedding", q, 10)
-      annContractGate(brute, ann, minHits = 8)
-    }),
-
-    // X-dedup: embedding-cosine near-dup pairs — hyperplane-bucket
-    // candidate join + fused-cosine exact verify. The fixture has no
-    // natural near-dups (max pairwise cos ≈ 0.51), so 20 exact duplicate
-    // vectors are planted identically in both engines; identical vectors
-    // share every hyperplane sign, so the bucket join finds each planted
-    // pair with probability 1 and the result is fully DuckDB-oracled
-    // (the oracle verifies via exact all-pairs cosine).
-    "q_x_emb_neardups" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-      val corpus = emb.unionByName(planted)
-      graft.operators.Dedup.embeddingNearDups(corpus, "vec_id", "embedding",
-          threshold = 0.999, planes = 8, dim = 64)
-        .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // X-dedup: the q_x_emb_neardups chain over INT8 scalar-quantized
-    // codes — every bucket-/id-keyed shuffle carries array<tinyint>
-    // (~4× smaller than floats; floats drop map-side before the first
-    // exchange), the 100 TB shuffle-bytes lever. Verification cosine
-    // runs on the codes, whose double dot/norm sums are EXACT integers
-    // (|q| <= 127), so engine and oracle agree bit-for-bit with no
-    // float-accumulation caveat. Same planted 20-copy family.
-    "q_x_sq_neardups" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-      val corpus = emb.unionByName(planted)
-      graft.operators.Dedup.quantizedNearDups(corpus, "vec_id", "embedding",
-          threshold = 0.99, planes = 8, dim = 64)
-        .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // X-clean: C4-style corpus-level boilerplate removal — non-overlapping
-    // 3-token segments, a corpus census of distinct-doc frequency per
-    // segment, segments in >= 3 docs dropped, docs reassembled in order.
-    // Map-side segmenting (one row per SEGMENT, never per token), one
-    // segment-keyed census aggregate, one segment equi-join, one ordered
-    // doc-keyed reassembly — every stage keyed and linear.
-    "q_x_boilerplate" -> ((s, dir) =>
-      graft.operators.Boilerplate.removeRepeatedSegments(
-          t(s, dir, "documents"), "doc_id", "text", segTokens = 3, minDocs = 3)
-        .orderBy(col("doc_id"))),
-
-    // X-sim: IVF ANN top-k against a PRE-BUILT index (kmeans quantizer +
-    // cid-partitioned lists, built once offline — see [[ivfIndex]]): the
-    // gated query measures the per-query probe only — broadcast-centroid
-    // argmax, then a partition-PRUNED scan of the nprobe lists — gated
-    // through its recall contract (SimilaritySpec asserts recall too)
-    "q_x_ivf_topk" -> ((s, dir) => {
-      // ERROR-CONTRACT oracled like q_x_lsh_topk: exact brute-force
-      // top-10 values + (probe returned k rows, recall@10 >= 0.8)
-      // asserted against literals; the probe itself stays the
-      // partition-pruned nprobe-list scan.
-      val sim = graft.operators.Similarity
-      val idx = ivfIndex(s, dir)
-      import s.implicits._
-      val centroids = idx.centroids.toDF("cid", "cvec")
-        .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
-      val assigned = s.read.parquet(idx.listsDir)
-      val ann = sim.ivfTopK(assigned, "vec_id", "embedding", centroids,
-        idx.query, 10, nprobe = 3)
-      val brute = sim.bruteForceTopK(t(s, dir, "embeddings"),
-        "vec_id", "embedding", idx.query, 10)
-      annContractGate(brute, ann, minHits = 8)
-    }),
-
-    // X-sim: IVF recall-vs-cost curve — recall@10 and candidate rows
-    // scanned at nprobe ∈ {1,2,4,8}, the panel a deployment tunes nprobe
-    // with. The quantizer is a DETERMINISTIC literal panel (8 corpus
-    // vectors), so unlike the trained-quantizer gates the recall VALUES
-    // themselves are DuckDB-recomputable end to end (round-6 argmax
-    // assignment, probe order, per-nprobe top-k) — a fully hash-oracled
-    // recall curve, not an error contract.
-    "q_x_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centIds = Seq(3L, 63L, 123L, 183L, 243L, 303L, 363L, 423L)
-      val cents = emb.filter(col("vec_id").isin(centIds: _*))
-        .orderBy(col("vec_id")).select(col("embedding"))
-        .collect().map(_.getSeq[Float](0).toArray).toSeq
-      val query = emb.filter(col("vec_id") === 1L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      graft.operators.Similarity.ivfRecallCurve(
-        emb, "vec_id", "embedding", cents, query, k = 10, Seq(1, 2, 4, 8))
-    }),
-
-    // X-sim: the recall curve over a QUERY PANEL — mean recall@10 per
-    // nprobe over 8 queries (a single query's curve is one draw; tuning
-    // reads the panel mean). One query-independent map-side assignment
-    // pass + the broadcast-panel scoring crossJoin inside the same
-    // linear scan; salted per-(query, list) top-k; mean recall is an
-    // exact integer ratio — fully hash-oracled like the single curve.
-    "q_x_ivf_recall_panel" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val centIds = Seq(3L, 63L, 123L, 183L, 243L, 303L, 363L, 423L)
-      val cents = emb.filter(col("vec_id").isin(centIds: _*))
-        .orderBy(col("vec_id")).select(col("embedding"))
-        .collect().map(_.getSeq[Float](0).toArray).toSeq
-      val qIds = Seq(1L, 41L, 81L, 121L, 161L, 201L, 241L, 281L)
-      val queries = emb.filter(col("vec_id").isin(qIds: _*))
-        .select(col("vec_id"), col("embedding"))
-      graft.operators.Similarity.ivfRecallCurveBatch(
-        emb, "vec_id", "embedding", cents, queries, "vec_id", "embedding",
-        k = 10, Seq(1, 2, 4, 8))
-    }),
-
-    // X-dedup: near-dup CLUSTERS — MinHash-LSH pairs (deterministic seeded
-    // hashes; every fixture near-dup pair sits at jaccard >= 0.9, where the
-    // 16-band/r=4 detection probability is 1 - 4e-8, so the candidate set
-    // equals the oracle's all-pairs set) fed through iterative min-label
-    // connected components. The oracle recomputes the edge set exactly and
-    // closes it with a recursive CTE.
-    "q_x_dup_clusters" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.Dedup.nearDupClusters(d, "doc_id", "text")
-        .orderBy(col("id"))
-    }),
-
-    // X-dedupeval: LSH detection-quality harness — exact prefix-filter
-    // shingle-Jaccard ground truth vs the raw band-bucket candidate
-    // set; hash-dependent recall/precision stay engine-side, the
-    // output is the exact truth count + the error-contract booleans
-    "q_x_dedup_eval" -> ((s, dir) =>
-      graft.operators.Dedup.lshRecallEval(
-        t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, k = 64, bands = 16, threshold = 0.8,
-        minRecall = 0.95, minPrecision = 0.05)),
-
-    // X-clustersplit: dedup-AWARE train/val/test folds — near-dup
-    // cluster members share a fold (no eval row has a near-copy in
-    // train); folds are salted-hash cuts of the content-derived
-    // CLUSTER id (LSH pairs → connected components → left join →
-    // map-side hash). The gate panels per-fold counts + id sums; the
-    // oracle recomputes clusters with the exact-jaccard recursive CTE
-    // and the same md5 thresholds.
-    "q_x_cluster_split" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.Dedup.leakageSafeSplit(
-          d, "doc_id", "text", cuts = Seq(0.8, 0.9), salt = "g7")
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("cluster")).as("n_clusters"),
-          sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("fold"))
-    }),
-
-    // X-text: corpus vocabulary — tf + exact document frequency in one
-    // word-keyed shuffle, IDF from a broadcast scalar corpus count; top 30
-    // under a total order
-    "q_x_vocab" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.TextAnalysis.vocabulary(d, "doc_id", "text")
-        .orderBy(col("df").desc, col("tf").desc, col("word"))
-        .limit(30)
-    }),
-
-    // X-text: SKETCHED document frequency — one fixed-size HLL per word
-    // in the shuffle instead of one row per distinct (word, doc) pair
-    // (the bounded-shuffle scale path; round-3 VERDICT ask #5). The
-    // estimate is NOT hashable cross-engine (the sketch's 26-bit hash
-    // coupons collide once per ~2^27/df² words, so even small-df words
-    // can be off by 1), so the gate hashes the operator's ERROR CONTRACT
-    // instead: exact tf/df plus within_bound = |est − exact| <= max(1,
-    // 2% · exact), oracled against TRUE — an estimator regression flips
-    // booleans and is hash-visible.
-    "q_x_vocab_sketch" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val ta = graft.operators.TextAnalysis
-      val exact = ta.vocabulary(d, "doc_id", "text")
-        .select(col("word"), col("tf"), col("df").as("df_exact"))
-      val sk = ta.vocabularySketched(d, "doc_id", "text")
-        .select(col("word"), col("df").as("df_est"))
-      exact.join(sk, Seq("word"))
-        .select(col("word"), col("tf"), col("df_exact"),
-          (abs(col("df_est") - col("df_exact")).cast("double") <=
-            greatest(lit(1.0), col("df_exact") * 0.02)).as("within_bound"))
-        .orderBy(col("df_exact").desc, col("tf").desc, col("word"))
-        .limit(30)
-    }),
-
-    // X-text: distributed BPE tokenizer TRAINING — one corpus pass
-    // builds the word-frequency table, 8 merge iterations run on that
-    // cached vocabulary (each a tiny aggregate + 1-row argmax collect —
-    // the iterative-driver scalar pattern). Merges apply as
-    // boundary-delimited string replace, so the whole loop is
-    // bit-reproducible in DuckDB ([[Bpe.oracleSql]] unrolls it as
-    // chained CTEs, generated from the same parameters)
-    "q_x_bpe" -> ((s, dir) => {
-      val merges = graft.operators.Bpe.learn(tw(s, dir, "documents"), "text", 8)
-      import s.implicits._
-      merges.toDF("rank", "l", "r", "cnt").orderBy(col("rank"))
-    }),
-
-    // X-text: BPE tokenizer ENCODE — the learned merge list applied to a
-    // doc slice as a fold of boundary-delimited replaces (pure per-row
-    // codegen expression work, no shuffle until the final count). The
-    // oracle re-learns the same merges in CTEs and applies them in rank
-    // order, so train AND apply are both hash-gated.
-    "q_x_bpe_encode" -> ((s, dir) => {
-      val bpe = graft.operators.Bpe
-      val merges = bpe.learn(tw(s, dir, "documents"), "text", 8)
-        .map(m => (m._2, m._3))
-      val toks = bpe.segment(col("text"), merges)
-      t(s, dir, "documents").filter(col("doc_id") < 50)
-        .select(col("doc_id"), toks.as("__toks"))
-        .select(col("doc_id"), size(col("__toks")).cast("long").as("n_tokens"),
-          size(array_distinct(col("__toks"))).cast("long").as("n_distinct"))
-        .filter(col("n_tokens") > 0) // blank-normalized docs drop out in SQL too
-        .orderBy(col("doc_id"))
-    }),
-
-    // S-incr: incremental aggregate-state maintenance — merge-on-ingest
-    // instead of recompute-on-read: per-key algebraic partials (cnt /
-    // decimal sum / min / max) aggregated per batch and MERGED, so a new
-    // batch costs one aggregation over the batch plus a key-sized merge,
-    // never a re-read of the corpus. Decimal sums make state batch-split
-    // invariant — the gate builds state from two half-batches and hashes
-    // against the oracle's single direct aggregate.
-    "q_s_incr_agg" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val inc = graft.operators.Incremental
-      val b1 = inc.aggState(o.filter(col("o_orderkey") % 2 === 0),
-        Seq("o_custkey"), "o_totalprice")
-      val b2 = inc.aggState(o.filter(col("o_orderkey") % 2 =!= 0),
-        Seq("o_custkey"), "o_totalprice")
-      inc.finish(inc.merge(b1, b2, Seq("o_custkey")))
-        .select(col("o_custkey"), col("cnt"),
-          col("sum").cast("double").as("sum_price"),
-          col("min").as("min_price"), col("max").as("max_price"), col("avg"))
-        .orderBy(col("o_custkey"))
-        .limit(100)
-    }),
-
-    // S-audit: declarative data-quality expectations (the Deequ-style
-    // ingest gate) — every row rule is a conditional sum inside ONE
-    // global aggregate, uniqueness rides the same aggregate as a
-    // count-distinct; adding a rule adds a buffer column, never a pass.
-    // The mix includes rules that FAIL so violation counting is
-    // hash-visible, plus a null-predicate rule (null == violation).
-    "q_s_audit" -> ((s, dir) => {
-      graft.operators.Expectations.audit(
-        t(s, dir, "orders"),
-        rules = Seq(
-          "orderkey_not_null" -> col("o_orderkey").isNotNull,
-          "totalprice_positive" -> (col("o_totalprice") > 0),
-          "status_domain" -> col("o_orderstatus").isin("O", "F", "P"),
-          "totalprice_under_100k" -> (col("o_totalprice") <= 100000),
-          "null_predicate_counts" -> (lit(null).cast("boolean") === true)),
-        uniqueKeys = Seq(
-          "orderkey_unique" -> Seq("o_orderkey"),
-          "custkey_unique" -> Seq("o_custkey")))
-        .orderBy(col("rule"))
-    }),
-
-    // S-merge: row-level MERGE (CDC apply / upsert) — a deterministic
-    // change batch derived from the snapshot itself: %7==0 keys get TWO
-    // updates (latest version wins), %7==1 keys a delete, %7==3 keys
-    // spawn an insert under a fresh key. The batch collapses to its
-    // latest change per key (batch-sized window), survivors come from a
-    // LEFT ANTI join AQE turns into a broadcast (the snapshot never
-    // shuffles), upserts union in by name.
-    "q_s_merge" -> ((s, dir) => {
-      val snap = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val hot = snap.filter(col("o_orderkey") % 7 === 0)
-      val upd2 = hot.select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"), (col("o_totalprice") + 100).as("o_totalprice"),
-        lit(2L).as("version"), lit("U").as("op"))
-      val upd3 = hot.select(col("o_orderkey"), col("o_custkey"),
-        lit("X").as("o_orderstatus"), (col("o_totalprice") + 200).as("o_totalprice"),
-        lit(3L).as("version"), lit("U").as("op"))
-      val dels = snap.filter(col("o_orderkey") % 7 === 1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), lit(2L).as("version"), lit("D").as("op"))
-      val ins = snap.filter(col("o_orderkey") % 7 === 3)
-        .select((col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
-          col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"),
-          lit(1L).as("version"), lit("I").as("op"))
-      graft.operators.MergeInto.applyChanges(snap,
-          upd2.unionByName(upd3).unionByName(dels).unionByName(ins),
-          Seq("o_orderkey"), "version", "op")
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // X-cluster: relational Lloyd's k-means over the embedding corpus —
-    // driver-resident centroids fold into a map-side codegen assignment
-    // (no shuffle to assign), the update is one (cid, pos) keyed shuffle
-    // with decimal sums, per-iteration round-12 makes every round
-    // bit-identical cross-engine. Fully oracled through the generated
-    // unrolled-CTE twin (the third iterative generated oracle, after
-    // BPE and PageRank). Output: cluster sizes + decimal-exact centroid
-    // fingerprints.
-    "q_x_kmeans" -> ((s, dir) => {
-      val km = graft.operators.Clustering.kMeans(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, dim = 64, iters = 3)
-      val sizes = km.assignments.groupBy("cid").agg(count(lit(1)).as("n"))
-      val fp = km.centroids.groupBy("cid")
-        .agg(round(sum(col("c").cast("decimal(38,12)")).cast("double"), 6).as("c_sum"))
-      sizes.join(fp, "cid").orderBy(col("cid"))
-    }),
-
-    // X-cluster: the per-vector assignments under the final centroids —
-    // the membership side of the same k-means, hash-gated on a slice
-    "q_x_kmeans_assign" -> ((s, dir) => {
-      graft.operators.Clustering.kMeans(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, dim = 64, iters = 3)
-        .assignments.filter(col("vec_id") < 50).orderBy(col("vec_id"))
-    }),
-
-    // X-cluster: SemDeDup-style semantic dedup — k-means clusters scope
-    // the pairwise cosine step (quadratic in cluster size, never in the
-    // corpus), dropped docs point at their smallest smaller-id near-dup.
-    // The fixture corpus has no natural near-dups (max random cos≈0.45),
-    // so exact-copy vectors are planted IN-PLAN under fresh ids — both
-    // engines construct them identically, copies provably land in their
-    // original's cluster, and the gate output is the planted set.
-    "q_x_semdedup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val corpus = e.filter(col("vec_id") < 2000).select("vec_id", "embedding")
-        .unionByName(e.filter(col("vec_id") < 100)
-          .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding")))
-      graft.operators.Clustering.semanticDedup(
-          corpus, "vec_id", "embedding", k = 16, dim = 64, iters = 2, minCos = 0.9)
-        .orderBy(col("vec_id"))
-    }),
-
-    // X-cluster: semantic dedup under a DELIBERATELY tiny block cap —
-    // the refinement path itself, fully oracled: a 120-copy family
-    // planted in-plan blows its k-means cluster past maxBlock=16, the
-    // hyperplane sub-split cannot separate exact copies (identical
-    // signs by construction), so the family lands in an OVERFLOW
-    // sub-bucket and is recalled through the sorted-neighborhood chain
-    // (copies share the projection, sort by id, pair with the next 8) —
-    // candidates stay linear in block size, never block². The twin
-    // replicates census, bit count, sub-bucket signs, and the window.
-    "q_x_semdedup_capped" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val corpus = e.filter(col("vec_id") < 300).select("vec_id", "embedding")
-        .unionByName(e.filter(col("vec_id") === 7)
-          .select(explode(sequence(lit(0L), lit(119L))).as("__i"),
-            col("embedding"))
-          .select((col("__i") + lit(1000000L)).as("vec_id"),
-            col("embedding")))
-      graft.operators.Clustering.semanticDedup(
-          corpus, "vec_id", "embedding", k = 4, dim = 64, iters = 1,
-          minCos = 0.9, maxBlock = 16, overflowWindow = 8)
-        .orderBy(col("vec_id"))
-    }),
-
-    // X-graph: PageRank over a linkage graph — link-authority weighting
-    // (the crawl-domain quality prior for corpus curation) as pure
-    // relational algebra: 5 iterations, each a keyed join + decimal-
-    // accumulated aggregation, the dangling mass a 1-row broadcast.
-    // Suppliers are negated so the bipartite node id spaces can't
-    // collide. Fully oracled through the generated unrolled-CTE twin.
-    "q_x_pagerank" -> ((s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .select((-col("l_suppkey")).as("src"), col("l_partkey").as("dst"))
-      graft.operators.Graph.pageRank(s, e, iters = 5)
-        .orderBy(col("rank").desc, col("node"))
-        .limit(30)
-    }),
-
-    // X-text: Gopher-style repetition signal — per-doc top-bigram share
-    "q_x_rep_ratio" -> ((s, dir) => {
-      val d = t(s, dir, "documents").filter(col("doc_id") < 100)
-      graft.operators.TextAnalysis.topBigramFraction(d, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-text: bigram-LM perplexity quality scoring (the CCNet-style
-    // filter signal) — model trained on the FULL corpus, a doc slice
-    // scored; the doc filter pushes through the scoring aggregate while
-    // the model-count subtrees keep reading everything. Log terms round
-    // to 12 and accumulate as decimal, so the generated-twin parity
-    // holds bit-for-bit (ln/exp are IEEE-stable across engines here).
-    "q_x_perplexity" -> ((s, dir) => {
-      graft.operators.TextAnalysis
-        .bigramPerplexity(t(s, dir, "documents"), "doc_id", "text")
-        .filter(col("doc_id") < 100)
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-text: PII scrubbing — codegen'd regexp_replace redaction + audit
-    // counts. The fixture corpus carries no PII, so the scrubbed column is
-    // constructed deterministically from fixture fields in BOTH engines;
-    // the operator under test is the redaction expression itself.
-    "q_x_pii" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      val synth = concat(
-        lit("contact user"), col("doc_id"), lit("@mail.example.com or +1 555 "),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-        lit(" re: "), substring(col("text"), 1, 40))
-      val (nEmails, nPhones) = ta.piiCounts(synth)
-      t(s, dir, "documents")
-        .select(col("doc_id"), ta.scrubPii(synth).as("scrubbed"),
-          nEmails.as("n_emails"), nPhones.as("n_phones"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-text: fixed-width overlapping chunking — the long-document →
-    // training-window step; pure per-row sequence/transform/posexplode,
-    // no shuffle
-    "q_x_chunks" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.TextAnalysis.chunkDocuments(d, "doc_id", "text",
-          width = 120, overlap = 20)
-        .orderBy(col("id"), col("chunk_idx"))
-    }),
-
-    // X-text: sequence packing — bin assignment by running token count
-    // within each SHARD partition (`doc_id mod 16`, the scale-grained
-    // key: cardinality grows with the corpus, so every window partition
-    // stays bounded — a low-cardinality key like lang would sort an
-    // entire language on one task at 100 TB)
-    "q_x_packed" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      val tk = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          pmod(col("doc_id"), lit(16L)).as("shard"),
-          ta.wsTokenCount(col("text")).cast("bigint").as("n_tokens"))
-      ta.packBins(tk, "shard", "doc_id", "n_tokens", 500L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-text: token-exact sequence packing WITH document splitting (the
-    // GPT-pretraining shape; q_x_packed is the whole-doc bin variant):
-    // one shard-partitioned prefix-sum window, then a map-side explode
-    // of each doc over its covered 500-token sequences — every sequence
-    // but each shard's last is exactly full. Pure integer arithmetic.
-    "q_x_packed_spans" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      val tk = t(s, dir, "documents")
-        .select(col("doc_id"),
-          pmod(col("doc_id"), lit(16L)).as("shard"),
-          ta.wsTokenCount(col("text")).cast("bigint").as("n_tokens"))
-      ta.packSpans(tk, "shard", "doc_id", "n_tokens", 500L)
-        .select(col("doc_id"), col("shard"), col("seq_id"),
-          col("tok_start"), col("tok_end"))
-        .orderBy(col("doc_id"), col("seq_id"))
-    }),
-
-    // X-dedup: benchmark decontamination — docs sharing >= 3 distinct
-    // trigram shingles with the held-out "benchmark" slice (doc_id >= 490);
-    // benchmark shingles broadcast, corpus probes map-side
-    "q_x_decontam" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.Dedup.contaminationFlags(
-          d.filter(col("doc_id") < 490), "doc_id", "text",
-          d.filter(col("doc_id") >= 490), "text")
-        .orderBy(col("id"))
-    }),
-
-    // D2b: seeded stratified sample (sampleBy on the lang strata) —
-    // engine-specific RNG like q_d2_sample, so rows-only; per-stratum
-    // fraction tolerance asserted in TextAnalysisSpec
-    "q_d2b_stratified" -> ((s, dir) => {
-      val fractions = Map("en" -> 0.5, "es" -> 0.25, "fr" -> 0.25,
-        "de" -> 0.25, "zh" -> 0.1)
-      t(s, dir, "documents").stat.sampleBy("lang", fractions, 42L)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"))
-    }),
-
-    // X-text: canonical unicode cleanup — NFC normalization (native
-    // expression with a no-alloc fast path), control-char strip,
-    // whitespace collapse, trim. The fixture corpus is ASCII-clean, so a
-    // messy input (decomposed accents, a BEL, tab runs) is constructed
-    // deterministically from fixture fields in BOTH engines; the operator
-    // under test is the cleanup expression chain itself.
-    "q_x_normalize" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      val messy = concat(lit("Cafe\u0301 \t \u0007"),
-        substring(col("text"), 1, 60), lit("  nai\u0308ve"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), ta.cleanText(messy).as("cleaned"),
-          length(messy).as("n_raw"), length(ta.cleanText(messy)).as("n_clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-text: sentence segmentation — terminator-preserving [.!?]+space
-    // split (lookbehind-free Java∩RE2 dialect), posexplode to one row per
-    // sentence. Sentence-bearing input constructed from fixture fields in
-    // both engines (fixture text is punctuation-free).
-    "q_x_sentences" -> ((s, dir) => {
-      val synth = concat(substring(col("text"), 1, 50), lit(". "),
-        substring(col("text"), 51, 40), lit("! "),
-        substring(col("text"), 91, 30), lit("? End"))
-      graft.operators.TextAnalysis.splitSentences(
-          t(s, dir, "documents").filter(col("doc_id") < 200)
-            .select(col("doc_id"), synth.as("synth")),
-          "doc_id", "synth")
-        .orderBy(col("id"), col("sent_idx"))
-    }),
-
-    // S-jsonl: JSONL sink + explicit-schema scan round-trip — write the
-    // documents table as line-delimited JSON, read it back (no inference
-    // pass — that's a full extra read at scale), aggregate per lang. The
-    // oracle computes the same aggregate from the parquet directly, so any
-    // round-trip corruption (types, escaping, nulls) breaks the hash.
-    "q_s_jsonl" -> ((s, dir) => {
-      val path = tmpFor(dir, "jsonl")
-      graft.sources.IO.writeJsonl(
-        t(s, dir, "documents").select("doc_id", "text", "lang", "source", "n_chars"),
-        path)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      graft.sources.IO.readJsonl(s, path, schema)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(length(col("text"))).as("sum_chars"),
-          countDistinct(col("text")).as("n_distinct_text"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .orderBy(col("lang"))
-    }),
-
-    // X-capstone-2: the COMPLETE training-data ingest pipeline in one
-    // call — clean → quality/lang gate → exact dedup → benchmark
-    // decontamination → chunk → token-count → pack — raw documents to
-    // training-ready chunks, fully DuckDB-oracled end to end. Packing is
-    // SHARD-GRAINED (packShards = 8, the scale-safe shape: 8 bounded
-    // window partitions instead of one global sort); bins are unique as
-    // (shard, bin) and the oracle reproduces them per shard.
-    "q_x_pipeline2" -> ((s, dir) => {
-      val d = tw(s, dir, "documents")
-      graft.operators.CorpusPipeline.trainingChunks(
-          d.filter(col("doc_id") < 490), d.filter(col("doc_id") >= 490),
-          packShards = 8)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // S-orc: ORC sink + scan round-trip (the Hive-lineage columnar
-    // format) — same oracle-reads-parquet trick as q_s_jsonl
-    "q_s_orc" -> ((s, dir) => {
-      val path = tmpFor(dir, "orc")
-      graft.sources.IO.writeOrc(
-        t(s, dir, "documents").select("doc_id", "text", "lang", "source"), path)
-      graft.sources.IO.readOrc(s, path)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(length(col("text"))).as("sum_chars"),
-          min(col("doc_id")).as("min_id"))
-        .orderBy(col("source"))
-    }),
-
-    // S-part: hive-partitioned parquet sink + partition-pruned scan — a
-    // lang filter on the partitioned layout prunes whole directories at
-    // planning time (PartitionFilters, asserted in PlanShapeSpec)
-    "q_s_partitioned" -> ((s, dir) => {
-      val path = tmpFor(dir, "part")
-      graft.sources.IO.writePartitioned(
-        t(s, dir, "documents").select("doc_id", "text", "n_chars", "lang"),
-        path, Seq("lang"))
-      s.read.parquet(path)
-        .filter(col("lang") === "en")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .orderBy(col("lang"))
-    }),
-
-    // X-mix: deterministic source reweighting (data mixing) — modulo
-    // gate on the dense doc id, exact proportions, no RNG, map-side only
-    "q_x_mixture" -> ((s, dir) => {
-      val rates = Map("src0" -> 0.5, "src1" -> 0.25, "src3" -> 1.0,
-        "src7" -> 0.1)
-      graft.operators.TextAnalysis.weightedMix(
-          t(s, dir, "documents"), "source", "doc_id", rates, denom = 100L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("source"))
-    }),
-
-    // X-text: per-document codepoint entropy (gibberish/boilerplate
-    // signal) — native one-pass expression vs the oracle's
-    // unnest-groupBy-sum formulation; ROUND(…,6) absorbs summation order
-    "q_x_entropy" -> ((s, dir) => {
-      val ta = graft.operators.TextAnalysis
-      t(s, dir, "documents")
-        .select(col("doc_id"), round(ta.charEntropy(col("text")), 6).as("entropy"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // A-topk: grouped top-k via the native bounded-heap TopKAgg aggregate
-    // (partial top-k per partition, k rows/group/partition shuffled, no
-    // full-group sort) — vs the window row_number()<=k formulation the
-    // oracle uses, which is semantically identical but shuffles every row
-    "q_a_topk_group" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      graft.operators.Profiling.topKPerGroup(o, Seq("o_orderpriority"),
-          col("o_totalprice"), col("o_orderkey"),
-          struct(col("o_orderkey").as("okey"), col("o_totalprice").as("price")),
-          k = 3)
-        .select(col("o_orderpriority"), col("rank"),
-          col("item.okey").as("okey"), col("item.price").as("price"))
-        .orderBy(col("o_orderpriority"), col("rank"))
-    }),
-
-    // X-dedup: incremental ingest dedup — distributed Bloom filter over
-    // the "existing" half (broadcast 1-row build side), map-side probe of
-    // the "incoming" half, exact anti-join verify on only the positive
-    // sliver. Output is exact: incoming docs whose text never appeared in
-    // the existing corpus.
-    "q_x_incremental" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.operators.Dedup.incrementalNovel(
-          d.filter(col("doc_id") >= 250), d.filter(col("doc_id") < 250),
-          "text", expectedItems = 100000L)
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // S-bucketed: bucketed-table co-located join — both sides written
-    // bucketed+sorted on the join key, so the recurring join runs with NO
-    // exchange and NO sort (asserted in JoinOpsSpec); at 100 TB this is
-    // the layout that amortizes one shuffle across every future join.
-    // The oracle joins the raw parquet — a hash match proves the bucketed
-    // write→catalog→scan→join cycle preserved every row.
-    "q_s_bucketed" -> ((s, dir) => {
-      val tmp = tmpFor(dir, "bucketed")
-      graft.sources.Bucketing.writeBucketed(
-        t(s, dir, "orders").select("o_custkey", "o_totalprice"),
-        s"graft_orders_b_${runToken(dir)}", Seq("o_custkey"), 8, Some(s"$tmp/orders"))
-      graft.sources.Bucketing.writeBucketed(
-        t(s, dir, "customer").select("c_custkey", "c_nationkey"),
-        s"graft_customer_b_${runToken(dir)}", Seq("c_custkey"), 8, Some(s"$tmp/customer"))
-      s.table(s"graft_orders_b_${runToken(dir)}")
-        .join(s.table(s"graft_customer_b_${runToken(dir)}"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(38,2)")).cast("double")
-            .as("sum_price"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // W-battery: rank-family windows — dense_rank / ntile / percent_rank /
-    // cume_dist over one key-partitioned, uniquely-ordered window (shared
-    // WindowExec, single shuffle on the partition key)
-    "q_w_rank_battery" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          dense_rank().over(w).as("drank"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("prank"),
-          round(cume_dist().over(w), 6).as("cdist"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // A-gsets: GROUPING SETS — the generalized rollup/cube; Spark expands
-    // to one Expand + one aggregate exchange, not one pass per set
-    "q_a_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("v_li_gsets")
-      s.sql(
-        """SELECT COALESCE(l_returnflag, '(all)') AS rf,
-          |       COALESCE(l_linestatus, '(all)') AS ls,
-          |       COUNT(*) AS n,
-          |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-          |FROM v_li_gsets
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-          |                        (l_returnflag, l_linestatus))
-          |ORDER BY rf, ls""".stripMargin)
-    }),
-
-    // F-resample: time-series regularization — per-user daily grid between
-    // first and last observation, observed buckets carry the exact mean,
-    // gaps forward-fill from the latest preceding bucket (key-partitioned
-    // window; grid generation distributes with the key)
-    "q_f_resample" -> ((s, dir) =>
-      graft.operators.TimeSeries.resampleFill(
-          t(s, dir, "events"), "user_id", "ts", "value",
-          bucketWidth = 86400L * 1000 * 1000 * 1000)
-        .orderBy(col("user_id"), col("bucket"))),
-
-    // X-tfidf: sparse text similarity via the inverted-index join — only
-    // documents sharing a surviving term ever meet (term-partitioned
-    // shuffle), vs the all-pairs cross product; df cap bounds the
-    // candidate fan-out. Decimal-accumulated dots/norms keep the cosine
-    // aggregation-order-independent, so the oracle hash-matches.
-    "q_x_tfidf_pairs" -> ((s, dir) =>
-      graft.operators.SparseSimilarity.tfidfPairs(
-          tw(s, dir, "documents"), "doc_id", "text",
-          maxDf = 50L, minCos = 0.30)
-        .orderBy(col("id1"), col("id2"))),
-
-    // X-tfidf-clusters: second clustering capstone — connected components
-    // over the TF-IDF cosine edge set (vs q_x_dup_clusters' MinHash
-    // edges): inverted-index pair generation feeds the iterative
-    // min-label propagation; the oracle closes the same edge set with a
-    // recursive CTE. Different edge semantics, same scale shape: no
-    // cross join anywhere, edges and labels shuffle by id.
-    "q_x_tfidf_clusters" -> ((s, dir) => {
-      val edges = graft.operators.SparseSimilarity.tfidfPairs(
-          tw(s, dir, "documents"), "doc_id", "text",
-          maxDf = 50L, minCos = 0.95)
-        .select("id1", "id2")
-      graft.operators.Dedup.connectedComponents(edges)
-        .orderBy(col("id"))
-    }),
-
-    // W-moving: time-RANGE moving aggregate — per-user trailing-hour mean
-    // via rangeBetween on the epoch-nanos long (a RANGE frame, so tied
-    // timestamps aggregate identically regardless of intra-tie order)
-    "q_w_moving_avg" -> ((s, dir) => {
-      val hourNs = 3600L * 1000 * 1000 * 1000
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"))
-        .rangeBetween(-hourNs, 0)
-      t(s, dir, "events")
-        .select(col("event_id"),
-          count(col("value")).over(w).as("n_window"),
-          (sum(col("value").cast("decimal(38,6)")).over(w).cast("double") /
-            count(col("value")).over(w)).as("mov_avg"))
-        .orderBy(col("event_id"))
-    }),
-
-    // A-moments: mean/variance/skewness per group derived from DECIMAL
-    // power sums (sum x, sum x², sum x³) — order-independent and
-    // definition-neutral (Spark's skewness() and DuckDB's use different
-    // bias corrections, so the gate computes the population moments from
-    // raw sums identically in both engines)
-    "q_a_moments" -> ((s, dir) => {
-      val x = col("l_quantity")
-      val n = count(x).cast("double")
-      val s1 = sum(x.cast("decimal(38,6)")).cast("double")
-      val s2 = sum((x * x).cast("decimal(38,6)")).cast("double")
-      val s3 = sum((x * x * x).cast("decimal(38,6)")).cast("double")
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(n.as("__n"), s1.as("__s1"), s2.as("__s2"), s3.as("__s3"))
-        .select(col("l_returnflag"),
-          round(col("__s1") / col("__n"), 6).as("mean"),
-          round(col("__s2") / col("__n") -
-            (col("__s1") / col("__n")) * (col("__s1") / col("__n")), 6)
-            .as("variance"),
-          round((col("__s3") / col("__n") -
-              lit(3) * (col("__s1") / col("__n")) * (col("__s2") / col("__n")) +
-              lit(2) * pow(col("__s1") / col("__n"), 3)) /
-            pow(col("__s2") / col("__n") -
-              (col("__s1") / col("__n")) * (col("__s1") / col("__n")), 1.5), 6)
-            .as("skewness"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // A-median: exact interpolated percentiles per group — Spark's exact
-    // `percentile` aggregate vs DuckDB's quantile_cont (same linear-
-    // interpolation definition)
-    "q_a_group_median" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(round(expr("percentile(l_quantity, 0.5)"), 6).as("med_qty"),
-          round(expr("percentile(l_extendedprice, 0.9)"), 6).as("p90_price"))
-        .orderBy(col("l_returnflag"))),
-
-    // F-hof: higher-order array functions — filter/exists/transform+
-    // aggregate over the token array, all integer-exact
-    "q_f_hof" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          split(trim(col("text")), "\\s+").as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).as("n_toks"),
-          size(filter(col("toks"),
-            tok => length(tok) > 4)).as("n_long"),
-          array_contains(col("toks"), "the").as("has_the"),
-          expr("aggregate(transform(toks, x -> length(x)), 0, (a, x) -> a + x)")
-            .as("sum_tok_chars"))
-        .orderBy(col("doc_id"))),
-
-    // J-nullsafe: null-safe equi-join (<=>) — null bucket keys MATCH the
-    // dim's null row instead of dropping, the semantics a dimension join
-    // over nullable foreign keys needs
-    "q_j_nullsafe" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"),
-          when(col("value").isNull, lit(null).cast("bigint"))
-            .otherwise(floor(col("value") / 50).cast("bigint")).as("vb"))
-      val dim = ev.select(col("vb")).distinct()
-        .select(col("vb").as("vb2"),
-          coalesce(col("vb").cast("string"), lit("null-bucket")).as("label"))
-      ev.join(dim, col("vb") <=> col("vb2"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("label"))
-    }),
-
-    // SO-byname: union by NAME with missing columns — heterogeneous
-    // batches align on column names (missing ones null-fill), the
-    // position-blind union long-lived pipelines need
-    "q_so_union_byname" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val a = d.filter(col("doc_id") < 250).select("doc_id", "lang")
-      val b = d.filter(col("doc_id") >= 250).select("doc_id", "n_chars")
-      a.unionByName(b, allowMissingColumns = true)
-        .agg(count(lit(1)).as("n"),
-          count(col("lang")).as("n_lang"),
-          count(col("n_chars")).as("n_chars_present"),
-          sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    // D-hash-sample: deterministic content-keyed sampling — md5-threshold
-    // gate, engine-reproducible (unlike seeded RNG sampling, which is
-    // partition-layout-dependent and rows-only in this gate), monotone in
-    // the fraction. THE oracled sampling path.
-    "q_d_hash_sample" -> ((s, dir) =>
-      graft.operators.Sampling.hashSample(
-          t(s, dir, "documents"), "doc_id", fraction = 0.25, salt = "g1")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("lang"))),
-
-    // D-group-split: leakage-safe train/val/test folds — every row of a
-    // source lands in the same fold (correlated rows never straddle a
-    // train/eval boundary); deterministic salted-hash cuts
-    "q_d_group_split" -> ((s, dir) =>
-      graft.operators.Sampling.groupSplit(
-          t(s, dir, "documents"), "source", cuts = Seq(0.8, 0.9), salt = "g2")
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("source")).as("n_sources"),
-          sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("fold"))),
-
-    // D-stratified-det: deterministic per-stratum sampling — the
-    // engine-reproducible twin of sampleBy (whose seeded RNG is
-    // layout-dependent and rows-only in q_d2b): each source keeps its
-    // own md5-threshold fraction, map-side only
-    "q_d_stratified_det" -> ((s, dir) =>
-      graft.operators.Sampling.stratifiedHashSample(
-          t(s, dir, "documents"), "source", "doc_id",
-          Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.75), salt = "g5")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("source"))),
-
-    // A-hll: HLL sketch columns — build per-group distinct sketches,
-    // UNION them later (hll_union_agg) instead of re-scanning: the
-    // store-sketches/merge-anywhere pattern incremental 100 TB distinct
-    // counts need. Estimates are exact at these cardinalities (HLL runs
-    // in sparse/coupon mode far below its promotion threshold), so the
-    // oracle is plain COUNT(DISTINCT).
-    "q_a_hll" -> ((s, dir) => {
-      val perSource = t(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(hll_sketch_agg(col("lang")).as("sk"))
-      perSource
-        .select(col("source"),
-          hll_sketch_estimate(col("sk")).cast("bigint").as("n_langs"))
-        .unionByName(perSource
-          .agg(hll_sketch_estimate(hll_union_agg(col("sk")))
-            .cast("bigint").as("n_langs"))
-          .select(lit("~all").as("source"), col("n_langs")))
-        .orderBy(col("source"))
-    }),
-
-    // A-kll: KLL quantile sketches — the quantile member of the sketch
-    // family (HLL distinct, CMS point-freq, MG top-k, Bloom membership):
-    // store one ~KB sketch per group, merge for any wider scope, never
-    // re-read rows. Exact while a sketch holds n <= k items (this slice
-    // keeps every group and the merged union under k=1024 at the oracled
-    // SFs), and inclusive-rank quantiles are then ceil(p*n)-th order
-    // statistics — which is what the oracle computes; dyadic p keeps the
-    // rank arithmetic float-exact in both engines.
-    "q_a_kll" -> ((s, dir) => {
-      import graft.functions.Kll
-      val slice = t(s, dir, "events")
-        .where(col("event_id") % 43 === 0 && col("value").isNotNull)
-      val perType = slice.groupBy(col("event_type"))
-        .agg(Kll.sketch(col("value"), 1024).as("sk"))
-      def qs(df: DataFrame): DataFrame = df.select(col("scope"),
-        Kll.n(col("sk")).as("n"),
-        Kll.quantile(col("sk"), 0.25).as("p25"),
-        Kll.quantile(col("sk"), 0.5).as("p50"),
-        Kll.quantile(col("sk"), 0.75).as("p75"))
-      qs(perType.select(col("event_type").as("scope"), col("sk")))
-        .unionByName(qs(perType
-          .agg(Kll.mergeSketches(col("sk"), 1024).as("sk"))
-          .select(lit("~all").as("scope"), col("sk"))))
-        .orderBy(col("scope"))
-    }),
-
-    // X-cohort: cohort retention matrix — entities bucketed by first
-    // activity day, distinct-active counts per (cohort, day offset), in
-    // ONE entity-keyed shuffle (collect_set dedups map-side; the explode
-    // emits already-distinct rows, so the rollup is a plain count — no
-    // countDistinct Expand, no join back). Sparse event slice so entry
-    // days spread and retention actually decays.
-    "q_x_cohort" -> ((s, dir) =>
-      graft.operators.Cohort.retention(
-        t(s, dir, "events").where(col("event_id") % 11 === 0),
-        "user_id", expr("ts DIV 86400000000000"))),
-
-    // A-mad: robust per-group outlier stats — median + MAD (50%
-    // breakdown: the threshold does not move with the contamination it
-    // flags), two percentile passes with AQE-broadcast stats joins; the
-    // median/MAD round to 6 BEFORE entering arithmetic so the deviation
-    // and threshold comparison run on identical doubles in both engines.
-    "q_a_mad" -> ((s, dir) =>
-      graft.operators.Profiling.robustOutlierStats(
-        t(s, dir, "events"), "event_type", "value", cut = 3.0)),
-
-    // A-ttest: Welch two-sample t-test (A/B primitive) — ONE global
-    // aggregate of conditional counts + decimal power sums, then 1-row
-    // IEEE arithmetic (sqrt correctly rounded ⇒ round-9 outputs
-    // bit-identical cross-engine).
-    "q_a_ttest" -> ((s, dir) =>
-      graft.operators.Profiling.welchTTest(
-        t(s, dir, "events"), "event_type", "value", "click", "view")),
-
-    // X-pmi: top-k collocations by pointwise mutual information — the
-    // multi-word-expression signal; bigrams map-side via zip_with,
-    // count shuffles carry one row per distinct gram, minCount prunes
-    // before the unigram joins, totals ride as 1-row broadcasts, top-k
-    // plans as TakeOrderedAndProject. ln rounds to 6 (BM25 libm-parity
-    // rule); rounded-score ties break by (w1, w2).
-    "q_x_pmi" -> ((s, dir) =>
-      graft.operators.TextAnalysis.pmiCollocations(
-        t(s, dir, "documents"), "text", minCount = 5, k = 20)),
-
-    // X-cooccur: market-basket related items — per-order distinct part
-    // sets (collect_set dedups map-side), pairs emitted map-side from
-    // each set (no self-join), per-item top-3 via the bounded TopK heap
-    // (k rows/item/partition at the exchange, no full-group sort);
-    // mega-baskets capped, the standard association-mining guard.
-    "q_x_cooccur" -> ((s, dir) =>
-      graft.operators.Cooccurrence.relatedItems(
-        t(s, dir, "lineitem").where(col("l_partkey") % 3 === 0),
-        "l_orderkey", "l_partkey", k = 3, maxBasket = 64)),
-
-    // S-scd2: Slowly-Changing-Dimension Type 2 history — change log →
-    // validity intervals in ONE key-partitioned window shuffle:
-    // run-collapse via null-safe lag compare (re-stated unchanged rows
-    // never open a version), intervals via lead. Customers' order
-    // stream as the change log, (status, priority) as the tracked
-    // attributes.
-    "q_s_scd2" -> ((s, dir) =>
-      graft.operators.Scd.scd2(
-          t(s, dir, "orders").where(col("o_custkey") % 5 === 0),
-          Seq("o_custkey"), "o_orderkey",
-          Seq("o_orderstatus", "o_orderpriority"))
-        .orderBy(col("o_custkey"), col("valid_from"))),
-
-    // A-chisq: chi-square independence test + Cramér's V — contingency
-    // counts in one grouped aggregate (≤ r·c cells per partition reach
-    // the shuffle), margins as aggregates OF THE CELLS joined back
-    // broadcast, per-cell terms round-9 and accumulate as DECIMAL
-    // (order-independent ⇒ bit-identical cross-engine).
-    "q_a_chisq" -> ((s, dir) =>
-      graft.operators.Profiling.chiSquare(
-        t(s, dir, "lineitem"), "l_returnflag", "l_linestatus")),
-
-    // A-overlap: audience overlap from mergeable HLL sketches — distinct
-    // clickers ∩ viewers via inclusion-exclusion (|A|+|B|−|A∪B|), the
-    // store-sketches/merge-anywhere pattern: per-segment sketches build
-    // once, ANY pairwise overlap derives by union — no re-scan, no
-    // distinct-pair Expand. COUNT(DISTINCT) oracles it because the
-    // sketch stays in exact coupon (LIST/SET) mode below ~2^(lgK−3)
-    // distinct values: lgConfigK=18 pins that threshold at ~32k, 20×
-    // the largest verified SF's 1.5k distinct users (the default lgK=12
-    // leaves coupon mode near 3k — one fixture bump from divergence).
-    "q_a_hll_overlap" -> ((s, dir) => {
-      val sk = t(s, dir, "events")
-        .where(col("event_type").isin("click", "view") &&
-          col("user_id").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(hll_sketch_agg(col("user_id"), 18).as("sk"))
-        .select(col("event_type"),
-          hll_sketch_estimate(col("sk")).cast("bigint").as("n"), col("sk"))
-      sk.agg(
-          max(when(col("event_type") === "click", col("n"))).as("n_click"),
-          max(when(col("event_type") === "view", col("n"))).as("n_view"),
-          hll_sketch_estimate(hll_union_agg(col("sk")))
-            .cast("bigint").as("n_union"))
-        .withColumn("n_overlap",
-          col("n_click") + col("n_view") - col("n_union"))
-    }),
-
-    // ST-hopping: sliding-window counts — TimeWindow expands each event
-    // into its dur/hop covering windows MAP-SIDE (Generate, plan-constant
-    // fan-out), partial aggregation collapses before the one exchange;
-    // the identical plan streams under a watermark.
-    "q_st_hopping" -> ((s, dir) =>
-      graft.streaming.EventStreams.hoppingTypeCountsBatch(
-        t(s, dir, "events"), "1 hour", "15 minutes")),
-
-    // A-gini: per-group concentration audit — rank-formulation Gini in
-    // one group-keyed window (groups sort independently, no global
-    // sort) + one grouped aggregate; rank·value products round-9 into
-    // DECIMAL sums, closed form fixed-order IEEE, round-6 output.
-    "q_a_gini" -> ((s, dir) =>
-      graft.operators.Profiling.gini(
-          t(s, dir, "lineitem"), "l_returnflag", "l_extendedprice")
-        .orderBy(col("l_returnflag"))),
-
-    // X-jl: Johnson-Lindenstrauss random projection 64 → 8 dims — the
-    // distance-preserving shrink before ANN/clustering and an 8× vector
-    // storage cut; the md5-derived ±1 matrix rides as a codegen
-    // reference object (never shuffled), each row projects map-side
-    // through ONE fused JlProject pass inside whole-stage codegen (the
-    // HOF form was CodegenFallback — kept only as the spec twin),
-    // decimal-accumulated so the gate hashes exactly.
-    "q_x_jl_project" -> ((s, dir) =>
-      graft.operators.Projection.randomProject(
-          t(s, dir, "embeddings").where(col("vec_id") % 7 === 0)
-            .select("vec_id", "embedding"),
-          "embedding", dim = 64, outDim = 8, salt = "jl")
-        .select(col("vec_id"), posexplode(col("proj")).as(Seq("j", "v")))
-        .orderBy(col("vec_id"), col("j"))),
-
-    // F-decay: exponentially time-decayed per-key stats (feature-store
-    // freshness) — per-row weight map-side (round-9 exp into DECIMAL
-    // sums), ONE grouped aggregate; refreshing to a newer asOf is a
-    // constant rescale of the stored sums, the mergeable-state algebra.
-    "q_f_decay" -> ((s, dir) =>
-      graft.operators.Decay.decayedStats(
-          t(s, dir, "events"), "event_type", col("ts"), "value",
-          halfLifeDays = 7.0, asOfNs = 1706745600000000000L)
-        .orderBy(col("event_type"))),
-
-    // A-covmatrix: full pairwise covariance matrix (diag = variances)
-    // from ONE aggregate of decimal power sums — the PCA/whitening
-    // input: one pass over 100 TB, a driver-trivial d×d eigen-solve
-    // after; in-plan unpivot, no driver round-trip.
-    "q_a_covmatrix" -> ((s, dir) =>
-      graft.operators.Profiling.covarianceMatrix(
-        tw(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    // F-target-enc: leave-one-out target encoding — high-cardinality
-    // categorical → leakage-safe mean label of the category's OTHER
-    // rows; one grouped stats aggregate + AQE-broadcast join back +
-    // 1-row global fallback scalar.
-    "q_f_target_enc" -> ((s, dir) =>
-      graft.operators.TargetEncoding.looEncode(
-          t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-          "o_custkey", "o_totalprice")
-        .select(col("o_orderkey"), col("o_custkey"), col("encoded"))
-        .orderBy(col("o_orderkey"))),
-
-    // X-survival: Kaplan-Meier product-limit churn curves per event
-    // type — hazards chain over the tiny per-group lifetime table
-    // (group-keyed window, never the event log); ln rounds to 6 and
-    // accumulates as DECIMAL, exp rounds to 6 (libm-parity rules).
-    "q_x_survival" -> ((s, dir) =>
-      graft.operators.Survival.curve(
-        t(s, dir, "events"), "event_type", "user_id",
-        expr("ts DIV 86400000000000"))),
-
-    // D-group-bottomk: deterministic fixed-size sample WITHIN each group
-    // (balanced panel) — hash-order row_number capped by WindowGroupLimit
-    // (≤ k rows/group/partition at the exchange, the window twin of the
-    // TopK aggregate); engine-reproducible, prefix-stable in k.
-    "q_d_group_bottomk" -> ((s, dir) =>
-      graft.operators.Sampling.bottomKPerGroup(
-          t(s, dir, "documents").select("doc_id", "source", "lang"),
-          "source", "doc_id", k = 2, salt = "g5")
-        .orderBy(col("source"), col("doc_id"))),
-
-    // A-ztest: two-proportion z-test (conversion A/B) — one global
-    // aggregate of conditional counts, 1-row IEEE math, round-9
-    // bit-identical cross-engine. "Success" = value above a threshold.
-    "q_a_ztest" -> ((s, dir) =>
-      graft.operators.Profiling.proportionsZTest(
-        t(s, dir, "events").withColumn("hit", col("value") > 100),
-        "event_type", "hit", "click", "view")),
-
-    // J-spatial: grid-bucketed radius join — cell-quantized equi-join +
-    // exact refine (the 2-D bandJoin): right side keys by its cell, left
-    // explodes to the 3×3 neighborhood map-side, candidates bounded by
-    // cell occupancy, never n²; no BroadcastNestedLoopJoin (locked in
-    // PlanShapeSpec). Coordinates synthesized deterministically from the
-    // events slices.
-    "q_j_spatial" -> ((s, dir) => {
-      def pts(m: Long) = t(s, dir, "events")
-        .where(col("event_id") % 29 === m)
-        .select(col("event_id"),
-          col("value").as("x"),
-          (col("event_id") % 331).cast("double").as("y"))
-      graft.operators.Spatial.radiusJoin(
-          pts(0).withColumnRenamed("event_id", "lid"),
-          pts(1).withColumnRenamed("event_id", "rid"),
-          "lid", "rid", "x", "y", radius = 25.0)
-        .orderBy(col("lid"), col("rid"))
-    }),
-
-    // D-bottomk: deterministic fixed-SIZE uniform sample — the k rows
-    // with the smallest salted key-hash (bottom-k/KMV sketch). Plans as
-    // TakeOrderedAndProject (bounded per-partition heap, no global
-    // sort); prefix-stable in k, engine-reproducible.
-    "q_d_bottomk" -> ((s, dir) =>
-      graft.operators.Sampling.bottomK(
-        t(s, dir, "documents").select("doc_id", "lang", "source"),
-        "doc_id", k = 25, salt = "g3")),
-
-    // D-weighted: deterministic weighted sample without replacement —
-    // A-ES priorities u^(1/w) realized as the MAX OF w SALTED HASHES
-    // (the max of w uniforms has exactly that distribution): no pow, no
-    // libm, bit-identical in any engine. src0 weighted 4×, src1 2×.
-    "q_d_weighted" -> ((s, dir) =>
-      graft.operators.Sampling.weightedSample(
-        t(s, dir, "documents").select(col("doc_id"), col("source"))
-          .withColumn("w", when(col("source") === "src0", 4)
-            .when(col("source") === "src1", 2).otherwise(1)),
-        "doc_id", "w", k = 30, maxWeight = 4, salt = "g4")),
-
-    // F-scaling: per-group feature-scaling battery — z-score from
-    // decimal power sums, min-max, and p05/p95 winsorize, all scaled
-    // within the row's own l_returnflag group by the FUSED variant:
-    // one stats aggregate + one AQE-broadcast join covers all three
-    // (chaining the single ops re-scans the input once per op)
-    "q_f_scaling" -> ((s, dir) => {
-      val fs = graft.operators.FeatureScaling
-      val d = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
-      fs.scaleAll(d, "l_returnflag", "l_quantity",
-          zOut = "z", mmOut = "mm", clipOut = "clipped")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("z"), col("mm"), col("clipped"))
-        // (l_orderkey, l_linenumber) is NOT unique in the synthetic
-        // fixture — order by the derived columns too, so any remaining
-        // ties are between identical rows
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("z"), col("mm"))
-    }),
-
-    // X-bm25: full-text relevance search — BM25 over an inverted-index
-    // aggregation; non-query tokens drop map-side BEFORE any shuffle,
-    // df/corpus stats broadcast, top-k via TakeOrderedAndProject
-    "q_x_bm25" -> ((s, dir) =>
-      graft.operators.TextSearch.bm25Search(
-        t(s, dir, "documents"), "doc_id", "text",
-        Seq("query", "merge", "stream"), k = 20)),
-
-    // X-quantize: per-vector symmetric int8 embedding quantization — 4×
-    // storage shrink for a 100 TB vector corpus, pure map-side array
-    // math (no UDF, no shuffle). The gate pins every code via the
-    // integer code-sum plus the double reconstruction error. NOTE: this
-    // gate deliberately exercises the HOF (transform/aggregate) twin —
-    // those are CodegenFallback (interpreted) in Spark, fine at fixture
-    // scale; data-sized paths use Quantization.quantizeFused, whose
-    // byte parity with this twin is spec-gated (QuantizeFusedSpec).
-    "q_x_quantized" -> ((s, dir) => {
-      val qz = graft.operators.Quantization
-      t(s, dir, "embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"),
-          qz.symmetricScale(col("embedding")).as("__s"),
-          col("embedding"))
-        .select(col("vec_id"),
-          round(col("__s"), 9).as("scale"),
-          size(col("embedding")).as("n_dims"),
-          aggregate(qz.quantize(col("embedding"), col("__s")), lit(0L),
-            (a, q) => a + q.cast("long")).as("code_sum"),
-          round(qz.reconstructionMse(col("embedding"), col("__s")), 6).as("mse"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // X-fuzzy: edit-distance duplicate pairs (entity resolution) —
-    // length-band + first-char blocked equi-join, exact levenshtein on
-    // candidates only; supplier names pair when one digit differs
-    "q_x_fuzzy" -> ((s, dir) =>
-      graft.operators.Dedup.fuzzyPairs(
-          t(s, dir, "supplier"), "s_suppkey", "s_name", maxDist = 1)
-        .orderBy(col("id1"), col("id2"))),
-
-    // X-entity: entity-resolution capstone — near-identical names
-    // (edit distance <= 1) become an edge list, closed into entity
-    // clusters by iterative min-label connected components (the same
-    // composition MinHash and TF-IDF pairs get in q_x_dup_clusters /
-    // q_x_tfidf_clusters, over the FUZZY candidate generator). The
-    // gate's supplier blocks sit far below fuzzyPairs' refinement
-    // threshold, so the depth-1 (first char, length band) SQL twin is
-    // the exact edge set; the oracle closes it with a recursive CTE.
-    "q_x_entity" -> ((s, dir) => {
-      // the candidate edge list materializes ONCE before the closure:
-      // connectedComponents' symmetric union references its child twice,
-      // which would recompute the whole fuzzy census + candidate join
-      // per branch
-      val edges = graft.operators.Dedup.fuzzyPairs(
-          t(s, dir, "supplier"), "s_suppkey", "s_name", maxDist = 1)
-        .select(col("id1"), col("id2")).localCheckpoint()
-      graft.operators.Dedup.connectedComponents(edges)
-        .orderBy(col("id"))
-    }),
-
-    // X-centroids: per-group embedding centroids — the element-wise mean
-    // by (group, dimension) keyed shuffle (cluster representatives / the
-    // IVF quantizer update); joined to documents for a language grouping
-    "q_x_centroids" -> ((s, dir) => {
-      val withLang = t(s, dir, "embeddings")
-        .join(t(s, dir, "documents").select(col("doc_id").as("vec_id"),
-          col("lang")), "vec_id")
-      graft.operators.Similarity.groupCentroids(withLang, "lang", "embedding")
-        .filter(col("pos") < 8) // gate keeps the first 8 dims per group
-        .orderBy(col("lang"), col("pos"))
-    }),
-
-    // A-cms: Count-Min sketch point estimates — bounded-memory "how
-    // frequent is THIS item" (the dual of the Misra-Gries top-k), exactly
-    // mergeable counter arrays. The 5-value event_type domain is
-    // collision-free in the 1024-wide sketch (CountMinSpec asserts it),
-    // so estimates are EXACT and the oracle is a plain filtered GROUP BY.
-    "q_a_cms" -> ((s, dir) =>
-      t(s, dir, "events")
-        .agg(graft.functions.CountMin.estimates(
-          col("event_type"), Seq("click", "purchase", "view"), 1024, 4).as("__e"))
-        .select(explode(col("__e")).as("e"))
-        .select(col("e.item").as("item"), col("e.est").as("est"))
-        .orderBy(col("item"))),
-
-    // S-evolved: schema-evolution scan — two ingest batches written under
-    // different schema versions (v2 adds n_chars) reconcile through
-    // mergeSchema; old-batch rows surface the new column as null. The
-    // oracle emulates the evolution with a CASE over the source table.
-    "q_s_evolved" -> ((s, dir) => {
-      val path = tmpFor(dir, "evolved")
-      val d = t(s, dir, "documents")
-      d.filter(col("doc_id") < 250).select("doc_id", "lang")
-        .write.mode("overwrite").parquet(s"$path/batch=1")
-      d.filter(col("doc_id") >= 250).select("doc_id", "lang", "n_chars")
-        .write.mode("overwrite").parquet(s"$path/batch=2")
-      graft.sources.IO.readEvolved(s, path)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"),
-          count(col("n_chars")).as("n_with_chars"),
-          sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("min_id"))
-        .orderBy(col("lang"))
-    }),
-
-    // S-footers: parquet ROW-GROUP METADATA probe — per-column chunk
-    // census (value/null counts, compressed/uncompressed bytes) read
-    // from footers only, never data pages; one task per file batch, so
-    // a million-file lake inventories in a map pass. ORACLED against
-    // DuckDB's own parquet_metadata() over the SAME file — a genuinely
-    // independent footer reader, not a self-computed golden.
-    "q_s_footers" -> ((s, dir) =>
-      graft.sources.ParquetMeta.gateProfile(s, dir)),
-
-    // J-range: band (range) join — points equi-joined to quantized range
-    // buckets then refined, instead of the BroadcastNestedLoopJoin a raw
-    // BETWEEN join plans (quadratic at scale; no-BNLJ asserted in
-    // PlanShapeSpec). Overlapping price bands over orders.
-    "q_j_range" -> ((s, dir) => {
-      val bands = t(s, dir, "nation")
-        .select(col("n_nationkey").as("band_id"),
-          (col("n_nationkey").cast("double") * 8000.0).as("lo"),
-          (col("n_nationkey").cast("double") * 8000.0 + 19999.0).as("hi"))
-      graft.operators.RangeJoin.bandJoin(
-          t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-          "o_totalprice", bands, "lo", "hi", bucketWidth = 8000L)
-        .groupBy(col("band_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(38,2)")).cast("double")
-            .as("sum_price"))
-        .orderBy(col("band_id"))
-    }),
-
-    // S-compact: sorted-compaction maintenance pass — range-partitioned,
-    // within-file-sorted rewrite (restores row-group skipping for key
-    // predicates); the oracle aggregates the source directly, so the
-    // round-trip proves the rewrite lost/changed nothing
-    "q_s_compacted" -> ((s, dir) => {
-      val path = tmpFor(dir, "compacted")
-      graft.sources.IO.compact(
-        t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity"),
-        path, Seq("l_orderkey", "l_linenumber"), partitions = 8,
-        maxRecordsPerFile = 100000L)
-      s.read.parquet(path)
-        .groupBy((col("l_orderkey") % 7).as("grp"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(38,2)")).cast("double")
-            .as("sum_qty"),
-          min(col("l_orderkey")).as("min_key"))
-        .orderBy(col("grp"))
-    }),
-
-    // S-zorder: Z-order (Morton-curve) layout — multi-dimensional data
-    // skipping (the Delta/Iceberg ZORDER BY lever on plain parquet). The
-    // gate round-trips the real sink (quantize each layout column,
-    // interleave bits, repartitionByRange + sort by the code) and hashes
-    // the read-back rows with their Morton codes — the interleave is
-    // pure integer bit arithmetic, bit-identical in DuckDB. The
-    // file-skipping property itself (per-file min/max prune on the
-    // SECOND dimension, which a linear sort cannot) is locked in
-    // LayoutSpec.
-    "q_s_zorder" -> ((s, dir) => {
-      val path = tmpFor(dir, "zorder")
-      val src = t(s, dir, "part").select("p_partkey", "p_size", "p_retailprice")
-      graft.sources.Layout.writeZordered(src, path,
-        Seq("p_size", "p_retailprice"), partitions = 4, bits = 8)
-      s.read.parquet(path)
-        .select(col("p_partkey"), col("p_size"),
-          graft.sources.Layout.mortonCode(Seq(
-            pmod(col("p_partkey"), lit(256)).cast("long"),
-            pmod(col("p_size").cast("long"), lit(256))), 8).as("z"))
-        .orderBy(col("p_partkey"))
-        .limit(200)
-    }),
-
-    // X-spans: exact duplicated-passage detection — stride-sampled char
-    // windows keyed by md5 (cross-engine), reduced per hash; the shuffle
-    // carries hashes and ids, never text. Catches verbatim spans repeated
-    // across otherwise-distinct documents, which whole-doc dedup and
-    // per-doc sketches both miss.
-    "q_x_dup_spans" -> ((s, dir) =>
-      graft.operators.Dedup.duplicatedSpans(
-          tw(s, dir, "documents"), "doc_id", "text",
-          window = 40, stride = 10, minDocs = 2)
-        .orderBy(col("h"))),
-
-    // X-cdc: content-defined duplicated-passage detection — windows
-    // emitted at positions the CONTENT selects (md5 anchor band), so a
-    // copied passage collides on the same span hashes at ANY offset —
-    // the shift-robust refinement of q_x_dup_spans' stride sampling
-    "q_x_cdc_spans" -> ((s, dir) =>
-      graft.operators.Dedup.anchoredSpans(
-          tw(s, dir, "documents"), "doc_id", "text",
-          window = 40, gram = 8, sel = "0", minDocs = 2)
-        .orderBy(col("h"))),
-
-    // X-cdc-fast: the fused native twin of q_x_cdc_spans — one xxhash64
-    // per scanned byte via a single codegen'd expression pass instead of
-    // an md5 digest per position. Runs over the planted corpus (docs
-    // 100-103 share a passage at different offsets — the shift-robust
-    // case; docs 0/104 are verbatim copies) and is golden-oracled: the
-    // anchor mask + span hash + per-span reduce are reproduced
-    // independently driver-side ([[graft.operators.HashGoldens]]).
-    "q_x_cdc_fast" -> ((s, dir) =>
-      graft.operators.Dedup.anchoredSpansFast(
-          graft.operators.HashGoldens.corpusDF(s), "doc_id", "text",
-          window = 40, gram = 8, maskBits = 4, minDocs = 2)
-        .orderBy(col("h"))),
-
-    // X-gate: adaptive per-source quality gate — drop each source's own
-    // bottom length-quartile (rank/n > 0.25; small groups degrade
-    // proportionally instead of vanishing). Output is the per-source
-    // census of survivors.
-    "q_x_quality_gate" -> ((s, dir) =>
-      graft.operators.TextAnalysis.percentileGate(
-          t(s, dir, "documents"), Seq("source"), "n_chars", "doc_id",
-          minPct = 0.25)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), min(col("n_chars")).as("min_len"),
-          sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("source"))),
-
-    // A-freq: heavy hitters via the Misra-Gries bounded-memory sketch —
-    // at most `capacity` counters per partial buffer regardless of the
-    // item domain, mergeable across partitions. capacity=32 > the
-    // distinct event_type count, so the sketch is provably exact here and
-    // the oracle is plain GROUP BY/ORDER BY/LIMIT.
-    "q_a_freq_items" -> ((s, dir) =>
-      t(s, dir, "events")
-        .agg(graft.functions.FreqItems.freqItems(col("event_type"),
-          capacity = 32, k = 5).as("top"))
-        .select(posexplode(col("top")).as(Seq("pos", "hit")))
-        .select((col("pos") + 1).cast("int").as("rank"),
-          col("hit.item").as("item"), col("hit.est").as("n"))
-        .orderBy(col("rank"))),
-
-    // A-kmv: per-slice distinct-cardinality via the KMV bounded sketch
-    // (k smallest distinct md5-60bit hashes; ≤k longs per group per
-    // partition reach the exchange — the 100 TB shape where the customer
-    // domain is billions and exact distinct IS the shuffle). k=48 <
-    // per-priority distinct customers at every SF, so the estimator
-    // branch (not the exact-below-k branch) is what hashes. The sketch is
-    // a pure function of the distinct hash set, and both engines apply
-    // the same IEEE long→double cast to h (rounds identically above
-    // 2^53) and the same * / ops → DuckDB recomputes the k smallest per
-    // slice with a window and lands bit-identical. The exact count rides
-    // along as the accuracy context.
-    "q_a_kmv_slices" -> ((s, dir) => {
-      val sk = graft.operators.SetSketch
-      val k = 48
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority").as("priority"))
-        .agg(sk.kmvSketch(sk.hash60(col("o_custkey")), k).as("__sk"),
-          countDistinct(col("o_custkey")).cast("bigint").as("exact_distinct"))
-        .select(col("priority"),
-          size(col("__sk")).cast("int").as("n_sketch"),
-          // guarded: ANSI element_at throws past the end on a below-k group
-          when(size(col("__sk")) === k, element_at(col("__sk"), k))
-            .as("kth_hash"),
-          sk.estimateDistinct(col("__sk"), k).as("est_distinct"),
-          col("exact_distinct"))
-        .orderBy(col("priority"))
-    }),
-
-    // A-kmv-overlap: the question HLL can't answer — how many customers
-    // do two slices SHARE? Union of KMV sketches is exactly the sketch
-    // of the union (closure), and shared membership inside the union
-    // sketch estimates Jaccard, hence |A∩B|. Everything after the two
-    // 1-row aggregates is map-side array math over k-element arrays; the
-    // exact intersection (one distinct-key semi-join at fixture scale)
-    // rides along as the accuracy context.
-    "q_a_kmv_overlap" -> ((s, dir) => {
-      val sk = graft.operators.SetSketch
-      val k = 48
-      val o = t(s, dir, "orders")
-      def side(p: String, out: String) =
-        o.filter(col("o_orderpriority") === p)
-          .agg(sk.kmvSketch(sk.hash60(col("o_custkey")), k).as(out))
-      def keys(p: String) =
-        o.filter(col("o_orderpriority") === p).select(col("o_custkey")).distinct()
-      val exact = keys("1-URGENT").join(keys("2-HIGH"), "o_custkey")
-        .agg(count(lit(1)).cast("bigint").as("exact_intersect"))
-      side("1-URGENT", "ska").crossJoin(side("2-HIGH", "skb")).crossJoin(exact)
-        .select(
-          sk.estimateDistinct(col("ska"), k).as("est_a"),
-          sk.estimateDistinct(col("skb"), k).as("est_b"),
-          sk.estimateDistinct(sk.unionSketch(col("ska"), col("skb"), k), k)
-            .as("est_union"),
-          sk.jaccardEstimate(col("ska"), col("skb"), k).as("jaccard_est"),
-          sk.intersectionEstimate(col("ska"), col("skb"), k)
-            .as("est_intersect"),
-          col("exact_intersect"))
-    }),
-
-    // A-dp: Laplace-mechanism noisy count release — per-group
-    // count + Lap(1/ε) with SEEDED noise (md5-52bit uniform → inverse
-    // CDF), so reruns publish the same number and the oracle recomputes
-    // it bit-for-bit (u and its affine terms are exact binary fractions;
-    // only ln is libm and the round-6 output absorbs the ulp — the
-    // haversine discipline). One keyed aggregate + map-side scalar math.
-    "q_a_dp_counts" -> ((s, dir) =>
-      graft.operators.Privacy.dpNoisyCounts(
-          t(s, dir, "orders"), "o_orderpriority", eps = 0.5, salt = "dp-r8")
-        .orderBy(col("o_orderpriority"))),
-
-    // A-dp-sums: Laplace noisy sum/mean release with CLAMPED sensitivity
-    // — values clamp to [0, 300000] (the clamp DEFINES the sum's
-    // sensitivity; without it the ε claim is false on one outlier), ε
-    // split across the sum and count draws (independent salts), mean =
-    // post-processing of the two ROUND-6 releases (shared-double IEEE
-    // division → exact parity). One keyed aggregate + map-side noise.
-    "q_a_dp_sums" -> ((s, dir) =>
-      graft.operators.Privacy.dpNoisySums(
-          t(s, dir, "orders"), "o_orderpriority", "o_totalprice",
-          lo = 0.0, hi = 300000.0, eps = 1.0, salt = "dp9")
-        .orderBy(col("o_orderpriority"))),
-
-    // A-dp-user: USER-level DP sums — per-user contribution bounding
-    // BEFORE the keyed aggregate (first 3 orders per customer by
-    // orderkey — the deterministic cap is what DEFINES the release's
-    // sensitivity: Δsum = 3·300000, Δcount = 3; without it the ε claim
-    // is false for any heavy customer). One per-user window + the same
-    // single keyed aggregate and seeded Laplace release as q_a_dp_sums.
-    "q_a_dp_user" -> ((s, dir) =>
-      graft.operators.Privacy.dpUserSums(
-          t(s, dir, "orders"), userCol = "o_custkey", orderCol = "o_orderkey",
-          groupCol = "o_orderpriority", valueCol = "o_totalprice",
-          maxPerUser = 3, lo = 0.0, hi = 300000.0, eps = 1.0, salt = "dpu10")
-        .orderBy(col("o_orderpriority"))),
-
-    // A-dp-quantile: exponential-mechanism noisy MEDIAN release — the
-    // rank-space mechanism (Laplace noise can't release quantiles; rank
-    // sensitivity is 1). 64-cell domain, utility −|below − q·n|,
-    // seeded Gumbel-max argmax (round-6 scores BEFORE the argmax — the
-    // msprt discrete-output discipline), release = cell midpoint. One
-    // (group, bin) keyed aggregate; panel math over group × 64 cells.
-    "q_a_dp_quantile" -> ((s, dir) =>
-      graft.operators.Privacy.dpNoisyQuantile(
-          t(s, dir, "orders"), "o_orderpriority", "o_totalprice",
-          q = 0.5, lo = 0.0, hi = 600000.0, bins = 64, eps = 1.0,
-          salt = "dpq9")
-        .orderBy(col("o_orderpriority"))),
-
-    // S-compaction: small-file compaction planning — files sort
-    // (bytes DESC, path) per table partition and land in bin
-    // floor(prefix/target): the deterministic one-pass first-fit-
-    // decreasing analogue, one window over the METADATA-sized file
-    // relation partitioned by the table partition (same parallelism the
-    // rewrite job has). Fixture: a file-stats relation derived from
-    // documents (source = partition, n_chars = bytes). Pure integer
-    // prefix sums → oracle-exact.
-    "q_s_compaction" -> ((s, dir) => {
-      val files = t(s, dir, "documents")
-        .select(col("source"),
-          concat(lit("part-"), lpad(col("doc_id").cast("string"), 6, "0"))
-            .as("path"),
-          col("n_chars").cast("long").as("bytes"))
-      graft.sources.Layout.compactionPlan(files, "source", "path", "bytes",
-          targetBytes = 4000L)
-        .groupBy(col("source"), col("bin"))
-        .agg(count(lit(1)).cast("bigint").as("n_files"),
-          sum(col("bytes")).cast("bigint").as("bin_bytes"),
-          max(col("oversized").cast("int")).cast("int").as("has_oversized"),
-          min(col("path")).as("first_path"))
-        .orderBy(col("source"), col("bin"))
-    }),
-
-    // X-repetition: the Gopher §A1.1 within-document repetition battery
-    // (dup-line fraction/chars, top-{2,3,4}-gram char fraction, dup-
-    // 5-gram char fraction) — the quality gates run BEFORE dedup. The
-    // fixture text is single-line, so the gate derives an 8-token line
-    // structure from the token stream (same derivation in the oracle);
-    // grams run over the full stream. One tagged explode → one
-    // (doc, n, gram) count shuffle covers all four gram sizes.
-    "q_x_repetition" -> ((s, dir) => {
-      val toks = split(trim(col("text")), "\\s+")
-      // fused 8-token line derivation (ChunkJoin) — the HOF
-      // array_join(transform(sequence(...))) twin is spec-pinned in
-      // WordNGramsFusedSpec; this per-token loop plus the gram emission
-      // inside gopherSignals were the gate's interpreted hot paths
-      val mltext = graft.functions.ChunkJoin.column(toks, 8, " ", "\n")
-      val d = tw(s, dir, "documents").select(col("doc_id"), mltext.as("mtext"))
-      graft.operators.Repetition.gopherSignals(d, "doc_id", "mtext")
-        .orderBy(col("doc_id"))
-    }),
-
-    // X-hybrid: reciprocal rank fusion of the lexical (BM25) and
-    // semantic (exact cosine) retrievers — hybrid search without score
-    // calibration. Both input lists are top-20 RESULTS (bounded by
-    // construction), so the fusion's rank windows run over ≤20 rows;
-    // the corpus-scale work stays inside the retrievers.
-    "q_x_hybrid_rrf" -> ((s, dir) => {
-      val lex = graft.operators.TextSearch.bm25Search(
-        t(s, dir, "documents"), "doc_id", "text",
-        Seq("query", "merge", "stream"), k = 20)
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val sem = graft.operators.Similarity
-        .bruteForceTopK(emb, "vec_id", "embedding", qv, 20)
-        .select(col("vec_id").as("doc_id"), col("cos").as("score"))
-      graft.operators.Fusion.reciprocalRankFusion(
-        Seq(lex.select(col("doc_id"), col("score")), sem),
-        "doc_id", "score", kRrf = 60, topK = 15)
-    }),
-
-    // T-anomaly: rolling z-score outliers per user — ONE key-partitioned
-    // window computes rolling count/Σv/Σv² in a single pass; variance
-    // from the computational formula over decimal-exact sums
-    "q_t_anomaly" -> ((s, dir) =>
-      graft.operators.TimeSeries.rollingAnomaly(
-          t(s, dir, "events").select("event_id", "user_id", "ts", "value"),
-          "user_id", "ts", "value", tieCol = "event_id",
-          lookback = 10, zThresh = 2.0, minObs = 4)
-        .select(col("event_id"), col("n_prev"), col("z"), col("is_anomaly"))
-        .orderBy(col("event_id"))),
-
-    // X-leakage: cross-source near-dup contamination matrix — the exact
-    // jaccard pair set (q_x_setjoin's operator) rolled up by normalized
-    // source pair; cross-source cells are mix-weighting leaks
-    "q_x_leakage" -> ((s, dir) =>
-      graft.operators.SetSimJoin.leakageMatrix(
-          t(s, dir, "documents").filter(col("doc_id") < 500),
-          "doc_id", "text", "source", 0.8)
-        .orderBy(col("src1"), col("src2"))),
-
-    // W-markov: first-order event-transition matrix — one user-keyed lag
-    // window (the sessionization shuffle), then matrix-sized aggregates;
-    // row-normalizing window runs over the matrix, not the data
-    "q_w_transitions" -> ((s, dir) =>
-      graft.operators.Funnel.transitionMatrix(
-          t(s, dir, "events"), "user_id", "ts", "event_type", "event_id")
-        .orderBy(col("from_type"), col("to_type"))),
-
-    // W-markov-attrib: Markov-chain removal-effect attribution — the
-    // data-scale pass is one user-keyed journey shuffle + a
-    // config-sized transition aggregate; the (|channels|+1)
-    // value-iteration solves run driver-side on the collected matrix
-    // with the PageRank round-12 decimal discipline
-    "q_w_markov_attrib" -> ((s, dir) =>
-      graft.operators.Funnel.markovRemovalEffects(
-        t(s, dir, "events"), "user_id", "ts", "event_id", "event_type",
-        channels = Seq("click", "error", "signup", "view"),
-        convType = "purchase", iters = 12)),
-
-    // X-topterms: per-doc TF-IDF keyword extraction — (doc, term) tf +
-    // vocab-sized df aggregates, 1-row corpus scalar, doc-partitioned
-    // rank window
-    "q_x_topterms" -> ((s, dir) =>
-      graft.operators.TextAnalysis.topTerms(
-          tw(s, dir, "documents"), "doc_id", "text", k = 3)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    // D-neyman: minimum-variance stratified sampling — budget allocated
-    // ∝ N_h·σ_h per event type, kept via the salted content-hash uniform
-    // (deterministic, no RNG); gate hashes the per-stratum census
-    "q_d_neyman" -> ((s, dir) =>
-      graft.operators.Sampling.neymanAllocation(
-          t(s, dir, "events"), "event_type", "event_id", "value",
-          totalBudget = 300, salt = "ney")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).cast("bigint").as("n_kept"),
-          sum(col("event_id")).cast("bigint").as("sum_id"))
-        .orderBy(col("event_type"))),
-
-    // T-twap: per-user time-weighted value average — each observation
-    // weighted by its holding interval (lead window on the session
-    // shuffle); the irregular-series mean
-    "q_t_twap" -> ((s, dir) =>
-      graft.operators.TimeSeries.timeWeightedAvg(
-          t(s, dir, "events"), "user_id", "ts", "value", tieCol = "event_id")
-        .orderBy(col("user_id"))),
-
-    // S-shards: rendezvous-hash routing census — the same corpus
-    // assigned over 5 and 6 shards; the (before, after) matrix is
-    // hash-gated and exhibits the minimal-movement property (keys only
-    // ever move INTO the added shard)
-    "q_s_shards" -> ((s, dir) => {
-      val sh = graft.operators.Sharding
-      val five = (0 until 5).map(i => s"s$i")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          sh.rendezvousAssign(col("doc_id"), five).as("shard_a"),
-          sh.rendezvousAssign(col("doc_id"), five :+ "s5").as("shard_b"))
-        .groupBy(col("shard_a"), col("shard_b"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id"))
-        .orderBy(col("shard_a"), col("shard_b"))
-    }),
-
-    // W-attribution: first/last-touch conversion credit — one user-keyed
-    // ordered window (running first/last over the strictly-preceding
-    // frame), then a (first, last) matrix aggregate
-    "q_w_attribution" -> ((s, dir) =>
-      graft.operators.Cohort.touchAttribution(
-          t(s, dir, "events"), "user_id", "ts", "event_id",
-          "event_type", "value", convType = "purchase")
-        .orderBy(col("first_touch"), col("last_touch"))),
-
-    // A-anova: one-way ANOVA F across event types — two aggregates
-    // total (k-row group partials, then the grand total), the k-group
-    // generalization of the Welch t gate
-    "q_a_anova" -> ((s, dir) =>
-      graft.operators.Profiling.anovaF(
-        t(s, dir, "events"), "event_type", "value")),
-
-    // A-wmedian: per-flag quantity-weighted price median — running +
-    // total DECIMAL weight in one group-keyed window, exact crossing
-    // test (2·cumw ≥ W, no division), tie-order-invariant min
-    "q_a_wmedian" -> ((s, dir) =>
-      graft.operators.Profiling.weightedMedian(
-          t(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
-          "l_quantity")
-        .orderBy(col("l_returnflag"))),
-
-    // A-ols: per-flag price-on-quantity regression — closed-form OLS
-    // from five decimal sums in ONE group aggregate
-    "q_a_ols" -> ((s, dir) =>
-      graft.operators.Profiling.groupOls(
-          tw(s, dir, "lineitem"), "l_returnflag", "l_quantity",
-          "l_extendedprice")
-        .orderBy(col("l_returnflag"))),
-
-    // A-psi: Population Stability Index drift decomposition — the two
-    // event halves' value distributions compared over a 16-bin histogram
-    // ([0, 320), width 20 — an exactly-representable width, so the
-    // bucket floor is bit-identical cross-engine); bin tables + 1-row
-    // totals, two scans total
-    "q_a_psi" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      graft.operators.Drift.psiBins(
-          ev.filter(col("event_id") % 2 === 0),
-          ev.filter(col("event_id") % 2 === 1),
-          "value", lo = 0.0, hi = 320.0, bins = 16)
-        .orderBy(col("bucket"))
-    }),
-
-    // X-triangles: exact triangle count by canonical wedge closure over
-    // the 50-node modulo projection of lineitem — two equi-joins plus a
-    // grand total, the distributed-triangle textbook shape
-    "q_x_triangles" -> ((s, dir) =>
-      graft.operators.Graph.triangleCount(
-        t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 50).as("u"),
-          (col("l_partkey") % 50).as("v")), "u", "v")),
-
-    // X-hits: HITS hubs/authorities over the directed mod-50 lineitem
-    // projection — 3 rounds, L1-normalized half-steps, generated
-    // unrolled-CTE oracle (the pageRank regime)
-    "q_x_hits" -> ((s, dir) =>
-      graft.operators.Graph.hits(s,
-          t(s, dir, "lineitem").select(
-            (col("l_orderkey") % 50).as("src"),
-            (col("l_partkey") % 50).as("dst"))
-            .where(col("src") =!= col("dst")),
-          iters = 3)
-        .orderBy(col("node"))),
-
-    // X-lpa: deterministic label-propagation communities over the
-    // same-parity mod-50 lineitem graph (two structural halves CC would
-    // also split — but LPA is gated on the fixed-round label DYNAMICS,
-    // pure integer counting, generated CTE oracle)
-    "q_x_lpa" -> ((s, dir) =>
-      graft.operators.Graph.labelPropagation(s,
-          t(s, dir, "lineitem").select(
-            (col("l_orderkey") % 50).as("src"),
-            (col("l_partkey") % 50).as("dst"))
-            .where((col("src") % 2) === (col("dst") % 2)),
-          iters = 3)
-        .orderBy(col("node"))),
-
-    // X-dsir: DSIR-style importance weighting for data selection — the
-    // corpus scored by hashed-unigram log likelihood ratio against the
-    // English slice as the target distribution. Bucket tables broadcast;
-    // per-doc scoring joins distinct (doc, bucket) rows, not tokens.
-    "q_x_dsir" -> ((s, dir) => {
-      val d = tw(s, dir, "documents")
-      graft.operators.ImportanceWeights.dsirLogRatios(
-          d, d.filter(col("lang") === "en"), "doc_id", "text",
-          buckets = 256)
-        .orderBy(col("doc_id"))
-    }),
-
-    // T-cusum: Page's one-sided CUSUM drift scores per user — the
-    // max(0,·) recursion evaluated as running-sum-minus-running-min
-    // (two incremental O(1)/row frames on ONE user-keyed window), never
-    // a sequential scan
-    "q_t_cusum" -> ((s, dir) =>
-      graft.operators.TimeSeries.cusum(
-          t(s, dir, "events").select("event_id", "user_id", "ts", "value"),
-          "user_id", "ts", "value", tieCol = "event_id",
-          target = 150.0, slack = 10.0, threshold = 400.0)
-        .select(col("event_id"), col("cusum_pos"), col("cusum_neg"),
-          col("is_alarm"))
-        .orderBy(col("event_id"))),
-
-    // T-ewma: truncated-window EWMA smoothing per user — `lookback`
-    // O(1) lag reads on one user-keyed window; the geometric weights
-    // ship as pre-rounded literals to BOTH engines (no pow() surface)
-    "q_t_ewma" -> ((s, dir) =>
-      graft.operators.TimeSeries.ewmaSmooth(
-          t(s, dir, "events").select("event_id", "user_id", "ts", "value"),
-          "user_id", "ts", "value", tieCol = "event_id",
-          alpha = 0.3, lookback = 5)
-        .select(col("event_id"), col("ewma"))
-        .orderBy(col("event_id"))),
-
-    // A-skyline: the (quantity, price) Pareto frontier of lineitem —
-    // three-stage distributed reduction (per-x min, per-bucket scan,
-    // broadcast cross-bucket filter); the oracle is the quadratic
-    // dominance NOT EXISTS
-    "q_a_skyline" -> ((s, dir) =>
-      graft.operators.Skyline.skyline2d(
-          t(s, dir, "lineitem"), "l_quantity", "l_extendedprice",
-          bucketWidth = 5.0)
-        .orderBy(col("l_quantity"))),
-
-    // W-paths: top opening event paths — each user's first 3 event
-    // types joined `a>b>c` and counted; rank filter BEFORE the
-    // collect bounds per-user state at depth
-    "q_w_paths" -> ((s, dir) =>
-      graft.operators.Funnel.topPaths(
-        t(s, dir, "events"), "user_id", "ts", "event_type", "event_id",
-        depth = 3, k = 20)),
-
-    // A-mi: mutual information between return flag and line status —
-    // the chiSquare shape (cell aggregate + two marginals + 1-row
-    // total); ln runs on an exact integer-count ratio in both engines
-    "q_a_mi" -> ((s, dir) =>
-      graft.operators.Profiling.mutualInfo(
-        t(s, dir, "lineitem"), "l_returnflag", "l_linestatus")),
-
-    // A-benford: first-digit audit of order totals — integer-side
-    // digit extraction (scale-by-100, round, first decimal char), the
-    // nine Benford shares as pre-rounded literals in both engines
-    "q_a_benford" -> ((s, dir) =>
-      graft.operators.Profiling.benfordDigits(
-          t(s, dir, "orders"), "o_totalprice", scale = 2)
-        .orderBy(col("digit"))),
-
-    // X-kcore: 3-core of the sparse mod-97 lineitem projection — six
-    // peel rounds (fixpoint + idempotent margin at both SFs), integer
-    // degree output, generated unrolled-CTE oracle
-    "q_x_kcore" -> ((s, dir) =>
-      graft.operators.Graph.kCore(s,
-          t(s, dir, "lineitem")
-            .where(col("l_quantity") <= 2)
-            .select((col("l_orderkey") % 97).as("src"),
-              (col("l_partkey") % 97).as("dst")),
-          k = 3, rounds = 6)
-        .orderBy(col("node"))),
-
-    // X-bfs: bounded-horizon BFS distances from node 0 over the same
-    // sparse projection — 4 synchronous relax-and-min rounds (nodes
-    // beyond 4 hops absent: the bounded-horizon contract, exercised at
-    // sf0.001 where the graph's eccentricity exceeds 4)
-    "q_x_bfs" -> ((s, dir) =>
-      graft.operators.Graph.bfsDistances(s,
-          t(s, dir, "lineitem")
-            .where(col("l_quantity") <= 2)
-            .select((col("l_orderkey") % 97).as("src"),
-              (col("l_partkey") % 97).as("dst")),
-          source = 0L, maxDepth = 4)
-        .orderBy(col("node"))),
-
-    // X-jaro: Jaro-Winkler name linkage over part names — first-token +
-    // length-bucket blocking feeds the fused codegen JaroWinkler
-    // expression (pinned bit-exact to DuckDB's jaro_winkler_similarity
-    // by a 3000-case fuzz); never corpus²
-    "q_x_jaro" -> ((s, dir) =>
-      graft.operators.Linkage.jaroWinklerPairs(
-          t(s, dir, "part").filter(col("p_partkey") <= 400),
-          "p_partkey", "p_name", threshold = 0.90)
-        .orderBy(col("id1"), col("id2"))),
-
-    // A-cuped: CUPED variance reduction — per-flag price means adjusted
-    // by the quantity covariate; one variant-keyed aggregate + a
-    // broadcast pooled-scalar fold, nothing else touches the data
-    "q_a_cuped" -> ((s, dir) =>
-      graft.operators.Experiment.cupedAdjust(
-          tw(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
-          "l_quantity")
-        .orderBy(col("l_returnflag"))),
-
-    // A-ipw: observational ATE via per-stratum inverse-propensity
-    // weighting — the IPW sums collapse to stratum aggregates, so one
-    // stratum-keyed aggregate + a panel reduce; no per-row weights
-    "q_a_ipw" -> ((s, dir) =>
-      graft.operators.Experiment.ipwAte(
-        t(s, dir, "lineitem")
-          .withColumn("__treat", col("l_tax") > lit(0.04)),
-        "__treat", "l_extendedprice", "l_returnflag")),
-
-    // A-did: 2×2 difference-in-differences — one (group, period) cell
-    // aggregate, fixed-order IEEE on the four cell means
-    "q_a_did" -> ((s, dir) =>
-      graft.operators.Experiment.diffInDiffs(
-        t(s, dir, "events")
-          .withColumn("__treat", col("user_id") % 2 === 0)
-          .withColumn("__post", col("ts") >=
-            lit(1704067200000000000L + 15L * 86400L * 1000000000L)),
-        "__treat", "__post", "value")),
-
-    // A-msprt: always-valid sequential A/B test (mixture SPRT) — the
-    // peeking-safe per-period readout. ONE (period, arm) aggregate over
-    // data; cumulative sums + the running ln Λ envelope are windows over
-    // the calendar-bounded day panel. Per-term round-6 decimal sums,
-    // double divisions, shared τ²/α literals; ln's ulp absorbed by the
-    // round-6 outputs.
-    "q_a_msprt" -> ((s, dir) =>
-      graft.operators.Experiment.msprt(
-        t(s, dir, "events")
-          .where(col("ts").isNotNull) // a null period would order differently per engine
-          .withColumn("__treat", col("user_id") % 2 === 0)
-          .withColumn("__day",
-            floor((col("ts") - lit(1704067200000000000L)) /
-              lit(86400000000000.0)).cast("long")),
-        "__treat", "__day", "value", tauSq = 1.0, alpha = 0.05)
-      .orderBy(col("period"))),
-
-    // D-systematic: every-7th event along (ts, event_id) — global
-    // positions via range partitioning + a partition-count pass, never
-    // a single-partition sort
-    "q_d_systematic" -> ((s, dir) =>
-      graft.operators.Sampling.systematicSample(
-          t(s, dir, "events").select("event_id", "ts"),
-          Seq("ts", "event_id"), k = 7, offset = 3)
-        .select(col("event_id"))
-        .orderBy(col("event_id"))),
-
-    // F-qnorm: quantile normalization of event values across event
-    // types — rank window + rank-keyed reference mean + join back
-    "q_f_qnorm" -> ((s, dir) =>
-      graft.operators.FeatureScaling.quantileNormalize(
-          t(s, dir, "events").select("event_id", "event_type", "value"),
-          "event_type", "value", tieCol = "event_id")
-        .select(col("event_id"), col("qnorm"))
-        .orderBy(col("event_id"))),
-
-    // W-rfm: RFM segmentation of customers from their orders — one
-    // entity aggregate, then three exact NTILEs computed from
-    // range-partitioned global positions (GlobalOrder.ntileAtScale):
-    // no single-partition window anywhere
-    "q_w_rfm" -> ((s, dir) =>
-      graft.operators.Cohort.rfmScores(
-          t(s, dir, "orders"), "o_custkey", "o_orderdate", "o_totalprice",
-          k = 5)
-        .orderBy(col("o_custkey"))),
-
-    // X-assoc: pairwise association rules over order baskets (bounded
-    // mod-40 item domain) — basket-keyed pair join + marginals, ratios
-    // from exact integer counts
-    "q_x_assoc" -> ((s, dir) =>
-      graft.operators.Cooccurrence.associationRules(
-          t(s, dir, "lineitem")
-            .select(col("l_orderkey").as("basket"),
-              (col("l_partkey") % 40).as("item")),
-          "basket", "item", minSupport = 20)
-        .orderBy(col("ante"), col("cons"))),
-
-    // A-unpivot: wide-to-long reshape of the per-flag measure panel —
-    // the relational melt (Spark's native unpivot; the pivot gate's
-    // inverse), decimal-exact sums cast to double BEFORE the reshape
-    "q_a_unpivot" -> ((s, dir) => {
-      val wide = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(38,6)")).cast("double")
-            .as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(38,6)")).cast("double")
-            .as("sum_price"),
-          sum(round(col("l_extendedprice") * col("l_discount"), 6)
-            .cast("decimal(38,6)")).cast("double").as("sum_disc"))
-      wide.unpivot(
-          Array(col("l_returnflag")),
-          Array(col("sum_qty"), col("sum_price"), col("sum_disc")),
-          "measure", "value")
-        .orderBy(col("l_returnflag"), col("measure"))
-    }),
-
-    // T-acf: per-user autocorrelation at lags 1..3 — all lead reads in
-    // ONE key-partitioned window pass, inline posexplode fan-out, one
-    // (key, lag) aggregate; integer-exact decimal sufficient statistics
-    "q_t_acf" -> ((s, dir) =>
-      graft.operators.TimeSeries.autocorrelation(
-          t(s, dir, "events").select("event_id", "user_id", "ts", "value"),
-          "user_id", "ts", "value", tieCol = "event_id", maxLag = 3)
-        .orderBy(col("user_id"), col("lag_k"))),
-
-    // T-interp: per-user linear interpolation of planted nulls — two
-    // incremental frames on one window (running last before / running
-    // first after), never a neighbor self-join
-    "q_t_interp" -> ((s, dir) =>
-      graft.operators.TimeSeries.interpolate(
-          t(s, dir, "events").select(col("event_id"), col("user_id"),
-            col("ts"),
-            when(col("event_id") % 7 === 0, lit(null))
-              .otherwise(col("value")).as("value")),
-          "user_id", "ts", "value", tieCol = "event_id")
-        .select(col("event_id"), col("v_interp"))
-        .orderBy(col("event_id"))),
-
-    // T-seasonal: (day-of-week, hour) baseline + residual — a
-    // 168-cell broadcast profile joined back map-side; calendar parts
-    // from the epoch-nano BIGINT by integer division only
-    "q_t_seasonal" -> ((s, dir) =>
-      graft.operators.TimeSeries.seasonalBaseline(
-          t(s, dir, "events"), "event_id", "ts", "value")
-        .orderBy(col("event_id"))),
-
-    // A-spearman: tie-averaged rank correlation with DISTRIBUTED ranks
-    // (GlobalOrder.withPrefixSum — range shuffle + partition-sized
-    // offsets, no single-partition rank window); doubled ranks keep
-    // every sufficient statistic an exact integer
-    "q_a_spearman" -> ((s, dir) =>
-      graft.operators.Profiling.spearman(
-        t(s, dir, "lineitem"), "l_quantity", "l_extendedprice")),
-
-    // X-linkpred: common-neighbor + Adamic-Adar link scores over the
-    // sparse mod-150 quantity≤10 lineitem projection (density tuned so
-    // BOTH SFs leave thousands of non-adjacent candidate pairs) —
-    // wedge-join candidates (triangle regime, Σdeg² not pairs²),
-    // broadcast degree table, one anti-join against existing edges
-    "q_x_linkpred" -> ((s, dir) =>
-      graft.operators.Graph.linkPrediction(
-          t(s, dir, "lineitem").where(col("l_quantity") <= 10)
-            .select(
-              (col("l_orderkey") % 150).as("u"),
-              (col("l_partkey") % 150).as("v")),
-          "u", "v", minCommon = 2)
-        .orderBy(col("u"), col("v"))),
-
-    // S-diff: snapshot reconciliation — orders vs a deterministically
-    // perturbed next version (drops, updates, inserts); one full-outer
-    // join + null-safe column masks, the audit twin of MERGE/SCD2
-    "q_s_diff" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val kept = o.where(col("o_orderkey") % 19 =!= 0)
-        .select(col("o_orderkey"),
-          when(col("o_orderkey") % 31 === 0, lit("X"))
-            .otherwise(col("o_orderstatus")).as("o_orderstatus"),
-          when(col("o_orderkey") % 23 === 0, col("o_totalprice") + 10.0)
-            .otherwise(col("o_totalprice")).as("o_totalprice"))
-      val added = o.where(col("o_orderkey") % 17 === 3)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"),
-          col("o_orderstatus"), col("o_totalprice"))
-      graft.operators.Snapshot.diff(o, kept.unionByName(added),
-          Seq("o_orderkey"), Seq("o_orderstatus", "o_totalprice"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // X-ttr: per-document type-token ratio — lexical diversity as a
-    // pure map-side HOF (distinct tokens / tokens), the quality signal
-    // the stopword/punct panel doesn't capture
-    "q_x_ttr" -> ((s, dir) =>
-      tw(s, dir, "documents")
-        .select(col("doc_id"),
-          size(array_distinct(split(trim(col("text")), "\\s+")))
-            .as("n_types"),
-          size(split(trim(col("text")), "\\s+")).as("n_tokens"))
-        .select(col("doc_id"), col("n_types"), col("n_tokens"),
-          when(col("n_tokens") > 0,
-            round(col("n_types").cast("double") / col("n_tokens"), 6))
-            .as("ttr"))
-        .orderBy(col("doc_id"))),
-
-    // X-vocabcov: tokenizer-budget coverage curve — what share of all
-    // corpus tokens the top-k vocabulary words capture (k = 5, 15 of
-    // the 31-word fixture vocab); TakeOrdered bounded heads, exact
-    // integer token sums, 1-row total scalar
-    "q_x_vocab_coverage" -> ((s, dir) => {
-      val vocab = graft.operators.TextAnalysis.vocabulary(
-          tw(s, dir, "documents"), "doc_id", "text")
-        .select(col("word"), col("tf"))
-      val total = vocab.agg(sum(col("tf")).as("__total"))
-      def cov(k: Int) = vocab.orderBy(col("tf").desc, col("word")).limit(k)
-        .agg(sum(col("tf")).as("top_tokens"))
-        .select(lit(k).as("k"), col("top_tokens"))
-      cov(5).unionByName(cov(15))
-        .crossJoin(broadcast(total))
-        .select(col("k"), col("top_tokens"),
-          col("__total").as("total_tokens"),
-          round(col("top_tokens").cast("double") /
-            col("__total").cast("double"), 6).as("coverage"))
-        .orderBy(col("k"))
-    }),
-
-    // T-concurrency: sweep-line peak overlap of 30-minute activity
-    // intervals — the +1/−1 delta stream summed through the
-    // distributed prefix sum (the textbook global running sum is a
-    // single-partition window; this never builds one); half-open
-    // semantics (ends apply before starts at equal instants)
-    "q_t_concurrency" -> ((s, dir) =>
-      graft.operators.Intervals.peakConcurrency(
-        t(s, dir, "events").select(col("ts").as("s_ts"),
-          (col("ts") + 1800000000000L).as("e_ts"), col("event_id")),
-        "s_ts", "e_ts", "event_id")),
-
-    // A-catentropy: per-user behavioral diversity — Shannon entropy of
-    // the event-type mix via H = ln n − (Σ c·ln c)/n (only the
-    // (group, category) counts ever shuffle)
-    "q_a_cat_entropy" -> ((s, dir) =>
-      graft.operators.Profiling.categoricalEntropy(
-          t(s, dir, "events"), "user_id", "event_type")
-        .orderBy(col("user_id"))),
-
-    // X-compsizes: connected-component SIZE DISTRIBUTION — the
-    // dedup/percolation readout over the sparse mod-500 quantity≤2
-    // projection (sf0.001 sits below the percolation threshold with a
-    // 7-size histogram; sf0.01 pins the fully-percolated giant — the
-    // k-core both-SFs-differently rule); min-label closure + two tiny
-    // keyed aggregates
-    "q_x_comp_sizes" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .where(col("l_quantity") <= 2 &&
-          col("l_orderkey") % 500 =!= col("l_partkey") % 500)
-        .select(least(col("l_orderkey") % 500, col("l_partkey") % 500)
-            .as("id1"),
-          greatest(col("l_orderkey") % 500, col("l_partkey") % 500)
-            .as("id2"))
-        .distinct().localCheckpoint()
-      graft.operators.Dedup.connectedComponents(edges)
-        .groupBy(col("cluster")).agg(count(lit(1)).as("__sz"))
-        .groupBy(col("__sz").as("component_size"))
-        .agg(count(lit(1)).as("n_components"))
-        .orderBy(col("component_size"))
-    }),
-
-    // F-curve: piecewise-linear calibration — map-side interpolation
-    // between equally-spaced knot literals (both engines fold the same
-    // ladder), edge clamping at the grid boundaries
-    "q_f_curve" -> ((s, dir) =>
-      graft.operators.FeatureScaling.piecewiseLinear(
-          t(s, dir, "events").select("event_id", "value"),
-          // step 50 and 0.1-multiple knot gaps keep every blend a
-          // ≤5-decimal terminating value (2-decimal inputs × 2 ÷ 100 ×
-          // 0.1k) — round-6 never meets a half boundary in either engine
-          "value", x0 = 0.0, step = 50.0,
-          ys = Seq(0.0, 0.2, 0.3, 0.5, 0.6, 0.8, 0.9, 1.0, 1.0, 1.0))
-        .select(col("event_id"), col("calibrated"))
-        .orderBy(col("event_id"))),
-
-    // F-isotonic: PAV calibration repair of the discrete forecast (the
-    // q_a_brier panel) — one bin aggregate is the data-scale pass, the
-    // exact-integer PAV runs driver-side on the config-sized panel
-    "q_f_isotonic" -> ((s, dir) =>
-      graft.operators.Calibration.isotonicGate(t(s, dir, "lineitem"), dir)),
-
-    // F-calibrate: APPLY side of the isotonic fit — per-row map-side
-    // step-function lookup (literal threshold/rate arrays, no join) of
-    // a score the fit never saw, then a (score, score_iso) census
-    "q_f_calibrate" -> ((s, dir) =>
-      graft.operators.Calibration.calibrateGate(t(s, dir, "lineitem"), dir)),
-
-    // A-trimmed: 10% trimmed mean per group — exact per-group
-    // percentile bounds joined back (AQE broadcasts the group panel),
-    // decimal-exact mean of the surviving band
-    "q_a_trimmed" -> ((s, dir) => {
-      val li = tw(s, dir, "lineitem")
-      val bounds = li.groupBy(col("l_returnflag"))
-        .agg(expr("percentile(l_extendedprice, 0.1)").as("__lo"),
-          expr("percentile(l_extendedprice, 0.9)").as("__hi"))
-      li.join(bounds, "l_returnflag")
-        .where(col("l_extendedprice") >= col("__lo") &&
-          col("l_extendedprice") <= col("__hi"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_kept"),
-          round(sum(col("l_extendedprice").cast("decimal(38,6)"))
-            .cast("double") / count(lit(1)), 6).as("trimmed_mean"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // F-impute: per-entity mean imputation of planted nulls — the
-    // group mean computed in the same window pass that fills (no
-    // join); entities with no observed value keep null
-    "q_f_impute" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-      val v = when(col("event_id") % 7 === 0, lit(null))
-        .otherwise(col("value"))
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), v.as("v"))
-        .select(col("event_id"),
-          coalesce(col("v"),
-            round(sum(col("v").cast("decimal(38,6)")).over(w)
-              .cast("double") / count(col("v")).over(w), 6)).as("v_filled"))
-        .orderBy(col("event_id"))
-    }),
-
-    // S-cdcnet: changelog net-effect compaction — a synthesized two-op
-    // I/U/D batch per key collapsed to the minimal equivalent op (one
-    // key window, no self-join); the replay-idempotence primitive
-    "q_s_cdc_net" -> ((s, dir) => {
-      val base = t(s, dir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-      val op1 = base.select(col("k"),
-        when(col("k") % 4 isin (0, 2), lit("I")).otherwise(lit("U")).as("op"),
-        col("v"), lit(1L).as("ts"))
-      val op2 = base.where(col("k") % 3 === 0).select(col("k"),
-        when(col("k") % 5 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        (col("v") + 1.0).as("v"), lit(2L).as("ts"))
-      graft.operators.Changelog.netEffect(op1.unionByName(op2),
-          "k", "op", "ts", "ts", Seq("v"))
-        .orderBy(col("k"))
-    }),
-
-    // X-kappa: Cohen's κ of the language-ID heuristic vs ground truth —
-    // integer-exact confusion counts and marginals, fixed-order double
-    // closed form
-    "q_x_kappa" -> ((s, dir) => {
-      val conf = graft.operators.TextAnalysis.withLanguageId(
-          tw(s, dir, "documents"), "text")
-        .groupBy(col("lang"), col("lang_guess")).agg(count(lit(1)).as("n"))
-      val tot = conf.agg(sum(col("n")).as("__N"),
-        sum(when(col("lang") === col("lang_guess"), col("n"))
-          .otherwise(0L)).as("__agree"))
-      val rt = conf.groupBy(col("lang")).agg(sum(col("n")).as("__r"))
-      val ct = conf.groupBy(col("lang_guess")).agg(sum(col("n")).as("__c"))
-      val peNum = rt.join(ct, rt("lang") === ct("lang_guess"))
-        .agg(sum(col("__r").cast("decimal(19,0)") *
-          col("__c").cast("decimal(19,0)")).as("__pe_num"))
-      val nD = col("__N").cast("double")
-      val po = col("__agree").cast("double") / nD
-      val pe = col("__pe_num").cast("double") / (nD * nD)
-      tot.crossJoin(peNum)
-        .select(col("__N").as("n"), round(po, 6).as("po"),
-          round(pe, 6).as("pe"),
-          round((po - pe) / (lit(1.0) - pe), 6).as("kappa"))
-    }),
-
-    // J-haversine: great-circle nearest-hub assignment — synthetic
-    // lat/lon from the key, a 5-row broadcast city panel, one scoring
-    // pass + per-customer rank; radians via an explicit literal so
-    // both engines multiply the same constant
-    "q_j_haversine" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") % 140).cast("double") - 70.0 + 0.5).as("lat"),
-        (((col("c_custkey") * 7) % 360).cast("double") - 180.0 + 0.5)
-          .as("lon"))
-      import s.implicits._
-      val cities = Seq(("cairo", 30.04, 31.24), ("nyc", 40.71, -74.0),
-        ("paris", 48.85, 2.35), ("sydney", -33.87, 151.21),
-        ("tokyo", 35.68, 139.69)).toDF("city", "clat", "clon")
-      val rad = lit(0.017453292519943295)
-      val sLat = sin((col("clat") - col("lat")) * rad / 2)
-      val sLon = sin((col("clon") - col("lon")) * rad / 2)
-      val a = sLat * sLat +
-        cos(col("lat") * rad) * cos(col("clat") * rad) * sLon * sLon
-      val scored = cust.crossJoin(broadcast(cities))
-        .select(col("c_custkey"), col("city"),
-          round(lit(12742.0) * asin(sqrt(a)), 6).as("dist"))
-      val w = Window.partitionBy(col("c_custkey"))
-        .orderBy(col("dist"), col("city"))
-      scored.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-        .groupBy(col("city"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("dist").cast("decimal(38,6)")).cast("double") /
-            count(lit(1)), 6).as("avg_km"))
-        .orderBy(col("city"))
-    }),
-
-    // ST-dedup: batch twin of the watermarked stream dedup — planted
-    // 1-second retransmissions, first arrival survives (the
-    // dropDuplicatesWithinWatermark keep-first semantics; the stream
-    // variant is proven in EventStreamsSpec)
-    "q_st_dedup" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select("event_id", "user_id", "ts", "value")
-      val retrans = ev.where(col("event_id") % 3 === 0)
-        .withColumn("ts", col("ts") + 1000000000L)
-      graft.streaming.EventStreams.dedupeBatch(ev.unionByName(retrans))
-        .select(col("event_id"), col("ts"))
-        .orderBy(col("event_id"))
-    }),
-
-    // W-churn: period-over-period user transition census — 10-day
-    // periods anchored at the 2024-01-01 calendar boundary, "active"
-    // meaning a high-value event (value > 260 — tuned so sf0.001 shows
-    // churn and sf0.01 shows all four statuses); one user-keyed
-    // aggregate of activity flags, one tiny status rollup.
-    // NOTE: Spark `div` truncates toward zero while the oracle's `//`
-    // floors — they agree ONLY for non-negative deltas. The fixture's
-    // events all sit at/after the 2024-01-01 anchor, and only periods
-    // 1 and 2 are classified (period 0 never tested), so the twin
-    // holds; any gate testing period 0 or a later anchor must switch
-    // both sides to an explicit FLOOR formulation first.
-    "q_w_churn" -> ((s, dir) => {
-      val flags = t(s, dir, "events")
-        .select(col("user_id"), col("value"),
-          expr("(ts - 1704067200000000000L) div 864000000000000L").as("p"))
-        .groupBy(col("user_id"))
-        .agg(max(when(col("p") === 1 && col("value") > 260, 1)
-            .otherwise(0)).as("__a1"),
-          max(when(col("p") === 2 && col("value") > 260, 1)
-            .otherwise(0)).as("__a2"))
-      flags.select(
-          when(col("__a1") === 1 && col("__a2") === 1, "retained")
-            .when(col("__a1") === 1, "churned")
-            .when(col("__a2") === 1, "new")
-            .otherwise("inactive").as("status"))
-        .groupBy(col("status")).agg(count(lit(1)).as("n"))
-        .orderBy(col("status"))
-    }),
-
-    // A-ols2: two-regressor OLS per group — Cramer's rule on the 3×3
-    // Gram matrix from ONE aggregate of nine decimal-exact sums
-    "q_a_ols2" -> ((s, dir) =>
-      graft.operators.Profiling.groupOls2(
-          tw(s, dir, "lineitem"), "l_returnflag",
-          "l_quantity", "l_discount", "l_extendedprice")
-        .orderBy(col("l_returnflag"))),
-
-    // T-drawdown: per-user max drawdown — running decimal sum + its
-    // running max in one window pass (the cusum regime), deepest
-    // peak-to-trough per key
-    "q_t_drawdown" -> ((s, dir) =>
-      graft.operators.TimeSeries.maxDrawdown(
-          t(s, dir, "events"), "user_id", "ts", "value", "event_id")
-        .orderBy(col("user_id"))),
-
-    // T-growth: user growth curve — new users per first-active hour,
-    // cumulative via the distributed prefix sum (no bounded-window
-    // whitelist needed)
-    "q_t_growth" -> ((s, dir) => {
-      val firstSeen = t(s, dir, "events")
-        .select(col("user_id"), expr("ts div 3600000000000").as("period"))
-        .groupBy(col("user_id")).agg(min(col("period")).as("period"))
-      val panel = firstSeen.groupBy(col("period"))
-        .agg(count(lit(1)).as("new_users"))
-      graft.operators.GlobalOrder.withPrefixSum(panel, Seq("period"),
-          "new_users", "prev_total")
-        .select(col("period"), col("new_users"),
-          (col("prev_total") + col("new_users")).as("cum_users"))
-        .orderBy(col("period"))
-    }),
-
-    // X-assortativity: degree-mixing correlation over the sparse
-    // projection — broadcast degree relation onto the symmetrized
-    // edges, one aggregate of integer-exact decimal sums
-    "q_x_assortativity" -> ((s, dir) =>
-      graft.operators.Graph.assortativity(
-          t(s, dir, "lineitem").where(col("l_quantity") <= 10)
-            .select(
-              (col("l_orderkey") % 150).as("u"),
-              (col("l_partkey") % 150).as("v")),
-          "u", "v")),
-
-    // W-ttc: time-to-convert distribution (first click → first
-    // subsequent purchase per user) — exact interpolated percentiles
-    // over the converted-user panel, decimal-exact mean
-    "q_w_ttc" -> ((s, dir) =>
-      graft.operators.Funnel.timeToConvert(
-        t(s, dir, "events"), "user_id", "ts", "event_type",
-        fromType = "click", toType = "purchase")),
-
-    // X-langconf: language-ID confusion matrix — the langid heuristic
-    // evaluated against the fixture's ground-truth lang column
-    "q_x_lang_confusion" -> ((s, dir) =>
-      graft.operators.TextAnalysis.withLanguageId(
-          tw(s, dir, "documents"), "text")
-        .groupBy(col("lang"), col("lang_guess"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"), col("lang_guess"))),
-
-    // X-feathash: hashing-trick signed bag-of-words — vocabulary-free
-    // map-side featurization, sparse exploded output
-    "q_x_feathash" -> ((s, dir) =>
-      graft.operators.TextAnalysis.hashedBagOfWords(
-          tw(s, dir, "documents"), "doc_id", "text", dim = 32)
-        .orderBy(col("doc_id"), col("bucket"))),
-
-    // T-dau: daily + trailing-7-day active users — distinct (day, user)
-    // reduction, bounded ×7 map-side expansion, one day-keyed distinct
-    // count; no range join, no per-day rescan
-    "q_t_dau" -> ((s, dir) =>
-      graft.operators.Cohort.activeUsers(
-          t(s, dir, "events"), "user_id",
-          expr("ts div 86400000000000"), window = 7)
-        .orderBy(col("day"))),
-
-    // A-joincard: sampling-based join-size estimate vs truth —
-    // correlated KEY sampling on both sides (row sampling would
-    // estimate fraction² of the pairs), scaled per-key count products
-    "q_a_joincard" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val l = t(s, dir, "lineitem")
-      val est = graft.operators.Profiling.joinCardinalityEstimate(
-        o, "o_orderkey", l, "l_orderkey", fraction = 0.125, salt = "jc1")
-      val actual = o.select(col("o_orderkey").as("__k"))
-        .join(l.select(col("l_orderkey").as("__k")), "__k")
-        .agg(count(lit(1)).as("actual_pairs"))
-      est.crossJoin(actual)
-        .select(col("est_pairs"), col("actual_pairs"),
-          round(col("est_pairs") / col("actual_pairs").cast("double"), 6)
-            .as("err_ratio"))
-    }),
-
-    // X-ndcg: retrieval NDCG@10 with same-label relevance — bounded
-    // broadcast query batch, pre-rounded discount literals (no runtime
-    // log), label populations broadcast for the ideal ranking
-    "q_x_ndcg" -> ((s, dir) =>
-      graft.operators.Similarity.retrievalNdcg(
-          t(s, dir, "embeddings"), "vec_id", "embedding", "label",
-          col("vec_id") < 20, k = 10)
-        .orderBy(col("qid"))),
-
-    // A-mannwhitney: rank-sum two-sample test — tie-averaged ranks
-    // from ONE distinct-value prefix-sum pass (no per-row rank join:
-    // the rank-sum needs only Σ count_A(v)·avgrank(v)); doubled ranks
-    // keep every statistic integer-exact
-    "q_a_mannwhitney" -> ((s, dir) =>
-      graft.operators.Profiling.mannWhitneyU(
-        t(s, dir, "events"), "event_type", "value", "click", "purchase")),
-
-    // A-ks: bin-free two-sample distribution test — both empirical
-    // CDFs ride the distinct-value prefix sums, one max aggregate
-    "q_a_ks" -> ((s, dir) =>
-      graft.operators.Profiling.ksTest(
-        t(s, dir, "events"), "event_type", "value", "click", "purchase")),
-
-    // A-auc: threshold-free ranking quality — ROC AUC via the
-    // tie-averaged rank-sum identity; one distinct-score prefix-sum
-    // pass, doubled ranks keep the rank-sum decimal-exact
-    "q_a_auc" -> ((s, dir) =>
-      graft.operators.Profiling.rocAuc(
-        t(s, dir, "lineitem")
-          .withColumn("__lab", col("l_returnflag") === lit("R")),
-        "__lab", "l_extendedprice")),
-
-    // A-brier: Murphy calibration decomposition of a discrete
-    // forecast (the 11-value discount column read as a probability) —
-    // bin-keyed aggregate + broadcast total, round-9 decimal terms
-    "q_a_brier" -> ((s, dir) =>
-      graft.operators.Profiling.brierDecomposition(
-        t(s, dir, "lineitem")
-          .withColumn("__prob", col("l_discount") * lit(10.0))
-          .withColumn("__lab", col("l_returnflag") === lit("R")),
-        "__prob", "__lab")),
-
-    // A-conformal: split-conformal prediction-interval contract —
-    // group-mean model on the odd-orderkey half, exact ⌈(n+1)(1−α)⌉
-    // order statistic via the prefix-sum pass, coverage on the even
-    // half; α=0.1
-    "q_a_conformal" -> ((s, dir) =>
-      graft.operators.Profiling.conformalCoverage(
-        t(s, dir, "lineitem")
-          .withColumn("__split", col("l_orderkey") % 2 === 1),
-        "__split", "l_returnflag", "l_extendedprice", alpha = 0.1)),
-
-    // X-silhouette: centroid-form clustering quality per label — k-row
-    // broadcast centroid panel, one scoring pass, one label-keyed mean
-    "q_x_silhouette" -> ((s, dir) =>
-      graft.operators.Clustering.silhouetteByLabel(
-          t(s, dir, "embeddings"), "vec_id", "embedding", "label")
-        .orderBy(col("label"))),
-
-    // X-pca: principal components over the embedding corpus — ONE
-    // aggregate of 2 145 decimal moment sums (the only data-scale
-    // pass), driver Jacobi eigen-solve on the 64×64 covariance
-    // (config-sized), then pure map-side projection through the fused
-    // dot expression; the oracle is generated at dump time from the
-    // fitted components (the q_x_pq memo pattern)
-    "q_x_pca" -> ((s, dir) =>
-      graft.operators.Pca.pcaGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("vec_id"))),
-
-    // X-outliers: whitened-subspace outlier mining — Mahalanobis
-    // distance in the kept PCA subspace as one map-side pass over the
-    // memoized model, top-k via TakeOrderedAndProject
-    "q_x_outliers" -> ((s, dir) =>
-      graft.operators.Pca.pcaOutlierGate(t(s, dir, "embeddings"), dir)),
-
-    // X-procrustes: embedding-version alignment — one dim² cross-moment
-    // aggregate + driver polar-factor solve (Jacobi on MᵀM), then one
-    // map-side residual pass scoring the shipped float rotation against
-    // a planted signed-permutation target (must recover: mean_cos 1.0,
-    // frob_rel 0.0)
-    "q_x_procrustes" -> ((s, dir) =>
-      graft.operators.Alignment.procrustesGate(t(s, dir, "embeddings"),
-        dir)),
-
-    // X-pipeline5: serve-while-backfilling capstone — old-space queries
-    // align through the fitted rotation, then hit the NEW-space IVF
-    // index (fused map-side assign both sides, one block-keyed top-1
-    // join); per-centroid census of self-retrieval + mean cosine
-    "q_x_pipeline5" -> ((s, dir) =>
-      graft.operators.Alignment.alignedServeGate(t(s, dir, "embeddings"),
-        dir)),
-
-    // X-pca: WHITENED projection — the same memoized fit, each
-    // component scaled to unit variance by / sqrt(λ) with λ as an
-    // in-plan literal both engines sqrt at execution (IEEE-exact)
-    "q_x_pca_whiten" -> ((s, dir) =>
-      graft.operators.Pca.pcaWhitenGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("vec_id"))),
-
-    // A-theilsen: robust per-group trend slope — lower median of
-    // pairwise slopes over a deterministic SIZE-CAPPED per-group
-    // sample (the estimator is quadratic by definition; a fixed
-    // FRACTION is not scale-safe — pair volume grows with corpus² —
-    // while the cap pins the pair budget at C(64,2) per group forever,
-    // the SURVEY §8.6f rule); pairs join group-keyed, median via one
-    // rank window
-    "q_a_theilsen" -> ((s, dir) => {
-      val o = graft.operators.Sampling.groupCappedSample(
-          t(s, dir, "orders"), "o_orderpriority", "o_orderkey",
-          cap = 64, salt = "ts7")
-        .select(col("o_orderpriority"),
-          (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
-            .as("mi"),
-          col("o_totalprice"), col("o_orderkey"))
-      graft.operators.Profiling.theilSen(o, "o_orderpriority", "mi",
-          "o_totalprice", "o_orderkey")
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // A-mode: per-group modal value (smallest-value tie break) — one
-    // grouped count + one rank window over the distinct-value relation
-    "q_a_mode" -> ((s, dir) =>
-      graft.operators.Profiling.modeByGroup(
-          t(s, dir, "lineitem"), "l_returnflag", "l_quantity")
-        .orderBy(col("l_returnflag"))),
-
-    // D-seqpoisson: sequential Poisson weighted sampling — real-valued
-    // weights, u/w priorities from the salted key hash, bounded-heap
-    // top-k; deterministic across runs/layouts/engines
-    "q_d_seqpoisson" -> ((s, dir) =>
-      graft.operators.Sampling.sequentialPoisson(
-          t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-          "o_orderkey", "o_totalprice", k = 25, salt = "sp1")
-        .orderBy(col("o_orderkey"))),
-
-    // T-islands: gaps-and-islands interval coalescing — 30-minute
-    // activity windows per user merged into maximal covered spans; one
-    // key window (running max end + running sum of starts), no
-    // interval self-join
-    "q_t_islands" -> ((s, dir) =>
-      graft.operators.Intervals.coalesceIntervals(
-          t(s, dir, "events").select(col("user_id"), col("ts").as("s_ts"),
-            (col("ts") + 1800000000000L).as("e_ts"), col("event_id")),
-          "user_id", "s_ts", "e_ts", "event_id")
-        .orderBy(col("user_id"), col("island"))),
-
-    // W-absence: temporal anti-join — clicks with NO same-user
-    // purchase within the following hour (the negative-funnel
-    // question); left_anti on the user key with the range in the join
-    // condition
-    "q_w_absence" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purch = ev.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      clicks.join(purch,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("ts") &&
-            col("p_ts") <= col("ts") + 3600000000000L,
-          "left_anti")
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_unanswered"))
-        .orderBy(col("user_id"))
-    }),
-
-    // X-ltv: cohort LTV curve — customers grouped by first-order
-    // month, revenue by cohort age with a per-cohort cumulative
-    // (decimal-exact through the window, cast at the edge)
-    "q_x_ltv" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"),
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
-          .as("mi"),
-        col("o_totalprice"))
-      val first = o.groupBy(col("o_custkey")).agg(min(col("mi")).as("cohort"))
-      val panel = o.join(first, "o_custkey")
-        .groupBy(col("cohort"), (col("mi") - col("cohort")).as("age"))
-        .agg(sum(col("o_totalprice").cast("decimal(38,2)")).as("__rev"))
-      val w = Window.partitionBy(col("cohort")).orderBy(col("age"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      panel.select(col("cohort"), col("age"),
-          col("__rev").cast("double").as("rev"),
-          sum(col("__rev")).over(w).cast("double").as("cum_rev"))
-        .orderBy(col("cohort"), col("age"))
-    }),
-
-    // X-soundex: phonetic blocking codes — Spark's native codegen
-    // soundex over a planted textbook corpus, oracled against an
-    // INDEPENDENT plain-Scala implementation (the HashGoldens pattern)
-    "q_x_soundex" -> ((s, dir) =>
-      graft.operators.Phonetic.corpusDF(s)
-        .select(col("name"), soundex(col("name")).as("code"))
-        .orderBy(col("name"))),
-
-    // X-mutualnn: mutual-nearest-neighbor pairs within label blocks —
-    // the reciprocity-filtered embedding-dedup refinement; quadratic
-    // only inside the bounded block (the semanticDedup contract)
-    "q_x_mutual_nn" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // the exhaustive oracle twin holds only while no label block
-      // refines — enforce the fixture-scale assumption, don't assume it
-      graft.operators.Similarity.requireBlocksWithin(
-        e, "label", 4096, "q_x_mutual_nn")
-      graft.operators.Similarity.mutualNearestPairs(
-          e, "vec_id", "embedding", "label", maxBlock = 4096)
-        .orderBy(col("id1"))
-    }),
-
-    // X-dbscan: block-scoped density clustering — bounded-block
-    // candidate pairs, one degree aggregate (core = neighborhood ≥
-    // minPts incl. self), min-label components over the core subgraph,
-    // min-core-neighbor border assignment; noise stays unclustered
-    "q_x_dbscan" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.operators.Similarity.requireBlocksWithin(
-        e, "label", 4096, "q_x_dbscan")
-      graft.operators.Clustering.dbscan(
-          e, "vec_id", "embedding", "label", minCos = 0.25, minPts = 3,
-          dim = 64)
-        .orderBy(col("id"))
-    }),
-
-    // X-knngraph: per-node top-3 cosine neighbors within label blocks —
-    // the adjacency downstream graph curation consumes; bounded-block
-    // contract as q_x_mutual_nn (exhaustive twin valid while nothing
-    // refines, enforced)
-    "q_x_knn_graph" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.operators.Similarity.requireBlocksWithin(
-        e, "label", 4096, "q_x_knn_graph")
-      graft.operators.Similarity.knnGraph(
-          e, "vec_id", "embedding", "label", k = 3, maxBlock = 4096,
-          dim = 64)
-        .orderBy(col("id"), col("rank"))
-    }),
-
-    // X-kcenter: greedy k-center coreset (farthest-first) over the
-    // embedding corpus — diverse-subset selection as k map-side passes
-    // + a 1-row argmax each; the oracle recomputes the full selection
-    // as an unrolled CTE (no engine state crosses)
-    "q_x_kcenter" -> ((s, dir) =>
-      graft.operators.Selection.farthestFirst(
-          t(s, dir, "embeddings"), "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))),
-
-    // X-mmr: maximal marginal relevance top-k (λ=0.7) against the
-    // lowest-id vector as the query — relevance/diversity trade
-    // selection, same k-pass scale shape and unrolled-CTE oracle
-    "q_x_mmr" -> ((s, dir) =>
-      graft.operators.Selection.mmr(
-          t(s, dir, "embeddings"), "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))),
-
-    // X-mmrrerank: RETRIEVE-THEN-RERANK — brute-force top-50 by cosine
-    // to the vec-0 query, then MMR (λ=0.7) reranks the candidate set
-    // to a diverse top-8. The mmr contract composes cleanly: vec 0 is
-    // rank 1 of its own retrieval (cos 1.0) AND the lowest id, so the
-    // rerank's query IS the retrieval query and is excluded from the
-    // output. The candidate pull is one corpus scan + top-k; the
-    // rerank runs on the config-sized candidate set.
-    "q_x_mmr_rerank" -> ((s, dir) => {
-      val sim = graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      // materialize the (50-row) candidate set once: each of the 8
-      // rerank rounds runs an action against it
-      val cands = sim.bruteForceTopK(emb, "vec_id", "embedding", q, 50)
-        .join(emb.select("vec_id", "embedding"), Seq("vec_id"))
-        .select("vec_id", "embedding").localCheckpoint()
-      graft.operators.Selection.mmr(cands, "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))
-    }),
-
-    // X-pipeline4: the ANNOTATION-BUDGET pipeline — near-dup dedup
-    // (mutual-NN at cos ≥ 0.99 over label blocks; 20 planted exact
-    // copies make the dedup real) with a keep-the-NEWEST survivorship
-    // policy (drop id1 of each pair, so the surviving seed shifts and
-    // the downstream selection provably differs from q_x_kcenter),
-    // then greedy k-center over the survivors. The oracle replays the
-    // ENTIRE chain — planted corpus, MNN pairs, drops, survivors,
-    // selection — with zero engine state.
-    "q_x_pipeline4" -> ((s, dir) => {
-      val sim = graft.operators.Similarity
-      val e = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-      val corpus = e.unionByName(e.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("label"),
-          col("embedding")))
-      sim.requireBlocksWithin(corpus, "label", 4096, "q_x_pipeline4")
-      val drops = sim.mutualNearestPairs(corpus, "vec_id", "embedding",
-          "label", maxBlock = 4096, dim = 64)
-        .where(col("cos") >= 0.99)
-        .select(col("id1").as("vec_id")).distinct()
-      // materialize the (tiny) survivor set once: the k selection
-      // rounds each run an action, and re-deriving the MNN chain 8×
-      // would multiply the dedup cost by k
-      val survivors = corpus.join(drops, Seq("vec_id"), "left_anti")
-        .select("vec_id", "embedding").localCheckpoint()
-      graft.operators.Selection.farthestFirst(
-          survivors, "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))
-    }),
-
-    // X-kcentercover: the selection-quality eval closing the k-center
-    // loop — per-threshold corpus coverage of the selected 8 centers
-    // (one map-side scan, 8 fused cosines, single 1-row aggregate);
-    // the oracle re-runs the full selection AND the curve
-    "q_x_kcenter_cover" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val centers = graft.operators.Selection.farthestFirstCenters(
-        e, "vec_id", "embedding", k = 8)
-      graft.operators.Selection.coverageCurve(e, "vec_id", "embedding",
-          centers.map(_._2), Seq(0.85, 0.95, 1.0, 1.05))
-        .orderBy(col("threshold"))
-    }),
-
-    // X-dedupsweep: dedup operating-point curve — drops per candidate
-    // threshold over label-blocked pairs (50 planted exact copies top
-    // up the natural ~0.4-0.5 cos band, so the curve has both a
-    // near-1.0 shelf and a natural tail); blocks stay under maxBlock
-    // so the all-pairs oracle describes the engine exactly
-    "q_x_dedup_sweep" -> ((s, dir) => {
-      val sim = graft.operators.Similarity
-      val e = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-      val corpus = e.unionByName(e.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 20000L).as("vec_id"), col("label"),
-          col("embedding")))
-      sim.requireBlocksWithin(corpus, "label", 4096, "q_x_dedup_sweep")
-      sim.dedupThresholdCurve(corpus, "vec_id", "embedding", "label",
-        thresholds = Seq(0.4, 0.45, 0.5, 0.999), maxBlock = 4096, dim = 64)
-    }),
-
-    // X-mnnivf: the PRODUCTION MNN composition — quantizer training
-    // (MLlib k-means, memoized per dir) → IVF assignment → mutual-NN
-    // inside the trained centroid blocks; the oracle is generated at
-    // dump time from the trained centroids (the q_x_pq pattern), so
-    // the engine-specific training state is itself under the gate
-    "q_x_mnn_ivf" -> ((s, dir) =>
-      graft.operators.Similarity.mnnIvfGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("id1"))),
-
-    // X-pipeline3: the FULL production embedding chain — PCA(k=16)
-    // reduction (one moment aggregate + map-side projection) → IVF
-    // quantizer trained ON the reduced vectors → mutual-NN dedup
-    // inside the trained blocks; PCA components and the trained
-    // codebook both memoize per dir so the dump-time twin regenerates
-    // the whole chain from literals
-    "q_x_pipeline3" -> ((s, dir) =>
-      graft.operators.Similarity.pcaIvfMnnGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("id1"))),
-
-    // X-pipeline3-auto: the PRODUCTION variant of the chain above —
-    // the IVF codebook AUTO-SIZES with the corpus (kIvf = 0 →
-    // trainCentroids → suggestedNlist: expected cell ~256 rows) so the
-    // quadratic block-scoped MNN stays constant-per-cell as the corpus
-    // grows. The fixed-8-cell gate above measured 18.0× wall for 10×
-    // data at the round-11 sf1 sweep — this path is what a user gets
-    // by DEFAULT now, and the sweep gates its ratio. Same dump-time
-    // oracle mechanics (the twin inlines the trained codebook).
-    "q_x_pipeline3_auto" -> ((s, dir) =>
-      graft.operators.Similarity.pcaIvfMnnGate(t(s, dir, "embeddings"), dir,
-          kIvf = 0)
-        .orderBy(col("id1"))),
-
-    // X-pipeline4-auto: the annotation-budget chain on the PRODUCTION
-    // defaults — mutualNearestPairs' maxBlock auto-resolves to
-    // DefaultMnnBlock (256), the cap the sf1 p4bisect rung priced at
-    // 7.1 s where the gate-pinned 4096 exact regime pays 40.5 s
-    // (labels are fixed-cardinality, so exact blocks grow with the
-    // corpus). NO fixture guard: the oracle is the stage-by-stage
-    // BOUNDED twin (census → bits → sub-bucket signs → overflow
-    // window → directed top-1 → mutual), which describes the engine
-    // exactly whether refinement engages or not — below the cap it
-    // degenerates to the all-pairs replay. ScaleBench runs this gate
-    // at the 10× fixture where refinement IS engaged.
-    "q_x_pipeline4_auto" -> ((s, dir) => {
-      val sim = graft.operators.Similarity
-      val e = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-      val corpus = e.unionByName(e.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("label"),
-          col("embedding")))
-      val drops = sim.mutualNearestPairs(corpus, "vec_id", "embedding",
-          "label", dim = 64)
-        .where(col("cos") >= 0.99)
-        .select(col("id1").as("vec_id")).distinct()
-      val survivors = corpus.join(drops, Seq("vec_id"), "left_anti")
-        .select("vec_id", "embedding").localCheckpoint()
-      graft.operators.Selection.farthestFirst(
-          survivors, "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))
-    }),
-
-    // X-pipeline4-capped: the REFINEMENT PATH of the chain above under
-    // the gate at fixture scale — a deliberately tiny cap (maxBlock=16
-    // over ~65-row label blocks) forces sub-bucketing through the same
-    // stages the sf1 auto run takes, so the bounded twin's refinement
-    // SQL is verified non-vacuously (the q_x_semdedup_capped recipe
-    // extended to mutual-top-1 + k-center). The planted exact copies
-    // share every sub-bucket sign, so the dedup stays real under the
-    // cap.
-    "q_x_pipeline4_capped" -> ((s, dir) => {
-      val sim = graft.operators.Similarity
-      val e = t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-      val corpus = e.unionByName(e.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000L).as("vec_id"), col("label"),
-          col("embedding")))
-      val drops = sim.mutualNearestPairs(corpus, "vec_id", "embedding",
-          "label", maxBlock = 16, dim = 64)
-        .where(col("cos") >= 0.99)
-        .select(col("id1").as("vec_id")).distinct()
-      val survivors = corpus.join(drops, Seq("vec_id"), "left_anti")
-        .select("vec_id", "embedding").localCheckpoint()
-      graft.operators.Selection.farthestFirst(
-          survivors, "vec_id", "embedding", k = 8)
-        .orderBy(col("rank"))
-    }),
-
-    // T-forecast: seasonal-naive backtest — (dow, hour) profile fit on
-    // the even half, MAE/bias scored on the odd half; the mandatory
-    // forecasting baseline as one broadcast join + one aggregate
-    "q_t_forecast" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      graft.operators.TimeSeries.seasonalForecastBacktest(
-        ev.where(col("event_id") % 2 === 0),
-        ev.where(col("event_id") % 2 === 1),
-        "event_id", "ts", "value")
-    }),
-
-    // T-backtest: rolling-origin CV of the three forecasting baselines
-    // (last value / seasonal-naive / expanding mean) over daily buckets
-    // — one bucket aggregate is the only data-scale pass; every window
-    // runs over the calendar-bounded period panel
-    "q_t_backtest" -> ((s, dir) =>
-      graft.operators.TimeSeries.rollingOriginBacktest(
-        t(s, dir, "events"), "ts", "value",
-        anchorNanos = 1704067200000000000L,
-        widthNanos = 86400L * 1000000000L, season = 7, k = 10)),
-
-    // T-rollcorr: rolling correlation of value vs the JSON prop series
-    // — six windowed sufficient statistics as differences of inclusive
-    // running decimal sums (the rollingAnomaly O(1)/row rewrite; a
-    // bounded ROWS frame would rebuild its buffer every row)
-    "q_t_rollcorr" -> ((s, dir) =>
-      graft.operators.TimeSeries.rollingCorrelation(
-          t(s, dir, "events").select(col("event_id"), col("user_id"),
-            col("ts"), col("value"),
-            get_json_object(col("props"), "$.k").cast("double").as("k_val")),
-          "user_id", "ts", "event_id", "value", "k_val",
-          lookback = 8, minObs = 4)
-        .select(col("event_id"), col("n_win"), col("corr"))
-        .orderBy(col("event_id"))),
-
-    // X-kanon: k-anonymity / l-diversity audit — one QI-keyed
-    // aggregate, output bounded to the violating groups
-    "q_x_kanon" -> ((s, dir) =>
-      graft.operators.Privacy.kAnonymityAudit(
-          t(s, dir, "customer"), Seq("c_nationkey", "c_mktsegment"),
-          "c_acctbal", k = 10, l = 8)
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))),
-
-    // P-missing: missingness-pattern table — map-side null masks into
-    // one hash aggregate; planted correlated nulls
-    "q_p_missing" -> ((s, dir) =>
-      graft.operators.Profiling.missingPatterns(
-          t(s, dir, "events").select(
-            when(col("event_id") % 7 === 0, lit(null))
-              .otherwise(col("value")).as("value"),
-            when(col("event_id") % 11 === 0, lit(null))
-              .otherwise(col("props")).as("props"),
-            col("event_type")),
-          Seq("value", "props", "event_type"))
-        .orderBy(col("pattern"))),
-
-    // SQL-q3: the TPC-H Q3 shape (shipping-priority revenue) through
-    // the SQL surface — a 3-way selective join; AQE broadcasts the
-    // filtered customer side, revenue is a decimal-exact sum, top-10
-    // via TakeOrderedAndProject
-    "q_sql_q3" -> ((s, dir) => {
-      // temp views are session-global shared state — suffix with the
-      // per-sfDir runToken (the bucketed-catalog rule) so concurrent
-      // runs on different scale factors can't race each other's views
-      val tk = runToken(dir)
-      t(s, dir, "customer").createOrReplaceTempView(s"q3_customer_$tk")
-      t(s, dir, "orders").createOrReplaceTempView(s"q3_orders_$tk")
-      t(s, dir, "lineitem").createOrReplaceTempView(s"q3_lineitem_$tk")
-      s.sql(
-        s"""SELECT l_orderkey,
-          |  CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6)
-          |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-          |  CAST(o_orderdate AS DATE) AS o_orderdate
-          |FROM q3_customer_$tk
-          |JOIN q3_orders_$tk ON c_custkey = o_custkey
-          |JOIN q3_lineitem_$tk ON l_orderkey = o_orderkey
-          |WHERE c_mktsegment = 'BUILDING'
-          |  AND o_orderdate < DATE '1998-01-01'
-          |  AND l_shipdate > DATE '1998-01-01'
-          |GROUP BY l_orderkey, o_orderdate
-          |ORDER BY revenue DESC, l_orderkey
-          |LIMIT 10""".stripMargin)
-    }),
-
-    // SQL-q5: the TPC-H Q5 shape (local-supplier revenue by nation) —
-    // a 6-way join where the dimension chain (region→nation→supplier)
-    // broadcasts and only the fact-side joins shuffle
-    "q_sql_q5" -> ((s, dir) => {
-      // same per-sfDir view isolation as q_sql_q3
-      val tk = runToken(dir)
-      t(s, dir, "customer").createOrReplaceTempView(s"q5_customer_$tk")
-      t(s, dir, "orders").createOrReplaceTempView(s"q5_orders_$tk")
-      t(s, dir, "lineitem").createOrReplaceTempView(s"q5_lineitem_$tk")
-      t(s, dir, "supplier").createOrReplaceTempView(s"q5_supplier_$tk")
-      t(s, dir, "nation").createOrReplaceTempView(s"q5_nation_$tk")
-      t(s, dir, "region").createOrReplaceTempView(s"q5_region_$tk")
-      s.sql(
-        s"""SELECT n_name,
-          |  CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6)
-          |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-          |FROM q5_customer_$tk
-          |JOIN q5_orders_$tk ON c_custkey = o_custkey
-          |JOIN q5_lineitem_$tk ON l_orderkey = o_orderkey
-          |JOIN q5_supplier_$tk ON l_suppkey = s_suppkey
-          |  AND c_nationkey = s_nationkey
-          |JOIN q5_nation_$tk ON s_nationkey = n_nationkey
-          |JOIN q5_region_$tk ON n_regionkey = r_regionkey
-          |WHERE r_name = 'ASIA'
-          |  AND o_orderdate >= DATE '1996-01-01'
-          |  AND o_orderdate < DATE '1997-01-01'
-          |GROUP BY n_name
-          |ORDER BY n_name""".stripMargin)
-    }),
-
-    // X-phrase: exact quoted-phrase search over the positional index —
-    // map-side token prune (the bm25 rule), then one (doc, position)
-    // equi-join per additional phrase word
-    "q_x_phrase" -> ((s, dir) =>
-      graft.operators.TextSearch.phraseSearch(
-          tw(s, dir, "documents"), "doc_id", "text", "order fast")
-        .orderBy(col("doc_id"))),
-
-    // A-abc: ABC revenue-concentration classes per part — descending
-    // contribution ranking via the distributed prefix sum (exact
-    // decimal cents as integer weights), inclusive-share cuts
-    "q_a_abc" -> ((s, dir) =>
-      graft.operators.GlobalOrder.abcClassification(
-          t(s, dir, "lineitem"), "l_partkey", "l_extendedprice")
-        .orderBy(col("l_partkey"))),
-
-    // X-clustercoef: per-node local clustering coefficient — canonical
-    // triangle enumeration charged to all three members, joined to the
-    // node-sized degree table
-    "q_x_clustercoef" -> ((s, dir) =>
-      graft.operators.Graph.clusteringCoefficient(
-          t(s, dir, "lineitem").where(col("l_quantity") <= 10)
-            .select(
-              (col("l_orderkey") % 150).as("u"),
-              (col("l_partkey") % 150).as("v")),
-          "u", "v")
-        .orderBy(col("node"))),
-
-    // T-mom: month-over-month revenue growth — calendar-bounded month
-    // panel (≤ a few dozen rows by domain), decimal-exact monthly sums,
-    // growth ratio in double; the global lag window runs over the
-    // BOUNDED panel, never the fact table
-    "q_t_mom" -> ((s, dir) => {
-      val monthly = t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).as("y"),
-          month(col("o_orderdate")).as("m"))
-        .agg(sum(col("o_totalprice").cast("decimal(38,2)")).cast("double")
-          .as("rev"))
-      val w = Window.orderBy(col("y"), col("m"))
-      monthly
-        .select(col("y"), col("m"), col("rev"),
-          round((col("rev") - lag(col("rev"), 1).over(w)) /
-            lag(col("rev"), 1).over(w), 6).as("growth"))
-        .orderBy(col("y"), col("m"))
-    }),
-
-    // X-tokensort: permutation-duplicate detection — token-sort keys
-    // collapse reordered names with ZERO pair generation (one map-side
-    // key + one hash aggregate); the gate plants reversed-token
-    // variants of every 10th part name
-    "q_x_tokensort" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .select(col("p_partkey").as("id"), col("p_name").as("name"))
-      val rev = p.where(col("id") % 10 === 0)
-        .select((col("id") + 1000000L).as("id"),
-          array_join(reverse(split(col("name"), " ")), " ").as("name"))
-      graft.operators.Linkage.tokenSortGroups(p.unionByName(rev),
-          "id", "name")
-        .orderBy(col("key"))
-    }),
-
-    // F-cdf: exact global empirical CDF — distinct-value counts through
-    // the distributed prefix-sum (range shuffle + partition-sized
-    // offsets; the grand total is free from the counting pass), never
-    // a single-partition running-sum window
-    "q_f_cdf" -> ((s, dir) =>
-      graft.operators.GlobalOrder.exactCdf(
-          t(s, dir, "lineitem"), "l_extendedprice")
-        .orderBy(col("l_extendedprice"))),
-
-    // A-seqgaps: sequence-contiguity audit — per-order line numbers
-    // with planted holes (line 2 of every 5th order dropped); one
-    // grouped min/max/distinct aggregate, nothing per-gap
-    "q_a_seqgaps" -> ((s, dir) =>
-      graft.operators.Expectations.sequenceGaps(
-          t(s, dir, "lineitem")
-            .where(!(col("l_linenumber") === 2 && col("l_orderkey") % 5 === 0)),
-          "l_orderkey", "l_linenumber")
-        .orderBy(col("l_orderkey"))),
-
-    // X-degdist: degree distribution of the sparse projection — two
-    // keyed aggregates; the Σdeg² wedge-volume diagnostic that prices
-    // the triangle/linkpred family before running it
-    "q_x_degree_dist" -> ((s, dir) =>
-      graft.operators.Graph.degreeHistogram(
-          t(s, dir, "lineitem").where(col("l_quantity") <= 10)
-            .select(
-              (col("l_orderkey") % 150).as("u"),
-              (col("l_partkey") % 150).as("v")),
-          "u", "v")
-        .orderBy(col("deg"))),
-
-    // X-powerlaw: log-log OLS fit of the degree distribution (the
-    // power-law exponent estimate) — degreeHistogram composed into
-    // groupOls; ln runs on exact integer-valued doubles in both engines
-    "q_x_powerlaw" -> ((s, dir) =>
-      graft.operators.Profiling.groupOls(
-        graft.operators.Graph.degreeHistogram(
-            t(s, dir, "lineitem").where(col("l_quantity") <= 10)
-              .select(
-                (col("l_orderkey") % 150).as("u"),
-                (col("l_partkey") % 150).as("v")),
-            "u", "v")
-          .select(lit("deg_dist").as("g"),
-            log(col("deg").cast("double")).as("lx"),
-            log(col("n_nodes").cast("double")).as("ly")),
-        "g", "lx", "ly")),
-
-    // X-golden: survivorship capstone — entity clusters collapsed to
-    // one golden record each (max balance, id tiebreak); cluster-keyed
-    // row_number bounded by block size, singletons pass through as
-    // their own golden record. The candidate edges add a
-    // sorted-neighborhood band (|Δid| ≤ 3) on top of fuzzyPairs — the
-    // classic SNM refinement; without it the synthetic name space
-    // chains every record into one cluster and the pick is trivial
-    "q_x_golden" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier")
-        .select("s_suppkey", "s_name", "s_acctbal")
-      val edges = graft.operators.Dedup.fuzzyPairs(
-          t(s, dir, "supplier"), "s_suppkey", "s_name", maxDist = 1)
-        .where(abs(col("id1") - col("id2")) <= 3)
-        .select(col("id1"), col("id2")).localCheckpoint()
-      val clusters = graft.operators.Dedup.connectedComponents(edges)
-      graft.operators.Linkage.goldenRecords(sup, "s_suppkey", clusters,
-          Seq(col("s_acctbal").desc))
-        .select(col("cluster"), col("s_suppkey"), col("s_name"),
-          col("s_acctbal"), col("n_members"))
-        .orderBy(col("cluster"))
-    })
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for engine-specific ops (seeded
-    * sampling) → driver records a weaker rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "q_s_scan_count" -> "SELECT COUNT(*) AS n FROM lineitem",
-
-    // CSV reader gate: DuckDB reads the PLAIN twin of the bz2 file the
-    // engine parsed — same bytes, independently decoded reader options
-    "q_s_csv" ->
-      """SELECT grp, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(qty) AS BIGINT) AS n_qty,
-        |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(price AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-        |  CAST(count(note) AS BIGINT) AS n_note
-        |FROM read_csv('/tmp/graft_csv_fixture/seeded.csv',
-        |              header=true, nullstr='NA')
-        |GROUP BY grp ORDER BY grp""".stripMargin,
-
-    "q_p3_project" ->
-      "SELECT p_partkey, p_name, p_retailprice FROM part ORDER BY p_partkey",
-
-    "q_p4_selectexpr" ->
-      "SELECT MAX(l_extendedprice) / MIN(l_extendedprice) AS price_ratio FROM lineitem",
-
-    "q_p5_filter_conj" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity IS NOT NULL AND l_discount > 0.05 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_p7_sql_filter" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice > 150000.0 ORDER BY o_orderkey""".stripMargin,
-
-    "q_p8_isin" ->
-      """SELECT p_partkey, p_brand FROM part
-        |WHERE p_brand IN ('Brand#1', 'Brand#7', 'Brand#13')
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_p9_null_counts" ->
-      """SELECT CAST(SUM(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_qty,
-        |       CAST(SUM(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_discount,
-        |       CAST(SUM(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_ship
-        |FROM lineitem""".stripMargin,
-
-    "q_j1_dim_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_j1_fact_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    // planted negative keys (see the gate) keep the anti-join non-vacuous
-    "q_j2_anti" ->
-      """WITH cust AS (
-        |  SELECT c_custkey FROM customer
-        |  UNION ALL
-        |  SELECT CAST(-n_nationkey - 1 AS BIGINT) FROM nation)
-        |SELECT c_custkey FROM cust c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_j_semi" ->
-      """SELECT c_custkey FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_j_multi_dim" ->
-      """SELECT r_name, COUNT(*) AS n_customers
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q_a1_group_mean" ->
-      """SELECT l_returnflag,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_a2_global_stats" ->
-      """SELECT COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-        |       MIN(l_extendedprice) AS min_price,
-        |       MAX(l_extendedprice) AS max_price
-        |FROM lineitem""".stripMargin,
-
-    "q_a4_distinct_counts" ->
-      """SELECT COUNT(DISTINCT l_returnflag) AS d_flag,
-        |       COUNT(DISTINCT l_linestatus) AS d_status,
-        |       COUNT(DISTINCT l_partkey) AS d_part
-        |FROM lineitem""".stripMargin,
-
-    "q_a5_percentiles" ->
-      """SELECT quantile_cont(l_quantity, 0.05) AS p05,
-        |       quantile_cont(l_quantity, 0.25) AS p25,
-        |       quantile_cont(l_quantity, 0.5)  AS p50,
-        |       quantile_cont(l_quantity, 0.75) AS p75,
-        |       quantile_cont(l_quantity, 0.95) AS p95
-        |FROM lineitem""".stripMargin,
-
-    "q_a6_corr" ->
-      """SELECT ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-        |       ROUND(corr(l_discount, l_tax), 6) AS corr_disc_tax
-        |FROM lineitem""".stripMargin,
-
-    "q_a8_crosstab" ->
-      """SELECT lang, source, COUNT(*) AS n FROM documents
-        |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "q_a9_group_means" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / COUNT(value) AS avg_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_a_rollup" ->
-      """SELECT COALESCE(l_returnflag, '(all)') AS rf,
-        |       COALESCE(l_linestatus, '(all)') AS ls,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-
-    "q_a_cube" ->
-      """SELECT COALESCE(l_returnflag, '(all)') AS rf,
-        |       COALESCE(l_linestatus, '(all)') AS ls,
-        |       COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-
-    "q_a8_pivot" ->
-      """SELECT l_returnflag,
-        |       CAST(COUNT(*) FILTER (WHERE l_linestatus = 'F') AS BIGINT) AS F,
-        |       CAST(COUNT(*) FILTER (WHERE l_linestatus = 'O') AS BIGINT) AS O,
-        |       CAST(COUNT(*) FILTER (WHERE l_linestatus = 'P') AS BIGINT) AS P
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_a6_corr_matrix" ->
-      """WITH m AS (
-        |  SELECT corr(l_quantity, l_extendedprice) AS c_qp,
-        |         corr(l_quantity, l_discount)      AS c_qd,
-        |         corr(l_quantity, l_tax)           AS c_qt,
-        |         corr(l_extendedprice, l_discount) AS c_pd,
-        |         corr(l_extendedprice, l_tax)      AS c_pt,
-        |         corr(l_discount, l_tax)           AS c_dt
-        |  FROM lineitem)
-        |SELECT col_a, col_b, ROUND(c, 6) AS corr FROM (
-        |  SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, c_qp AS c FROM m
-        |  UNION ALL SELECT 'l_quantity', 'l_discount', c_qd FROM m
-        |  UNION ALL SELECT 'l_quantity', 'l_tax', c_qt FROM m
-        |  UNION ALL SELECT 'l_extendedprice', 'l_discount', c_pd FROM m
-        |  UNION ALL SELECT 'l_extendedprice', 'l_tax', c_pt FROM m
-        |  UNION ALL SELECT 'l_discount', 'l_tax', c_dt FROM m)
-        |ORDER BY col_a, col_b""".stripMargin,
-
-    "q_a8_crosstab_norm" ->
-      """SELECT l_returnflag,
-        |       ROUND(CAST(COUNT(*) FILTER (WHERE l_linestatus = 'F') AS DOUBLE) / COUNT(*), 6) AS F,
-        |       ROUND(CAST(COUNT(*) FILTER (WHERE l_linestatus = 'O') AS DOUBLE) / COUNT(*), 6) AS O
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_a_histogram" ->
-      """SELECT CAST(LEAST(GREATEST(FLOOR((l_extendedprice - 0.0) / 10000.0), 0), 10) AS INTEGER) AS bucket,
-        |       COUNT(*) AS n,
-        |       ROUND(0.0 + CAST(LEAST(GREATEST(FLOOR((l_extendedprice - 0.0) / 10000.0), 0), 10) AS INTEGER) * 10000.0, 6) AS bucket_lo,
-        |       ROUND(0.0 + (CAST(LEAST(GREATEST(FLOOR((l_extendedprice - 0.0) / 10000.0), 0), 10) AS INTEGER) + 1) * 10000.0, 6) AS bucket_hi
-        |FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_a11_reg_metrics" ->
-      """SELECT CAST(SUM(CAST(ABS(l_quantity * 1000.0 - l_extendedprice) AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS mae,
-        |       SQRT(CAST(SUM(CAST((l_quantity * 1000.0 - l_extendedprice) * (l_quantity * 1000.0 - l_extendedprice) AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)) AS rmse
-        |FROM lineitem""".stripMargin,
-
-    "q_w1_row_number" ->
-      """SELECT event_id, user_id, rn FROM (
-        |  SELECT event_id, user_id,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events) WHERE rn <= 2 ORDER BY event_id""".stripMargin,
-
-    // long-primary top-k (COALESCE mirrors the Spark side's
-    // non-nullability proof; fixture keys are never null, so it is inert)
-    "q_w_topk_long" ->
-      """SELECT o_orderpriority, o_orderkey, rn FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY COALESCE(o_orderkey, -9223372036854775808) DESC) AS rn
-        |  FROM orders) WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin,
-
-    // ties-aware top-k: every boundary tie survives, so the result SET
-    // is deterministic without any tiebreaker column
-    "q_w_topk_rank" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_quantity, rk FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_quantity,
-        |         CAST(RANK() OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_quantity DESC) AS INT) AS rk
-        |  FROM lineitem) WHERE rk <= 2
-        |ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_w_topk_dense" ->
-      """SELECT o_orderpriority, o_orderkey, price_bucket, dr FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |         CAST(FLOOR(o_totalprice / 10000) AS INT) AS price_bucket,
-        |         CAST(DENSE_RANK() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY CAST(FLOOR(o_totalprice / 10000) AS INT) DESC) AS INT) AS dr
-        |  FROM orders) WHERE dr <= 2
-        |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-
-    "q_w2_global_max_share" ->
-      """SELECT o_orderkey,
-        |       o_totalprice / (SELECT MAX(o_totalprice) FROM orders) AS price_share
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_w3_lag" ->
-      """SELECT event_id,
-        |       COALESCE(LAG(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id), -1.0) AS prev_value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_w_sessionize" ->
-      """SELECT event_id, user_id,
-        |       CAST(SUM(gap_start) OVER (
-        |         PARTITION BY user_id ORDER BY ts, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-        |FROM (
-        |  SELECT event_id, user_id, ts,
-        |         CASE WHEN epoch_ns(ts) - LAG(epoch_ns(ts), 1) OVER (
-        |           PARTITION BY user_id ORDER BY ts, event_id) > 1800000000000
-        |         THEN 1 ELSE 0 END AS gap_start
-        |  FROM events)
-        |ORDER BY event_id""".stripMargin,
-
-    // funnel: greedy-earliest strict-order chain as conditional-min CTEs
-    "q_w_funnel" ->
-      """WITH f AS (
-        |  SELECT user_id, epoch_us(ts) AS ts, event_type
-        |  FROM events
-        |  WHERE event_id % 7 = 0
-        |    AND event_type IN ('view','signup','click','purchase')),
-        |s1 AS (SELECT user_id, min(ts) AS t FROM f
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT f.user_id, min(f.ts) AS t FROM f
-        |       JOIN s1 ON f.user_id = s1.user_id AND f.ts > s1.t
-        |       WHERE f.event_type = 'signup' GROUP BY f.user_id),
-        |s3 AS (SELECT f.user_id, min(f.ts) AS t FROM f
-        |       JOIN s2 ON f.user_id = s2.user_id AND f.ts > s2.t
-        |       WHERE f.event_type = 'click' GROUP BY f.user_id),
-        |s4 AS (SELECT f.user_id, min(f.ts) AS t FROM f
-        |       JOIN s3 ON f.user_id = s3.user_id AND f.ts > s3.t
-        |       WHERE f.event_type = 'purchase' GROUP BY f.user_id)
-        |SELECT 1 AS step, 'view' AS step_name, CAST(count(*) AS BIGINT) AS n_users,
-        |       CAST(0 AS BIGINT) AS sum_delta_us FROM s1
-        |UNION ALL
-        |SELECT 2, 'signup', CAST(count(*) AS BIGINT),
-        |       CAST(COALESCE(sum(s2.t - s1.t), 0) AS BIGINT)
-        |FROM s2 JOIN s1 ON s2.user_id = s1.user_id
-        |UNION ALL
-        |SELECT 3, 'click', CAST(count(*) AS BIGINT),
-        |       CAST(COALESCE(sum(s3.t - s2.t), 0) AS BIGINT)
-        |FROM s3 JOIN s2 ON s3.user_id = s2.user_id
-        |UNION ALL
-        |SELECT 4, 'purchase', CAST(count(*) AS BIGINT),
-        |       CAST(COALESCE(sum(s4.t - s3.t), 0) AS BIGINT)
-        |FROM s4 JOIN s3 ON s4.user_id = s3.user_id
-        |ORDER BY step""".stripMargin,
-
-    "q_w_running_sum" ->
-      """SELECT event_id,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-        |         PARTITION BY user_id ORDER BY ts, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_d1_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    // q_d2_sample: intentionally no oracle — seeded RNG is engine-specific
-
-    "q_d5_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_d7_sort_desc" ->
-      "SELECT n_nationkey, n_name FROM nation ORDER BY n_name DESC",
-
-    "q_so1_except" ->
-      """SELECT key FROM (
-        |  SELECT c_custkey AS key FROM customer
-        |  UNION ALL
-        |  SELECT CAST(-n_nationkey - 1 AS BIGINT) FROM nation)
-        |EXCEPT SELECT o_custkey AS key FROM orders
-        |ORDER BY key""".stripMargin,
-
-    "q_so2_union_intersect" ->
-      """SELECT
-        |  (SELECT COUNT(*) FROM (SELECT c_nationkey AS k FROM customer
-        |    UNION SELECT n_nationkey FROM nation)) AS n_union,
-        |  (SELECT COUNT(*) FROM (SELECT DISTINCT c_nationkey AS k FROM customer
-        |    INTERSECT SELECT n_nationkey FROM nation)) AS n_intersect""".stripMargin,
-
-    // multiset set ops: same EXCEPT ALL / INTERSECT ALL per-key tallies
-    "q_so_all" ->
-      """WITH a AS (SELECT l_orderkey AS key FROM lineitem WHERE l_linenumber <= 4),
-        |b AS (SELECT l_orderkey AS key FROM lineitem WHERE l_linenumber >= 3),
-        |ea AS (SELECT key, count(*) AS n_except
-        |       FROM (SELECT key FROM a EXCEPT ALL SELECT key FROM b) GROUP BY key),
-        |ia AS (SELECT key, count(*) AS n_intersect
-        |       FROM (SELECT key FROM a INTERSECT ALL SELECT key FROM b) GROUP BY key)
-        |SELECT COALESCE(ea.key, ia.key) AS key,
-        |       CAST(COALESCE(n_except, 0) AS BIGINT) AS n_except,
-        |       CAST(COALESCE(n_intersect, 0) AS BIGINT) AS n_intersect
-        |FROM ea FULL OUTER JOIN ia ON ea.key = ia.key
-        |ORDER BY key""".stripMargin,
-
-    // full outer join: identical preserved-row semantics
-    "q_j_outer" ->
-      """SELECT COALESCE(o.k, l.k) AS k, o.n_name, l.n_regionkey
-        |FROM (SELECT n_nationkey AS k, n_name FROM nation
-        |      WHERE n_nationkey % 2 = 1) o
-        |FULL OUTER JOIN (SELECT n_nationkey AS k, n_regionkey FROM nation
-        |      WHERE n_nationkey < 13) l ON o.k = l.k
-        |ORDER BY k""".stripMargin,
-
-    "q_f_expr_battery" ->
-      """SELECT event_id,
-        |       CONCAT_WS('_', user_id, event_type) AS uid,
-        |       REGEXP_REPLACE(props, '[^0-9]', '', 'g') AS digits,
-        |       SUBSTRING(event_type, 1, 2) AS et2,
-        |       CAST(TRUNC(value) AS INTEGER) AS val_int,
-        |       CASE WHEN value IS NULL THEN 'null'
-        |            WHEN value < 50 THEN 'low'
-        |            WHEN value < 150 THEN 'mid'
-        |            ELSE 'high' END AS bucket,
-        |       CAST((epoch_ns(ts) // 60000000000) % 1440 AS INTEGER) AS minute_of_day,
-        |       ROUND(SIN(2 * PI() * ((epoch_ns(ts) // 60000000000) % 1440) / 1440.0), 6) AS minute_sin,
-        |       value % 100.0 AS val_mod,
-        |       1 AS one,
-        |       event_type IN ('signup', 'error') AS is_sig
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_f1_unique_id" ->
-      """SELECT o_orderkey,
-        |       CONCAT_WS('_', o_orderkey, o_custkey, o_orderstatus) AS unique_id
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_f_json" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |       CAST(SUM(CAST(json_extract(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        |       MAX(CAST(json_extract(props, '$.k') AS INTEGER)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_f_array_agg" ->
-      """SELECT user_id,
-        |       array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_f_date_parts" ->
-      """SELECT CAST(YEAR(l_shipdate) AS INTEGER) AS y,
-        |       CAST(MONTH(l_shipdate) AS INTEGER) AS m,
-        |       COUNT(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_u1_udf_tod" ->
-      """SELECT CASE WHEN h BETWEEN 5 AND 11 THEN 'morning'
-        |            WHEN h BETWEEN 12 AND 18 THEN 'afternoon'
-        |            WHEN h BETWEEN 19 AND 23 THEN 'evening'
-        |            WHEN h BETWEEN 0 AND 4 THEN 'night'
-        |            ELSE 'unknown' END AS tod,
-        |       COUNT(*) AS n
-        |FROM (SELECT CAST((epoch_ns(ts) // 3600000000000) % 24 AS INTEGER) AS h FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_sql_entry" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_x_pipeline" ->
-      """WITH sig AS (
-        |  SELECT doc_id, text,
-        |    length(text) AS n_chars_q,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INTEGER) AS n_tokens,
-        |    len(regexp_extract_all(text, '[[:punct:]]')) AS n_punct,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS n_stop,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|von|zu|den|mit|ist|im)\b')) AS INTEGER) AS h_de,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS INTEGER) AS h_en,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|los|del|las|por)\b')) AS INTEGER) AS h_es,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(le|la|de|et|les|des|en|un|du|une)\b')) AS INTEGER) AS h_fr,
-        |    CAST(len(regexp_extract_all(text, '[的了是我不在有人这他]')) AS INTEGER) AS h_zh
-        |  FROM documents),
-        |scored AS (
-        |  SELECT doc_id, text,
-        |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 100) * 0.4 +
-        |    LEAST(1.0, (CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END) * 5) * 0.3 +
-        |    (1.0 - LEAST(1.0, (CASE WHEN n_chars_q > 0 THEN CAST(n_punct AS DOUBLE) / n_chars_q ELSE 0.0 END) * 4)) * 0.3
-        |      AS quality_score,
-        |    CASE WHEN GREATEST(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-        |         WHEN h_zh = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-        |         WHEN h_fr = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-        |         WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-        |         WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-        |         ELSE 'de' END AS lang_guess
-        |  FROM sig)
-        |SELECT MIN(doc_id) AS doc_id FROM scored
-        |WHERE quality_score >= 0.5 AND lang_guess = 'en'
-        |GROUP BY text ORDER BY doc_id""".stripMargin,
-
-    "q_j_asof" ->
-      """SELECT e.event_id,
-        |       COALESCE(p.value, -1.0) AS prev_purchase_value
-        |FROM events e ASOF LEFT JOIN (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
-        |ON e.user_id = p.user_id AND e.ts >= p.ts
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_j_asof_fwd" ->
-      """SELECT e.event_id,
-        |       COALESCE(p.value, -1.0) AS next_purchase_value
-        |FROM events e ASOF LEFT JOIN (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
-        |ON e.user_id = p.user_id AND e.ts <= p.ts
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_x_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents))
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-        |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |WHERE a.doc_id % 2 = 0
-        |ORDER BY id1""".stripMargin,
-
-    "q_st_window_counts" ->
-      """SELECT CAST(epoch_ms(time_bucket(INTERVAL 1 HOUR,
-        |         make_timestamp(epoch_ns(ts) // 1000))) AS BIGINT) AS bucket_ms,
-        |       event_type, COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // native session_window twin: lag/cumsum session ids, new session
-    // strictly beyond the gap (touching merges), end = last event + gap
-    "q_st_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts, value FROM events
-        |  WHERE ts IS NOT NULL),
-        |m AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |              > 1800000000
-        |         THEN 1 ELSE 0 END AS g
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(g) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM m)
-        |SELECT user_id, min(ts) AS session_start_us,
-        |       max(ts) + 1800000000 AS session_end_us,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start_us""".stripMargin,
-
-    "q_st_interval_join" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |       p.value AS purchase_value
-        |FROM events c JOIN events p ON c.user_id = p.user_id
-        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND epoch_ns(p.ts) BETWEEN epoch_ns(c.ts) - 3600000000000 AND epoch_ns(c.ts)
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "q_x_dedup_exact" ->
-      """SELECT COUNT(*) AS n_docs, COUNT(DISTINCT text) AS n_unique
-        |FROM documents""".stripMargin,
-
-    "q_x_tokens" ->
-      """SELECT doc_id,
-        |       CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INTEGER) AS n_ws,
-        |       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpeish
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_x_quality" ->
-      """WITH sig AS (
-        |  SELECT doc_id,
-        |    length(text) AS n_chars_q,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INTEGER) AS n_tokens,
-        |    len(regexp_extract_all(text, '[[:punct:]]')) AS n_punct,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id, n_tokens,
-        |  ROUND(CASE WHEN n_chars_q > 0 THEN CAST(n_punct AS DOUBLE) / n_chars_q ELSE 0.0 END, 6) AS pr,
-        |  ROUND(CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END, 6) AS sr,
-        |  ROUND(
-        |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 100) * 0.4 +
-        |    LEAST(1.0, (CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END) * 5) * 0.3 +
-        |    (1.0 - LEAST(1.0, (CASE WHEN n_chars_q > 0 THEN CAST(n_punct AS DOUBLE) / n_chars_q ELSE 0.0 END) * 4)) * 0.3,
-        |  6) AS score
-        |FROM sig ORDER BY doc_id""".stripMargin,
-
-    "q_x_langid" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 25 = 3
-        |         THEN '这是一个没有空格的中文测试文档他说的话我不在乎但是有人了解这个情况'
-        |         ELSE text END AS sample
-        |  FROM documents),
-        |hits AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(sample), '\b(der|die|und|das|von|zu|den|mit|ist|im)\b')) AS INTEGER) AS h_de,
-        |    CAST(len(regexp_extract_all(lower(sample), '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS INTEGER) AS h_en,
-        |    CAST(len(regexp_extract_all(lower(sample), '\b(el|la|de|que|y|en|los|del|las|por)\b')) AS INTEGER) AS h_es,
-        |    CAST(len(regexp_extract_all(lower(sample), '\b(le|la|de|et|les|des|en|un|du|une)\b')) AS INTEGER) AS h_fr,
-        |    CAST(len(regexp_extract_all(sample, '[的了是我不在有人这他]')) AS INTEGER) AS h_zh
-        |  FROM m)
-        |SELECT doc_id,
-        |  CASE WHEN GREATEST(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-        |       WHEN h_zh = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-        |       WHEN h_fr = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-        |       WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-        |       WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-        |       ELSE 'de' END AS lang_guess,
-        |  h_en AS hits_en, h_zh AS hits_zh
-        |FROM hits ORDER BY doc_id""".stripMargin,
-
-    "q_x_cosine_topk" ->
-      """SELECT vec_id,
-        |       ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |         (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos
-        |FROM embeddings ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    // hard negatives: same anchor batch, cross-label scoring, and
-    // (cos desc, neg) tie rule
-    "q_x_hard_negatives" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv, label AS qlab
-        |  FROM embeddings WHERE vec_id < 10),
-        |s AS (
-        |  SELECT q.qid, e.vec_id AS neg,
-        |    ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |      CAST(q.qv AS DOUBLE[])), 6) AS cos
-        |  FROM embeddings e JOIN q ON e.label <> q.qlab)
-        |SELECT qid, CAST(rn AS INTEGER) AS rank, neg, cos FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY qid
-        |    ORDER BY cos DESC, neg) AS rn
-        |  FROM s)
-        |WHERE rn <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // Connected-components closure of the exact near-dup pair set (all
-    // pairs at trigram jaccard >= 0.8; the Spark side reaches the same
-    // pair set through deterministic MinHash-LSH candidates — every
-    // fixture pair sits at jaccard >= 0.9 where band-detection probability
-    // is 1 - 4e-8 — then exact-jaccard verification).
-    "q_x_dup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |edges AS (
-        |  SELECT a.doc_id id1, b.doc_id id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a)
-        |SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |FROM reach GROUP BY a ORDER BY id""".stripMargin,
-
-    // dedup eval: the exact shingle-Jaccard edge census (the
-    // q_x_dup_clusters relation) + the contract booleans as literals
-    "q_x_dedup_eval" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |edges AS (
-        |  SELECT a.doc_id id1, b.doc_id id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8)
-        |SELECT CAST(count(*) AS BIGINT) AS n_truth, TRUE AS recall_ok,
-        |  TRUE AS precision_ok
-        |FROM edges""".stripMargin,
-
-    // Dedup-aware folds: the q_x_dup_clusters closure feeding the
-    // q_d_group_split md5-threshold idiom on the CLUSTER id
-    "q_x_cluster_split" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |edges AS (
-        |  SELECT a.doc_id id1, b.doc_id id2
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a),
-        |cl AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |       FROM reach GROUP BY a),
-        |wc AS (
-        |  SELECT d.doc_id, COALESCE(cl.cluster, d.doc_id) AS cluster
-        |  FROM documents d LEFT JOIN cl ON d.doc_id = cl.id),
-        |f AS (
-        |  SELECT doc_id, cluster,
-        |    CASE WHEN md5(CAST(cluster AS VARCHAR) || 'g7') < 'cccccccc000000000000000000000000' THEN 0
-        |         WHEN md5(CAST(cluster AS VARCHAR) || 'g7') < 'e6666666000000000000000000000000' THEN 1
-        |         ELSE 2 END AS fold
-        |  FROM wc)
-        |SELECT CAST(fold AS INTEGER) AS fold, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(DISTINCT cluster) AS BIGINT) AS n_clusters,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM f GROUP BY fold ORDER BY fold""".stripMargin,
-
-    "q_x_vocab" ->
-      """WITH words AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents)
-        |SELECT word, CAST(COUNT(*) AS BIGINT) AS tf,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
-        |  ROUND(LN(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE)
-        |        / COUNT(DISTINCT doc_id)), 6) AS idf
-        |FROM words GROUP BY word
-        |ORDER BY df DESC, tf DESC, word LIMIT 30""".stripMargin,
-
-    // BPE learning: the 8-merge loop unrolled as chained CTEs, generated
-    // from the same (table, column, merge-count) parameters as the query
-    "q_x_bpe" ->
-      graft.operators.Bpe.oracleSql("documents", "text", 8),
-
-    // BPE encode: the same generated loop CTEs re-learn the merge table,
-    // then apply each merge in rank order to the doc slice
-    "q_x_bpe_encode" ->
-      graft.operators.Bpe.encodeOracleSql(
-        "documents", "doc_id", "text", 8, "doc_id < 50"),
-
-    // k-means: the same loop unrolled as generated CTE stages — identical
-    // init, left-fold distances, decimal-mean updates, carry-forward
-    "q_x_kmeans" ->
-      graft.operators.Clustering.sizesOracleSql(
-        "embeddings", "vec_id", "embedding", 8, 64, 3),
-    "q_x_kmeans_assign" ->
-      graft.operators.Clustering.assignOracleSql(
-        "embeddings", "vec_id", "embedding", 8, 64, 3, "vid < 50"),
-
-    // semantic dedup: the same kMeans CTE chain over the same planted
-    // union, within-cluster pairs, three cosine folds (no cluster here
-    // approaches the default maxBlock=4096, so the uncapped twin still
-    // describes the engine exactly — the capped path is q_x_semdedup_capped)
-    "q_x_semdedup" ->
-      graft.operators.Clustering.semanticDedupOracleSql(
-        """(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 2000
-          | UNION ALL
-          | SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id < 100) plant"""
-          .stripMargin,
-        "vec_id", "embedding", 16, 64, 2, 0.9),
-
-    // capped semantic dedup: the generated refinement twin — census,
-    // integer-exact bit count, identical plane-sign sub-buckets,
-    // overflow sorted-neighborhood window
-    "q_x_semdedup_capped" ->
-      graft.operators.Clustering.semanticDedupCappedOracleSql(
-        """(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300
-          | UNION ALL
-          | SELECT 1000000 + r.range AS vec_id, embedding
-          | FROM embeddings, range(0, 120) r WHERE vec_id = 7) plant"""
-          .stripMargin,
-        "vec_id", "embedding", 4, 64, 1, 0.9, 16, 8),
-
-    // expectations audit: one conditional-sum aggregate, unpivoted to a
-    // row per rule — identical rule set, FALSE-or-NULL counts as a
-    // violation in both engines
-    "q_s_audit" ->
-      """WITH a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CASE WHEN COALESCE(o_orderkey IS NOT NULL, FALSE)
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v0,
-        |    CAST(SUM(CASE WHEN COALESCE(o_totalprice > 0, FALSE)
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v1,
-        |    CAST(SUM(CASE WHEN COALESCE(o_orderstatus IN ('O','F','P'), FALSE)
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v2,
-        |    CAST(SUM(CASE WHEN COALESCE(o_totalprice <= 100000, FALSE)
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v3,
-        |    CAST(SUM(CASE WHEN COALESCE(CAST(NULL AS BOOLEAN) = TRUE, FALSE)
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v4,
-        |    CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS k0,
-        |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS k1
-        |  FROM orders)
-        |SELECT 'orderkey_not_null' AS rule, n AS n_rows, v0 AS n_violations, v0 = 0 AS pass FROM a
-        |UNION ALL SELECT 'totalprice_positive', n, v1, v1 = 0 FROM a
-        |UNION ALL SELECT 'status_domain', n, v2, v2 = 0 FROM a
-        |UNION ALL SELECT 'totalprice_under_100k', n, v3, v3 = 0 FROM a
-        |UNION ALL SELECT 'null_predicate_counts', n, v4, v4 = 0 FROM a
-        |UNION ALL SELECT 'orderkey_unique', n, n - k0, n - k0 = 0 FROM a
-        |UNION ALL SELECT 'custkey_unique', n, n - k1, n - k1 = 0 FROM a
-        |ORDER BY rule""".stripMargin,
-
-    // row-level MERGE: identical synthetic change batch, latest change
-    // per key via the same (version DESC, op) window, NOT IN for the
-    // anti join, non-delete winners unioned in
-    "q_s_merge" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders),
-        |changes AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |         o_totalprice + 100 AS o_totalprice, 2 AS version, 'U' AS op
-        |  FROM snap WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, 'X', o_totalprice + 200, 3, 'U'
-        |  FROM snap WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 2, 'D'
-        |  FROM snap WHERE o_orderkey % 7 = 1
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, o_custkey, 'N', o_totalprice, 1, 'I'
-        |  FROM snap WHERE o_orderkey % 7 = 3),
-        |latest AS (
-        |  SELECT *, ROW_NUMBER() OVER (
-        |    PARTITION BY o_orderkey ORDER BY version DESC, op) AS rn
-        |  FROM changes),
-        |win AS (SELECT * FROM latest WHERE rn = 1)
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM snap
-        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM win)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |FROM win WHERE op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // incremental state: the oracle aggregates the WHOLE table directly —
-    // hash equality proves the two-batch merged state is split-invariant
-    "q_s_incr_agg" ->
-      """SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-        |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
-        |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE)
-        |        / COUNT(*), 6) AS avg
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey LIMIT 100""".stripMargin,
-
-    // PageRank: the 5-iteration loop as generated chained CTEs — decimal
-    // contribution sums and per-iteration 12-place rounding make every
-    // round bit-identical across engines
-    "q_x_pagerank" ->
-      (graft.operators.Graph.pageRankOracleSql(
-        "SELECT -l_suppkey AS src, l_partkey AS dst FROM lineitem", 5) +
-        "\nORDER BY rank DESC, node LIMIT 30"),
-
-    // sketched df: the estimate is engine-specific (DataSketches
-    // coupons), so the oracle checks the error CONTRACT — exact tf/df
-    // plus the bound flag the Spark side computes, expected TRUE
-    "q_x_vocab_sketch" ->
-      """WITH words AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |  FROM documents)
-        |SELECT word, CAST(COUNT(*) AS BIGINT) AS tf,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df_exact,
-        |  TRUE AS within_bound
-        |FROM words GROUP BY word
-        |ORDER BY df_exact DESC, tf DESC, word LIMIT 30""".stripMargin,
-
-    // bigram-LM perplexity: identical add-1 model in DuckDB — parallel
-    // unnests zip the offset slices, per-(doc,bigram) n·ln p rounds to 12
-    // and sums as DECIMAL, division/exp in DOUBLE rounded to 6
-    "q_x_perplexity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents),
-        |words AS (SELECT doc_id, unnest(t) AS w1 FROM toks),
-        |v AS (SELECT COUNT(DISTINCT w1) AS v FROM words),
-        |uni AS (SELECT w1, COUNT(*) AS cu FROM words GROUP BY w1),
-        |grams AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-        |    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM toks),
-        |bi AS (SELECT g, COUNT(*) AS cb FROM grams GROUP BY g),
-        |dg AS (SELECT doc_id, w1, g, COUNT(*) AS n FROM grams GROUP BY 1, 2, 3),
-        |sc AS (
-        |  SELECT doc_id, n,
-        |    CAST(ROUND(CAST(n AS DOUBLE) *
-        |        LN((cb + 1.0) / (cu + 1.0 * v.v)), 12) AS DECIMAL(38,12)) AS lp
-        |  FROM dg JOIN bi USING (g) JOIN uni USING (w1), v)
-        |SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_bigrams,
-        |  ROUND(-CAST(SUM(lp) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) AS cross_entropy,
-        |  ROUND(EXP(-CAST(SUM(lp) AS DOUBLE) / CAST(SUM(n) AS DOUBLE)), 6) AS perplexity
-        |FROM sc WHERE doc_id < 100
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_x_rep_ratio" ->
-      """WITH grams AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |      i -> toks[i] || ' ' || toks[i+1])) AS gram
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 100)),
-        |counts AS (SELECT doc_id, gram, COUNT(*) AS c FROM grams GROUP BY 1, 2)
-        |SELECT doc_id, ROUND(CAST(MAX(c) AS DOUBLE) / SUM(c), 6) AS top_bigram_frac,
-        |       CAST(SUM(c) AS BIGINT) AS n_bigrams
-        |FROM counts GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_x_pii" ->
-      """WITH synth AS (
-        |  SELECT doc_id,
-        |    'contact user' || doc_id || '@mail.example.com or +1 555 ' ||
-        |    lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' re: ' ||
-        |    substring(text, 1, 40) AS s
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(s, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g'),
-        |    '\+?[0-9][0-9()\-\s]{5,}[0-9]', '<PHONE>', 'g') AS scrubbed,
-        |  CAST(len(regexp_extract_all(s,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-        |  CAST(len(regexp_extract_all(
-        |    regexp_replace(s, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |      '<EMAIL>', 'g'),
-        |    '\+?[0-9][0-9()\-\s]{5,}[0-9]')) AS INTEGER) AS n_phones
-        |FROM synth ORDER BY doc_id""".stripMargin,
-
-    "q_x_decontam" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |bench AS (SELECT DISTINCT unnest(sh) AS s FROM sh WHERE doc_id >= 490),
-        |doc AS (SELECT doc_id, unnest(sh) AS s FROM sh WHERE doc_id < 490)
-        |SELECT d.doc_id AS id, CAST(COUNT(DISTINCT d.s) AS BIGINT) AS n_overlap
-        |FROM doc d JOIN bench b ON d.s = b.s
-        |GROUP BY d.doc_id HAVING COUNT(DISTINCT d.s) >= 3
-        |ORDER BY id""".stripMargin,
-
-    "q_x_chunks" ->
-      """WITH e AS (
-        |  SELECT doc_id, text,
-        |    unnest(range(0, GREATEST(1,
-        |      CAST(CEIL((length(text) - 20) / 100.0) AS BIGINT)))) AS i
-        |  FROM documents)
-        |SELECT doc_id AS id, CAST(i AS INT) AS chunk_idx,
-        |  substring(text, CAST(i * 100 + 1 AS INT), 120) AS chunk
-        |FROM e ORDER BY id, chunk_idx""".stripMargin,
-
-    "q_x_packed" ->
-      """WITH tk AS (
-        |  SELECT doc_id, lang, CAST(doc_id % 16 AS BIGINT) AS shard,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, lang, shard, n_tokens,
-        |  CAST(FLOOR((SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)
-        |       / 500.0) AS BIGINT) AS bin
-        |FROM tk ORDER BY doc_id""".stripMargin,
-
-    // split-packing spans: identical prefix sums, integer div/greatest/
-    // least on BIGINTs, DuckDB range() covering [st//L, (fin-1)//L]
-    "q_x_packed_spans" ->
-      """WITH tk AS (
-        |  SELECT doc_id, CAST(doc_id % 16 AS BIGINT) AS shard,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, shard, n,
-        |    CAST(SUM(n) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n
-        |      AS BIGINT) AS st
-        |  FROM tk WHERE n > 0),
-        |x AS (SELECT doc_id, shard, n, st, st + n AS fin FROM p),
-        |e AS (
-        |  SELECT doc_id, shard, st, fin,
-        |    unnest(range(st // 500, (fin - 1) // 500 + 1)) AS seq_id
-        |  FROM x)
-        |SELECT doc_id, shard, CAST(seq_id AS BIGINT) AS seq_id,
-        |  CAST(GREATEST(st, seq_id * 500) - st AS BIGINT) AS tok_start,
-        |  CAST(LEAST(fin, (seq_id + 1) * 500) - st AS BIGINT) AS tok_end
-        |FROM e ORDER BY doc_id, seq_id""".stripMargin,
-
-    // unicode cleanup: identical regexes (Java∩RE2 dialect), DuckDB's
-    // nfc_normalize for the NFC step, messy input built with chr()
-    "q_x_normalize" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    'Cafe' || chr(769) || ' ' || chr(9) || ' ' || chr(7) ||
-        |    substr(text, 1, 60) || '  nai' || chr(776) || 've' AS messy
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, messy,
-        |    trim(regexp_replace(regexp_replace(nfc_normalize(messy),
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-        |      '\s+', ' ', 'g')) AS cleaned
-        |  FROM m)
-        |SELECT doc_id, cleaned, length(messy) AS n_raw,
-        |  length(cleaned) AS n_clean
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // sentence split: chr(1) boundary marker (lookbehind-free), parallel
-    // unnests zip positionally in DuckDB
-    "q_x_sentences" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 50) || '. ' || substr(text, 51, 40) || '! ' ||
-        |    substr(text, 91, 30) || '? End' AS synth
-        |  FROM documents WHERE doc_id < 200),
-        |sp AS (
-        |  SELECT doc_id, regexp_split_to_array(
-        |    regexp_replace(synth, '([.!?]) +', '\1' || chr(1), 'g'),
-        |    chr(1)) AS s
-        |  FROM m)
-        |SELECT doc_id AS id,
-        |  CAST(unnest(generate_series(1, len(s))) - 1 AS INT) AS sent_idx,
-        |  unnest(s) AS sentence
-        |FROM sp ORDER BY id, sent_idx""".stripMargin,
-
-    // jsonl round-trip: the oracle reads the parquet directly — a hash
-    // match proves the Spark write→read cycle preserved every value
-    "q_s_jsonl" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-        |  CAST(count(DISTINCT text) AS BIGINT) AS n_distinct_text,
-        |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // capstone-2: the full ingest chain as one CTE pipeline — each stage
-    // is the proven oracle formulation of its individually-gated operator
-    "q_x_pipeline2" ->
-      """WITH cleaned AS (
-        |  SELECT doc_id, trim(regexp_replace(regexp_replace(nfc_normalize(text),
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'), '\s+', ' ', 'g')) AS text
-        |  FROM documents WHERE doc_id < 490),
-        |sig AS (
-        |  SELECT doc_id, text,
-        |    length(text) AS n_chars_q,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS INTEGER) AS n_tokens,
-        |    len(regexp_extract_all(text, '[[:punct:]]')) AS n_punct,
-        |    len(regexp_extract_all(lower(text),
-        |      '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS n_stop,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|von|zu|den|mit|ist|im)\b')) AS INTEGER) AS h_de,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS INTEGER) AS h_en,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|los|del|las|por)\b')) AS INTEGER) AS h_es,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(le|la|de|et|les|des|en|un|du|une)\b')) AS INTEGER) AS h_fr,
-        |    CAST(len(regexp_extract_all(text, '[的了是我不在有人这他]')) AS INTEGER) AS h_zh
-        |  FROM cleaned),
-        |gate AS (
-        |  SELECT doc_id, text FROM sig
-        |  WHERE LEAST(1.0, CAST(n_tokens AS DOUBLE) / 100) * 0.4 +
-        |    LEAST(1.0, (CASE WHEN n_tokens > 0 THEN CAST(n_stop AS DOUBLE) / n_tokens ELSE 0.0 END) * 5) * 0.3 +
-        |    (1.0 - LEAST(1.0, (CASE WHEN n_chars_q > 0 THEN CAST(n_punct AS DOUBLE) / n_chars_q ELSE 0.0 END) * 4)) * 0.3
-        |    >= 0.5
-        |  AND (CASE WHEN GREATEST(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-        |       WHEN h_zh = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-        |       WHEN h_fr = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-        |       WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-        |       WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-        |       ELSE 'de' END) = 'en'),
-        |dedup AS (SELECT MIN(doc_id) AS doc_id, text FROM gate GROUP BY text),
-        |shd AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM dedup)),
-        |shb AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS s
-        |  FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id >= 490)),
-        |contaminated AS (
-        |  SELECT d.doc_id FROM shd d JOIN shb b ON d.s = b.s
-        |  GROUP BY d.doc_id HAVING COUNT(DISTINCT d.s) >= 3),
-        |kept AS (SELECT * FROM dedup
-        |         WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-        |chunks AS (
-        |  SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-        |    substring(text, CAST(i * 100 + 1 AS INT), 120) AS chunk
-        |  FROM (SELECT doc_id, text,
-        |          unnest(range(0, GREATEST(1,
-        |            CAST(CEIL((length(text) - 20) / 100.0) AS BIGINT)))) AS i
-        |        FROM kept)),
-        |tok AS (
-        |  SELECT doc_id, chunk_idx, chunk,
-        |    CAST(CASE WHEN length(trim(chunk)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(chunk), '\s+')) END AS BIGINT) AS n_tokens
-        |  FROM chunks)
-        |SELECT doc_id, chunk_idx, chunk, n_tokens,
-        |  CAST(doc_id % 8 AS BIGINT) AS shard,
-        |  CAST(FLOOR((SUM(n_tokens) OVER (PARTITION BY doc_id % 8
-        |       ORDER BY doc_id, chunk_idx
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)
-        |       / 200.0) AS BIGINT) AS bin
-        |FROM tok ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // orc round-trip: oracle reads the parquet directly — a hash match
-    // proves the ORC write→read cycle preserved every value
-    "q_s_orc" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_id
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // partitioned round-trip: same trick, filtered to the pruned value
-    "q_s_partitioned" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents WHERE lang = 'en'
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // mixture: the same modulo gate, spelled as a CASE over the rates
-    "q_x_mixture" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM documents
-        |WHERE doc_id % 100 < 100 * (CASE source
-        |  WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25
-        |  WHEN 'src3' THEN 1.0 WHEN 'src7' THEN 0.1 ELSE 0 END)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // char entropy: -sum p ln p over the codepoint frequencies
-    "q_x_entropy" ->
-      """WITH chars AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(text, '')) AS c
-        |  FROM documents),
-        |freq AS (
-        |  SELECT doc_id, c, CAST(count(*) AS DOUBLE) AS n
-        |  FROM chars GROUP BY doc_id, c),
-        |tot AS (SELECT doc_id, sum(n) AS t FROM freq GROUP BY doc_id)
-        |SELECT f.doc_id, ROUND(SUM(-(n / t) * ln(n / t)), 6) AS entropy
-        |FROM freq f JOIN tot USING (doc_id)
-        |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin,
-
-    // grouped top-k: the oracle uses the window formulation the aggregate
-    // replaces — same rows by construction (unique (price, okey) ordering)
-    "q_a_topk_group" ->
-      """SELECT o_orderpriority, CAST(rn - 1 AS INT) AS rank,
-        |  o_orderkey AS okey, o_totalprice AS price
-        |FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3
-        |ORDER BY o_orderpriority, rank""".stripMargin,
-
-    // incremental dedup: plain NOT EXISTS anti-semantics on the text key
-    "q_x_incremental" ->
-      """SELECT a.doc_id FROM documents a
-        |WHERE a.doc_id >= 250 AND NOT EXISTS (
-        |  SELECT 1 FROM documents b
-        |  WHERE b.doc_id < 250 AND b.text = a.text)
-        |ORDER BY a.doc_id""".stripMargin,
-
-    // md5 winnow fingerprint: same distinct-shingle formulation, ranked
-    // by the hex hash (lexicographic == numeric for fixed-length hex)
-    "q_x_fingerprint_md5" ->
-      """WITH sh0 AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id < 200)),
-        |sh AS (SELECT DISTINCT doc_id, md5(s) AS h FROM sh0),
-        |r AS (
-        |  SELECT doc_id, h,
-        |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY h) AS INT) AS rank
-        |  FROM sh)
-        |SELECT doc_id, h, rank FROM r WHERE rank <= 4
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // embedding near-dups: the oracle checks ALL pairs with exact cosine
-    // (no bucketing) — a hash match proves the bucket-join candidate
-    // generation lost no qualifying pair
-    "q_x_emb_neardups" ->
-      """WITH c AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000, embedding FROM embeddings WHERE vec_id < 20),
-        |p AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM c a JOIN c b ON a.vec_id < b.vec_id)
-        |SELECT id1, id2, cos FROM p WHERE cos >= 0.999
-        |ORDER BY id1, id2""".stripMargin,
-
-    // quantized near-dups: the oracle re-quantizes with the q_x_quantized
-    // recipe (scale = max|x|/127, round half away from zero — the
-    // established cross-engine rounding parity) and checks ALL code pairs
-    // with exact integer-cosine — a hash match proves the code-space
-    // bucket join lost no qualifying pair AND that code arithmetic is
-    // bit-identical (integer sums are exact in double in both engines)
-    "q_x_sq_neardups" ->
-      """WITH c AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000, embedding FROM embeddings WHERE vec_id < 20),
-        |q AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding::DOUBLE[], x ->
-        |      CASE WHEN s > 0 THEN round(x / s) ELSE 0 END) AS codes
-        |  FROM (SELECT vec_id, embedding,
-        |          list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) / 127.0 AS s
-        |        FROM c)),
-        |p AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |    ROUND(list_cosine_similarity(a.codes, b.codes), 6) AS cos
-        |  FROM q a JOIN q b ON a.vec_id < b.vec_id)
-        |SELECT id1, id2, cos FROM p WHERE cos >= 0.99
-        |ORDER BY id1, id2""".stripMargin,
-
-    // boilerplate: same tokenization (regexp \s+ split of trim — the
-    // q_x_feathash convention), same non-overlapping slice windows
-    // (both engines 1-based, end-clamped), same distinct-doc census,
-    // same ordered reassembly; all-boilerplate docs emit '' not NULL
-    "q_x_boilerplate" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |s AS (
-        |  SELECT doc_id, CAST(t.i AS INTEGER) AS seg_idx,
-        |    array_to_string(
-        |      toks[(CAST(t.i AS INTEGER)*3+1):(CAST(t.i AS INTEGER)*3+3)],
-        |      ' ') AS seg
-        |  FROM d, UNNEST(range(0, CAST(ceil(len(toks)/3.0) AS BIGINT))) AS t(i)),
-        |c AS (SELECT seg, count(DISTINCT doc_id) AS ndocs FROM s GROUP BY seg),
-        |j AS (SELECT s.doc_id, s.seg_idx, s.seg, c.ndocs
-        |      FROM s JOIN c USING (seg))
-        |SELECT doc_id,
-        |  coalesce(string_agg(seg, ' ' ORDER BY seg_idx)
-        |             FILTER (WHERE ndocs < 3), '') AS clean_text,
-        |  count(*) FILTER (WHERE ndocs < 3) AS n_kept,
-        |  count(*) FILTER (WHERE ndocs >= 3) AS n_dropped
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // md5-simhash twin: identical 60-bit vote formulation — 15 md5 hex
-    // chars parse to the same BIGINT in both engines
-    "q_x_simhash_md5" ->
-      """SELECT doc_id,
-        |  CAST(list_sum(list_transform(range(0, 60), j ->
-        |    CASE WHEN list_sum(list_transform(
-        |           list_transform(regexp_split_to_array(trim(text), '\s+'),
-        |             t -> ('0x' || substring(md5(t), 1, 15))::BIGINT),
-        |           h -> CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-        |         THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS fp
-        |FROM documents
-        |WHERE length(trim(text)) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // multimodal goldens: the payloads are engine-seeded (no source
-    // parquet), so the oracle reads the independently-computed expected
-    // stats — closed-form from the generation parameters, jpeg via a
-    // separate raster-band decode ([[Multimodal.goldens]]) — inlined as a
-    // VALUES table built from that computation at dump time (no
-    // hand-copied constants to drift)
-    "q_x_multimodal" ->
-      graft.operators.Multimodal.goldensAggregateSql(300),
-
-    // H.264 structural decode goldens: same engine-seeded closure pattern
-    // — dims/fps/frame counts ARE the generation parameters, VCL NAL
-    // lengths are closed-form exp-Golomb arithmetic, no parser in the
-    // oracle loop ([[graft.operators.H264.goldens]])
-    "q_x_h264" ->
-      graft.operators.H264.goldenAggregateSql(120),
-
-    // AAC-ADTS goldens: everything is generation parameters + arithmetic
-    // (frame bytes = header + payload; duration = blocks·1024/rate)
-    "q_x_adts" ->
-      graft.operators.Adts.goldenAggregateSql(150),
-
-    // MP4 container goldens: per-track generation parameters; file bytes
-    // via the shared writer, probe never runs in the oracle loop
-    "q_x_mp4" ->
-      graft.operators.Mp4.goldenAggregateSql(100),
-
-    // parquet footers: DuckDB's parquet_metadata() over the memoized
-    // gate path — an independent footer reader over the same bytes
-    "q_s_footers" ->
-      graft.sources.ParquetMeta.gateOracleSql(),
-
-    // native xxhash64 sketch paths: planted corpus + independently-
-    // computed golden VALUES tables (same closure pattern as the
-    // multimodal goldens — plain-Scala pipeline sharing only the XXH64
-    // primitive; see [[graft.operators.HashGoldens]])
-    "q_x_fingerprint" ->
-      graft.operators.HashGoldens.fingerprintOracleSql,
-    "q_x_simhash" ->
-      graft.operators.HashGoldens.simhashOracleSql,
-    "q_x_minhash_bands" ->
-      graft.operators.HashGoldens.minhashBandsOracleSql,
-    "q_x_cdc_fast" ->
-      graft.operators.HashGoldens.cdcOracleSql(2),
-
-    // product quantization: generated twin re-encodes from the inlined
-    // codebooks (same distance fold + tie rule as the fused expression)
-    // and re-ranks with the same literal lookup chain
-    "q_x_pq" ->
-      graft.operators.ProductQuantization.gateOracleSql(10),
-
-    // OPQ: rotation + both codebooks inlined from the dump-time memo;
-    // identical assignment tie rules and left-assoc distortion folds
-    "q_x_opq" ->
-      graft.operators.ProductQuantization.opqOracleSql(),
-
-    // OPQ serve: rotation, OPQ codebooks and the ROTATED query's ADC
-    // lookup tables inlined from the dump-time memo; the twin re-rotates
-    // every corpus vector, re-assigns with the shared (d, cid) tie rule
-    // and re-ranks with the same literal lookup chain
-    "q_x_opq_serve" ->
-      graft.operators.ProductQuantization.opqServeOracleSql(),
-
-    // temperature mix: identical in-plan rate computation (round-6
-    // sqrt shares into a DECIMAL sum, same left-assoc division chain)
-    // and the same md5-uniform keep rule
-    "q_x_mix" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id < 350 THEN 'web'
-        |         WHEN doc_id < 450 THEN 'books' ELSE 'code' END AS mix_src
-        |  FROM documents),
-        |counts AS (
-        |  SELECT mix_src, count(*) AS n, ROUND(sqrt(count(*)), 6) AS share
-        |  FROM d GROUP BY mix_src),
-        |w AS (SELECT CAST(SUM(CAST(share AS DECIMAL(38,6))) AS DOUBLE) AS w
-        |      FROM counts),
-        |rates AS (
-        |  SELECT mix_src, LEAST(1.0, 250.0 * share / w.w / n) AS rate
-        |  FROM counts, w),
-        |kept AS (
-        |  SELECT d.doc_id, d.mix_src
-        |  FROM d JOIN rates USING (mix_src)
-        |  WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 13))::BIGINT
-        |        / 4503599627370496.0 < rate)
-        |SELECT mix_src, CAST(count(*) AS BIGINT) AS n_kept,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM kept GROUP BY mix_src ORDER BY mix_src""".stripMargin,
-
-    // exact prefix-filtered Jaccard join: identical rarity order,
-    // prefix slice, length filter, and single-division jaccard —
-    // generated from the same threshold
-    "q_x_setjoin" ->
-      graft.operators.SetSimJoin.oracleSql(
-        "(SELECT * FROM documents WHERE doc_id < 500) dslice",
-        "doc_id", "text", 0.8),
-
-    // md5-minhash twin: identical sketch formulation in both engines —
-    // md5 hex is lowercase fixed-length in each, so MIN() compares
-    // lexicographically == numerically; the candidate join then
-    // reproduces exactly
-    "q_x_minhash_md5" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |mins AS (
-        |  SELECT doc_id, i AS seed, min(md5(i || ':' || s)) AS h
-        |  FROM sh, range(0, 8) t(i)
-        |  GROUP BY doc_id, i)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  CAST(count(*) AS BIGINT) AS n_shared_slots
-        |FROM mins a JOIN mins b
-        |  ON a.seed = b.seed AND a.h = b.h AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // bucketed round-trip: the oracle joins the raw parquet — a hash match
-    // proves the bucketed write→scan→join cycle preserved every row
-    "q_s_bucketed" ->
-      """SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    // rank battery: identical window spec; ranks cast to INT to match
-    // Spark's IntegerType outputs; fractional ranks ROUND(,6) both sides
-    "q_w_rank_battery" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  CAST(dense_rank() OVER w AS INTEGER) AS drank,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  ROUND(percent_rank() OVER w, 6) AS prank,
-        |  ROUND(cume_dist() OVER w, 6) AS cdist
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice DESC, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_a_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, '(all)') AS rf,
-        |       COALESCE(l_linestatus, '(all)') AS ls,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-        |                        (l_returnflag, l_linestatus))
-        |ORDER BY rf, ls""".stripMargin,
-
-    // resample: same grid/fill formulation — integer epoch-nanos floor
-    // division for buckets, decimal-exact bucket means, LAST_VALUE IGNORE
-    // NULLS running fill
-    "q_f_resample" ->
-      """WITH obs AS (
-        |  SELECT user_id, epoch_ns(ts) // 86400000000000 AS bucket,
-        |         CAST(count(value) AS BIGINT) AS n_obs,
-        |         CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-        |           / count(value) AS v_obs
-        |  FROM events GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT user_id, unnest(range(b0, b1 + 1)) AS bucket
-        |  FROM (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-        |        FROM obs GROUP BY 1)),
-        |j AS (
-        |  SELECT s.user_id, s.bucket,
-        |         COALESCE(o.n_obs, 0) AS n_obs, o.v_obs
-        |  FROM spine s LEFT JOIN obs o
-        |    ON s.user_id = o.user_id AND s.bucket = o.bucket)
-        |SELECT user_id, bucket, n_obs, v_obs,
-        |  LAST_VALUE(v_obs IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-        |FROM j ORDER BY user_id, bucket""".stripMargin,
-
-    // tf-idf pairs: same inverted-index formulation — whitespace tokens,
-    // idf ROUND(ln(n/df),6) (libm parity), df cap, DECIMAL-accumulated
-    // dots and norms (order-independent), cosine ROUND(,6); the filter
-    // compares the ROUNDED value in both engines so the threshold can
-    // never flip on an ulp
-    "q_x_tfidf_pairs" ->
-      """WITH tf AS (
-        |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |        FROM documents)
-        |  GROUP BY 1, 2),
-        |df AS (
-        |  SELECT word, count(*) AS df FROM tf
-        |  GROUP BY 1 HAVING count(*) <= 50),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-        |w AS (
-        |  SELECT tf.doc_id, tf.word,
-        |         tf.tf * ROUND(ln(n.n_docs / df.df), 6) AS w
-        |  FROM tf JOIN df USING (word) CROSS JOIN n),
-        |nr AS (
-        |  SELECT doc_id,
-        |         sqrt(CAST(SUM(CAST(w * w AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
-        |  FROM w GROUP BY 1),
-        |dotp AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |         CAST(SUM(CAST(a.w * b.w AS DECIMAL(38,12))) AS DOUBLE) AS dot
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id1, id2, ROUND(dot / (x.nrm * y.nrm), 6) AS cos
-        |FROM dotp JOIN nr x ON x.doc_id = id1 JOIN nr y ON y.doc_id = id2
-        |WHERE ROUND(dot / (x.nrm * y.nrm), 6) >= 0.30
-        |ORDER BY id1, id2""".stripMargin,
-
-    // tfidf clusters: the tf-idf edge set (same formulation as
-    // q_x_tfidf_pairs at cos >= 0.95) closed with a recursive CTE —
-    // min reachable id per node, like the q_x_dup_clusters oracle
-    "q_x_tfidf_clusters" ->
-      """WITH RECURSIVE tf AS (
-        |  SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |        FROM documents)
-        |  GROUP BY 1, 2),
-        |dfx AS (
-        |  SELECT word, count(*) AS df FROM tf
-        |  GROUP BY 1 HAVING count(*) <= 50),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-        |w AS (
-        |  SELECT tf.doc_id, tf.word,
-        |         tf.tf * ROUND(ln(n.n_docs / dfx.df), 6) AS w
-        |  FROM tf JOIN dfx USING (word) CROSS JOIN n),
-        |nr AS (
-        |  SELECT doc_id,
-        |         sqrt(CAST(SUM(CAST(w * w AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
-        |  FROM w GROUP BY 1),
-        |dotp AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |         CAST(SUM(CAST(a.w * b.w AS DECIMAL(38,12))) AS DOUBLE) AS dot
-        |  FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |edges AS (
-        |  SELECT id1, id2
-        |  FROM dotp JOIN nr x ON x.doc_id = id1 JOIN nr y ON y.doc_id = id2
-        |  WHERE ROUND(dot / (x.nrm * y.nrm), 6) >= 0.95),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a)
-        |SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |FROM reach GROUP BY a ORDER BY id""".stripMargin,
-
-    // moving window: RANGE frame over epoch nanos; decimal-cast sum
-    "q_w_moving_avg" ->
-      """SELECT event_id,
-        |  CAST(count(value) OVER w AS BIGINT) AS n_window,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE)
-        |    / count(value) OVER w AS mov_avg
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts)
-        |             RANGE BETWEEN 3600000000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    // moments: identical power-sum formulation (population moments)
-    "q_a_moments" ->
-      """WITH s AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(l_quantity) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s2,
-        |    CAST(SUM(CAST(l_quantity * l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s3
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag,
-        |  ROUND(s1 / n, 6) AS mean,
-        |  ROUND(s2 / n - (s1 / n) * (s1 / n), 6) AS variance,
-        |  ROUND((s3 / n - 3 * (s1 / n) * (s2 / n) + 2 * POW(s1 / n, 3))
-        |        / POW(s2 / n - (s1 / n) * (s1 / n), 1.5), 6) AS skewness
-        |FROM s ORDER BY l_returnflag""".stripMargin,
-
-    // group median: quantile_cont == Spark's exact percentile (linear
-    // interpolation); ROUND(,6) absorbs the interpolation arithmetic
-    "q_a_group_median" ->
-      """SELECT l_returnflag,
-        |  ROUND(quantile_cont(l_quantity, 0.5), 6) AS med_qty,
-        |  ROUND(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // HOF battery: list_filter / list_contains / list_transform+list_sum
-    "q_f_hof" ->
-      """SELECT doc_id,
-        |  CAST(len(toks) AS INTEGER) AS n_toks,
-        |  CAST(len(list_filter(toks, x -> length(x) > 4)) AS INTEGER) AS n_long,
-        |  list_contains(toks, 'the') AS has_the,
-        |  CAST(list_sum(list_transform(toks, x -> length(x))) AS INTEGER) AS sum_tok_chars
-        |FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // null-safe join: IS NOT DISTINCT FROM == Spark's <=>
-    "q_j_nullsafe" ->
-      """WITH ev AS (
-        |  SELECT event_id,
-        |    CASE WHEN value IS NULL THEN NULL
-        |         ELSE CAST(FLOOR(value / 50) AS BIGINT) END AS vb
-        |  FROM events),
-        |dim AS (
-        |  SELECT vb AS vb2,
-        |    COALESCE(CAST(vb AS VARCHAR), 'null-bucket') AS label
-        |  FROM (SELECT DISTINCT vb FROM ev))
-        |SELECT label, CAST(count(*) AS BIGINT) AS n
-        |FROM ev JOIN dim ON ev.vb IS NOT DISTINCT FROM dim.vb2
-        |GROUP BY label ORDER BY label""".stripMargin,
-
-    // union by name: emulated with explicit NULL columns
-    "q_so_union_byname" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang, CAST(NULL AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id < 250
-        |  UNION ALL
-        |  SELECT doc_id, CAST(NULL AS VARCHAR) AS lang, n_chars
-        |  FROM documents WHERE doc_id >= 250)
-        |SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(lang) AS BIGINT) AS n_lang,
-        |  CAST(count(n_chars) AS BIGINT) AS n_chars_present,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM u""".stripMargin,
-
-    // hash sample: identical md5-threshold gate — fixed-length lowercase
-    // hex compares identically in both engines; 0.25 → 0x40000000 prefix
-    "q_d_hash_sample" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM documents
-        |WHERE md5(CAST(doc_id AS VARCHAR) || 'g1')
-        |      < '40000000000000000000000000000000'
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // group split: same salted-hash cuts (0.8 → 0xcccccccc, 0.9 → 0xe6666666)
-    "q_d_group_split" ->
-      """SELECT CAST(fold AS INTEGER) AS fold, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM (
-        |  SELECT doc_id, source,
-        |    CASE WHEN md5(source || 'g2') < 'cccccccc000000000000000000000000' THEN 0
-        |         WHEN md5(source || 'g2') < 'e6666666000000000000000000000000' THEN 1
-        |         ELSE 2 END AS fold
-        |  FROM documents)
-        |GROUP BY fold ORDER BY fold""".stripMargin,
-
-    // stratified deterministic sample: same per-source thresholds
-    // (0.5 → 0x80…, 0.25 → 0x40…, 0.75 → 0xc0…); unlisted sources drop
-    "q_d_stratified_det" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM documents
-        |WHERE md5(CAST(doc_id AS VARCHAR) || 'g5') <
-        |  CASE source
-        |    WHEN 'src0' THEN '80000000000000000000000000000000'
-        |    WHEN 'src1' THEN '40000000000000000000000000000000'
-        |    WHEN 'src2' THEN 'c0000000000000000000000000000000'
-        |    ELSE '00000000000000000000000000000000' END
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // HLL: exact at these cardinalities (sparse mode) → COUNT(DISTINCT);
-    // '~all' sorts after every srcN name in both engines
-    "q_a_hll" ->
-      """SELECT source, CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |FROM documents GROUP BY source
-        |UNION ALL
-        |SELECT '~all', CAST(count(DISTINCT lang) AS BIGINT) FROM documents
-        |ORDER BY source""".stripMargin,
-
-    // KLL exact mode: inclusive-rank quantile = ceil(p*n)-th order stat
-    "q_a_kll" ->
-      """WITH s AS (
-        |  SELECT event_type, value FROM events
-        |  WHERE event_id % 43 = 0 AND value IS NOT NULL),
-        |r AS (
-        |  SELECT event_type AS scope, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM s),
-        |g AS (
-        |  SELECT '~all' AS scope, value,
-        |    row_number() OVER (ORDER BY value) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM s),
-        |u AS (SELECT * FROM r UNION ALL SELECT * FROM g)
-        |SELECT scope, CAST(max(n) AS BIGINT) AS n,
-        |  min(value) FILTER (WHERE rn >= ceil(0.25 * n)) AS p25,
-        |  min(value) FILTER (WHERE rn >= ceil(0.5 * n)) AS p50,
-        |  min(value) FILTER (WHERE rn >= ceil(0.75 * n)) AS p75
-        |FROM u GROUP BY scope ORDER BY scope""".stripMargin,
-
-    // cohort retention: identical distinct-(entity, day) matrix; rate
-    // divides by the cohort's own offset-0 count
-    "q_x_cohort" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_ns(ts) // 86400000000000 AS p
-        |  FROM events
-        |  WHERE event_id % 11 = 0
-        |    AND user_id IS NOT NULL AND ts IS NOT NULL),
-        |pu AS (SELECT user_id, MIN(p) AS cohort FROM ev GROUP BY user_id),
-        |du AS (SELECT DISTINCT e.user_id, cohort, p
-        |       FROM ev e JOIN pu USING (user_id)),
-        |m AS (SELECT cohort, p - cohort AS "offset",
-        |             CAST(COUNT(*) AS BIGINT) AS users
-        |      FROM du GROUP BY 1, 2)
-        |SELECT cohort, "offset", users,
-        |  ROUND(users / MAX(CASE WHEN "offset" = 0 THEN users END)
-        |    OVER (PARTITION BY cohort), 6) AS rate
-        |FROM m ORDER BY cohort, "offset"""".stripMargin,
-
-    // MAD outliers: same round-6 median/MAD staging, same strict >
-    "q_a_mad" ->
-      """WITH b AS (
-        |  SELECT event_type AS g, value AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |md AS (SELECT g, ROUND(quantile_cont(v, 0.5), 6) AS med
-        |       FROM b GROUP BY g),
-        |d AS (SELECT b.g, ABS(v - med) AS dev, med
-        |      FROM b JOIN md USING (g)),
-        |m2 AS (SELECT g, ROUND(quantile_cont(dev, 0.5), 6) AS mad,
-        |              CAST(COUNT(*) AS BIGINT) AS n
-        |       FROM d GROUP BY g)
-        |SELECT d.g AS event_type, MAX(d.med) AS med, MAX(mad) AS mad,
-        |  MAX(n) AS n,
-        |  CAST(SUM(CASE WHEN dev > 3.0 * mad THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_outliers,
-        |  ROUND(CAST(SUM(CASE WHEN dev > 3.0 * mad THEN 1 ELSE 0 END)
-        |    AS BIGINT) / MAX(n), 6) AS outlier_rate
-        |FROM d JOIN m2 USING (g) GROUP BY d.g ORDER BY event_type""".stripMargin,
-
-    // Welch t-test: identical conditional decimal power sums, identical
-    // IEEE expression order downstream
-    "q_a_ttest" ->
-      """WITH s AS (
-        |  SELECT
-        |    CAST(COUNT(CASE WHEN event_type = 'click' THEN value END) AS DOUBLE) AS na,
-        |    CAST(SUM(CASE WHEN event_type = 'click'
-        |      THEN CAST(value * value AS DECIMAL(38,6)) END) AS DOUBLE) AS s2a,
-        |    CAST(SUM(CASE WHEN event_type = 'click'
-        |      THEN CAST(value AS DECIMAL(38,6)) END) AS DOUBLE) AS s1a,
-        |    CAST(COUNT(CASE WHEN event_type = 'view' THEN value END) AS DOUBLE) AS nb,
-        |    CAST(SUM(CASE WHEN event_type = 'view'
-        |      THEN CAST(value * value AS DECIMAL(38,6)) END) AS DOUBLE) AS s2b,
-        |    CAST(SUM(CASE WHEN event_type = 'view'
-        |      THEN CAST(value AS DECIMAL(38,6)) END) AS DOUBLE) AS s1b
-        |  FROM events)
-        |SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        |  ROUND(s1a / na, 9) AS mean_a, ROUND(s1b / nb, 9) AS mean_b,
-        |  ROUND((s1a / na - s1b / nb) /
-        |    SQRT((s2a - s1a * s1a / na) / (na - 1) / na +
-        |         (s2b - s1b * s1b / nb) / (nb - 1) / nb), 9) AS t_stat,
-        |  ROUND(((s2a - s1a * s1a / na) / (na - 1) / na +
-        |         (s2b - s1b * s1b / nb) / (nb - 1) / nb) *
-        |        ((s2a - s1a * s1a / na) / (na - 1) / na +
-        |         (s2b - s1b * s1b / nb) / (nb - 1) / nb) /
-        |    (((s2a - s1a * s1a / na) / (na - 1) / na) *
-        |     ((s2a - s1a * s1a / na) / (na - 1) / na) / (na - 1) +
-        |     ((s2b - s1b * s1b / nb) / (nb - 1) / nb) *
-        |     ((s2b - s1b * s1b / nb) / (nb - 1) / nb) / (nb - 1)), 9) AS df
-        |FROM s""".stripMargin,
-
-    // PMI: identical integer counts, identical double assembly order
-    "q_x_pmi" ->
-      """WITH toks AS (
-        |  SELECT regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents),
-        |words AS (SELECT unnest(t) AS w FROM toks),
-        |uni AS (SELECT w, COUNT(*) AS c FROM words GROUP BY w),
-        |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM words),
-        |grams AS (
-        |  SELECT unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-        |         unnest(list_transform(range(1, len(t)), i -> t[i+1])) AS w2
-        |  FROM toks),
-        |nb AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nb FROM grams),
-        |bi AS (SELECT w1, w2, COUNT(*) AS cb FROM grams
-        |       GROUP BY w1, w2 HAVING COUNT(*) >= 5)
-        |SELECT w1, w2, CAST(cb AS BIGINT) AS n_pair,
-        |  ROUND(LN(CAST(cb AS DOUBLE) * n.n * n.n /
-        |    (CAST(u1.c AS DOUBLE) * u2.c * nb.nb)), 6) AS pmi
-        |FROM bi JOIN uni u1 ON bi.w1 = u1.w
-        |        JOIN uni u2 ON bi.w2 = u2.w, n, nb
-        |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin,
-
-    // co-occurrence: distinct (basket, item) pairs → pair counts →
-    // row_number per item over (n DESC, co_item DESC) — the TopK
-    // aggregate's deterministic (ord, tie) rule
-    "q_x_cooccur" ->
-      """WITH bi AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |  FROM lineitem WHERE l_partkey % 3 = 0),
-        |ok AS (
-        |  SELECT b FROM bi GROUP BY b
-        |  HAVING COUNT(*) BETWEEN 2 AND 64),
-        |pc AS (
-        |  SELECT x.i AS item, y.i AS co_item, COUNT(*) AS n
-        |  FROM bi x JOIN ok USING (b) JOIN bi y USING (b)
-        |  WHERE x.i <> y.i
-        |  GROUP BY 1, 2)
-        |SELECT item, CAST(rn - 1 AS INT) AS rank, co_item,
-        |  CAST(n AS BIGINT) AS n
-        |FROM (
-        |  SELECT item, co_item, n, row_number() OVER (
-        |    PARTITION BY item ORDER BY n DESC, co_item DESC) AS rn
-        |  FROM pc)
-        |WHERE rn <= 3
-        |ORDER BY item, rank""".stripMargin,
-
-    // SCD2: identical run-collapse (IS DISTINCT FROM on the attribute
-    // row) + lead over the survivors
-    "q_s_scd2" ->
-      """WITH c AS (
-        |  SELECT o_custkey, o_orderkey, o_orderstatus, o_orderpriority,
-        |    lag(row(o_orderstatus, o_orderpriority)) OVER (
-        |      PARTITION BY o_custkey ORDER BY o_orderkey) AS prev
-        |  FROM orders WHERE o_custkey % 5 = 0),
-        |runs AS (
-        |  SELECT o_custkey, o_orderkey, o_orderstatus, o_orderpriority
-        |  FROM c
-        |  WHERE prev IS DISTINCT FROM row(o_orderstatus, o_orderpriority))
-        |SELECT o_custkey, o_orderstatus, o_orderpriority,
-        |  o_orderkey AS valid_from,
-        |  lead(o_orderkey) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderkey) AS valid_to,
-        |  lead(o_orderkey) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderkey) IS NULL AS is_current
-        |FROM runs
-        |ORDER BY o_custkey, valid_from""".stripMargin,
-
-    // chi-square: same contingency/margins construction; per-cell terms
-    // round-9 then DECIMAL-sum (order-independent)
-    "q_a_chisq" ->
-      """WITH cells AS (
-        |  SELECT l_returnflag AS a, l_linestatus AS b, COUNT(*) AS o
-        |  FROM lineitem
-        |  WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
-        |  GROUP BY 1, 2),
-        |ra AS (SELECT a, SUM(o) AS ra FROM cells GROUP BY a),
-        |cb AS (SELECT b, SUM(o) AS cb FROM cells GROUP BY b),
-        |nt AS (SELECT SUM(o) AS n FROM cells),
-        |terms AS (
-        |  SELECT ROUND(
-        |      (o - CAST(ra * cb AS DOUBLE) / n) *
-        |      (o - CAST(ra * cb AS DOUBLE) / n) /
-        |      (CAST(ra * cb AS DOUBLE) / n), 9) AS term,
-        |    a, b, n
-        |  FROM cells JOIN ra USING (a) JOIN cb USING (b), nt),
-        |agg AS (
-        |  SELECT CAST(SUM(CAST(term AS DECIMAL(38,9))) AS DOUBLE) AS chi2,
-        |    COUNT(DISTINCT a) AS r, COUNT(DISTINCT b) AS c,
-        |    MAX(n) AS nn
-        |  FROM terms)
-        |SELECT ROUND(chi2, 6) AS chi2,
-        |  CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
-        |  CAST(nn AS BIGINT) AS n,
-        |  ROUND(SQRT(chi2 / (nn * LEAST(r - 1, c - 1))), 6) AS cramers_v
-        |FROM agg""".stripMargin,
-
-    // HLL overlap: sketches are exact at the fixture's user cardinality,
-    // so inclusion-exclusion over exact distinct counts reproduces it
-    "q_a_hll_overlap" ->
-      """WITH a AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_click
-        |  FROM events WHERE event_type = 'click' AND user_id IS NOT NULL),
-        |b AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_view
-        |  FROM events WHERE event_type = 'view' AND user_id IS NOT NULL),
-        |u AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_union
-        |  FROM events
-        |  WHERE event_type IN ('click', 'view') AND user_id IS NOT NULL)
-        |SELECT n_click, n_view, n_union,
-        |  n_click + n_view - n_union AS n_overlap
-        |FROM a, b, u""".stripMargin,
-
-    // hopping windows: each event covers the 4 window starts on the
-    // 15-minute grid within the hour before it
-    "q_st_hopping" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_ns(ts) // 1000000 // 900000 AS k
-        |  FROM events WHERE ts IS NOT NULL),
-        |w AS (
-        |  SELECT event_type, unnest(generate_series(k - 3, k)) AS wk
-        |  FROM ev)
-        |SELECT wk * 900000 AS win_start_ms, event_type,
-        |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM w GROUP BY 1, 2
-        |ORDER BY win_start_ms, event_type""".stripMargin,
-
-    // Gini: same rank formulation; ties order arbitrarily (the i·x sum
-    // is permutation-invariant over equal values)
-    "q_a_gini" ->
-      """WITH r AS (
-        |  SELECT l_returnflag AS g, l_extendedprice AS x,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice) AS i
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL)
-        |SELECT g AS l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-        |  ROUND(2.0 * CAST(SUM(CAST(ROUND(i * x, 9) AS DECIMAL(38,9)))
-        |      AS DOUBLE) / (COUNT(*) * CAST(SUM(CAST(x AS DECIMAL(38,6)))
-        |      AS DOUBLE))
-        |    - (COUNT(*) + 1.0) / COUNT(*), 6) AS gini
-        |FROM r GROUP BY g ORDER BY g""".stripMargin,
-
-    // JL projection: generated twin — the sign VALUES inline from the
-    // same md5 computation, float→double widen exact, ±1 multiply
-    // exact, DECIMAL accumulation
-    "q_x_jl_project" -> graft.operators.Projection.oracleSql(
-      "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 = 0",
-      dim = 64, outDim = 8, salt = "jl"),
-
-    // decayed stats: identical per-row round-9 weight into DECIMAL sums
-    "q_f_decay" ->
-      """WITH w AS (
-        |  SELECT event_type, value,
-        |    ROUND(EXP(LN(0.5) *
-        |      (CAST(1706745600000000000 - epoch_ns(ts) AS DOUBLE) / 86400e9)
-        |      / 7.0), 9) AS w
-        |  FROM events
-        |  WHERE ts IS NOT NULL
-        |    AND epoch_ns(ts) <= 1706745600000000000)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  ROUND(CAST(SUM(CAST(ROUND(w * value, 9) AS DECIMAL(38,9)))
-        |    AS DOUBLE), 6) AS decayed_sum,
-        |  ROUND(CAST(SUM(CAST(w AS DECIMAL(38,9))) AS DOUBLE), 6)
-        |    AS decayed_n
-        |FROM w GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // covariance matrix: identical decimal power-sum construction,
-    // unpivoted as a UNION of the pair cells
-    "q_a_covmatrix" -> {
-      val cs = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val sums = cs.map(c =>
-        s"CAST(SUM(CAST($c AS DECIMAL(38,6))) AS DOUBLE) AS s_$c").mkString(", ")
-      val prods = (for { i <- cs.indices; j <- i until cs.size } yield
-        s"CAST(SUM(CAST(ROUND(${cs(i)} * ${cs(j)}, 6) AS DECIMAL(38,6))) AS DOUBLE) AS p_${i}_$j")
-        .mkString(", ")
-      val cells = (for { i <- cs.indices; j <- i until cs.size } yield
-        s"SELECT '${cs(i)}' AS col_a, '${cs(j)}' AS col_b, " +
-          s"ROUND((p_${i}_$j - s_${cs(i)} * s_${cs(j)} / n) / (n - 1), 6) AS cov FROM agg")
-        .mkString("\nUNION ALL\n")
-      s"""WITH clean AS (
-         |  SELECT * FROM lineitem
-         |  WHERE ${cs.map(c => s"$c IS NOT NULL").mkString(" AND ")}),
-         |agg AS (
-         |  SELECT CAST(COUNT(*) AS DOUBLE) AS n, $sums, $prods FROM clean)
-         |$cells
-         |ORDER BY col_a, col_b""".stripMargin
-    },
-
-    // LOO target encoding: identical stats join (null-safe) + global
-    // fallback; sums decimal, divisions double
-    "q_f_target_enc" ->
-      """WITH stats AS (
-        |  SELECT o_custkey AS cat, COUNT(o_totalprice) AS n,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS s
-        |  FROM orders GROUP BY 1),
-        |g AS (
-        |  SELECT COUNT(o_totalprice) AS gn,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS gs
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey,
-        |  ROUND(CASE
-        |    WHEN n - (CASE WHEN o_totalprice IS NOT NULL THEN 1 ELSE 0 END) > 0
-        |    THEN (s - COALESCE(o_totalprice, 0.0)) /
-        |         (n - CASE WHEN o_totalprice IS NOT NULL THEN 1 ELSE 0 END)
-        |    ELSE gs / gn END, 6) AS encoded
-        |FROM orders JOIN stats ON o_custkey IS NOT DISTINCT FROM cat, g
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // survival: same lifetime/hazard construction; the zero factor at
-    // each group's last lifetime is NULLed out of the ln sum and the
-    // row overridden to 0 (DuckDB ln(0) is -inf; Spark nulls it)
-    "q_x_survival" ->
-      """WITH ev AS (
-        |  SELECT event_type AS g, user_id AS e,
-        |    epoch_ns(ts) // 86400000000000 AS p
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-        |    AND ts IS NOT NULL),
-        |lt AS (SELECT g, e, MAX(p) - MIN(p) AS t FROM ev GROUP BY g, e),
-        |byt AS (SELECT g, t, CAST(COUNT(*) AS BIGINT) AS churned
-        |        FROM lt GROUP BY g, t),
-        |w AS (
-        |  SELECT g, t, churned,
-        |    SUM(churned) OVER (PARTITION BY g)
-        |      - SUM(churned) OVER (PARTITION BY g ORDER BY t
-        |          ROWS UNBOUNDED PRECEDING) + churned AS n_risk
-        |  FROM byt),
-        |terms AS (
-        |  SELECT g, t, churned, n_risk,
-        |    CASE WHEN churned = n_risk THEN NULL
-        |      ELSE CAST(ROUND(LN(1.0 - CAST(churned AS DOUBLE) / n_risk), 6)
-        |           AS DECIMAL(38,6)) END AS lnf
-        |  FROM w)
-        |SELECT g, t, CAST(n_risk AS BIGINT) AS n_risk, churned,
-        |  CASE WHEN churned = n_risk THEN 0.0
-        |    ELSE ROUND(EXP(CAST(SUM(lnf) OVER (PARTITION BY g ORDER BY t
-        |      ROWS UNBOUNDED PRECEDING) AS DOUBLE)), 6) END AS survival
-        |FROM terms
-        |ORDER BY g, t""".stripMargin,
-
-    // per-group bottom-k: same salted-hash order, rank within group
-    "q_d_group_bottomk" ->
-      """SELECT doc_id, source, lang FROM (
-        |  SELECT doc_id, source, lang, row_number() OVER (
-        |    PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR) || 'g5'), doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 2
-        |ORDER BY source, doc_id""".stripMargin,
-
-    // two-proportion z-test: identical pooled-variance construction;
-    // null values compare FALSE in `value > 100` in both engines
-    "q_a_ztest" ->
-      """WITH agg AS (
-        |  SELECT
-        |    CAST(COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS DOUBLE) AS n_a,
-        |    CAST(COUNT(CASE WHEN event_type = 'click' AND value > 100 THEN 1 END) AS DOUBLE) AS s_a,
-        |    CAST(COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS DOUBLE) AS n_b,
-        |    CAST(COUNT(CASE WHEN event_type = 'view' AND value > 100 THEN 1 END) AS DOUBLE) AS s_b
-        |  FROM events)
-        |SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  ROUND(s_a / n_a, 9) AS rate_a,
-        |  ROUND(s_b / n_b, 9) AS rate_b,
-        |  ROUND((s_a / n_a - s_b / n_b) / SQRT(
-        |    ((s_a + s_b) / (n_a + n_b)) * (1.0 - (s_a + s_b) / (n_a + n_b)) *
-        |    (1.0 / n_a + 1.0 / n_b)), 9) AS z_stat
-        |FROM agg""".stripMargin,
-
-    // spatial radius join: naive cross-join filter — the IEEE squared
-    // distance and radius² compare identically in both engines
-    "q_j_spatial" ->
-      """WITH l AS (
-        |  SELECT event_id AS lid, value AS xl,
-        |    CAST(event_id % 331 AS DOUBLE) AS yl
-        |  FROM events WHERE event_id % 29 = 0 AND value IS NOT NULL),
-        |r AS (
-        |  SELECT event_id AS rid, value AS xr,
-        |    CAST(event_id % 331 AS DOUBLE) AS yr
-        |  FROM events WHERE event_id % 29 = 1 AND value IS NOT NULL)
-        |SELECT lid, rid,
-        |  ROUND(SQRT((xl-xr)*(xl-xr) + (yl-yr)*(yl-yr)), 6) AS dist
-        |FROM l, r
-        |WHERE (xl-xr)*(xl-xr) + (yl-yr)*(yl-yr) <= 625.0
-        |ORDER BY lid, rid""".stripMargin,
-
-    // bottom-k sample: same salted-hash order, LIMIT k
-    "q_d_bottomk" ->
-      """SELECT doc_id, lang, source FROM documents
-        |ORDER BY md5(CAST(doc_id AS VARCHAR) || 'g3'), doc_id
-        |LIMIT 25""".stripMargin,
-
-    // weighted sample: identical max-of-w-hashes priority (w slices of
-    // the same 4-draw list), ranked descending
-    "q_d_weighted" ->
-      """SELECT doc_id, source, w FROM (
-        |  SELECT doc_id, source,
-        |    CAST(CASE WHEN source = 'src0' THEN 4
-        |              WHEN source = 'src1' THEN 2 ELSE 1 END AS INTEGER) AS w,
-        |    list_max(list_slice([
-        |      md5(CAST(doc_id AS VARCHAR) || 'g4#1'),
-        |      md5(CAST(doc_id AS VARCHAR) || 'g4#2'),
-        |      md5(CAST(doc_id AS VARCHAR) || 'g4#3'),
-        |      md5(CAST(doc_id AS VARCHAR) || 'g4#4')], 1,
-        |      CASE WHEN source = 'src0' THEN 4
-        |           WHEN source = 'src1' THEN 2 ELSE 1 END)) AS prio
-        |  FROM documents)
-        |ORDER BY prio DESC, doc_id LIMIT 30""".stripMargin,
-
-    // feature scaling: identical power-sum z-score, min-max, and
-    // quantile_cont winsorize per group
-    "q_f_scaling" ->
-      """WITH st AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(l_quantity) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s2,
-        |    MIN(l_quantity) AS lo, MAX(l_quantity) AS hi,
-        |    quantile_cont(l_quantity, 0.05) AS plo,
-        |    quantile_cont(l_quantity, 0.95) AS phi
-        |  FROM lineitem GROUP BY l_returnflag),
-        |st2 AS (
-        |  SELECT l_returnflag, lo, hi, plo, phi, s1 / n AS mean,
-        |    CASE WHEN n > 1 THEN sqrt((s2 - s1 * s1 / n) / (n - 1.0)) END AS sd
-        |  FROM st)
-        |SELECT l_orderkey, l_linenumber,
-        |  ROUND((l_quantity - mean) / (CASE WHEN sd > 0 THEN sd END), 6) AS z,
-        |  ROUND(CAST(l_quantity - lo AS DOUBLE) /
-        |        (CASE WHEN hi > lo THEN CAST(hi - lo AS DOUBLE) END), 6) AS mm,
-        |  ROUND(GREATEST(plo, LEAST(phi, CAST(l_quantity AS DOUBLE))), 6) AS clipped
-        |FROM lineitem JOIN st2 USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber, z, mm""".stripMargin,
-
-    // BM25: identical inverted-index formulation — idf and avgdl rounded
-    // to 6 (libm parity), per-term contributions rounded to 9 and
-    // decimal-accumulated, score rounded to 6
-    "q_x_bm25" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS DOUBLE) AS dl,
-        |    text
-        |  FROM documents),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    ROUND(CAST(SUM(CAST(dl AS DECIMAL(38,6))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE), 6) AS avgdl
-        |  FROM base),
-        |tf AS (
-        |  SELECT doc_id, dl, word, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, dl,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |        FROM base)
-        |  WHERE word IN ('query', 'merge', 'stream')
-        |  GROUP BY doc_id, dl, word),
-        |dfreq AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |contrib AS (
-        |  SELECT tf.doc_id,
-        |    ROUND(ROUND(ln(1.0 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5)), 6)
-        |      * (tf.tf * (1.2 + 1.0))
-        |      / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / stats.avgdl)), 9) AS c
-        |  FROM tf JOIN dfreq USING (word) CROSS JOIN stats)
-        |SELECT doc_id, ROUND(CAST(SUM(CAST(c AS DECIMAL(38,12))) AS DOUBLE), 6) AS score
-        |FROM contrib GROUP BY doc_id
-        |ORDER BY score DESC, doc_id
-        |LIMIT 20""".stripMargin,
-
-    // quantization: identical per-vector scheme — scale from an ordered
-    // max-abs fold, codes checked exactly through their integer sum,
-    // reconstruction error in ordered double folds
-    "q_x_quantized" ->
-      """WITH q AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) / 127.0 AS scale
-        |  FROM embeddings WHERE vec_id < 200)
-        |SELECT vec_id,
-        |  ROUND(scale, 9) AS scale,
-        |  CAST(len(v) AS INTEGER) AS n_dims,
-        |  CAST(list_sum(list_transform(v, x ->
-        |    CASE WHEN scale > 0 THEN CAST(round(x / scale) AS BIGINT)
-        |         ELSE 0 END)) AS BIGINT) AS code_sum,
-        |  ROUND(list_sum(list_transform(v, x ->
-        |    (x - (CASE WHEN scale > 0 THEN round(x / scale) ELSE 0 END) * scale)
-        |    * (x - (CASE WHEN scale > 0 THEN round(x / scale) ELSE 0 END) * scale)))
-        |    / len(v), 6) AS mse
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    // fuzzy pairs: same blocked semantics (first char + length band),
-    // same classic levenshtein in both engines
-    "q_x_fuzzy" ->
-      """SELECT a.s_suppkey AS id1, b.s_suppkey AS id2,
-        |       CAST(levenshtein(a.s_name, b.s_name) AS INTEGER) AS dist
-        |FROM supplier a JOIN supplier b
-        |  ON a.s_suppkey < b.s_suppkey
-        | AND substring(a.s_name, 1, 1) = substring(b.s_name, 1, 1)
-        | AND abs(length(a.s_name) - length(b.s_name)) <= 1
-        |WHERE levenshtein(a.s_name, b.s_name) <= 1
-        |ORDER BY id1, id2""".stripMargin,
-
-    // entity resolution: the q_x_fuzzy edge set (same depth-1 blocked
-    // twin) closed into clusters by the recursive-CTE reachability
-    // pattern of q_x_dup_clusters
-    "q_x_entity" ->
-      """WITH RECURSIVE edges AS (
-        |  SELECT a.s_suppkey id1, b.s_suppkey id2
-        |  FROM supplier a JOIN supplier b
-        |    ON a.s_suppkey < b.s_suppkey
-        |   AND substring(a.s_name, 1, 1) = substring(b.s_name, 1, 1)
-        |   AND abs(length(a.s_name) - length(b.s_name)) <= 1
-        |  WHERE levenshtein(a.s_name, b.s_name) <= 1),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a)
-        |SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |FROM reach GROUP BY a ORDER BY id""".stripMargin,
-
-    // centroids: zipped unnest + generate_subscripts (1-based → pos-1),
-    // identical decimal-mean formulation
-    "q_x_centroids" ->
-      """WITH ex AS (
-        |  SELECT d.lang,
-        |    generate_subscripts(e.embedding, 1) - 1 AS pos,
-        |    unnest(e.embedding)::DOUBLE AS v
-        |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id)
-        |SELECT lang, CAST(pos AS INTEGER) AS pos,
-        |  ROUND(CAST(SUM(CAST(v AS DECIMAL(38,9))) AS DOUBLE)
-        |        / CAST(count(*) AS DOUBLE), 6) AS c
-        |FROM ex WHERE pos < 8
-        |GROUP BY lang, pos ORDER BY lang, pos""".stripMargin,
-
-    // count-min: exact on the collision-free event_type domain, so the
-    // oracle is the true count of each probe item
-    "q_a_cms" ->
-      """SELECT event_type AS item, CAST(count(*) AS BIGINT) AS est
-        |FROM events WHERE event_type IN ('click', 'purchase', 'view')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // schema evolution: the oracle emulates the two-batch layout with a
-    // CASE — v1 rows (doc_id < 250) never carried n_chars
-    "q_s_evolved" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(CASE WHEN doc_id >= 250 THEN n_chars END) AS BIGINT) AS n_with_chars,
-        |  CAST(sum(CASE WHEN doc_id >= 250 THEN n_chars END) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_id
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // range join: the oracle uses the raw BETWEEN join — a hash match
-    // proves the bucket-explode + refine rewrite is exactly equivalent
-    "q_j_range" ->
-      """WITH bands AS (
-        |  SELECT n_nationkey AS band_id,
-        |         CAST(n_nationkey AS DOUBLE) * 8000.0 AS lo,
-        |         CAST(n_nationkey AS DOUBLE) * 8000.0 + 19999.0 AS hi
-        |  FROM nation)
-        |SELECT band_id, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS sum_price
-        |FROM orders JOIN bands
-        |  ON o_totalprice >= lo AND o_totalprice <= hi
-        |GROUP BY band_id ORDER BY band_id""".stripMargin,
-
-    // compaction round-trip: oracle reads the source parquet directly
-    "q_s_compacted" ->
-      """SELECT l_orderkey % 7 AS grp, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS sum_qty,
-        |       min(l_orderkey) AS min_key
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // zorder: the Morton interleave as explicit bit arithmetic — bit
-    // (2j) of z is bit j of the first dimension, bit (2j+1) the second;
-    // the round-trip through the z-ordered files must preserve every row
-    "q_s_zorder" ->
-      """SELECT p_partkey, p_size,
-        |  CAST(list_sum(list_transform(range(0, 8), j ->
-        |      (((p_partkey % 256) >> j) & 1) * (1::BIGINT << (2*j))
-        |    + (((p_size % 256) >> j) & 1) * (1::BIGINT << (2*j + 1))))
-        |  AS BIGINT) AS z
-        |FROM part ORDER BY p_partkey LIMIT 200""".stripMargin,
-
-    // content-defined spans: identical anchor predicate (md5 of the
-    // 8-char context in the '0…' band) and span key in both engines
-    "q_x_cdc_spans" ->
-      """WITH spans AS (
-        |  SELECT doc_id, md5(substring(text, i, 40)) AS h
-        |  FROM documents,
-        |       LATERAL unnest(range(1, length(text) - 38)) t(i)
-        |  WHERE length(text) >= 40
-        |    AND md5(substring(text, i, 8)) LIKE '0%')
-        |SELECT h, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_occ,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM spans GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY h""".stripMargin,
-
-    // duplicated spans: identical stride/window formulation — md5 hex is
-    // engine-shared, positions are 1-based in both substring dialects
-    "q_x_dup_spans" ->
-      """WITH spans AS (
-        |  SELECT doc_id, md5(substring(text, i, 40)) AS h
-        |  FROM documents,
-        |       LATERAL unnest(range(1, length(text) - 38, 10)) t(i)
-        |  WHERE length(text) >= 40)
-        |SELECT h, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_occ,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM spans GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY h""".stripMargin,
-
-    // percentile gate: same rank/n-within-source quantile rule (drops
-    // floor(minPct*n) rows per group; singleton groups always survive)
-    "q_x_quality_gate" ->
-      """WITH ranked AS (
-        |  SELECT source, doc_id, n_chars,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY n_chars, doc_id) AS rk,
-        |         count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |       min(n_chars) AS min_len,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM ranked WHERE CAST(rk AS DOUBLE) / n > 0.25
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // freq items: capacity > distinct(event_type), so the Misra-Gries
-    // sketch is exact and the oracle is the plain exact top-k
-    "q_a_freq_items" ->
-      """SELECT CAST(rn AS INTEGER) AS rank, item, n FROM (
-        |  SELECT event_type AS item, CAST(count(*) AS BIGINT) AS n,
-        |         row_number() OVER (ORDER BY count(*) DESC, event_type) AS rn
-        |  FROM events GROUP BY 1)
-        |WHERE rn <= 5 ORDER BY rank""".stripMargin,
-
-    // KMV slices: the k smallest distinct md5-60bit hashes per priority
-    // recomputed with a window; 47·2^60 is an exact double and the
-    // long→double cast of h rounds IDENTICALLY in both engines (IEEE
-    // round-to-nearest), so the estimate hashes bit-identical with NO
-    // rounding
-    "q_a_kmv_slices" ->
-      """WITH h AS (
-        |  SELECT DISTINCT o_orderpriority AS priority,
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM orders),
-        |r AS (SELECT priority, h,
-        |        row_number() OVER (PARTITION BY priority ORDER BY h) AS rn
-        |      FROM h),
-        |sk AS (SELECT priority, CAST(count(*) AS INTEGER) AS n_sketch,
-        |              CAST(max(h) AS BIGINT) AS kth0
-        |       FROM r WHERE rn <= 48 GROUP BY priority),
-        |ex AS (SELECT o_orderpriority AS priority,
-        |              CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_distinct
-        |       FROM orders GROUP BY 1)
-        |SELECT sk.priority, sk.n_sketch,
-        |       CASE WHEN sk.n_sketch = 48 THEN sk.kth0 END AS kth_hash,
-        |       CASE WHEN sk.n_sketch < 48 THEN CAST(sk.n_sketch AS DOUBLE)
-        |            ELSE 47.0 * 1152921504606846976.0 / CAST(sk.kth0 AS DOUBLE)
-        |       END AS est_distinct,
-        |       ex.exact_distinct
-        |FROM sk JOIN ex USING (priority) ORDER BY priority""".stripMargin,
-
-    // KMV overlap: union sketch = k smallest of the two k-lists (exact
-    // closure), Jaccard = shared membership inside it, intersection =
-    // J · D(union); same integer operands, same IEEE ops, no rounding
-    "q_a_kmv_overlap" ->
-      """WITH ha AS (
-        |  SELECT DISTINCT
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM orders WHERE o_orderpriority = '1-URGENT'),
-        |hb AS (
-        |  SELECT DISTINCT
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM orders WHERE o_orderpriority = '2-HIGH'),
-        |ka AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |                      FROM ha) WHERE rn <= 48),
-        |kb AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |                      FROM hb) WHERE rn <= 48),
-        |ku AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |                      FROM (SELECT h FROM ka UNION SELECT h FROM kb))
-        |       WHERE rn <= 48),
-        |s AS (SELECT
-        |  (SELECT count(*) FROM ka) AS na, (SELECT max(h) FROM ka) AS kka,
-        |  (SELECT count(*) FROM kb) AS nb, (SELECT max(h) FROM kb) AS kkb,
-        |  (SELECT count(*) FROM ku) AS nu, (SELECT max(h) FROM ku) AS kku,
-        |  (SELECT count(*) FROM ku
-        |   WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)) AS shared),
-        |ex AS (SELECT CAST(count(*) AS BIGINT) AS exact_intersect FROM
-        |  (SELECT DISTINCT o_custkey FROM orders
-        |   WHERE o_orderpriority = '1-URGENT') a
-        |  JOIN (SELECT DISTINCT o_custkey FROM orders
-        |        WHERE o_orderpriority = '2-HIGH') b USING (o_custkey))
-        |SELECT
-        |  CASE WHEN na < 48 THEN CAST(na AS DOUBLE)
-        |       ELSE 47.0 * 1152921504606846976.0 / CAST(kka AS DOUBLE) END AS est_a,
-        |  CASE WHEN nb < 48 THEN CAST(nb AS DOUBLE)
-        |       ELSE 47.0 * 1152921504606846976.0 / CAST(kkb AS DOUBLE) END AS est_b,
-        |  CASE WHEN nu < 48 THEN CAST(nu AS DOUBLE)
-        |       ELSE 47.0 * 1152921504606846976.0 / CAST(kku AS DOUBLE) END AS est_union,
-        |  CAST(shared AS DOUBLE) / CAST(nu AS DOUBLE) AS jaccard_est,
-        |  (CAST(shared AS DOUBLE) / CAST(nu AS DOUBLE)) *
-        |    (CASE WHEN nu < 48 THEN CAST(nu AS DOUBLE)
-        |          ELSE 47.0 * 1152921504606846976.0 / CAST(kku AS DOUBLE) END)
-        |    AS est_intersect,
-        |  exact_intersect
-        |FROM s, ex""".stripMargin,
-
-    // DP noisy counts: identical seeded uniform (md5-13-hex / 2^52),
-    // identical affine terms (exact binary fractions), ln ulp absorbed
-    // by ROUND(,6); b = sensitivity/eps = 2.0 inlined
-    "q_a_dp_counts" ->
-      """WITH g AS (
-        |  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        |    ('0x' || substr(md5(
-        |      COALESCE(o_orderpriority || ':dp-r8', 'dp-r8')), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS u
-        |  FROM orders GROUP BY 1)
-        |SELECT o_orderpriority,
-        |  ROUND(n + (-2.0) * (CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END) *
-        |    ln(GREATEST(1.0 - 2.0 * abs(u - 0.5), 2.220446049250313e-16)), 6)
-        |    AS n_noisy,
-        |  CAST(0.5 AS DOUBLE) AS epsilon
-        |FROM g ORDER BY o_orderpriority""".stripMargin,
-
-    // DP noisy sums/means: identical clamp (CASE, not LEAST — decimal
-    // LEAST degrades in DuckDB), round-6 decimal sum, identical seeded
-    // uniforms per (group, statistic) salt, b_sum = 300000/(1/2) =
-    // 600000, b_cnt = 2; mean divides the two ROUND-6 releases (shared
-    // doubles) and rounds at the edge
-    "q_a_dp_sums" ->
-      """WITH c AS (
-        |  SELECT o_orderpriority,
-        |    CASE WHEN CAST(o_totalprice AS DOUBLE) < 0.0 THEN 0.0
-        |         WHEN CAST(o_totalprice AS DOUBLE) > 300000.0 THEN 300000.0
-        |         ELSE CAST(o_totalprice AS DOUBLE) END AS v
-        |  FROM orders WHERE o_totalprice IS NOT NULL),
-        |g AS (
-        |  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(ROUND(v, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |    ('0x' || substr(md5(
-        |      COALESCE(o_orderpriority || ':dp9:n', 'dp9:n')), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS un,
-        |    ('0x' || substr(md5(
-        |      COALESCE(o_orderpriority || ':dp9:s', 'dp9:s')), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS us
-        |  FROM c GROUP BY 1),
-        |rel AS (
-        |  SELECT o_orderpriority, n,
-        |    ROUND(n + (-2.0) * (CASE WHEN un >= 0.5 THEN 1.0 ELSE -1.0 END) *
-        |      ln(GREATEST(1.0 - 2.0 * abs(un - 0.5), 2.220446049250313e-16)),
-        |      6) AS n_noisy,
-        |    ROUND(s + (-600000.0) * (CASE WHEN us >= 0.5 THEN 1.0 ELSE -1.0 END) *
-        |      ln(GREATEST(1.0 - 2.0 * abs(us - 0.5), 2.220446049250313e-16)),
-        |      6) AS sum_noisy
-        |  FROM g)
-        |SELECT o_orderpriority, n, n_noisy, sum_noisy,
-        |  ROUND(sum_noisy /
-        |    (CASE WHEN n_noisy < 1.0 THEN 1.0 ELSE n_noisy END), 6)
-        |    AS mean_noisy,
-        |  CAST(1.0 AS DOUBLE) AS epsilon
-        |FROM rel ORDER BY o_orderpriority""".stripMargin,
-
-    // user-level DP sums: identical per-user cap (row_number by orderkey,
-    // keep 3), then the dp_sums release with sensitivity ×3
-    // (b_sum = 3·300000/(1/2) = 1800000, b_cnt = 3/(1/2) = 6)
-    "q_a_dp_user" ->
-      """WITH capped AS (
-        |  SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS vv FROM (
-        |    SELECT o_orderpriority, o_totalprice,
-        |      ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey)
-        |        AS urn
-        |    FROM orders WHERE CAST(o_totalprice AS DOUBLE) IS NOT NULL)
-        |  WHERE urn <= 3),
-        |c AS (
-        |  SELECT o_orderpriority,
-        |    CASE WHEN vv < 0.0 THEN 0.0
-        |         WHEN vv > 300000.0 THEN 300000.0
-        |         ELSE vv END AS v
-        |  FROM capped),
-        |g AS (
-        |  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(ROUND(v, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |    ('0x' || substr(md5(
-        |      COALESCE(o_orderpriority || ':dpu10:n', 'dpu10:n')), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS un,
-        |    ('0x' || substr(md5(
-        |      COALESCE(o_orderpriority || ':dpu10:s', 'dpu10:s')), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS us
-        |  FROM c GROUP BY 1),
-        |rel AS (
-        |  SELECT o_orderpriority, n,
-        |    ROUND(n + (-6.0) * (CASE WHEN un >= 0.5 THEN 1.0 ELSE -1.0 END) *
-        |      ln(GREATEST(1.0 - 2.0 * abs(un - 0.5), 2.220446049250313e-16)),
-        |      6) AS n_noisy,
-        |    ROUND(s + (-1800000.0) * (CASE WHEN us >= 0.5 THEN 1.0 ELSE -1.0 END) *
-        |      ln(GREATEST(1.0 - 2.0 * abs(us - 0.5), 2.220446049250313e-16)),
-        |      6) AS sum_noisy
-        |  FROM g)
-        |SELECT o_orderpriority, n, n_noisy, sum_noisy,
-        |  ROUND(sum_noisy /
-        |    (CASE WHEN n_noisy < 1.0 THEN 1.0 ELSE n_noisy END), 6)
-        |    AS mean_noisy,
-        |  CAST(1.0 AS DOUBLE) AS epsilon
-        |FROM rel ORDER BY o_orderpriority""".stripMargin,
-
-    // DP noisy quantile: identical clamp + 9375-wide binning, identical
-    // exact rank utilities, identical seeded Gumbel (double-ln ulp
-    // absorbed by the ROUND-6 score BEFORE the argmax), ties to the
-    // lowest bin; release midpoints are exact multiples of 9375/2
-    "q_a_dp_quantile" ->
-      """WITH c AS (
-        |  SELECT o_orderpriority AS g,
-        |    LEAST(63, CAST(floor((CASE
-        |      WHEN CAST(o_totalprice AS DOUBLE) < 0.0 THEN 0.0
-        |      WHEN CAST(o_totalprice AS DOUBLE) > 600000.0 THEN 600000.0
-        |      ELSE CAST(o_totalprice AS DOUBLE) END) / 9375.0) AS BIGINT)) AS b
-        |  FROM orders WHERE o_totalprice IS NOT NULL),
-        |cells AS (SELECT g, b, CAST(count(*) AS BIGINT) AS cnt
-        |          FROM c GROUP BY g, b),
-        |tot AS (SELECT g, CAST(SUM(cnt) AS BIGINT) AS n FROM cells GROUP BY g),
-        |ladder AS (
-        |  SELECT t.g, t.n, CAST(r.range AS BIGINT) AS b
-        |  FROM tot t CROSS JOIN range(0, 64) r),
-        |panel AS (
-        |  SELECT l.g, l.n, l.b, COALESCE(cells.cnt, 0) AS cnt
-        |  FROM ladder l LEFT JOIN cells ON cells.g = l.g AND cells.b = l.b),
-        |ranked AS (
-        |  SELECT g, n, b,
-        |    COALESCE(SUM(cnt) OVER (PARTITION BY g ORDER BY b
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
-        |  FROM panel),
-        |sc AS (
-        |  SELECT g, n, b,
-        |    ROUND(1.0 * (-abs(CAST(below AS DOUBLE) - 0.5 * CAST(n AS DOUBLE)))
-        |        / 2.0
-        |      + (-ln(-ln(GREATEST(
-        |          ('0x' || substr(md5(COALESCE(g || '|', '')
-        |            || CAST(b AS VARCHAR)
-        |            || ':dpq9'), 1, 13))::BIGINT / 4503599627370496.0,
-        |          2.220446049250313e-16)))), 6) AS score
-        |  FROM ranked)
-        |SELECT g AS o_orderpriority, n, CAST(0.5 AS DOUBLE) AS q,
-        |  b AS bin_released,
-        |  ROUND((b + 0.5) * 9375.0, 6) AS value_released,
-        |  CAST(1.0 AS DOUBLE) AS epsilon
-        |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY g
-        |        ORDER BY score DESC, b) AS rn FROM sc)
-        |WHERE rn = 1 ORDER BY o_orderpriority""".stripMargin,
-
-    // compaction plan: identical (bytes DESC, path) order, identical
-    // prefix sums (pure integers), identical floor(prefix/target)
-    // double division; bin census re-aggregated the same way
-    "q_s_compaction" ->
-      """WITH files AS (
-        |  SELECT source,
-        |    'part-' || lpad(CAST(doc_id AS VARCHAR), 6, '0') AS path,
-        |    CAST(n_chars AS BIGINT) AS bytes
-        |  FROM documents),
-        |planned AS (
-        |  SELECT source, path, bytes,
-        |    CAST(floor((sum(bytes) OVER (PARTITION BY source
-        |      ORDER BY bytes DESC, path
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - bytes)
-        |      / 4000.0) AS BIGINT) AS bin,
-        |    bytes >= 4000 AS oversized
-        |  FROM files)
-        |SELECT source, bin, CAST(count(*) AS BIGINT) AS n_files,
-        |  CAST(sum(bytes) AS BIGINT) AS bin_bytes,
-        |  CAST(max(CASE WHEN oversized THEN 1 ELSE 0 END) AS INTEGER)
-        |    AS has_oversized,
-        |  min(path) AS first_path
-        |FROM planned GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    // Gopher repetition battery: identical 8-token line derivation,
-    // identical tagged gram expansion; all counts/char totals integer,
-    // final divisions ROUND(,6); top-gram ties (c desc, len desc,
-    // gram asc) in both engines
-    "q_x_repetition" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-        |  FROM documents),
-        |lined AS (
-        |  SELECT doc_id, toks,
-        |    list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT)),
-        |      i -> array_to_string(toks[CAST(i*8+1 AS INT):CAST(i*8+8 AS INT)], ' ')) AS lines
-        |  FROM base),
-        |chars AS (
-        |  SELECT doc_id, toks, lines,
-        |    CAST(length(array_to_string(lines, chr(10))) AS BIGINT) AS chars
-        |  FROM lined),
-        |linecount AS (
-        |  SELECT doc_id, line, count(*) AS c,
-        |    CAST(length(line) AS BIGINT) AS gl
-        |  FROM (SELECT doc_id, unnest(lines) AS line FROM chars)
-        |  GROUP BY doc_id, line),
-        |linestats AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_lines,
-        |    ROUND(CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS DOUBLE)
-        |      / SUM(c), 6) AS dup_line_frac,
-        |    ROUND(CASE WHEN SUM(c*gl) > 0
-        |      THEN CAST(SUM(CASE WHEN c > 1 THEN c*gl ELSE 0 END) AS DOUBLE)
-        |        / SUM(c*gl) ELSE 0.0 END, 6) AS dup_line_char_frac
-        |  FROM linecount GROUP BY doc_id),
-        |grams AS (
-        |  SELECT doc_id, chars, n, gram, count(*) AS c,
-        |    CAST(length(gram) AS BIGINT) AS gl
-        |  FROM (
-        |    SELECT c.doc_id, c.chars, n.n AS n,
-        |      unnest(list_transform(range(1, len(c.toks) - n.n + 2),
-        |        i -> array_to_string(c.toks[CAST(i AS INT):CAST(i + n.n - 1 AS INT)], ' '))) AS gram
-        |    FROM chars c, (VALUES (2),(3),(4),(5)) n(n)
-        |    WHERE len(c.toks) >= n.n)
-        |  GROUP BY doc_id, chars, n, gram),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id, n
-        |    ORDER BY c DESC, gl DESC, gram ASC) AS rn
-        |  FROM grams),
-        |gramstats AS (
-        |  SELECT doc_id, chars,
-        |    ROUND(CAST(MAX(CASE WHEN n=2 AND rn=1 THEN c*gl END) AS DOUBLE) / chars, 6) AS t2,
-        |    ROUND(CAST(MAX(CASE WHEN n=3 AND rn=1 THEN c*gl END) AS DOUBLE) / chars, 6) AS t3,
-        |    ROUND(CAST(MAX(CASE WHEN n=4 AND rn=1 THEN c*gl END) AS DOUBLE) / chars, 6) AS t4,
-        |    ROUND(CAST(COALESCE(SUM(CASE WHEN n=5 AND c>1 THEN c*gl END), 0) AS DOUBLE) / chars, 6) AS d5
-        |  FROM ranked GROUP BY doc_id, chars)
-        |SELECT l.doc_id, l.n_lines, l.dup_line_frac, l.dup_line_char_frac,
-        |  COALESCE(g.t2, 0.0) AS top_2gram_frac,
-        |  COALESCE(g.t3, 0.0) AS top_3gram_frac,
-        |  COALESCE(g.t4, 0.0) AS top_4gram_frac,
-        |  COALESCE(g.d5, 0.0) AS dup_5gram_frac
-        |FROM linestats l LEFT JOIN gramstats g USING (doc_id)
-        |ORDER BY l.doc_id""".stripMargin,
-
-    // RRF hybrid retrieval: the bm25 CTE chain (= q_x_bm25 at k=20) and
-    // the cosine CTE (= q_x_cosine_topk at k=20) feed identical
-    // row_number ranks; 1/(60+rank) rounds to 9 into a DECIMAL sum
-    "q_x_hybrid_rrf" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS DOUBLE) AS dl,
-        |    text
-        |  FROM documents),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    ROUND(CAST(SUM(CAST(dl AS DECIMAL(38,6))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE), 6) AS avgdl
-        |  FROM base),
-        |tf AS (
-        |  SELECT doc_id, dl, word, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, dl,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-        |        FROM base)
-        |  WHERE word IN ('query', 'merge', 'stream')
-        |  GROUP BY doc_id, dl, word),
-        |dfreq AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY word),
-        |contrib AS (
-        |  SELECT tf.doc_id,
-        |    ROUND(ROUND(ln(1.0 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5)), 6)
-        |      * (tf.tf * (1.2 + 1.0))
-        |      / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * tf.dl / stats.avgdl)), 9) AS c
-        |  FROM tf JOIN dfreq USING (word) CROSS JOIN stats),
-        |lex AS (
-        |  SELECT doc_id, ROUND(CAST(SUM(CAST(c AS DECIMAL(38,12))) AS DOUBLE), 6) AS score
-        |  FROM contrib GROUP BY doc_id
-        |  ORDER BY score DESC, doc_id LIMIT 20),
-        |sem AS (
-        |  SELECT vec_id AS doc_id,
-        |    ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |      (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS score
-        |  FROM embeddings ORDER BY score DESC, doc_id LIMIT 20),
-        |ranked AS (
-        |  SELECT doc_id, ROUND(1.0 / (60 + row_number() OVER
-        |    (ORDER BY score DESC, doc_id)), 9) AS c FROM lex
-        |  UNION ALL
-        |  SELECT doc_id, ROUND(1.0 / (60 + row_number() OVER
-        |    (ORDER BY score DESC, doc_id)), 9) AS c FROM sem)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lists,
-        |  ROUND(CAST(SUM(CAST(c AS DECIMAL(38,12))) AS DOUBLE), 6) AS rrf_score
-        |FROM ranked GROUP BY doc_id
-        |ORDER BY rrf_score DESC, doc_id LIMIT 15""".stripMargin,
-
-    // rolling anomaly: identical ROWS frame, per-term ROUND into decimal
-    // sums, computational-formula variance in DOUBLE, IEEE sqrt
-    "q_t_anomaly" ->
-      """WITH b AS (
-        |  SELECT event_id, value,
-        |    count(value) OVER w AS n,
-        |    CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) OVER w AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(ROUND(value * value, 6) AS DECIMAL(38,6))) OVER w AS DOUBLE) AS s2
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING)),
-        |z AS (
-        |  SELECT event_id, CAST(n AS BIGINT) AS n_prev,
-        |    CASE WHEN n >= 4 AND (s2 - s1 * s1 / n) / (n - 1) > 0
-        |         THEN ROUND((value - s1 / n)
-        |                    / sqrt((s2 - s1 * s1 / n) / (n - 1)), 6)
-        |         END AS z
-        |  FROM b)
-        |SELECT event_id, n_prev, z,
-        |       COALESCE(abs(z) > 2.0, FALSE) AS is_anomaly
-        |FROM z ORDER BY event_id""".stripMargin,
-
-    // leakage matrix: the generated exact-jaccard pair twin rolled up by
-    // normalized source pair; decimal-exact avg of round-6 jaccards
-    "q_x_leakage" -> {
-      val pairSql = graft.operators.SetSimJoin.oracleSql(
-        "(SELECT * FROM documents WHERE doc_id < 500) dslice",
-        "doc_id", "text", 0.8)
-      s"""WITH pairs AS ($pairSql),
-         |src AS (SELECT doc_id, source FROM documents WHERE doc_id < 500)
-         |SELECT LEAST(a.source, b.source) AS src1,
-         |       GREATEST(a.source, b.source) AS src2,
-         |       CAST(count(*) AS BIGINT) AS n_pairs,
-         |       ROUND(CAST(SUM(CAST(jaccard AS DECIMAL(38,6))) AS DOUBLE)
-         |             / count(*), 6) AS avg_jaccard
-         |FROM pairs JOIN src a ON pairs.id1 = a.doc_id
-         |           JOIN src b ON pairs.id2 = b.doc_id
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    // transition matrix: identical LAG window and row-normalization
-    "q_w_transitions" ->
-      """WITH seq AS (
-        |  SELECT event_type AS to_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS from_type
-        |  FROM events),
-        |c AS (
-        |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM seq WHERE from_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  ROUND(CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-
-    // markov attribution: generated unrolled value-iteration twin —
-    // identical journey truncation, transition probabilities, and
-    // per-round ROUND(,12) DECIMAL accumulation (PageRank discipline)
-    "q_w_markov_attrib" ->
-      graft.operators.Funnel.markovRemovalOracleSql(
-        Seq("click", "error", "signup", "view"), "purchase", 12),
-
-    // top terms: identical tf/df aggregates, round-6 idf and score,
-    // same (score desc, term asc) rank ties
-    "q_x_topterms" ->
-      """WITH words AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-        |  FROM documents),
-        |w2 AS (SELECT * FROM words WHERE length(term) > 0),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM w2 GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |    ROUND(tf.tf * ROUND(ln(CAST(nd.n AS DOUBLE) / dfreq.df), 6), 6) AS score
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN nd),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term ASC) AS rn
-        |  FROM scored)
-        |SELECT doc_id, CAST(rn AS INTEGER) AS rank, term, tf, score
-        |FROM ranked WHERE rn <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // Neyman allocation: identical per-stratum σ (computational formula
-    // over round-6 decimal sums), round-6 N·σ weights into a DECIMAL
-    // total, same left-assoc rate chain and md5-uniform keep rule
-    "q_d_neyman" ->
-      """WITH stats AS (
-        |  SELECT event_type AS src, count(*) AS n,
-        |    CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(ROUND(value * value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s2
-        |  FROM events GROUP BY 1),
-        |w AS (
-        |  SELECT src, n,
-        |    ROUND(n * (CASE WHEN n > 1 AND (s2 - s1 * s1 / n) / (n - 1) > 0
-        |               THEN sqrt((s2 - s1 * s1 / n) / (n - 1))
-        |               ELSE 0.0 END), 6) AS w
-        |  FROM stats),
-        |wt AS (SELECT CAST(SUM(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS wt FROM w),
-        |rates AS (
-        |  SELECT src, LEAST(1.0, 300.0 * w / wt.wt / n) AS rate
-        |  FROM w, wt),
-        |kept AS (
-        |  SELECT e.event_id, e.event_type
-        |  FROM events e JOIN rates r ON r.src = e.event_type
-        |  WHERE ('0x' || substring(md5(CAST(event_id AS VARCHAR) || 'ney'), 1, 13))::BIGINT
-        |        / 4503599627370496.0 < r.rate)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept,
-        |       CAST(sum(event_id) AS BIGINT) AS sum_id
-        |FROM kept GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // TWAP: identical lead-window holding intervals (epoch-ns integers),
-    // round-6 weighted terms into DECIMAL sums, division in DOUBLE
-    "q_t_twap" ->
-      """WITH d AS (
-        |  SELECT user_id, value,
-        |    LEAD(epoch_ns(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) - epoch_ns(ts) AS dur
-        |  FROM events)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-        |  CAST(SUM(dur) AS BIGINT) AS total_span,
-        |  ROUND(CAST(SUM(CAST(ROUND(value * dur, 6) AS DECIMAL(38,6))) AS DOUBLE)
-        |        / CAST(SUM(dur) AS DOUBLE), 6) AS twap
-        |FROM d WHERE dur IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // rendezvous routing: identical per-shard md5 scores; argmax via the
-    // (h, s) DESC rank twin of Spark's greatest-of-structs
-    "q_s_shards" ->
-      """WITH scored AS (
-        |  SELECT doc_id, t.s,
-        |    md5(CAST(doc_id AS VARCHAR) || '#' || t.s) AS h
-        |  FROM documents,
-        |    (VALUES ('s0'),('s1'),('s2'),('s3'),('s4'),('s5')) t(s)),
-        |r AS (
-        |  SELECT doc_id, s,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY h DESC, s DESC) AS rn5,
-        |    CASE WHEN s <> 's5' THEN row_number() OVER (
-        |      PARTITION BY doc_id, (s = 's5') ORDER BY h DESC, s DESC) END AS rn
-        |  FROM scored),
-        |a AS (SELECT doc_id, s AS shard_a FROM r WHERE s <> 's5' AND rn = 1),
-        |b AS (SELECT doc_id, s AS shard_b FROM r WHERE rn5 = 1)
-        |SELECT shard_a, shard_b, CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(doc_id) AS BIGINT) AS sum_id
-        |FROM a JOIN b USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // attribution: identical strictly-preceding first/last windows with
-    // the same (ts, event_id) order; DECIMAL revenue
-    "q_w_attribution" ->
-      """WITH touched AS (
-        |  SELECT event_type, value,
-        |    first_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-        |                IGNORE NULLS) OVER w AS first_touch,
-        |    last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-        |               IGNORE NULLS) OVER w AS last_touch
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT first_touch, last_touch, CAST(count(*) AS BIGINT) AS n_conv,
-        |  CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-        |FROM touched
-        |WHERE event_type = 'purchase' AND last_touch IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // group OLS: identical five decimal sums and fixed-order closed form
-    "q_a_ols" ->
-      """WITH g AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    CAST(SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(ROUND(l_quantity * l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(ROUND(l_quantity * l_quantity, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice * l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS syy
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0
-        |       THEN ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) END AS slope,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0
-        |       THEN ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6) END AS intercept,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |       THEN ROUND((n * sxy - sx * sy) * (n * sxy - sx * sy)
-        |                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) END AS r2
-        |FROM g ORDER BY l_returnflag""".stripMargin,
-
-    // ANOVA: identical algebraic partials (round-6 products into DECIMAL
-    // sums, round-9 per-group (Σv)²/n), fixed-order closed form
-    "q_a_anova" ->
-      """WITH g AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(ROUND(value * value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s2
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS nn,
-        |    CAST(SUM(CAST(s1 AS DECIMAL(38,6))) AS DOUBLE) AS t,
-        |    CAST(SUM(CAST(s2 AS DECIMAL(38,6))) AS DOUBLE) AS ss,
-        |    CAST(SUM(CAST(ROUND(s1 * s1 / n, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sg
-        |  FROM g)
-        |SELECT k, nn AS n,
-        |  ROUND(sg - t * t / nn, 6) AS ss_between,
-        |  ROUND(ss - sg, 6) AS ss_within,
-        |  CASE WHEN k > 1 AND nn > k AND ss - sg > 0
-        |       THEN ROUND(((sg - t * t / nn) / (k - 1))
-        |                  / ((ss - sg) / (nn - k)), 6) END AS f_stat
-        |FROM a""".stripMargin,
-
-    // weighted median: identical running/total DECIMAL weights and
-    // exact doubling crossing test
-    "q_a_wmedian" ->
-      """WITH b AS (
-        |  SELECT l_returnflag, l_extendedprice,
-        |    SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(38,6))) OVER (
-        |      PARTITION BY l_returnflag ORDER BY l_extendedprice
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |    SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(38,6))) OVER (
-        |      PARTITION BY l_returnflag) AS tw
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL)
-        |SELECT l_returnflag, min(l_extendedprice) AS w_median,
-        |       CAST(max(tw) AS DOUBLE) AS w_total
-        |FROM b WHERE cw * 2 >= tw
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // PSI: identical clamp-bucket histogram, smoothed shares from
-    // identical integers, ln in DOUBLE, per-bin ROUND(,9)
-    "q_a_psi" ->
-      """WITH bspine AS (SELECT CAST(r.range AS INTEGER) AS bucket FROM range(0, 16) r),
-        |hb AS (
-        |  SELECT CAST(LEAST(GREATEST(FLOOR((value - 0.0) / 20.0), 0), 15) AS INTEGER) AS bucket,
-        |         count(*) AS n_base
-        |  FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL GROUP BY 1),
-        |hc AS (
-        |  SELECT CAST(LEAST(GREATEST(FLOOR((value - 0.0) / 20.0), 0), 15) AS INTEGER) AS bucket,
-        |         count(*) AS n_curr
-        |  FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL GROUP BY 1),
-        |tot AS (
-        |  SELECT (SELECT count(*) FROM events WHERE event_id % 2 = 0 AND value IS NOT NULL) AS nb,
-        |         (SELECT count(*) FROM events WHERE event_id % 2 = 1 AND value IS NOT NULL) AS nc)
-        |SELECT s.bucket,
-        |  CAST(COALESCE(hb.n_base, 0) AS BIGINT) AS n_base,
-        |  CAST(COALESCE(hc.n_curr, 0) AS BIGINT) AS n_curr,
-        |  ROUND(
-        |    ((COALESCE(hb.n_base, 0) + 0.5) / (tot.nb + 0.5 * 16.0)
-        |     - (COALESCE(hc.n_curr, 0) + 0.5) / (tot.nc + 0.5 * 16.0))
-        |    * ln(((COALESCE(hb.n_base, 0) + 0.5) / (tot.nb + 0.5 * 16.0))
-        |         / ((COALESCE(hc.n_curr, 0) + 0.5) / (tot.nc + 0.5 * 16.0))), 9) AS contrib
-        |FROM bspine s
-        |LEFT JOIN hb ON hb.bucket = s.bucket
-        |LEFT JOIN hc ON hc.bucket = s.bucket
-        |CROSS JOIN tot
-        |ORDER BY s.bucket""".stripMargin,
-
-    // triangle count: identical normalization (least/greatest, self-loop
-    // drop, distinct) and canonical wedge-closure joins
-    "q_x_triangles" ->
-      """WITH und AS (
-        |  SELECT DISTINCT LEAST(l_orderkey % 50, l_partkey % 50) AS a,
-        |                  GREATEST(l_orderkey % 50, l_partkey % 50) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 50 <> l_partkey % 50)
-        |SELECT CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM und e1
-        |JOIN und e2 ON e2.a = e1.b
-        |JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b""".stripMargin,
-
-    // HITS: generated unrolled half-step CTEs from the same iters
-    "q_x_hits" -> graft.operators.Graph.hitsOracleSql(
-      """SELECT l_orderkey % 50 AS src, l_partkey % 50 AS dst
-        |FROM lineitem WHERE l_orderkey % 50 <> l_partkey % 50""".stripMargin,
-      iters = 3),
-
-    // LPA: generated vote/pick rounds, integer-only
-    "q_x_lpa" -> graft.operators.Graph.lpaOracleSql(
-      """SELECT l_orderkey % 50 AS src, l_partkey % 50 AS dst
-        |FROM lineitem
-        |WHERE (l_orderkey % 50) % 2 = (l_partkey % 50) % 2""".stripMargin,
-      iters = 3),
-
-    // DSIR log ratios: same md5-prefix bucket idiom, same smoothed
-    // ratio-of-ratios association inside ln, ROUND(,9) per bucket term
-    // into a DECIMAL sum
-    "q_x_dsir" ->
-      """WITH rawtok AS (
-        |  SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT % 256 AS b
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS t
-        |        FROM documents)
-        |  WHERE length(t) > 0),
-        |tgttok AS (
-        |  SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT % 256 AS b
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(trim(text), '\s+')) AS t
-        |        FROM documents WHERE lang = 'en')
-        |  WHERE length(t) > 0),
-        |rawdist AS (SELECT b, count(*) AS cr FROM rawtok GROUP BY b),
-        |tgtdist AS (SELECT b, count(*) AS ct FROM tgttok GROUP BY b),
-        |tot AS (SELECT (SELECT count(*) FROM rawtok) AS nr,
-        |               (SELECT count(*) FROM tgttok) AS nt),
-        |lam AS (
-        |  SELECT r.b, ROUND(ln(
-        |    ((COALESCE(t.ct, 0) + 1.0) / (tot.nt + 1.0 * 256.0)) /
-        |    ((r.cr + 1.0) / (tot.nr + 1.0 * 256.0))), 9) AS lam
-        |  FROM rawdist r LEFT JOIN tgtdist t USING (b) CROSS JOIN tot),
-        |docb AS (SELECT doc_id, b, count(*) AS n FROM rawtok GROUP BY doc_id, b)
-        |SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_tokens,
-        |  ROUND(CAST(SUM(CAST(ROUND(n * lam, 9) AS DECIMAL(38,12))) AS DOUBLE), 6) AS log_ratio
-        |FROM docb JOIN lam USING (b)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // CUSUM: the identical running-sum / running-min window pair — the
-    // max(0,·) recursion's reflection identity, decimal-exact
-    "q_t_cusum" ->
-      """WITH c AS (
-        |  SELECT event_id, user_id, ts,
-        |    SUM(CAST(ROUND(value - 150.0 - 10.0, 6) AS DECIMAL(38,6))) OVER w AS cp,
-        |    SUM(CAST(ROUND(150.0 - value - 10.0, 6) AS DECIMAL(38,6))) OVER w AS cn
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |s AS (
-        |  -- LEAST over DECIMAL(38,6) silently degrades to DOUBLE in
-        |  -- DuckDB (and via a non-correctly-rounded conversion); the
-        |  -- CASE keeps the whole clamp in exact decimal
-        |  SELECT event_id,
-        |    CAST(cp - (CASE WHEN MIN(cp) OVER w2 < CAST(0 AS DECIMAL(38,6))
-        |               THEN MIN(cp) OVER w2
-        |               ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE) AS cusum_pos,
-        |    CAST(cn - (CASE WHEN MIN(cn) OVER w2 < CAST(0 AS DECIMAL(38,6))
-        |               THEN MIN(cn) OVER w2
-        |               ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE) AS cusum_neg
-        |  FROM c
-        |  WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id, cusum_pos, cusum_neg,
-        |       (cusum_pos > 400.0 OR cusum_neg > 400.0) AS is_alarm
-        |FROM s ORDER BY event_id""".stripMargin,
-
-    // EWMA: the same lag ladder with the same pre-rounded weight
-    // literals (generated so both engines consume identical constants)
-    "q_t_ewma" -> {
-      val ws = graft.operators.TimeSeries.ewmaWeights(0.3, 5)
-      val lags = ws.indices
-        .map(j => s"lag(value, $j) OVER w AS v$j").mkString(",\n    ")
-      // DECIMAL(28,9) with a per-step re-cast, mirroring the engine:
-      // both engines grow precision by one per `+` and silently degrade
-      // past 38 (Spark truncates scale to 6, DuckDB goes DOUBLE), so
-      // every addition folds back to (28,9) — exact for bounded sums
-      val z = "CAST(0 AS DECIMAL(28,9))"
-      def chain(pieces: Seq[String]): String =
-        pieces.reduce((a, b) => s"CAST($a + $b AS DECIMAL(28,9))")
-      val terms = chain(ws.zipWithIndex.map { case (w, j) =>
-        s"COALESCE(CAST(ROUND(v$j * $w, 9) AS DECIMAL(28,9)), $z)"
-      })
-      val mass = chain(ws.zipWithIndex.map { case (w, j) =>
-        s"COALESCE(CASE WHEN v$j IS NOT NULL THEN CAST($w AS DECIMAL(28,9)) END, $z)"
-      })
-      s"""WITH l AS (
-         |  SELECT event_id,
-         |    $lags
-         |  FROM events
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         |SELECT event_id,
-         |  CASE WHEN ($mass) > $z
-         |       THEN ROUND(CAST(($terms) AS DOUBLE) /
-         |                  CAST(($mass) AS DOUBLE), 6) END AS ewma
-         |FROM l ORDER BY event_id""".stripMargin
-    },
-
-    // skyline: the quadratic dominance NOT EXISTS (exact by definition)
-    "q_a_skyline" -> graft.operators.Skyline.oracleSql(
-      "SELECT l_quantity, l_extendedprice FROM lineitem",
-      "l_quantity", "l_extendedprice"),
-
-    // top paths: identical rank-then-join formulation; string_agg with
-    // an explicit ORDER BY pins the concatenation order
-    "q_w_paths" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 3 GROUP BY user_id)
-        |SELECT path, CAST(count(*) AS BIGINT) AS n_users
-        |FROM p GROUP BY path
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-
-    // mutual information: ln on the exact integer-count ratio, per-cell
-    // round-9 terms into a DECIMAL sum
-    "q_a_mi" ->
-      """WITH cells AS (
-        |  SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS o
-        |  FROM lineitem
-        |  WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
-        |  GROUP BY 1, 2),
-        |ra AS (SELECT a, SUM(o) AS ra FROM cells GROUP BY a),
-        |cb AS (SELECT b, SUM(o) AS cb FROM cells GROUP BY b),
-        |tot AS (SELECT SUM(o) AS n FROM cells)
-        |SELECT
-        |  ROUND(CAST(SUM(CAST(ROUND(
-        |    (CAST(o AS DOUBLE) / n) *
-        |    ln(CAST(o * n AS DOUBLE) / CAST(ra * cb AS DOUBLE)),
-        |    9) AS DECIMAL(38,9))) AS DOUBLE), 6) AS mi_nats,
-        |  CAST(count(*) AS BIGINT) AS n_cells,
-        |  CAST(MAX(n) AS BIGINT) AS n
-        |FROM cells JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN tot""".stripMargin,
-
-    // Benford: integer-side digit extraction; the nine expected shares
-    // as generated pre-rounded literals (identical to the engine's)
-    "q_a_benford" -> {
-      val expVals = graft.operators.Profiling.benfordExpected.zipWithIndex
-        .map { case (p, i) => s"(${i + 1}, CAST($p AS DOUBLE))" }
-        .mkString(", ")
-      s"""WITH expd(digit, p_exp) AS (VALUES $expVals),
-         |c AS (
-         |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100.0, 0)
-         |           AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit,
-         |    count(*) AS n
-         |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-         |  GROUP BY 1),
-         |tot AS (SELECT SUM(n) AS t FROM c)
-         |SELECT digit, CAST(n AS BIGINT) AS n,
-         |  ROUND(CAST(n AS DOUBLE) / t, 6) AS p_obs, p_exp,
-         |  ROUND((CAST(n AS DOUBLE) - p_exp * t) *
-         |        (CAST(n AS DOUBLE) - p_exp * t) / (p_exp * t), 6) AS chi2_term
-         |FROM c JOIN expd USING (digit) CROSS JOIN tot
-         |ORDER BY digit""".stripMargin
-    },
-
-    // k-core: generated unrolled peel rounds, integer-only
-    "q_x_kcore" -> graft.operators.Graph.kCoreOracleSql(
-      """SELECT l_orderkey % 97 AS src, l_partkey % 97 AS dst
-        |FROM lineitem WHERE l_quantity <= 2""".stripMargin,
-      k = 3, rounds = 6),
-
-    // BFS: generated relax-and-min rounds, integer-only
-    "q_x_bfs" -> graft.operators.Graph.bfsOracleSql(
-      """SELECT l_orderkey % 97 AS src, l_partkey % 97 AS dst
-        |FROM lineitem WHERE l_quantity <= 2""".stripMargin,
-      source = 0L, maxDepth = 4),
-
-    // Jaro-Winkler linkage: DuckDB's jaro_winkler_similarity IS the
-    // reference the engine expression is fuzz-pinned to
-    "q_x_jaro" ->
-      """WITH k AS (
-        |  SELECT p_partkey AS id, p_name AS nm,
-        |    split_part(p_name, ' ', 1) AS b1,
-        |    CAST(length(p_name) // 8 AS INT) AS b2
-        |  FROM part
-        |  WHERE p_partkey <= 400 AND p_partkey IS NOT NULL
-        |    AND p_name IS NOT NULL)
-        |SELECT a.id AS id1, b.id AS id2,
-        |       ROUND(jaro_winkler_similarity(a.nm, b.nm), 6) AS jw
-        |FROM k a JOIN k b ON a.b1 = b.b1 AND a.b2 = b.b2 AND a.id < b.id
-        |WHERE ROUND(jaro_winkler_similarity(a.nm, b.nm), 6) >= 0.90
-        |ORDER BY id1, id2""".stripMargin,
-
-    // CUPED: same decimal power sums, same fixed-order pooled formula
-    "q_a_cuped" ->
-      """WITH v AS (
-        |  SELECT l_returnflag,
-        |    count(*) AS n,
-        |    SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(38,6))) AS sx,
-        |    SUM(CAST(ROUND(l_extendedprice, 6) AS DECIMAL(38,6))) AS sy,
-        |    SUM(CAST(ROUND(l_quantity * l_extendedprice, 6) AS DECIMAL(38,6))) AS sxy,
-        |    SUM(CAST(ROUND(l_quantity * l_quantity, 6) AS DECIMAL(38,6))) AS sxx,
-        |    SUM(CAST(ROUND(l_extendedprice * l_extendedprice, 6) AS DECIMAL(38,6))) AS syy
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |  GROUP BY 1),
-        |p AS (
-        |  SELECT SUM(n) AS nn,
-        |    CAST(SUM(sx) AS DOUBLE) AS tx, CAST(SUM(sy) AS DOUBLE) AS ty,
-        |    CAST(SUM(sxy) AS DOUBLE) AS txy, CAST(SUM(sxx) AS DOUBLE) AS txx,
-        |    CAST(SUM(syy) AS DOUBLE) AS tyy
-        |  FROM v)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  ROUND(CAST(sy AS DOUBLE) / n, 6) AS mean_y,
-        |  ROUND(CAST(sy AS DOUBLE) / n -
-        |    ((txy - tx * ty / nn) / (txx - tx * tx / nn)) *
-        |    (CAST(sx AS DOUBLE) / n - tx / nn), 6) AS mean_y_adj,
-        |  ROUND((txy - tx * ty / nn) / (txx - tx * tx / nn), 6) AS theta,
-        |  ROUND(1.0 - (txy - tx * ty / nn) * (txy - tx * ty / nn) /
-        |    ((txx - tx * tx / nn) * (tyy - ty * ty / nn)), 6) AS var_ratio
-        |FROM v CROSS JOIN p ORDER BY l_returnflag""".stripMargin,
-
-    // IPW: identical stratum aggregates, round-9 decimal IPW/ESS terms,
-    // fixed-order closed forms
-    "q_a_ipw" ->
-      """WITH s AS (
-        |  SELECT l_returnflag AS x, count(*) AS n,
-        |    SUM(CASE WHEN l_tax > 0.04 THEN 1 ELSE 0 END) AS n1,
-        |    SUM(CAST(CASE WHEN l_tax > 0.04 THEN ROUND(l_extendedprice, 6)
-        |      ELSE 0 END AS DECIMAL(38,6))) AS s1,
-        |    SUM(CAST(CASE WHEN NOT (l_tax > 0.04) THEN
-        |      ROUND(l_extendedprice, 6) ELSE 0 END AS DECIMAL(38,6))) AS s0
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_tax IS NOT NULL
-        |  GROUP BY 1),
-        |a AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN n1 > 0 AND n1 < n THEN n ELSE 0 END)
-        |      AS BIGINT) AS nu,
-        |    CAST(SUM(CASE WHEN n1 > 0 AND n1 < n THEN 0 ELSE 1 END)
-        |      AS BIGINT) AS nex,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN
-        |      ROUND(CAST(s1 AS DOUBLE) * CAST(n AS DOUBLE) /
-        |        CAST(n1 AS DOUBLE), 9) ELSE 0 END AS DECIMAL(38,9))) AS w1,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN
-        |      ROUND(CAST(s0 AS DOUBLE) * CAST(n AS DOUBLE) /
-        |        CAST(n - n1 AS DOUBLE), 9) ELSE 0 END AS DECIMAL(38,9)))
-        |      AS w0,
-        |    CAST(SUM(CASE WHEN n1 > 0 AND n1 < n THEN n1 ELSE 0 END)
-        |      AS BIGINT) AS tn1,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN s1 ELSE 0 END
-        |      AS DECIMAL(38,6))) AS ts1,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN s0 ELSE 0 END
-        |      AS DECIMAL(38,6))) AS ts0,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN
-        |      ROUND(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) /
-        |        CAST(n1 AS DOUBLE), 9) ELSE 0 END AS DECIMAL(38,9))) AS e1,
-        |    SUM(CAST(CASE WHEN n1 > 0 AND n1 < n THEN
-        |      ROUND(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) /
-        |        CAST(n - n1 AS DOUBLE), 9) ELSE 0 END AS DECIMAL(38,9)))
-        |      AS e0
-        |  FROM s)
-        |SELECT nu AS n_used, nex AS n_excluded_strata,
-        |  ROUND(CAST(ts1 AS DOUBLE) / CAST(tn1 AS DOUBLE) -
-        |    CAST(ts0 AS DOUBLE) / CAST(nu - tn1 AS DOUBLE), 6)
-        |    AS naive_diff,
-        |  ROUND((CAST(w1 AS DOUBLE) - CAST(w0 AS DOUBLE)) /
-        |    CAST(nu AS DOUBLE), 6) AS ate,
-        |  ROUND(CAST(nu AS DOUBLE) * CAST(nu AS DOUBLE) /
-        |    CAST(e1 AS DOUBLE), 6) AS ess_treated,
-        |  ROUND(CAST(nu AS DOUBLE) * CAST(nu AS DOUBLE) /
-        |    CAST(e0 AS DOUBLE), 6) AS ess_control
-        |FROM a""".stripMargin,
-
-    // DiD: identical 2×2 cell aggregate and fixed-order estimate
-    "q_a_did" ->
-      """WITH c AS (
-        |  SELECT (user_id % 2 = 0) AS t,
-        |    (epoch_ns(ts) >= 1705363200000000000) AS p,
-        |    count(*) AS n,
-        |    SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS s
-        |  FROM events
-        |  WHERE value IS NOT NULL AND user_id IS NOT NULL
-        |    AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
-        |a AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS nn,
-        |    MAX(CASE WHEN NOT t AND NOT p THEN CAST(s AS DOUBLE) / n END)
-        |      AS cpre,
-        |    MAX(CASE WHEN NOT t AND p THEN CAST(s AS DOUBLE) / n END)
-        |      AS cpost,
-        |    MAX(CASE WHEN t AND NOT p THEN CAST(s AS DOUBLE) / n END)
-        |      AS tpre,
-        |    MAX(CASE WHEN t AND p THEN CAST(s AS DOUBLE) / n END) AS tpost
-        |  FROM c)
-        |SELECT nn AS n, ROUND(cpre, 6) AS mean_c_pre,
-        |  ROUND(cpost, 6) AS mean_c_post, ROUND(tpre, 6) AS mean_t_pre,
-        |  ROUND(tpost, 6) AS mean_t_post,
-        |  ROUND((tpost - tpre) - (cpost - cpre), 6) AS did
-        |FROM a""".stripMargin,
-
-    // mSPRT: identical (period, arm) decimal cells, identical ROWS
-    // cumulative windows, identical double formula structure; ln ulp
-    // absorbed by ROUND(,6); tau^2 = 1.0, alpha = 0.05 inlined
-    "q_a_msprt" ->
-      """WITH cells AS (
-        |  SELECT CAST(floor((epoch_ns(ts) - 1704067200000000000)
-        |      / 86400000000000.0) AS BIGINT) AS period,
-        |    SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS nt0,
-        |    SUM(CASE WHEN user_id % 2 <> 0 THEN 1 ELSE 0 END) AS nc0,
-        |    SUM(CAST(CASE WHEN user_id % 2 = 0 THEN ROUND(value, 6)
-        |      ELSE 0 END AS DECIMAL(38,6))) AS st0,
-        |    SUM(CAST(CASE WHEN user_id % 2 <> 0 THEN ROUND(value, 6)
-        |      ELSE 0 END AS DECIMAL(38,6))) AS sc0,
-        |    SUM(CAST(CASE WHEN user_id % 2 = 0
-        |      THEN ROUND(value, 6) * ROUND(value, 6)
-        |      ELSE 0 END AS DECIMAL(38,6))) AS qt0,
-        |    SUM(CAST(CASE WHEN user_id % 2 <> 0
-        |      THEN ROUND(value, 6) * ROUND(value, 6)
-        |      ELSE 0 END AS DECIMAL(38,6))) AS qc0
-        |  FROM events
-        |  WHERE value IS NOT NULL AND user_id IS NOT NULL
-        |    AND ts IS NOT NULL
-        |  GROUP BY 1),
-        |cum AS (
-        |  SELECT period,
-        |    SUM(nt0) OVER w AS nt, SUM(nc0) OVER w AS nc,
-        |    CAST(SUM(st0) OVER w AS DOUBLE) AS st,
-        |    CAST(SUM(sc0) OVER w AS DOUBLE) AS sc,
-        |    CAST(SUM(qt0) OVER w AS DOUBLE) AS qt,
-        |    CAST(SUM(qc0) OVER w AS DOUBLE) AS qc
-        |  FROM cells
-        |  WINDOW w AS (ORDER BY period
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |scored AS (
-        |  SELECT period, nt, nc,
-        |    CASE WHEN nt >= 1 AND nc >= 1 THEN
-        |      st / CAST(nt AS DOUBLE) - sc / CAST(nc AS DOUBLE) END AS dd,
-        |    CASE WHEN nt >= 2 AND nc >= 2 THEN
-        |      (qt - st * st / CAST(nt AS DOUBLE)) / (CAST(nt AS DOUBLE) - 1.0)
-        |        / CAST(nt AS DOUBLE) +
-        |      (qc - sc * sc / CAST(nc AS DOUBLE)) / (CAST(nc AS DOUBLE) - 1.0)
-        |        / CAST(nc AS DOUBLE) END AS vn
-        |  FROM cum),
-        |ll AS (
-        |  SELECT period, nt, nc, dd,
-        |    CASE WHEN nt >= 2 AND nc >= 2 AND vn > 0 THEN
-        |      0.5 * ln(vn / (vn + 1.0)) +
-        |        dd * dd * 1.0 / (2.0 * vn * (vn + 1.0))
-        |    END AS lnlam
-        |  FROM scored)
-        |SELECT period, CAST(nt AS BIGINT) AS n_t, CAST(nc AS BIGINT) AS n_c,
-        |  ROUND(dd, 6) AS delta, ROUND(lnlam, 6) AS ln_lambda,
-        |  ROUND(MAX(lnlam) OVER w2, 6) AS ln_lambda_max,
-        |  COALESCE(ROUND(MAX(lnlam) OVER w2, 6) >= ROUND(-ln(0.05), 6), false)
-        |    AS reject
-        |FROM ll
-        |WINDOW w2 AS (ORDER BY period
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY period""".stripMargin,
-
-    // systematic sampling: the global row_number twin of the
-    // range-partitioned distributed index
-    "q_d_systematic" ->
-      """WITH r AS (
-        |  SELECT event_id, row_number() OVER (ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |SELECT event_id FROM r WHERE (rn - 1) % 7 = 3
-        |ORDER BY event_id""".stripMargin,
-
-    // quantile normalization: identical rank window + rank-mean join
-    "q_f_qnorm" ->
-      """WITH ranked AS (
-        |  SELECT event_id, event_type, value, row_number() OVER (
-        |    PARTITION BY event_type ORDER BY value, event_id) AS rk
-        |  FROM events WHERE value IS NOT NULL),
-        |ref AS (
-        |  SELECT rk,
-        |    CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS DOUBLE)
-        |      / count(*) AS ref
-        |  FROM ranked GROUP BY rk)
-        |SELECT event_id, ROUND(ref, 6) AS qnorm
-        |FROM ranked JOIN ref USING (rk) ORDER BY event_id""".stripMargin,
-
-    // RFM: NTILE window twin of the distributed global-position scoring
-    "q_w_rfm" ->
-      """WITH base AS (
-        |  SELECT o_custkey,
-        |    MAX(o_orderdate) AS recency,
-        |    count(*) AS frequency,
-        |    CAST(SUM(CAST(ROUND(o_totalprice, 6) AS DECIMAL(38,6))) AS DOUBLE)
-        |      AS monetary
-        |  FROM orders
-        |  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
-        |    AND o_totalprice IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT o_custkey, recency, CAST(frequency AS BIGINT) AS frequency,
-        |  monetary,
-        |  CAST(NTILE(5) OVER (ORDER BY recency, o_custkey) AS INT) AS r,
-        |  CAST(NTILE(5) OVER (ORDER BY frequency, o_custkey) AS INT) AS f,
-        |  CAST(NTILE(5) OVER (ORDER BY monetary, o_custkey) AS INT) AS m,
-        |  CAST(NTILE(5) OVER (ORDER BY recency, o_custkey) * 100 +
-        |       NTILE(5) OVER (ORDER BY frequency, o_custkey) * 10 +
-        |       NTILE(5) OVER (ORDER BY monetary, o_custkey) AS INT) AS segment
-        |FROM base ORDER BY o_custkey""".stripMargin,
-
-    // association rules: same distinct-basket pair join + marginals
-    "q_x_assoc" ->
-      """WITH bi AS (
-        |  SELECT DISTINCT l_orderkey AS b, l_partkey % 40 AS i
-        |  FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-        |pc AS (
-        |  SELECT a.i AS i, c.i AS j, count(*) AS nab
-        |  FROM bi a JOIN bi c ON a.b = c.b AND a.i < c.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 20),
-        |ic AS (SELECT i, count(*) AS ni FROM bi GROUP BY i),
-        |tot AS (SELECT count(DISTINCT b) AS nb FROM bi),
-        |d AS (
-        |  SELECT i AS ante, j AS cons, nab FROM pc
-        |  UNION ALL
-        |  SELECT j AS ante, i AS cons, nab FROM pc)
-        |SELECT ante, cons, CAST(nab AS BIGINT) AS n_ab,
-        |  ROUND(CAST(nab AS DOUBLE) / nb, 6) AS support,
-        |  ROUND(CAST(nab AS DOUBLE) / na.ni, 6) AS confidence,
-        |  ROUND(CAST(nab AS DOUBLE) * nb / (CAST(na.ni AS DOUBLE) * nc.ni), 6)
-        |    AS lift
-        |FROM d
-        |JOIN ic na ON d.ante = na.i
-        |JOIN ic nc ON d.cons = nc.i
-        |CROSS JOIN tot
-        |ORDER BY ante, cons""".stripMargin,
-
-    // unpivot: the UNION ALL melt of the same decimal-exact wide panel
-    "q_a_unpivot" ->
-      """WITH wide AS (
-        |  SELECT l_returnflag,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice * l_discount, 6)
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS value FROM wide
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_price', sum_price FROM wide
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_disc', sum_disc FROM wide
-        |ORDER BY l_returnflag, measure""".stripMargin,
-
-    // ACF: the same lead ladder + UNION fan-out, identical decimal
-    // sufficient statistics and fixed-order double assembly
-    "q_t_acf" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) AS ts, value FROM events),
-        |l AS (
-        |  SELECT user_id, value AS x,
-        |    lead(value, 1) OVER w AS y1,
-        |    lead(value, 2) OVER w AS y2,
-        |    lead(value, 3) OVER w AS y3
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |p AS (
-        |  SELECT user_id, CAST(1 AS INTEGER) AS lag_k, x, y1 AS y FROM l
-        |  UNION ALL SELECT user_id, 2, x, y2 FROM l
-        |  UNION ALL SELECT user_id, 3, x, y3 FROM l),
-        |a AS (
-        |  SELECT user_id, lag_k, count(*) AS n_pairs,
-        |    CAST(SUM(CAST(ROUND(x, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(ROUND(y, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(ROUND(x * x, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(ROUND(y * y, 6) AS DECIMAL(38,6))) AS DOUBLE) AS syy,
-        |    CAST(SUM(CAST(ROUND(x * y, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxy
-        |  FROM p WHERE x IS NOT NULL AND y IS NOT NULL
-        |  GROUP BY user_id, lag_k)
-        |SELECT user_id, lag_k, n_pairs,
-        |  CASE WHEN n_pairs >= 2
-        |        AND CAST(n_pairs AS DOUBLE) * sxx - sx * sx > 0
-        |        AND CAST(n_pairs AS DOUBLE) * syy - sy * sy > 0
-        |  THEN ROUND((CAST(n_pairs AS DOUBLE) * sxy - sx * sy) /
-        |    sqrt((CAST(n_pairs AS DOUBLE) * sxx - sx * sx) *
-        |         (CAST(n_pairs AS DOUBLE) * syy - sy * sy)), 6) END AS acf
-        |FROM a ORDER BY user_id, lag_k""".stripMargin,
-
-    // interpolation: the same two incremental frames (running last
-    // before / running first after) and fixed-order double blend
-    "q_t_interp" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS ts,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-        |  FROM events),
-        |w AS (
-        |  SELECT event_id, v, ts,
-        |    last_value(v IGNORE NULLS) OVER wb AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN ts END IGNORE NULLS)
-        |      OVER wb AS pt,
-        |    first_value(v IGNORE NULLS) OVER wa AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN ts END IGNORE NULLS)
-        |      OVER wa AS nt
-        |  FROM e
-        |  WINDOW wb AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         wa AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-        |         ROUND(pv + (nv - pv) *
-        |           (CAST(ts - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE)), 6)
-        |       WHEN pv IS NOT NULL THEN pv
-        |       ELSE nv END AS v_interp
-        |FROM w ORDER BY event_id""".stripMargin,
-
-    // seasonal: integer-only calendar parts off epoch nanos
-    // (1970-01-01 was a Thursday), decimal-exact cell means
-    "q_t_seasonal" ->
-      """WITH e AS (
-        |  SELECT event_id, value AS v,
-        |    CAST(((epoch_ns(ts) // 86400000000000) + 4) % 7 AS INTEGER) AS dow,
-        |    CAST((epoch_ns(ts) // 3600000000000) % 24 AS INTEGER) AS "hour"
-        |  FROM events),
-        |p AS (
-        |  SELECT dow, "hour",
-        |    ROUND(CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) / count(v), 6)
-        |      AS baseline
-        |  FROM e GROUP BY dow, "hour")
-        |SELECT e.event_id, e.dow, e."hour", e.v, p.baseline,
-        |  ROUND(e.v - p.baseline, 6) AS residual
-        |FROM e JOIN p USING (dow, "hour") ORDER BY event_id""".stripMargin,
-
-    // spearman: tie-averaged ranks via the window twin (2·rank + cnt − 1
-    // doubles the .5-averages into exact integers), identical fixed-order
-    // closed form
-    "q_a_spearman" ->
-      """WITH c AS (
-        |  SELECT l_quantity AS a, l_extendedprice AS b FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |r AS (
-        |  SELECT
-        |    2 * rank() OVER (ORDER BY a) + count(*) OVER (PARTITION BY a) - 1 AS ra,
-        |    2 * rank() OVER (ORDER BY b) + count(*) OVER (PARTITION BY b) - 1 AS rb
-        |  FROM c),
-        |s AS (
-        |  SELECT count(*) AS n,
-        |    CAST(SUM(CAST(ra AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(rb AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(ra AS DECIMAL(19,0)) * CAST(ra AS DECIMAL(19,0))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(rb AS DECIMAL(19,0)) * CAST(rb AS DECIMAL(19,0))) AS DOUBLE) AS syy,
-        |    CAST(SUM(CAST(ra AS DECIMAL(19,0)) * CAST(rb AS DECIMAL(19,0))) AS DOUBLE) AS sxy
-        |  FROM r)
-        |SELECT n,
-        |  ROUND((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |         (CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS rho
-        |FROM s""".stripMargin,
-
-    // link prediction: the same wedge join + NOT EXISTS anti-join,
-    // per-witness 1/ln(deg) rounded into a decimal sum
-    "q_x_linkpred" ->
-      """WITH e AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 150, l_partkey % 150) AS a,
-        |    greatest(l_orderkey % 150, l_partkey % 150) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 150 <> l_partkey % 150 AND l_quantity <= 10),
-        |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT a AS w, count(*) AS d FROM sym GROUP BY a),
-        |wed AS (
-        |  SELECT s1.a AS w, s1.b AS u, s2.b AS v
-        |  FROM sym s1 JOIN sym s2 ON s1.a = s2.a AND s1.b < s2.b),
-        |cand AS (
-        |  SELECT w, u, v FROM wed
-        |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = wed.u AND e.b = wed.v))
-        |SELECT u, v, CAST(count(*) AS BIGINT) AS cn,
-        |  ROUND(CAST(SUM(CAST(ROUND(1.0 / ln(CAST(d AS DOUBLE)), 9)
-        |    AS DECIMAL(38,9))) AS DOUBLE), 6) AS aa
-        |FROM cand JOIN deg USING (w)
-        |GROUP BY u, v HAVING count(*) >= 2
-        |ORDER BY u, v""".stripMargin,
-
-    // snapshot diff: the same perturbation replayed in SQL, FULL OUTER
-    // + IS DISTINCT FROM masks
-    "q_s_diff" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
-        |n AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 31 = 0 THEN 'X' ELSE o_orderstatus END
-        |      AS o_orderstatus,
-        |    CASE WHEN o_orderkey % 23 = 0 THEN o_totalprice + 10.0
-        |         ELSE o_totalprice END AS o_totalprice
-        |  FROM o WHERE o_orderkey % 19 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice
-        |  FROM o WHERE o_orderkey % 17 = 3),
-        |j AS (
-        |  SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-        |    o.o_orderkey IS NOT NULL AS in_old,
-        |    n.o_orderkey IS NOT NULL AS in_new,
-        |    o.o_orderstatus AS os, n.o_orderstatus AS ns,
-        |    o.o_totalprice AS op, n.o_totalprice AS np
-        |  FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey,
-        |  CASE WHEN NOT in_old THEN 'added'
-        |       WHEN NOT in_new THEN 'removed'
-        |       WHEN (os IS DISTINCT FROM ns) OR (op IS DISTINCT FROM np)
-        |         THEN 'changed'
-        |       ELSE 'unchanged' END AS change_type,
-        |  CASE WHEN in_old AND in_new
-        |        AND ((os IS DISTINCT FROM ns) OR (op IS DISTINCT FROM np))
-        |    THEN concat_ws(',',
-        |      CASE WHEN os IS DISTINCT FROM ns THEN 'o_orderstatus' END,
-        |      CASE WHEN op IS DISTINCT FROM np THEN 'o_totalprice' END)
-        |    ELSE '' END AS changed_cols
-        |FROM j ORDER BY o_orderkey""".stripMargin,
-
-    // TTR: list_distinct/len twins of array_distinct/size
-    "q_x_ttr" ->
-      """SELECT doc_id,
-        |  CAST(len(list_distinct(regexp_split_to_array(trim(text), '\s+')))
-        |    AS INTEGER) AS n_types,
-        |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER)
-        |    AS n_tokens,
-        |  CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) > 0
-        |  THEN ROUND(
-        |    CAST(len(list_distinct(regexp_split_to_array(trim(text), '\s+')))
-        |      AS DOUBLE)
-        |    / len(regexp_split_to_array(trim(text), '\s+')), 6) END AS ttr
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // vocab coverage: identical top-k heads + token totals
-    "q_x_vocab_coverage" ->
-      """WITH v AS (
-        |  SELECT w AS word, count(*) AS tf FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |    FROM documents)
-        |  GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(tf) AS BIGINT) AS total_tokens FROM v),
-        |t5 AS (SELECT CAST(SUM(tf) AS BIGINT) AS top_tokens FROM
-        |       (SELECT tf FROM v ORDER BY tf DESC, word LIMIT 5)),
-        |t15 AS (SELECT CAST(SUM(tf) AS BIGINT) AS top_tokens FROM
-        |        (SELECT tf FROM v ORDER BY tf DESC, word LIMIT 15)),
-        |u AS (
-        |  SELECT 5 AS k, top_tokens FROM t5
-        |  UNION ALL SELECT 15, top_tokens FROM t15)
-        |SELECT k, top_tokens, total_tokens,
-        |  ROUND(CAST(top_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE), 6)
-        |    AS coverage
-        |FROM u CROSS JOIN tot ORDER BY k""".stripMargin,
-
-    // concurrency: the global running sum IS safe in the oracle
-    // (DuckDB is single-node); identical half-open sweep order
-    "q_t_concurrency" ->
-      """WITH d AS (
-        |  SELECT epoch_ns(ts) AS t, 1 AS dd, event_id AS i FROM events
-        |  UNION ALL
-        |  SELECT epoch_ns(ts) + 1800000000000, -1, event_id FROM events),
-        |r AS (
-        |  SELECT SUM(dd) OVER (ORDER BY t, dd, i ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS run
-        |  FROM d)
-        |SELECT CAST((SELECT count(*) FROM events) AS BIGINT) AS n_intervals,
-        |  CAST(MAX(run) AS BIGINT) AS peak
-        |FROM r""".stripMargin,
-
-    // categorical entropy: identical count relation + ln-of-integers
-    "q_a_cat_entropy" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS c FROM events
-        |  WHERE event_type IS NOT NULL GROUP BY 1, 2),
-        |g AS (
-        |  SELECT user_id, CAST(SUM(c) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_cats,
-        |    CAST(SUM(CAST(ROUND(c * ln(CAST(c AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) AS s
-        |  FROM c GROUP BY 1)
-        |SELECT user_id, n, n_cats,
-        |  ROUND(ln(CAST(n AS DOUBLE)) - s / CAST(n AS DOUBLE), 6) AS entropy
-        |FROM g ORDER BY user_id""".stripMargin,
-
-    // component sizes: identical sparse projection + recursive closure
-    "q_x_comp_sizes" ->
-      """WITH RECURSIVE edges AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 500, l_partkey % 500) AS id1,
-        |    greatest(l_orderkey % 500, l_partkey % 500) AS id2
-        |  FROM lineitem
-        |  WHERE l_quantity <= 2 AND l_orderkey % 500 <> l_partkey % 500),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a),
-        |cl AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |       FROM reach GROUP BY a),
-        |sz AS (SELECT cluster, count(*) AS s FROM cl GROUP BY 1)
-        |SELECT CAST(s AS BIGINT) AS component_size,
-        |  CAST(count(*) AS BIGINT) AS n_components
-        |FROM sz GROUP BY s ORDER BY component_size""".stripMargin,
-
-    // calibration curve: identical knot ladder + clamped blend
-    "q_f_curve" -> {
-      val ys = Seq(0.0, 0.2, 0.3, 0.5, 0.6, 0.8, 0.9, 1.0, 1.0, 1.0)
-      val arr = ys.mkString("[", ", ", "]")
-      s"""SELECT event_id,
-         |  CASE WHEN value IS NULL THEN NULL ELSE
-         |    ROUND(ROUND(
-         |      list_extract($arr, LEAST(GREATEST(CAST(FLOOR((value - 0.0) / 50.0) AS INTEGER), 0), ${ys.size - 2}) + 1)
-         |      + (list_extract($arr, LEAST(GREATEST(CAST(FLOOR((value - 0.0) / 50.0) AS INTEGER), 0), ${ys.size - 2}) + 2)
-         |         - list_extract($arr, LEAST(GREATEST(CAST(FLOOR((value - 0.0) / 50.0) AS INTEGER), 0), ${ys.size - 2}) + 1))
-         |        * LEAST(GREATEST((value - (0.0 + CAST(LEAST(GREATEST(CAST(FLOOR((value - 0.0) / 50.0) AS INTEGER), 0), ${ys.size - 2}) AS DOUBLE) * 50.0)) / 50.0, 0.0), 1.0), 9), 6)
-         |  END AS calibrated
-         |FROM events ORDER BY event_id""".stripMargin
-    },
-
-    // trimmed mean: quantile_cont bounds + identical band filter
-    "q_a_trimmed" ->
-      """WITH b AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(l_extendedprice, 0.1) AS lo,
-        |    quantile_cont(l_extendedprice, 0.9) AS hi
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l.l_returnflag AS l_returnflag, CAST(count(*) AS BIGINT) AS n_kept,
-        |  ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
-        |        / count(*), 6) AS trimmed_mean
-        |FROM lineitem l JOIN b ON l.l_returnflag = b.l_returnflag
-        |WHERE l.l_extendedprice >= lo AND l.l_extendedprice <= hi
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-
-    // imputation: identical per-entity mean fill
-    "q_f_impute" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id,
-        |    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-        |  FROM events)
-        |SELECT event_id,
-        |  COALESCE(v, ROUND(
-        |    CAST(SUM(CAST(v AS DECIMAL(38,6))) OVER (PARTITION BY user_id)
-        |      AS DOUBLE) / count(v) OVER (PARTITION BY user_id), 6))
-        |    AS v_filled
-        |FROM e ORDER BY event_id""".stripMargin,
-
-    // CDC net effect: identical synthesized batch + window compaction
-    "q_s_cdc_net" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_totalprice AS v FROM orders),
-        |op1 AS (
-        |  SELECT k, CASE WHEN k % 4 IN (0, 2) THEN 'I' ELSE 'U' END AS op,
-        |    v, 1 AS ts FROM base),
-        |op2 AS (
-        |  SELECT k, CASE WHEN k % 5 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    v + 1.0 AS v, 2 AS ts FROM base WHERE k % 3 = 0),
-        |ch AS (SELECT * FROM op1 UNION ALL SELECT * FROM op2),
-        |m AS (
-        |  SELECT *,
-        |    row_number() OVER (PARTITION BY k ORDER BY ts DESC) AS rr,
-        |    first_value(op) OVER (PARTITION BY k ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fop
-        |  FROM ch)
-        |SELECT k, net_op, v FROM (
-        |  SELECT k,
-        |    CASE WHEN fop = 'I' AND op = 'D' THEN NULL
-        |         WHEN fop = 'I' THEN 'I'
-        |         WHEN op = 'D' THEN 'D'
-        |         ELSE 'U' END AS net_op,
-        |    v
-        |  FROM m WHERE rr = 1)
-        |WHERE net_op IS NOT NULL ORDER BY k""".stripMargin,
-
-    // kappa: identical confusion marginals + fixed-order closed form
-    "q_x_kappa" ->
-      """WITH hits AS (
-        |  SELECT lang,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|von|zu|den|mit|ist|im)\b')) AS INTEGER) AS h_de,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS INTEGER) AS h_en,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|los|del|las|por)\b')) AS INTEGER) AS h_es,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(le|la|de|et|les|des|en|un|du|une)\b')) AS INTEGER) AS h_fr,
-        |    CAST(len(regexp_extract_all(text, '[的了是我不在有人这他]')) AS INTEGER) AS h_zh
-        |  FROM documents),
-        |g AS (
-        |  SELECT lang,
-        |    CASE WHEN GREATEST(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-        |         WHEN h_zh = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-        |         WHEN h_fr = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-        |         WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-        |         WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-        |         ELSE 'de' END AS lang_guess
-        |  FROM hits),
-        |conf AS (SELECT lang, lang_guess, count(*) AS n FROM g GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-        |    CAST(SUM(CASE WHEN lang = lang_guess THEN n ELSE 0 END) AS BIGINT)
-        |      AS agree
-        |  FROM conf),
-        |rt AS (SELECT lang, SUM(n) AS r FROM conf GROUP BY 1),
-        |ct AS (SELECT lang_guess, SUM(n) AS c FROM conf GROUP BY 1),
-        |pe AS (
-        |  SELECT CAST(SUM(CAST(r AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0)))
-        |    AS DOUBLE) AS pe_num
-        |  FROM rt JOIN ct ON rt.lang = ct.lang_guess)
-        |SELECT n_total AS n,
-        |  ROUND(CAST(agree AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS po,
-        |  ROUND(pe_num / (CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE)), 6) AS pe,
-        |  ROUND((CAST(agree AS DOUBLE) / CAST(n_total AS DOUBLE)
-        |         - pe_num / (CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE)))
-        |        / (1.0 - pe_num / (CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE))), 6)
-        |    AS kappa
-        |FROM tot CROSS JOIN pe""".stripMargin,
-
-    // haversine: identical synthetic coordinates, explicit radians
-    // literal, fixed-order formula, round-6 distances before ranking
-    "q_j_haversine" ->
-      """WITH cust AS (
-        |  SELECT c_custkey,
-        |    CAST(c_custkey % 140 AS DOUBLE) - 70.0 + 0.5 AS lat,
-        |    CAST((c_custkey * 7) % 360 AS DOUBLE) - 180.0 + 0.5 AS lon
-        |  FROM customer),
-        |cities(city, clat, clon) AS (VALUES
-        |  ('cairo', 30.04, 31.24), ('nyc', 40.71, -74.0),
-        |  ('paris', 48.85, 2.35), ('sydney', -33.87, 151.21),
-        |  ('tokyo', 35.68, 139.69)),
-        |sc AS (
-        |  SELECT c_custkey, city,
-        |    ROUND(12742.0 * asin(sqrt(
-        |      sin((clat - lat) * 0.017453292519943295 / 2)
-        |        * sin((clat - lat) * 0.017453292519943295 / 2)
-        |      + cos(lat * 0.017453292519943295) * cos(clat * 0.017453292519943295)
-        |        * sin((clon - lon) * 0.017453292519943295 / 2)
-        |        * sin((clon - lon) * 0.017453292519943295 / 2))), 6) AS dist
-        |  FROM cust CROSS JOIN cities),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |    ORDER BY dist, city) AS rn
-        |  FROM sc)
-        |SELECT city, CAST(count(*) AS BIGINT) AS n,
-        |  ROUND(CAST(SUM(CAST(dist AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-        |    AS avg_km
-        |FROM r WHERE rn = 1
-        |GROUP BY city ORDER BY city""".stripMargin,
-
-    // stream-dedup twin: first arrival per id over the planted
-    // retransmissions
-    "q_st_dedup" ->
-      """WITH all_ev AS (
-        |  SELECT event_id, epoch_ns(ts) AS ts FROM events
-        |  UNION ALL
-        |  SELECT event_id, epoch_ns(ts) + 1000000000 FROM events
-        |  WHERE event_id % 3 = 0),
-        |r AS (
-        |  SELECT event_id, ts,
-        |    row_number() OVER (PARTITION BY event_id ORDER BY ts) AS rn
-        |  FROM all_ev)
-        |SELECT event_id, ts FROM r WHERE rn = 1
-        |ORDER BY event_id""".stripMargin,
-
-    // churn census: identical activity flags + status rollup
-    "q_w_churn" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    MAX(CASE WHEN (epoch_ns(ts) - 1704067200000000000) // 864000000000000 = 1
-        |         AND value > 260 THEN 1 ELSE 0 END) AS a1,
-        |    MAX(CASE WHEN (epoch_ns(ts) - 1704067200000000000) // 864000000000000 = 2
-        |         AND value > 260 THEN 1 ELSE 0 END) AS a2
-        |  FROM events GROUP BY 1)
-        |SELECT CASE WHEN a1 = 1 AND a2 = 1 THEN 'retained'
-        |            WHEN a1 = 1 THEN 'churned'
-        |            WHEN a2 = 1 THEN 'new'
-        |            ELSE 'inactive' END AS status,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM f GROUP BY 1 ORDER BY status""".stripMargin,
-
-    // two-regressor OLS: identical Gram sums + cofactor expansion order
-    "q_a_ols2" ->
-      """WITH g AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    CAST(SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(ROUND(l_discount, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s2,
-        |    CAST(SUM(CAST(ROUND(l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(ROUND(l_quantity * l_quantity, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s11,
-        |    CAST(SUM(CAST(ROUND(l_quantity * l_discount, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s12,
-        |    CAST(SUM(CAST(ROUND(l_discount * l_discount, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s22,
-        |    CAST(SUM(CAST(ROUND(l_quantity * l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s1y,
-        |    CAST(SUM(CAST(ROUND(l_discount * l_extendedprice, 6) AS DECIMAL(38,6))) AS DOUBLE) AS s2y
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-        |    AND l_extendedprice IS NOT NULL
-        |  GROUP BY 1),
-        |d AS (
-        |  SELECT *,
-        |    n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2)
-        |      + s2 * (s1 * s12 - s11 * s2) AS det,
-        |    sy * (s11 * s22 - s12 * s12) - s1 * (s1y * s22 - s12 * s2y)
-        |      + s2 * (s1y * s12 - s11 * s2y) AS det0,
-        |    n * (s1y * s22 - s12 * s2y) - sy * (s1 * s22 - s12 * s2)
-        |      + s2 * (s1 * s2y - s1y * s2) AS det1,
-        |    n * (s11 * s2y - s1y * s12) - s1 * (s1 * s2y - s1y * s2)
-        |      + sy * (s1 * s12 - s11 * s2) AS det2
-        |  FROM g)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n > 2 AND abs(det) > 1e-9 THEN ROUND(det0 / det, 6) END AS b0,
-        |  CASE WHEN n > 2 AND abs(det) > 1e-9 THEN ROUND(det1 / det, 6) END AS b1,
-        |  CASE WHEN n > 2 AND abs(det) > 1e-9 THEN ROUND(det2 / det, 6) END AS b2
-        |FROM d ORDER BY l_returnflag""".stripMargin,
-
-    // drawdown: identical running sum + running max + (28,6) re-cast
-    // (a (38,6)−(38,6) would hit the precision cap in both engines)
-    "q_t_drawdown" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS ts, value FROM events
-        |  WHERE value IS NOT NULL),
-        |r AS (
-        |  SELECT user_id, event_id, ts,
-        |    SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) OVER w AS cum
-        |  FROM c
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (
-        |  SELECT user_id, cum,
-        |    MAX(cum) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-        |  FROM r)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_obs,
-        |  CAST(MAX(CAST(peak AS DECIMAL(28,6)) - CAST(cum AS DECIMAL(28,6)))
-        |    AS DOUBLE) AS max_drawdown
-        |FROM m GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-    // growth curve: identical first-hour panel + window cumulative
-    "q_t_growth" ->
-      """WITH fd AS (
-        |  SELECT user_id, min(epoch_ns(ts) // 3600000000000) AS period
-        |  FROM events GROUP BY 1),
-        |p AS (SELECT period, CAST(count(*) AS BIGINT) AS new_users
-        |      FROM fd GROUP BY 1)
-        |SELECT period, new_users,
-        |  CAST(SUM(new_users) OVER (ORDER BY period ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-        |FROM p ORDER BY period""".stripMargin,
-
-    // assortativity: identical degree join + fixed-order closed form
-    "q_x_assortativity" ->
-      """WITH e AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 150, l_partkey % 150) AS a,
-        |    greatest(l_orderkey % 150, l_partkey % 150) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 150 <> l_partkey % 150 AND l_quantity <= 10),
-        |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT a AS n, count(*) AS d FROM sym GROUP BY a),
-        |j AS (
-        |  SELECT du.d AS x, dv.d AS y
-        |  FROM sym JOIN deg du ON sym.a = du.n JOIN deg dv ON sym.b = dv.n),
-        |g AS (
-        |  SELECT count(*) AS ne,
-        |    CAST(SUM(CAST(x AS DECIMAL(19,0))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(y AS DECIMAL(19,0))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))) AS DOUBLE) AS syy
-        |  FROM j)
-        |SELECT CAST(ne AS BIGINT) AS n_edges,
-        |  CASE WHEN CAST(ne AS DOUBLE) * sxx - sx * sx > 0
-        |        AND CAST(ne AS DOUBLE) * syy - sy * sy > 0
-        |  THEN ROUND((CAST(ne AS DOUBLE) * sxy - sx * sy) /
-        |    sqrt((CAST(ne AS DOUBLE) * sxx - sx * sx) *
-        |         (CAST(ne AS DOUBLE) * syy - sy * sy)), 6) END AS r
-        |FROM g""".stripMargin,
-
-    // time-to-convert: identical first-exposure join + percentile
-    // parity (quantile_cont ↔ Spark exact percentile)
-    "q_w_ttc" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_ns(ts) AS ts FROM events),
-        |f AS (
-        |  SELECT user_id, min(ts) AS t0 FROM e
-        |  WHERE event_type = 'click' GROUP BY 1),
-        |d AS (
-        |  SELECT e.user_id, min(e.ts) - min(f.t0) AS delta
-        |  FROM e JOIN f ON e.user_id = f.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts >= f.t0
-        |  GROUP BY e.user_id)
-        |SELECT CAST(count(*) AS BIGINT) AS n_converted,
-        |  ROUND(CAST(SUM(CAST(delta AS DECIMAL(38,0))) AS DOUBLE)
-        |        / count(*) / 1000000000.0, 6) AS mean_s,
-        |  ROUND(quantile_cont(delta, 0.5) / 1000000000.0, 6) AS med_s,
-        |  ROUND(quantile_cont(delta, 0.9) / 1000000000.0, 6) AS p90_s
-        |FROM d""".stripMargin,
-
-    // language confusion: the q_x_langid heuristic over the raw text,
-    // rolled up against ground truth
-    "q_x_lang_confusion" ->
-      """WITH hits AS (
-        |  SELECT lang,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|von|zu|den|mit|ist|im)\b')) AS INTEGER) AS h_de,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|it|for|with)\b')) AS INTEGER) AS h_en,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|los|del|las|por)\b')) AS INTEGER) AS h_es,
-        |    CAST(len(regexp_extract_all(lower(text), '\b(le|la|de|et|les|des|en|un|du|une)\b')) AS INTEGER) AS h_fr,
-        |    CAST(len(regexp_extract_all(text, '[的了是我不在有人这他]')) AS INTEGER) AS h_zh
-        |  FROM documents),
-        |g AS (
-        |  SELECT lang,
-        |    CASE WHEN GREATEST(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-        |         WHEN h_zh = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-        |         WHEN h_fr = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-        |         WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-        |         WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-        |         ELSE 'de' END AS lang_guess
-        |  FROM hits)
-        |SELECT lang, lang_guess, CAST(count(*) AS BIGINT) AS n
-        |FROM g GROUP BY 1, 2 ORDER BY lang, lang_guess""".stripMargin,
-
-    // feature hashing: identical md5 buckets and sign nibbles; tokens
-    // split on \s+ to match the engine tokenizer (TextAnalysis
-    // .hashedBagOfWords) for multi-space/tab/newline runs
-    "q_x_feathash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(tok), 1, 15))::BIGINT % 32 AS bucket,
-        |    CASE WHEN substr(md5(tok), 16, 1) < '8' THEN 1 ELSE -1 END AS sg
-        |  FROM toks WHERE tok <> '')
-        |SELECT doc_id, bucket, CAST(SUM(sg) AS BIGINT) AS weight
-        |FROM h GROUP BY 1, 2 HAVING SUM(sg) <> 0
-        |ORDER BY doc_id, bucket""".stripMargin,
-
-    // DAU/WAU: identical distinct reduction + ×7 expansion
-    "q_t_dau" ->
-      """WITH du AS (
-        |  SELECT DISTINCT epoch_ns(ts) // 86400000000000 AS day, user_id
-        |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-        |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau
-        |        FROM du GROUP BY 1),
-        |ex AS (SELECT day + r.range AS day2, user_id
-        |       FROM du CROSS JOIN range(0, 7) r),
-        |ra AS (SELECT day2 AS day,
-        |         CAST(count(DISTINCT user_id) AS BIGINT) AS rolling_active
-        |       FROM ex GROUP BY 1)
-        |SELECT d.day, d.dau, ra.rolling_active
-        |FROM dau d JOIN ra USING (day)
-        |ORDER BY day""".stripMargin,
-
-    // join cardinality: identical key sample + scaled count products
-    "q_a_joincard" ->
-      """WITH sa AS (
-        |  SELECT o_orderkey AS k, count(*) AS na FROM orders
-        |  WHERE md5(CAST(o_orderkey AS VARCHAR) || 'jc1')
-        |        < '20000000000000000000000000000000'
-        |  GROUP BY 1),
-        |sb AS (
-        |  SELECT l_orderkey AS k, count(*) AS nb FROM lineitem
-        |  WHERE md5(CAST(l_orderkey AS VARCHAR) || 'jc1')
-        |        < '20000000000000000000000000000000'
-        |  GROUP BY 1),
-        |e AS (
-        |  SELECT ROUND(COALESCE(CAST(SUM(CAST(na AS DECIMAL(19,0))
-        |    * CAST(nb AS DECIMAL(19,0))) AS DOUBLE), 0.0) / 0.125, 6)
-        |    AS est_pairs
-        |  FROM sa JOIN sb USING (k)),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS actual_pairs
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)
-        |SELECT est_pairs, actual_pairs,
-        |  ROUND(est_pairs / CAST(actual_pairs AS DOUBLE), 6) AS err_ratio
-        |FROM e CROSS JOIN a""".stripMargin,
-
-    // NDCG: generated discount VALUES + identical left-fold idcg
-    "q_x_ndcg" -> {
-      val disc = graft.operators.Similarity.ndcgDiscounts(10)
-      val discVals = disc.zipWithIndex
-        .map { case (d, i) => s"(${i + 1}, $d)" }.mkString(", ")
-      val idcg = disc.zipWithIndex
-        .map { case (d, i) =>
-          s"CASE WHEN nl - 1 >= ${i + 1} THEN $d ELSE 0.0 END" }
-        .reduce((a, b) => s"($a + $b)")
-      s"""WITH q AS (
-         |  SELECT vec_id AS qid, embedding AS qvec, label AS qlabel
-         |  FROM embeddings WHERE vec_id < 20),
-         |sc AS (
-         |  SELECT q.qid, q.qlabel, e.vec_id, e.label,
-         |    ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |      CAST(q.qvec AS DOUBLE[])), 6) AS cos
-         |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rnk
-         |  FROM sc),
-         |t AS (SELECT * FROM r WHERE rnk <= 10),
-         |d(rnk, disc) AS (VALUES $discVals),
-         |pq AS (
-         |  SELECT qid, qlabel,
-         |    CAST(SUM(CASE WHEN label = qlabel THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_rel,
-         |    CAST(SUM(CAST(ROUND(CASE WHEN label = qlabel THEN 1.0
-         |      ELSE 0.0 END * disc, 9) AS DECIMAL(38,9))) AS DOUBLE) AS dcg
-         |  FROM t JOIN d ON t.rnk = d.rnk GROUP BY qid, qlabel),
-         |lc AS (SELECT label AS qlabel, count(*) AS nl
-         |       FROM embeddings GROUP BY 1)
-         |SELECT qid, n_rel,
-         |  CASE WHEN $idcg > 0 THEN ROUND(dcg / ($idcg), 6) END AS ndcg
-         |FROM pq JOIN lc USING (qlabel) ORDER BY qid""".stripMargin
-    },
-
-    // Mann-Whitney: rank window twin of the prefix-sum formulation;
-    // identical decimal statistics and fixed-order closed form
-    "q_a_mannwhitney" ->
-      """WITH c AS (
-        |  SELECT event_type AS grp, value AS v FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'purchase')),
-        |counts AS (
-        |  SELECT v, SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS ca,
-        |    count(*) AS ct
-        |  FROM c GROUP BY v),
-        |pre AS (
-        |  SELECT v, ca, ct,
-        |    COALESCE(SUM(ct) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0) AS p
-        |  FROM counts),
-        |a AS (
-        |  SELECT CAST(SUM(ca) AS BIGINT) AS n1, CAST(SUM(ct) AS BIGINT) AS nt,
-        |    CAST(SUM(CAST(ca AS DECIMAL(38,0)) *
-        |      CAST(2 * p + ct + 1 AS DECIMAL(19,0))) AS DOUBLE) AS r1d,
-        |    CAST(SUM(CAST(ct AS DECIMAL(19,0)) * CAST(ct AS DECIMAL(19,0))
-        |      * CAST(ct AS DECIMAL(19,0)) - CAST(ct AS DECIMAL(19,0)))
-        |      AS DOUBLE) AS tie
-        |  FROM pre)
-        |SELECT n1, nt - n1 AS n2,
-        |  (r1d - CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) + 1.0)) / 2.0 AS u1,
-        |  CASE WHEN CAST(n1 AS DOUBLE) * CAST(nt - n1 AS DOUBLE) / 12.0 *
-        |         ((CAST(nt AS DOUBLE) + 1.0) - tie /
-        |          (CAST(nt AS DOUBLE) * (CAST(nt AS DOUBLE) - 1.0))) > 0
-        |  THEN ROUND(
-        |    ((r1d - CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) + 1.0))
-        |     - CAST(n1 AS DOUBLE) * CAST(nt - n1 AS DOUBLE)) /
-        |    (2.0 * sqrt(CAST(n1 AS DOUBLE) * CAST(nt - n1 AS DOUBLE) / 12.0 *
-        |      ((CAST(nt AS DOUBLE) + 1.0) - tie /
-        |       (CAST(nt AS DOUBLE) * (CAST(nt AS DOUBLE) - 1.0))))), 6)
-        |  END AS z
-        |FROM a""".stripMargin,
-
-    // KS: window-cumulative CDF twin, identical round-9 gaps
-    "q_a_ks" ->
-      """WITH c AS (
-        |  SELECT event_type AS grp, value AS v FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'purchase')),
-        |counts AS (
-        |  SELECT v,
-        |    SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN grp = 'purchase' THEN 1 ELSE 0 END) AS cb
-        |  FROM c GROUP BY v),
-        |cum AS (
-        |  SELECT v, ca, cb,
-        |    SUM(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cuma,
-        |    SUM(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cumb,
-        |    SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-        |  FROM counts)
-        |SELECT CAST(MAX(na) AS BIGINT) AS n1, CAST(MAX(nb) AS BIGINT) AS n2,
-        |  ROUND(MAX(ROUND(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE) -
-        |    CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)), 9)), 6) AS ks_d
-        |FROM cum""".stripMargin,
-
-    // AUC: identical prefix-sum rank machinery; doubled rank-sum
-    // decimal-exact, closed form in fixed-order double
-    "q_a_auc" ->
-      """WITH c AS (
-        |  SELECT (l_returnflag = 'R') AS y, l_extendedprice AS v
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL),
-        |counts AS (
-        |  SELECT v, SUM(CASE WHEN y THEN 1 ELSE 0 END) AS ca, count(*) AS ct
-        |  FROM c GROUP BY v),
-        |pre AS (
-        |  SELECT v, ca, ct,
-        |    COALESCE(SUM(ct) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0) AS p
-        |  FROM counts),
-        |a AS (
-        |  SELECT CAST(SUM(ca) AS BIGINT) AS n1, CAST(SUM(ct) AS BIGINT) AS nt,
-        |    CAST(SUM(CAST(ca AS DECIMAL(38,0)) *
-        |      CAST(2 * p + ct + 1 AS DECIMAL(19,0))) AS DOUBLE) AS r1d
-        |  FROM pre)
-        |SELECT n1 AS n_pos, nt - n1 AS n_neg,
-        |  CASE WHEN n1 > 0 AND n1 < nt THEN
-        |    ROUND((r1d - CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) + 1.0)) /
-        |      (2.0 * CAST(n1 AS DOUBLE) * CAST(nt - n1 AS DOUBLE)), 6)
-        |  END AS auc,
-        |  CASE WHEN n1 > 0 AND n1 < nt THEN
-        |    ROUND(2.0 * ((r1d - CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE)
-        |      + 1.0)) /
-        |      (2.0 * CAST(n1 AS DOUBLE) * CAST(nt - n1 AS DOUBLE))) - 1.0, 6)
-        |  END AS gini
-        |FROM a""".stripMargin,
-
-    // Brier: identical bin relation (the shared-double product key),
-    // round-9 decimal term sums, integer-sum rates divided in double
-    "q_a_brier" ->
-      """WITH c AS (
-        |  SELECT l_discount * 10.0 AS p,
-        |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
-        |  FROM lineitem
-        |  WHERE l_discount IS NOT NULL AND l_returnflag IS NOT NULL),
-        |bins AS (
-        |  SELECT p, count(*) AS n, SUM(y) AS s,
-        |    SUM(CAST(ROUND((p - CAST(y AS DOUBLE)) * (p - CAST(y AS DOUBLE)),
-        |      9) AS DECIMAL(38,9))) AS b
-        |  FROM c GROUP BY p),
-        |tot AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(s) AS BIGINT) AS st,
-        |    SUM(b) AS bt
-        |  FROM bins),
-        |terms AS (
-        |  SELECT MIN(t.nt) AS nt, MIN(CAST(t.bt AS DOUBLE)) AS bt,
-        |    MIN(CAST(t.st AS DOUBLE) / CAST(t.nt AS DOUBLE)) AS ybar,
-        |    CAST(count(*) AS BIGINT) AS k,
-        |    CAST(SUM(CAST(ROUND(CAST(n AS DOUBLE) *
-        |      (p - CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) *
-        |      (p - CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) AS rel,
-        |    CAST(SUM(CAST(ROUND(CAST(n AS DOUBLE) *
-        |      (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) -
-        |       CAST(t.st AS DOUBLE) / CAST(t.nt AS DOUBLE)) *
-        |      (CAST(s AS DOUBLE) / CAST(n AS DOUBLE) -
-        |       CAST(t.st AS DOUBLE) / CAST(t.nt AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) AS res
-        |  FROM bins, tot t)
-        |SELECT nt AS n, k AS n_bins,
-        |  ROUND(bt / CAST(nt AS DOUBLE), 6) AS brier,
-        |  ROUND(ybar * (1.0 - ybar), 6) AS uncertainty,
-        |  ROUND(rel / CAST(nt AS DOUBLE), 6) AS reliability,
-        |  ROUND(res / CAST(nt AS DOUBLE), 6) AS resolution
-        |FROM terms""".stripMargin,
-
-    // conformal: identical decimal-mean model, prefix-sum order
-    // statistic, and pure-comparison coverage
-    "q_a_conformal" ->
-      """WITH base AS (
-        |  SELECT (l_orderkey % 2 = 1) AS cal, l_returnflag AS g,
-        |    l_extendedprice AS v
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        |model AS (
-        |  SELECT g, CAST(SUM(CAST(v AS DECIMAL(38,9))) AS DOUBLE)
-        |    / count(*) AS pred
-        |  FROM base WHERE cal GROUP BY g),
-        |scored AS (
-        |  SELECT b.cal, ABS(b.v - m.pred) AS r
-        |  FROM base b JOIN model m ON b.g = m.g),
-        |calcounts AS (
-        |  SELECT r, count(*) AS ct FROM scored WHERE cal GROUP BY r),
-        |pre AS (
-        |  SELECT r, ct, COALESCE(SUM(ct) OVER (ORDER BY r ROWS BETWEEN
-        |    UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS p
-        |  FROM calcounts),
-        |n AS (SELECT CAST(SUM(ct) AS BIGINT) AS ncal FROM calcounts),
-        |kk AS (SELECT ncal,
-        |    LEAST(ncal, CAST(CEIL((ncal + 1) * 0.9) AS BIGINT)) AS k
-        |  FROM n),
-        |q AS (SELECT MIN(r) AS q FROM pre, kk WHERE p + ct >= kk.k),
-        |cov AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS ntest,
-        |    SUM(CASE WHEN s.r <= q.q THEN 1 ELSE 0 END) AS cvd
-        |  FROM scored s, q WHERE NOT s.cal)
-        |SELECT kk.ncal AS n_cal, cov.ntest AS n_test, kk.k AS k_rank,
-        |  ROUND(q.q, 6) AS qhat,
-        |  ROUND(CAST(cov.cvd AS DOUBLE) / CAST(cov.ntest AS DOUBLE), 6)
-        |    AS coverage
-        |FROM kk, q, cov""".stripMargin,
-
-    // silhouette: identical centroid panel (REAL[] quantization = the
-    // float expression input), scoring, and label means
-    "q_x_silhouette" ->
-      """WITH ex AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |    unnest(embedding)::DOUBLE AS v
-        |  FROM embeddings),
-        |cm AS (
-        |  SELECT label, pos,
-        |    ROUND(CAST(SUM(CAST(v AS DECIMAL(38,9))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE), 6) AS c
-        |  FROM ex GROUP BY 1, 2),
-        |cl AS (
-        |  SELECT label AS clabel,
-        |    CAST(CAST(list(c ORDER BY pos) AS REAL[]) AS DOUBLE[]) AS cvec
-        |  FROM cm GROUP BY label),
-        |sc AS (
-        |  SELECT e.vec_id, e.label, c.clabel,
-        |    ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |      c.cvec), 6) AS cos
-        |  FROM embeddings e CROSS JOIN cl c),
-        |ab AS (
-        |  SELECT vec_id, label,
-        |    MAX(CASE WHEN label = clabel THEN cos END) AS cosown,
-        |    MAX(CASE WHEN label <> clabel THEN cos END) AS cosoth
-        |  FROM sc GROUP BY 1, 2),
-        |s AS (
-        |  SELECT label,
-        |    CASE WHEN GREATEST(ROUND(1.0 - cosown, 6), ROUND(1.0 - cosoth, 6)) > 0
-        |         THEN ROUND((ROUND(1.0 - cosoth, 6) - ROUND(1.0 - cosown, 6))
-        |              / GREATEST(ROUND(1.0 - cosown, 6),
-        |                         ROUND(1.0 - cosoth, 6)), 6)
-        |         ELSE 0.0 END AS sv
-        |  FROM ab)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_points,
-        |  ROUND(CAST(SUM(CAST(sv AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-        |    AS mean_silhouette
-        |FROM s GROUP BY label ORDER BY label""".stripMargin,
-
-    // Theil-Sen: identical two-phase size-capped per-group sample
-    // (census threshold pre-filter, then rank <= cap), pair join, and
-    // lower-median rank selection
-    "q_a_theilsen" ->
-      """WITH u AS (
-        |  SELECT o_orderkey, o_orderpriority,
-        |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mi,
-        |    o_totalprice,
-        |    ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || 'ts7'), 1, 13))::BIGINT
-        |      / 4503599627370496.0 AS uu
-        |  FROM orders),
-        |cs AS (SELECT o_orderpriority, count(*) AS gn FROM u GROUP BY 1),
-        |s AS (
-        |  SELECT * FROM (
-        |    SELECT u.o_orderkey, u.o_orderpriority, u.mi, u.o_totalprice,
-        |      row_number() OVER (PARTITION BY u.o_orderpriority
-        |                         ORDER BY u.uu, u.o_orderkey) AS srn
-        |    FROM u JOIN cs USING (o_orderpriority)
-        |    WHERE cs.gn <= 64
-        |       OR u.uu < 4.0 * 64.0 / CAST(cs.gn AS DOUBLE))
-        |  WHERE srn <= 64),
-        |p AS (
-        |  SELECT a.o_orderpriority AS g, a.o_orderkey AS id1,
-        |    b.o_orderkey AS id2,
-        |    ROUND((b.o_totalprice - a.o_totalprice)
-        |          / CAST(b.mi - a.mi AS DOUBLE), 9) AS slope
-        |  FROM s a JOIN s b
-        |    ON a.o_orderpriority = b.o_orderpriority
-        |   AND a.o_orderkey < b.o_orderkey AND a.mi <> b.mi),
-        |r AS (
-        |  SELECT g, slope,
-        |    row_number() OVER (PARTITION BY g ORDER BY slope, id1, id2) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n
-        |  FROM p)
-        |SELECT g AS o_orderpriority, CAST(n AS BIGINT) AS n_pairs,
-        |  slope AS slope_med
-        |FROM r WHERE rn = (n + 1) // 2
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    // mode: identical count + rank-1 selection
-    "q_a_mode" ->
-      """WITH c AS (
-        |  SELECT l_returnflag, l_quantity, count(*) AS n FROM lineitem
-        |  WHERE l_quantity IS NOT NULL GROUP BY 1, 2),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY l_returnflag
-        |    ORDER BY n DESC, l_quantity) AS rn
-        |  FROM c)
-        |SELECT l_returnflag, l_quantity AS mode, CAST(n AS BIGINT) AS n_mode
-        |FROM r WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
-
-    // sequential Poisson: same 52-bit uniform and u/w priorities
-    "q_d_seqpoisson" ->
-      """SELECT o_orderkey, o_totalprice FROM (
-        |  SELECT o_orderkey, o_totalprice,
-        |    (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || 'sp1'), 1, 13))::BIGINT
-        |     / 4503599627370496.0) / o_totalprice AS prio
-        |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-        |  ORDER BY prio, o_orderkey LIMIT 25)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // islands: identical running-max-end marks + running-sum numbering
-    "q_t_islands" ->
-      """WITH iv AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS s_ts,
-        |    epoch_ns(ts) + 1800000000000 AS e_ts
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, event_id, s_ts, e_ts,
-        |    CASE WHEN max(e_ts) OVER wb IS NULL
-        |          OR s_ts > max(e_ts) OVER wb THEN 1 ELSE 0 END AS nw
-        |  FROM iv
-        |  WINDOW wb AS (PARTITION BY user_id ORDER BY s_ts, e_ts, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |i AS (
-        |  SELECT user_id, s_ts, e_ts,
-        |    SUM(nw) OVER (PARTITION BY user_id ORDER BY s_ts, e_ts, event_id
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS island
-        |  FROM m)
-        |SELECT user_id, CAST(island AS BIGINT) AS island,
-        |  min(s_ts) AS span_start, max(e_ts) AS span_end,
-        |  CAST(count(*) AS BIGINT) AS n_intervals
-        |FROM i GROUP BY user_id, island
-        |ORDER BY user_id, island""".stripMargin,
-
-    // absence: the NOT EXISTS twin of the left_anti range join
-    "q_w_absence" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type, epoch_ns(ts) AS ts
-        |  FROM events),
-        |c AS (SELECT * FROM e WHERE event_type = 'click'),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase')
-        |SELECT c.user_id, CAST(count(*) AS BIGINT) AS n_unanswered
-        |FROM c
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM p
-        |  WHERE p.user_id = c.user_id
-        |    AND p.ts >= c.ts AND p.ts <= c.ts + 3600000000000)
-        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin,
-
-    // LTV: identical cohort panel + per-cohort cumulative decimal sums
-    "q_x_ltv" ->
-      """WITH o AS (
-        |  SELECT o_custkey,
-        |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mi,
-        |    o_totalprice
-        |  FROM orders),
-        |f AS (SELECT o_custkey, min(mi) AS cohort FROM o GROUP BY 1),
-        |panel AS (
-        |  SELECT cohort, mi - cohort AS age,
-        |    SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS rev_d
-        |  FROM o JOIN f USING (o_custkey)
-        |  GROUP BY 1, 2)
-        |SELECT CAST(cohort AS INTEGER) AS cohort, CAST(age AS INTEGER) AS age,
-        |  CAST(rev_d AS DOUBLE) AS rev,
-        |  CAST(SUM(rev_d) OVER (PARTITION BY cohort ORDER BY age
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |    AS cum_rev
-        |FROM panel ORDER BY cohort, age""".stripMargin,
-
-    // soundex: dump-time VALUES from the independent implementation
-    "q_x_soundex" -> graft.operators.Phonetic.goldenSql,
-
-    // mutual NN: the same block-scoped scoring + top-1 windows + the
-    // reciprocity self-join; list_cosine_similarity parity as in
-    // q_x_cosine_topk
-    "q_x_mutual_nn" ->
-      """WITH s AS (
-        |  SELECT a.label AS label, a.vec_id AS ida, b.vec_id AS idb,
-        |    ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id),
-        |t1 AS (
-        |  SELECT label, ida, idb, cos FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY label, ida
-        |                                 ORDER BY cos DESC, idb) AS rn
-        |    FROM s)
-        |  WHERE rn = 1)
-        |SELECT x.label AS label, x.ida AS id1, x.idb AS id2, x.cos AS cos
-        |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-        |WHERE x.ida < x.idb
-        |ORDER BY id1""".stripMargin,
-
-    // DBSCAN: exhaustive within-label neighbor relation (the
-    // requireBlocksWithin contract), identical core rule, recursive-CTE
-    // closure of the core subgraph, min-core-neighbor borders
-    "q_x_dbscan" ->
-      """WITH RECURSIVE nb AS (
-        |  SELECT a.vec_id AS id, b.vec_id AS nbr
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id
-        |  WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |    CAST(b.embedding AS DOUBLE[])), 6) >= 0.25),
-        |deg AS (SELECT id, count(*) AS d FROM nb GROUP BY id),
-        |core AS (SELECT id FROM deg WHERE d + 1 >= 3),
-        |ce AS (
-        |  SELECT nb.id AS a, nb.nbr AS b FROM nb
-        |  WHERE nb.id IN (SELECT id FROM core)
-        |    AND nb.nbr IN (SELECT id FROM core)),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM ce
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN ce s ON r.b = s.a
-        |  WHERE s.b <> r.a),
-        |ccl AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |        FROM reach GROUP BY a),
-        |corecl AS (
-        |  SELECT c.id, COALESCE(ccl.cluster, c.id) AS cluster
-        |  FROM core c LEFT JOIN ccl ON ccl.id = c.id),
-        |border AS (
-        |  SELECT nb.id, MIN(corecl.cluster) AS bcl
-        |  FROM nb JOIN corecl ON nb.nbr = corecl.id
-        |  WHERE nb.id NOT IN (SELECT id FROM core)
-        |  GROUP BY nb.id)
-        |SELECT e.vec_id AS id,
-        |  CASE WHEN corecl.id IS NOT NULL THEN 'core'
-        |       WHEN border.id IS NOT NULL THEN 'border'
-        |       ELSE 'noise' END AS role,
-        |  CASE WHEN corecl.id IS NOT NULL THEN corecl.cluster
-        |       ELSE border.bcl END AS cluster
-        |FROM embeddings e
-        |LEFT JOIN corecl ON corecl.id = e.vec_id
-        |LEFT JOIN border ON border.id = e.vec_id
-        |ORDER BY id""".stripMargin,
-
-    // kNN graph: exhaustive within-label top-3 window — same cosine
-    // parity and tie rule as the engine's bounded-candidate rank
-    "q_x_knn_graph" ->
-      """WITH s AS (
-        |  SELECT a.label AS label, a.vec_id AS ida, b.vec_id AS idb,
-        |    ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id <> b.vec_id)
-        |SELECT label, ida AS id, rn AS rank, idb AS nbr, cos FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY label, ida
-        |                               ORDER BY cos DESC, idb) AS rn
-        |  FROM s)
-        |WHERE rn <= 3
-        |ORDER BY id, rank""".stripMargin,
-
-    // greedy k-center / MMR: fully independent unrolled-CTE selection
-    // replays (round-6 cosines, IEEE score arithmetic, lowest-id ties)
-    "q_x_kcenter" -> graft.operators.Selection.farthestFirstOracleSql(
-      "embeddings", "vec_id", "embedding", k = 8),
-    "q_x_mmr" -> graft.operators.Selection.mmrOracleSql(
-      "embeddings", "vec_id", "embedding", k = 8),
-    "q_x_kcenter_cover" -> graft.operators.Selection.coverageOracleSql(
-      "embeddings", "vec_id", "embedding", k = 8,
-      thresholds = Seq(0.85, 0.95, 1.0, 1.05)),
-
-    // retrieve-then-rerank: candidate CTE = the same round-6 cosine
-    // top-50 (cos DESC, id tiebreak), then the mmr chain over it —
-    // the rerank query resolves to vec 0 (lowest candidate id)
-    "q_x_mmr_rerank" -> graft.operators.Selection.mmrOracleSql(
-      "cands", "vec_id", "embedding", k = 8, ctePrefix =
-        """cands AS MATERIALIZED (
-          |  SELECT e.vec_id, e.embedding
-          |  FROM embeddings e
-          |  ORDER BY ROUND(list_cosine_similarity(
-          |      CAST(e.embedding AS DOUBLE[]),
-          |      (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-          |       WHERE vec_id = 0)), 6) DESC, e.vec_id
-          |  LIMIT 50)""".stripMargin),
-
-    // dedup → k-center pipeline: the full chain replayed — planted
-    // corpus, label-blocked MNN (the q_x_mutual_nn idiom), ≥0.99
-    // drops with keep-newest survivorship, then the selection CTEs
-    // over the survivor relation
-    "q_x_pipeline4" -> graft.operators.Selection.farthestFirstOracleSql(
-      "survivors", "vec_id", "embedding", k = 8, ctePrefix =
-        """base AS MATERIALIZED (
-          |  SELECT vec_id, label, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 10000, label, embedding FROM embeddings
-          |  WHERE vec_id < 20),
-          |sc AS (
-          |  SELECT a.label AS label, a.vec_id AS ida, b.vec_id AS idb,
-          |    ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-          |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-          |  FROM base a JOIN base b
-          |    ON a.label = b.label AND a.vec_id <> b.vec_id),
-          |t1 AS (
-          |  SELECT label, ida, idb, cos FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY label, ida
-          |                                 ORDER BY cos DESC, idb) AS rn
-          |    FROM sc)
-          |  WHERE rn = 1),
-          |drops AS (
-          |  SELECT DISTINCT x.ida AS vec_id
-          |  FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-          |  WHERE x.ida < x.idb AND x.cos >= 0.99),
-          |survivors AS MATERIALIZED (
-          |  SELECT vec_id, embedding FROM base
-          |  WHERE vec_id NOT IN (SELECT vec_id FROM drops))""".stripMargin),
-
-    // dedup → k-center pipeline, BOUNDED MNN: the stage-by-stage
-    // refinement twin (census → bits → signs → overflow window →
-    // directed top-1 → mutual) — describes the engine exactly at ANY
-    // fixture scale; below the cap it degenerates to all-pairs
-    "q_x_pipeline4_auto" -> pipeline4BoundedOracleSql(
-      graft.operators.Similarity.DefaultMnnBlock),
-
-    // same twin at the deliberately tiny cap — refinement engaged at
-    // gate scale, so the bounded SQL stages verify non-vacuously
-    "q_x_pipeline4_capped" -> pipeline4BoundedOracleSql(16),
-
-    // MNN over trained IVF blocks: dump-time twin from the memoized
-    // centroids — same raw-cosine argmax assignment (fold order, ties
-    // to lowest cid) and the same block-scoped MNN
-    "q_x_mnn_ivf" -> graft.operators.Similarity.mnnIvfOracleSql(),
-
-    // PCA projection: dump-time twin from the fitted components as
-    // DOUBLE[] literals — same dot fold, same offset literal, round-6
-    "q_x_pca" -> graft.operators.Pca.pcaOracleSql(),
-
-    // procrustes: dump-time memo twin — literal rotation rows, same
-    // planted pair, left-fold dots, round-6 cosine, round-9 residuals
-    "q_x_procrustes" -> graft.operators.Alignment.procrustesOracleSql(),
-
-    // pipeline5: rotation + codebook as memo literals; the oracle
-    // realigns, re-assigns both sides (crossJoin+window argmax twin),
-    // and recomputes the top-1 census independently
-    "q_x_pipeline5" -> graft.operators.Alignment.alignedServeOracleSql(),
-
-    // isotonic: bins + raw rates recomputed independently; the PAV
-    // fit joins in as dump-time memo literals (spec-gated solve)
-    "q_f_isotonic" -> graft.operators.Calibration.isotonicOracleSql(),
-
-    // calibrate-apply: fitted map as memo VALUES; the step lookup is
-    // recomputed independently as a correlated last-threshold subquery
-    "q_f_calibrate" -> graft.operators.Calibration.calibrateOracleSql(),
-
-    // outliers: whitened-projection twin as a subquery, same
-    // left-fold squared norm and top-k tie rule
-    "q_x_outliers" -> graft.operators.Pca.pcaOutlierOracleSql(),
-
-    // seasonal backtest: identical profile fit + scored join
-    "q_t_forecast" ->
-      """WITH tr AS (
-        |  SELECT CAST(((epoch_ns(ts) // 86400000000000) + 4) % 7 AS INTEGER) AS dow,
-        |    CAST((epoch_ns(ts) // 3600000000000) % 24 AS INTEGER) AS "hour",
-        |    value AS v
-        |  FROM events WHERE event_id % 2 = 0),
-        |p AS (
-        |  SELECT dow, "hour",
-        |    ROUND(CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) / count(v), 6)
-        |      AS baseline
-        |  FROM tr GROUP BY dow, "hour"),
-        |te AS (
-        |  SELECT CAST(((epoch_ns(ts) // 86400000000000) + 4) % 7 AS INTEGER) AS dow,
-        |    CAST((epoch_ns(ts) // 3600000000000) % 24 AS INTEGER) AS "hour",
-        |    value AS v
-        |  FROM events WHERE event_id % 2 = 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_scored,
-        |  ROUND(CAST(SUM(CAST(ROUND(abs(v - baseline), 6) AS DECIMAL(38,6)))
-        |    AS DOUBLE) / count(*), 6) AS mae,
-        |  ROUND(CAST(SUM(CAST(ROUND(v - baseline, 6) AS DECIMAL(38,6)))
-        |    AS DOUBLE) / count(*), 6) AS bias
-        |FROM te JOIN p USING (dow, "hour")""".stripMargin,
-
-    // rolling-origin backtest: identical bucket aggregate, panel
-    // windows, and per-model round-9 decimal |error| sums
-    "q_t_backtest" ->
-      """WITH per AS (
-        |  SELECT (epoch_ns(ts) - 1704067200000000000) // 86400000000000
-        |      AS p,
-        |    CAST(SUM(CAST(ROUND(value, 6) AS DECIMAL(38,6))) AS DOUBLE)
-        |      AS y
-        |  FROM events
-        |  WHERE value IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_ns(ts) >= 1704067200000000000
-        |  GROUP BY 1),
-        |b AS (
-        |  SELECT p.p, p.y,
-        |    LAG(p.y) OVER (ORDER BY p.p) AS lastv,
-        |    CAST(SUM(CAST(p.y AS DECIMAL(28,6))) OVER (ORDER BY p.p
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      AS DOUBLE) AS cs,
-        |    COUNT(*) OVER (ORDER BY p.p ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING) AS cn,
-        |    s.y AS seas
-        |  FROM per p LEFT JOIN per s ON s.p = p.p - 7),
-        |mx AS (SELECT MAX(p) AS maxp FROM per),
-        |f AS (SELECT b.* FROM b, mx WHERE b.p > mx.maxp - 10)
-        |SELECT * FROM (
-        |  SELECT 'expanding_mean' AS model,
-        |    CAST(count(*) AS BIGINT) AS n_scored,
-        |    ROUND(CAST(SUM(CAST(ROUND(ABS(y - cs / CAST(cn AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) / count(*), 6) AS mae
-        |  FROM f WHERE cn > 0
-        |  UNION ALL
-        |  SELECT 'last_value', CAST(count(*) AS BIGINT),
-        |    ROUND(CAST(SUM(CAST(ROUND(ABS(y - lastv), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) / count(*), 6)
-        |  FROM f WHERE lastv IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'seasonal_naive', CAST(count(*) AS BIGINT),
-        |    ROUND(CAST(SUM(CAST(ROUND(ABS(y - seas), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE) / count(*), 6)
-        |  FROM f WHERE seas IS NOT NULL)
-        |ORDER BY model""".stripMargin,
-
-    // rolling correlation: the direct bounded frame IS safe in the
-    // oracle (decimal frame sums are order-exact, so they equal the
-    // engine's running-sum differences bit for bit)
-    "q_t_rollcorr" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS ts, value AS x,
-        |    CAST(json_extract(props, '$.k') AS DOUBLE) AS y
-        |  FROM events),
-        |b AS (
-        |  SELECT event_id,
-        |    SUM(CASE WHEN x IS NOT NULL AND y IS NOT NULL THEN 1 ELSE 0 END)
-        |      OVER w AS n,
-        |    CAST(SUM(CAST(CASE WHEN x IS NOT NULL AND y IS NOT NULL
-        |      THEN ROUND(x, 6) ELSE 0 END AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(CASE WHEN x IS NOT NULL AND y IS NOT NULL
-        |      THEN ROUND(y, 6) ELSE 0 END AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(CASE WHEN x IS NOT NULL AND y IS NOT NULL
-        |      THEN ROUND(x * y, 6) ELSE 0 END AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(CASE WHEN x IS NOT NULL AND y IS NOT NULL
-        |      THEN ROUND(x * x, 6) ELSE 0 END AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(CASE WHEN x IS NOT NULL AND y IS NOT NULL
-        |      THEN ROUND(y * y, 6) ELSE 0 END AS DECIMAL(38,6))) OVER w AS DOUBLE) AS syy
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-        |SELECT event_id, CAST(n AS BIGINT) AS n_win,
-        |  CASE WHEN n >= 4
-        |        AND CAST(n AS DOUBLE) * sxx - sx * sx > 0
-        |        AND CAST(n AS DOUBLE) * syy - sy * sy > 0
-        |  THEN ROUND((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |         (CAST(n AS DOUBLE) * syy - sy * sy)), 6) END AS corr
-        |FROM b ORDER BY event_id""".stripMargin,
-
-    // k-anonymity / l-diversity: one QI aggregate + violation filter
-    "q_x_kanon" ->
-      """WITH g AS (
-        |  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT c_acctbal) AS BIGINT) AS n_sensitive
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT c_nationkey, c_mktsegment, n, n_sensitive,
-        |  n >= 10 AS k_ok, n_sensitive >= 8 AS l_ok
-        |FROM g WHERE NOT (n >= 10) OR NOT (n_sensitive >= 8)
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-
-    // missingness patterns: identical planted masks
-    "q_p_missing" ->
-      """WITH e AS (
-        |  SELECT CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v,
-        |    CASE WHEN event_id % 11 = 0 THEN NULL ELSE props END AS p,
-        |    event_type AS t
-        |  FROM events)
-        |SELECT (CASE WHEN v IS NOT NULL THEN '1' ELSE '0' END ||
-        |        CASE WHEN p IS NOT NULL THEN '1' ELSE '0' END ||
-        |        CASE WHEN t IS NOT NULL THEN '1' ELSE '0' END) AS pattern,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM e GROUP BY 1 ORDER BY pattern""".stripMargin,
-
-    // TPC-H Q3 shape: identical SQL over the raw tables
-    "q_sql_q3" ->
-      """SELECT l_orderkey,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  CAST(o_orderdate AS DATE) AS o_orderdate
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < DATE '1998-01-01'
-        |  AND l_shipdate > DATE '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    // TPC-H Q5 shape: identical SQL over the raw tables
-    "q_sql_q5" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= DATE '1996-01-01'
-        |  AND o_orderdate < DATE '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    // phrase search: 1-based generate_subscripts positions — relative
-    // offsets match the engine's 0-based posexplode
-    "q_x_phrase" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |p AS (
-        |  SELECT doc_id, unnest(toks) AS tok,
-        |    generate_subscripts(toks, 1) AS pos
-        |  FROM t)
-        |SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences
-        |FROM p a JOIN p b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |WHERE a.tok = 'order' AND b.tok = 'fast'
-        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin,
-
-    // ABC: the window running share IS safe in the oracle; the engine
-    // side ranks through the distributed prefix sum instead
-    "q_a_abc" ->
-      """WITH k AS (
-        |  SELECT l_partkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) * 100 AS BIGINT)
-        |      AS cents
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1),
-        |c AS (
-        |  SELECT l_partkey, cents,
-        |    ROUND(CAST(SUM(cents) OVER (ORDER BY cents DESC, l_partkey
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS DOUBLE) / CAST(SUM(cents) OVER () AS DOUBLE), 6)
-        |      AS cum_share
-        |  FROM k)
-        |SELECT l_partkey, cents, cum_share,
-        |  CASE WHEN cum_share <= 0.8 THEN 'A'
-        |       WHEN cum_share <= 0.95 THEN 'B'
-        |       ELSE 'C' END AS abc_class
-        |FROM c ORDER BY l_partkey""".stripMargin,
-
-    // clustering coefficient: canonical triangle enumeration charged to
-    // all three members, identical fixed-order double
-    "q_x_clustercoef" ->
-      """WITH e AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 150, l_partkey % 150) AS a,
-        |    greatest(l_orderkey % 150, l_partkey % 150) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 150 <> l_partkey % 150 AND l_quantity <= 10),
-        |deg AS (
-        |  SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY 1),
-        |tri AS (
-        |  SELECT e1.a AS a, e1.b AS b, e2.b AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e1.b = e2.a
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |tn AS (
-        |  SELECT node, count(*) AS n_tri FROM (
-        |    SELECT a AS node FROM tri
-        |    UNION ALL SELECT b FROM tri
-        |    UNION ALL SELECT c FROM tri)
-        |  GROUP BY 1)
-        |SELECT d.node, CAST(d.deg AS BIGINT) AS deg,
-        |  CAST(COALESCE(tn.n_tri, 0) AS BIGINT) AS n_tri,
-        |  ROUND(2.0 * COALESCE(tn.n_tri, 0)
-        |        / CAST(d.deg * (d.deg - 1) AS DOUBLE), 6) AS cc
-        |FROM deg d LEFT JOIN tn USING (node)
-        |WHERE d.deg >= 2 ORDER BY d.node""".stripMargin,
-
-    // month-over-month: the same bounded month panel + lag ratio
-    "q_t_mom" ->
-      """WITH mo AS (
-        |  SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS rev
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT y, m, rev,
-        |  ROUND((rev - lag(rev) OVER w) / lag(rev) OVER w, 6) AS growth
-        |FROM mo
-        |WINDOW w AS (ORDER BY y, m)
-        |ORDER BY y, m""".stripMargin,
-
-    // token-sort keys: list_sort/list_reverse twins of sort_array/
-    // reverse — lowercase ASCII tokens sort identically (binary order)
-    "q_x_tokensort" ->
-      """WITH src AS (
-        |  SELECT p_partkey AS id, p_name AS name FROM part
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000,
-        |    array_to_string(list_reverse(string_split(p_name, ' ')), ' ')
-        |  FROM part WHERE p_partkey % 10 = 0),
-        |k AS (
-        |  SELECT id,
-        |    array_to_string(list_sort(string_split(lower(name), ' ')), ' ')
-        |      AS key
-        |  FROM src)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |  min(id) AS min_id, max(id) AS max_id
-        |FROM k GROUP BY key HAVING count(*) >= 2
-        |ORDER BY key""".stripMargin,
-
-    // exact CDF: the window running sum IS safe in the oracle (DuckDB
-    // runs single-node anyway); the engine side never builds one
-    "q_f_cdf" ->
-      """WITH c AS (
-        |  SELECT l_extendedprice AS v, count(*) AS n FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL GROUP BY 1),
-        |t AS (SELECT SUM(n) AS total FROM c),
-        |cum AS (
-        |  SELECT v, n,
-        |    SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |                 AND CURRENT ROW) AS cum_n
-        |  FROM c)
-        |SELECT v AS l_extendedprice, CAST(n AS BIGINT) AS n,
-        |  CAST(cum_n AS BIGINT) AS cum_n,
-        |  ROUND(CAST(cum_n AS DOUBLE) / CAST(total AS DOUBLE), 6) AS cdf
-        |FROM cum CROSS JOIN t ORDER BY l_extendedprice""".stripMargin,
-
-    // sequence gaps: the same planted-hole filter + grouped arithmetic
-    "q_a_seqgaps" ->
-      """WITH f AS (
-        |  SELECT l_orderkey, l_linenumber FROM lineitem
-        |  WHERE NOT (l_linenumber = 2 AND l_orderkey % 5 = 0)),
-        |g AS (
-        |  SELECT l_orderkey, min(l_linenumber) AS seq_min,
-        |    max(l_linenumber) AS seq_max,
-        |    CAST(count(DISTINCT l_linenumber) AS BIGINT) AS n_present
-        |  FROM f GROUP BY 1)
-        |SELECT l_orderkey, seq_min, seq_max, n_present,
-        |  CAST(seq_max - seq_min + 1 - n_present AS BIGINT) AS n_missing
-        |FROM g WHERE seq_max - seq_min + 1 - n_present > 0
-        |ORDER BY l_orderkey""".stripMargin,
-
-    // degree distribution: two grouped counts over the symmetrized
-    // canonical edge set
-    "q_x_degree_dist" ->
-      """WITH e AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 150, l_partkey % 150) AS a,
-        |    greatest(l_orderkey % 150, l_partkey % 150) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 150 <> l_partkey % 150 AND l_quantity <= 10),
-        |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-        |d AS (SELECT a, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY a)
-        |SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM d GROUP BY deg ORDER BY deg""".stripMargin,
-
-    // power-law fit: ln of exact integer ratios into the q_a_ols
-    // algebra, identical fixed-order closed form
-    "q_x_powerlaw" ->
-      """WITH e AS (
-        |  SELECT DISTINCT
-        |    least(l_orderkey % 150, l_partkey % 150) AS a,
-        |    greatest(l_orderkey % 150, l_partkey % 150) AS b
-        |  FROM lineitem
-        |  WHERE l_orderkey % 150 <> l_partkey % 150 AND l_quantity <= 10),
-        |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-        |d AS (SELECT a, count(*) AS deg FROM sym GROUP BY a),
-        |h AS (SELECT deg, count(*) AS n_nodes FROM d GROUP BY deg),
-        |l AS (
-        |  SELECT ln(CAST(deg AS DOUBLE)) AS lx,
-        |    ln(CAST(n_nodes AS DOUBLE)) AS ly
-        |  FROM h),
-        |g AS (
-        |  SELECT count(*) AS n,
-        |    CAST(SUM(CAST(ROUND(lx, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(ROUND(ly, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(ROUND(lx * ly, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(ROUND(lx * lx, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(ROUND(ly * ly, 6) AS DECIMAL(38,6))) AS DOUBLE) AS syy
-        |  FROM l)
-        |SELECT 'deg_dist' AS g, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0
-        |       THEN ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) END AS slope,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0
-        |       THEN ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6) END AS intercept,
-        |  CASE WHEN n > 1 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |       THEN ROUND((n * sxy - sx * sy) * (n * sxy - sx * sy)
-        |                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) END AS r2
-        |FROM g""".stripMargin,
-
-    // golden records: the entity closure (with the SNM |Δid| ≤ 3 band)
-    // + survivorship window
-    "q_x_golden" ->
-      """WITH RECURSIVE edges AS (
-        |  SELECT a.s_suppkey id1, b.s_suppkey id2
-        |  FROM supplier a JOIN supplier b
-        |    ON a.s_suppkey < b.s_suppkey
-        |   AND substring(a.s_name, 1, 1) = substring(b.s_name, 1, 1)
-        |   AND abs(length(a.s_name) - length(b.s_name)) <= 1
-        |  WHERE levenshtein(a.s_name, b.s_name) <= 1
-        |    AND abs(a.s_suppkey - b.s_suppkey) <= 3),
-        |sym AS (SELECT id1 a, id2 b FROM edges UNION SELECT id2, id1 FROM edges),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM sym
-        |  UNION
-        |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a WHERE s.b <> r.a),
-        |cl AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster
-        |       FROM reach GROUP BY a),
-        |asg AS (
-        |  SELECT s.s_suppkey, s.s_name, s.s_acctbal,
-        |    COALESCE(cl.cluster, s.s_suppkey) AS cluster
-        |  FROM supplier s LEFT JOIN cl ON s.s_suppkey = cl.id),
-        |r AS (
-        |  SELECT *,
-        |    row_number() OVER (PARTITION BY cluster
-        |                       ORDER BY s_acctbal DESC, s_suppkey) AS rn,
-        |    count(*) OVER (PARTITION BY cluster) AS n_members
-        |  FROM asg)
-        |SELECT cluster, s_suppkey, s_name, s_acctbal,
-        |  CAST(n_members AS BIGINT) AS n_members
-        |FROM r WHERE rn = 1 ORDER BY cluster""".stripMargin,
-
-    // ANN error-contract gates: exact brute-force top-10 (DuckDB
-    // recomputes the values) + the contract panel — the probe returned
-    // exactly k rows AND recall@10 >= 0.8 — asserted as literals. The
-    // approximate result set stays engine-side; its CONTRACT is what's
-    // hash-gated (the q_a_hll within_bound pattern).
-    "q_x_lsh_topk" -> annContractOracleSql,
-    "q_x_ivf_topk" -> annContractOracleSql,
-
-    // IVF recall-vs-cost curve: FULLY recomputed — the deterministic
-    // 8-vector quantizer panel lets DuckDB replay round-6 argmax
-    // assignment (ties → low cid), probe order, per-nprobe top-10 and
-    // recall@10 exactly; the recall values hash, not just their floor
-    "q_x_ivf_recall" ->
-      """WITH cents AS MATERIALIZED (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid,
-        |         CAST(embedding AS DOUBLE[]) AS cvec
-        |  FROM embeddings WHERE vec_id IN (3,63,123,183,243,303,363,423)
-        |), qv AS MATERIALIZED (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 1
-        |), assigned AS MATERIALIZED (
-        |  SELECT id, qcos, cid FROM (
-        |    SELECT e.vec_id AS id,
-        |      ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q), 6) AS qcos,
-        |      c.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-        |                 c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c CROSS JOIN qv q
-        |  ) WHERE rn = 1
-        |), probeorder AS MATERIALIZED (
-        |  SELECT c.cid, ROW_NUMBER() OVER (
-        |    ORDER BY ROUND(list_cosine_similarity(c.cvec, q.q), 6) DESC, c.cid) AS proberank
-        |  FROM cents c CROSS JOIN qv q
-        |), brute AS MATERIALIZED (
-        |  SELECT id FROM assigned ORDER BY qcos DESC, id LIMIT 10
-        |), nps AS (SELECT * FROM (VALUES (1),(2),(4),(8)) v(nprobe)),
-        |topk AS MATERIALIZED (
-        |  SELECT np.nprobe, a.id,
-        |    ROW_NUMBER() OVER (PARTITION BY np.nprobe ORDER BY a.qcos DESC, a.id) AS rn
-        |  FROM nps np
-        |  JOIN probeorder p ON p.proberank <= np.nprobe
-        |  JOIN assigned a ON a.cid = p.cid
-        |), hitsq AS (
-        |  SELECT t.nprobe, CAST(COUNT(*) AS BIGINT) AS hits FROM topk t
-        |  WHERE t.rn <= 10 AND t.id IN (SELECT id FROM brute) GROUP BY t.nprobe
-        |), costq AS (
-        |  SELECT np.nprobe, CAST(COUNT(*) AS BIGINT) AS cand_n FROM nps np
-        |  JOIN probeorder p ON p.proberank <= np.nprobe
-        |  JOIN assigned a ON a.cid = p.cid GROUP BY np.nprobe
-        |)
-        |SELECT np.nprobe, costq.cand_n, COALESCE(hitsq.hits, 0) AS hits,
-        |  CAST(COALESCE(hitsq.hits, 0) AS DOUBLE) / 10.0 AS recall
-        |FROM nps np JOIN costq USING (nprobe) LEFT JOIN hitsq USING (nprobe)
-        |ORDER BY np.nprobe""".stripMargin,
-
-    // IVF recall panel: the multi-query twin — one query-independent
-    // assignment, per-query probe order and top-10 re-ranked PARTITION
-    // BY qid, mean recall as the exact hits/(8·10) ratio
-    "q_x_ivf_recall_panel" ->
-      """WITH cents AS MATERIALIZED (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid,
-        |         CAST(embedding AS DOUBLE[]) AS cvec
-        |  FROM embeddings WHERE vec_id IN (3,63,123,183,243,303,363,423)
-        |), qs AS MATERIALIZED (
-        |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS q
-        |  FROM embeddings WHERE vec_id IN (1,41,81,121,161,201,241,281)
-        |), assigned AS MATERIALIZED (
-        |  SELECT id, cid FROM (
-        |    SELECT e.vec_id AS id, c.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC,
-        |                 c.cid) AS rn
-        |    FROM embeddings e CROSS JOIN cents c
-        |  ) WHERE rn = 1
-        |), scored AS MATERIALIZED (
-        |  SELECT q.qid, e.vec_id AS id,
-        |    ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.q), 6) AS qcos,
-        |    a.cid
-        |  FROM embeddings e JOIN assigned a ON a.id = e.vec_id
-        |  CROSS JOIN qs q
-        |), probeorder AS MATERIALIZED (
-        |  SELECT q.qid, c.cid, ROW_NUMBER() OVER (PARTITION BY q.qid
-        |    ORDER BY ROUND(list_cosine_similarity(c.cvec, q.q), 6) DESC, c.cid) AS proberank
-        |  FROM cents c CROSS JOIN qs q
-        |), brute AS MATERIALIZED (
-        |  SELECT qid, id FROM (
-        |    SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY qcos DESC, id) AS rn FROM scored) WHERE rn <= 10
-        |), nps AS (SELECT * FROM (VALUES (1),(2),(4),(8)) v(nprobe)),
-        |topk AS MATERIALIZED (
-        |  SELECT np.nprobe, s.qid, s.id,
-        |    ROW_NUMBER() OVER (PARTITION BY np.nprobe, s.qid
-        |      ORDER BY s.qcos DESC, s.id) AS rn
-        |  FROM nps np
-        |  JOIN probeorder p ON p.proberank <= np.nprobe
-        |  JOIN scored s ON s.cid = p.cid AND s.qid = p.qid
-        |), hitsq AS (
-        |  SELECT t.nprobe, CAST(COUNT(*) AS BIGINT) AS hits_total FROM topk t
-        |  WHERE t.rn <= 10
-        |    AND EXISTS (SELECT 1 FROM brute b WHERE b.qid = t.qid AND b.id = t.id)
-        |  GROUP BY t.nprobe
-        |), costq AS (
-        |  SELECT np.nprobe, CAST(COUNT(*) AS BIGINT) AS cand_total FROM nps np
-        |  JOIN probeorder p ON p.proberank <= np.nprobe
-        |  JOIN assigned a ON a.cid = p.cid GROUP BY np.nprobe
-        |)
-        |SELECT np.nprobe, CAST(8 AS BIGINT) AS n_queries, costq.cand_total,
-        |  COALESCE(hitsq.hits_total, 0) AS hits_total,
-        |  CAST(COALESCE(hitsq.hits_total, 0) AS DOUBLE) / 80.0 AS mean_recall
-        |FROM nps np JOIN costq USING (nprobe) LEFT JOIN hitsq USING (nprobe)
-        |ORDER BY np.nprobe""".stripMargin,
-
-    // Dedup threshold sweep: all-pairs within label blocks (the gate
-    // guards that nothing refines), same round-6 cosine, thresholds as
-    // DOUBLE in both engines
-    "q_x_dedup_sweep" ->
-      """WITH c AS (
-        |  SELECT vec_id, label, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 20000, label, embedding FROM embeddings
-        |  WHERE vec_id < 50),
-        |p AS (
-        |  SELECT b.vec_id AS id2,
-        |    ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(b.embedding AS DOUBLE[])), 6) AS cos
-        |  FROM c a JOIN c b ON a.label = b.label AND a.vec_id < b.vec_id),
-        |t AS (SELECT CAST(unnest([0.4, 0.45, 0.5, 0.999]) AS DOUBLE) AS threshold)
-        |SELECT t.threshold AS threshold,
-        |  CAST(count(DISTINCT p.id2) AS BIGINT) AS n_dropped
-        |FROM t JOIN p ON p.cos >= t.threshold
-        |GROUP BY t.threshold ORDER BY threshold""".stripMargin,
-
-    // PCA whitening: the same dump-time twin with / sqrt(λ) literals
-    "q_x_pca_whiten" -> graft.operators.Pca.pcaOracleSql(whiten = true),
-
-    // PCA → trained IVF → block MNN: dump-time twin regenerating the
-    // whole chain (projection literals → argmax assignment → MNN)
-    "q_x_pipeline3" -> graft.operators.Similarity.pcaIvfMnnOracleSql(),
-
-    // the AUTO-SIZED production path: same dump-time twin, regenerated
-    // from the auto variant's memoized model + codebook (the twin
-    // inlines whatever centroid count training produced)
-    "q_x_pipeline3_auto" ->
-      graft.operators.Similarity.pcaIvfMnnOracleSql(auto = true),
-
-    // q_d2_sample / q_d2b_stratified: intentionally no oracle —
-    // engine-seeded sampling is engine/layout-specific; they get
-    // rows-only checks plus unit-test coverage with fraction
-    // assertions (SamplingSpec). The former rows-only xxhash64
-    // sketch gates (fingerprint / simhash / minhash_bands / cdc_fast)
-    // are golden-oracled via [[graft.operators.HashGoldens]], and the
-    // former rows-only ANN gates are error-contract-oracled above.
-  )
-
-  /** Shared twin for the two ANN contract gates (both probe the
-    * vec_id=0 embedding at k=10): the exact brute-force top-10 plus
-    * the literal contract columns. */
-  /** Twin of the q_x_pipeline4_auto / q_x_pipeline4_capped chain: the
-    * planted base corpus, [[graft.operators.Similarity.mnnBoundedOracleCtes]]
-    * at the gate's cap (the refinement replicated stage by stage),
-    * keep-the-newest drops over the mutual pairs, then the unrolled
-    * farthest-first selection CTEs over the survivor relation. */
-  private def pipeline4BoundedOracleSql(maxBlock: Int): String =
-    graft.operators.Selection.farthestFirstOracleSql(
-      "survivors", "vec_id", "embedding", k = 8, ctePrefix =
-        """base AS MATERIALIZED (
-          |  SELECT vec_id, label, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 10000, label, embedding FROM embeddings
-          |  WHERE vec_id < 20),
-          |""".stripMargin +
-        graft.operators.Similarity.mnnBoundedOracleCtes(
-          "base", "label", "vec_id", "embedding", dim = 64,
-          maxBlock = maxBlock, overflowWindow = 16) +
-        """,
-          |drops AS (
-          |  SELECT DISTINCT id1 AS vec_id FROM mnn WHERE cos >= 0.99),
-          |survivors AS MATERIALIZED (
-          |  SELECT vec_id, embedding FROM base
-          |  WHERE vec_id NOT IN (SELECT vec_id FROM drops))""".stripMargin)
-
-  private def annContractOracleSql: String =
-    """WITH brute AS (
-      |  SELECT vec_id,
-      |    ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-      |      (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos
-      |  FROM embeddings ORDER BY cos DESC, vec_id LIMIT 10)
-      |SELECT vec_id, cos, CAST(10 AS BIGINT) AS ann_k, TRUE AS recall_ok
-      |FROM brute ORDER BY cos DESC, vec_id""".stripMargin
+  /** Every gate, family by family. */
+  val gates: Seq[Gate] =
+    ScanGates.gates ++ ProjectionGates.gates ++ JoinGates.gates ++
+      AggregateGates.gates ++ StatisticsGates.gates ++ WindowGates.gates ++
+      SampleGates.gates ++ SetOpGates.gates ++ FunctionGates.gates ++
+      StreamingGates.gates ++ TimeSeriesGates.gates ++ SqlGates.gates ++
+      TextGates.gates ++ VectorGates.gates ++ DedupGates.gates ++
+      GraphGates.gates ++ MediaGates.gates
+
+  private val registry = Gate.registry(gates)
+
+  /** Gate name → engine side. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, g) => n -> g.run }
+
+  /** Gate name → DuckDB oracle SQL, for every gate that has one. A `def`
+    * on purpose: each call regenerates every oracle, so the dump-time
+    * twins inline the memos their gates filled before the call. */
+  def oracleSql: Map[String, String] =
+    registry.collect { case (n, Gate(_, _, Gate.Sql(sql))) => n -> sql() }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.{expressions => catalyst}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -552,8 +553,9 @@ object Dedup {
       .persist()
     // fused initialization + first hop: label = min(id, min neighbor) is
     // one groupBy over the edge list, no node-table join
-    var labels = checkpoint(sym.groupBy(col("src").as("id"))
+    var labelsCp = checkpoint(sym.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), col("src")).as("cluster")))
+    var labels = labelsCp
 
     // one round: neighbor-min hop, then pointer jump through the
     // hopped labels (label := min(label, label[label])). Returns the
@@ -591,10 +593,12 @@ object Dedup {
       val next = checkpoint(jumped)
       converged = next.filter(col("__chg")).isEmpty
       // next is materialized (the action above at the latest) — the
-      // mid-round hopped blocks are dead now; without this they pile
-      // up for the whole loop until ContextCleaner GC
-      hopped.unpersist(blocking = false)
-      labels.unpersist()
+      // mid-round hopped blocks and the previous labels are dead now;
+      // without this they pile up for the whole loop until
+      // ContextCleaner GC
+      release(hopped)
+      release(labelsCp)
+      labelsCp = next
       labels = next.drop("__chg")
       iter += 1
     }
@@ -604,6 +608,20 @@ object Dedup {
         "check the edge relation")
     sym.unpersist()
     labels
+  }
+
+  /** Frees a frame a `checkpoint` function returned. `Dataset.unpersist`
+    * only drops CacheManager entries (a `persist()`-style checkpoint); a
+    * `localCheckpoint` has none — its blocks belong to the RDD under the
+    * frame's LogicalRDD root, unpersisted here. A durable checkpoint's
+    * RDD holds no blocks, and a frame that is not a checkpoint (no
+    * LogicalRDD root) is left alone. */
+  private def release(cp: DataFrame): Unit = {
+    cp.unpersist(blocking = false)
+    cp.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 
   /** Near-dup groups end-to-end: MinHash-LSH pairs at `threshold`, then

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.VectorExprs
 
@@ -947,10 +948,11 @@ object Similarity {
           struct(col("id2").as("a"), col("id1").as("b")))).as("__dir"))
       .select(col("__g"), col("__dir.a").as("__ida"),
         col("__dir.b").as("__idb"), col("cos"))
-    // the tie key is wrapped non-nullable (ids are never null on this
-    // path; a hypothetical null sorted NULLS FIRST before, and MinValue
-    // sorts first too) so the TopKWindowRewrite's eligibility proof
-    // holds and the rank filter above becomes a bounded-heap AGGREGATE:
+    // the tie key is tagged non-nullable (ids are never null on this
+    // path; KnownNotNull keeps the id's own type, so string ids rank
+    // too, where a typed Long.MinValue coalesce cast them to BIGINT) so
+    // the TopKWindowRewrite's eligibility proof holds for long ids and
+    // the rank filter above becomes a bounded-heap AGGREGATE:
     // map-side k-element heaps per (__g, __ida) combine before the
     // exchange, so the directed-pair relation (2× the candidate volume
     // — the job's largest) is never sorted and never shuffled. With the
@@ -959,7 +961,7 @@ object Similarity {
     // 33 s stage.
     val w = Window.partitionBy(col("__g"), col("__ida"))
       .orderBy(col("cos").desc,
-        coalesce(col("__idb"), lit(Long.MinValue)).asc)
+        ColumnBridge.knownNotNull(col("__idb")).asc)
     scored.withColumn("__rn", row_number().over(w))
   }
 

@@ -13,6 +13,11 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c` tagged non-nullable, type unchanged — the caller proves it
+    * holds no nulls (a non-nullability proof without a typed sentinel). */
+  def knownNotNull(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(expression(c)))
+
   /** Wrap a 1-row/1-column DataFrame as a scalar-subquery expression —
     * the shape expressions like `might_contain` require for their
     * "constant" operands when the value is itself computed by a plan

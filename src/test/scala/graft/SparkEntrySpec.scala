@@ -1,16 +1,8 @@
 package graft
 
-/** Driver-contract consistency: a typo'd oracle key would silently drop a
-  * correctness-gate entry, and duplicate output columns would break the
-  * driver's column-sorted hashing. */
+/** Every gate plans: duplicate output columns would break the compare's
+  * column-sorted hashing. Registry shape is [[GateRegistrySpec]]'s. */
 class SparkEntrySpec extends SparkSpec {
-
-  test("every oracle key has a query; names are well-formed") {
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet.diff(qs)
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-    qs.foreach(k => assert(k.matches("q_[a-z0-9_]+"), s"bad key: $k"))
-  }
 
   test("flagship entry returns rows") {
     val df = SparkEntry.entry(spark)

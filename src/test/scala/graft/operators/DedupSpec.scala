@@ -210,6 +210,28 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents releases every checkpoint but the returned labels") {
+    // a 64-node chain needs several rounds; the recording checkpoint
+    // keeps a strong reference to every frame it returns, so
+    // ContextCleaner GC cannot free a leaked one behind the test's back
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val made = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val labels = Dedup.connectedComponents(edges,
+      checkpoint = df => { val cp = df.localCheckpoint(); made += cp; cp })
+    def rddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.logical.collectLeaves().collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+    val kept = rddIds(labels).toSet
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    assert(made.size > 3, s"expected several rounds, got ${made.size} checkpoints")
+    assert(kept.nonEmpty && kept.subsetOf(persisted),
+      "the returned labels must stay materialized")
+    val leaked = made.flatMap(rddIds).filterNot(kept).filter(persisted)
+    assert(leaked.isEmpty, s"checkpoint RDDs still persisted: $leaked")
+    assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
+  }
+
   test("duplicatedSpans finds a verbatim passage shared by distinct docs") {
     val passage = "x" * 15 + "THE EXACT SAME FIFTY CHARACTER PASSAGE HERE!" + "y" * 15
     val docs = Seq(

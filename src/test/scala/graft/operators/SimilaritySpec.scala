@@ -189,6 +189,39 @@ class SimilaritySpec extends SparkSpec {
       s"cross-group reciprocity must not count, got $got")
   }
 
+  test("knnGraph / mutualNearestPairs on string ids match the long-id run") {
+    // generic ids: "doc-<n>" strings must rank and pair exactly like the
+    // same frame keyed by n (gaussian vectors — no cosine ties, so the
+    // id tie rule never decides); the long-id run must keep its
+    // bounded-heap top_k plan instead of falling back to a window
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 40).map(i =>
+      (i.toLong, i % 3, Seq.fill(6)(rnd.nextGaussian().toFloat)))
+    val longs = rows.toDF("vec_id", "label", "embedding")
+    val strs = rows.map { case (i, l, v) => (s"doc-$i", l, v) }
+      .toDF("vec_id", "label", "embedding")
+    def n(id: Any): Long = id.toString.stripPrefix("doc-").toLong
+    def knn(df: org.apache.spark.sql.DataFrame) =
+      Similarity.knnGraph(df, "vec_id", "embedding", "label", k = 3, dim = 6)
+    def knnRows(df: org.apache.spark.sql.DataFrame) = knn(df).collect().map(r =>
+      (r.getInt(0), n(r.get(1)), r.getInt(2), n(r.get(3)), r.getDouble(4))).toSet
+    def mnnRows(df: org.apache.spark.sql.DataFrame) =
+      Similarity.mutualNearestPairs(df, "vec_id", "embedding", "label", dim = 6)
+        .select("label", "id1", "id2", "cos").collect().map { r =>
+          val (a, b) = (n(r.get(1)), n(r.get(2)))
+          (r.getInt(0), math.min(a, b), math.max(a, b), r.getDouble(3))
+        }.toSet
+    val knnLong = knnRows(longs)
+    assert(knnLong.size == 40 * 3)
+    assert(knnRows(strs) == knnLong)
+    val mnnLong = mnnRows(longs)
+    assert(mnnLong.nonEmpty && mnnRows(strs) == mnnLong)
+    val nodes = graft.PlanWalk.allNodes(knn(longs).queryExecution.executedPlan)
+    assert(nodes.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.functions.TopKAgg]))),
+      "long-id knnGraph lost its top_k heap aggregate")
+  }
+
   test("maxBlock = 0 auto-resolves to DefaultMnnBlock; explicit caps pass through") {
     assert(Similarity.DefaultMnnBlock == 256)
     assert(Similarity.resolvedBlockCap(0) == Similarity.DefaultMnnBlock)
