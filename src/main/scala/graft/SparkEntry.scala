@@ -69,8 +69,8 @@ object SparkEntry {
     registry.map { case (n, g) => n -> g.run }
 
   /** Gate name → DuckDB oracle SQL, for every gate that has one. A `def`
-    * on purpose: each call regenerates every oracle, so the dump-time
-    * twins inline the memos their gates filled before the call. */
+    * on purpose: each call regenerates every oracle, so each
+    * [[Gate.fitted]] twin inlines the state of its gate's last run. */
   def oracleSql: Map[String, String] =
     registry.collect { case (n, Gate(_, _, Gate.Sql(sql))) => n -> sql() }
 }

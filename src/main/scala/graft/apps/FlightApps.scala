@@ -1,6 +1,7 @@
 package graft.apps
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.regression.DecisionTreeRegressionModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ml.{FlightModel, FlightPipeline}
@@ -28,13 +29,10 @@ object TrainApp {
       "usage: TrainApp <input.csv> <outputDir> [--count-only] [--plane-data p] [--test-file t]")
     val Array(inputPath, outputDir) = positional.take(2)
     val countOnly = args.contains("--count-only")
-    def optArg(flag: String): Option[String] = {
-      val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-    }
 
     val spark = session()
-    try run(spark, inputPath, outputDir, countOnly,
-      optArg("--plane-data"), optArg("--test-file"), optArg("--save-model"))
+    try run(spark, inputPath, outputDir, countOnly, optArg(args, "--plane-data"),
+      optArg(args, "--test-file"), optArg(args, "--save-model"))
     finally spark.stop()
   }
 
@@ -51,9 +49,7 @@ object TrainApp {
       return
     }
 
-    val plane = planePath
-      .map(p => IO.readCsv(spark, p, Some(Schemas.planeData)))
-      .getOrElse(graft.sources.FlightsGenerator.planeData(spark))
+    val plane = planeData(spark, planePath)
 
     val fullData = Cleaning.dropForbidden(raw)
     val prepared = Prepare.prepareData(fullData, plane).cache()
@@ -78,22 +74,42 @@ object TrainApp {
     }
 
     testFile.foreach { tf => // scoring lifecycle, main.py:170-260
-      val test = IO.readCsv(spark, tf, Some(Schemas.flights))
-      val testPrepared = Prepare.prepareData(Cleaning.dropForbidden(test), plane)
-      val transformed = pipelineModel.transform(testPrepared)
-      val scored = result.model match {
-        case Some(m) => m.transform(transformed)
-        case None => transformed
-      }
-      val labeled = FlightModel.addLabels(scored)
-      sink(labeled, outputDir, "test_predictions")
-      if (labeled.columns.contains("prediction") &&
-          labeled.columns.contains(FlightModel.TargetCol))
-        FlightModel.evaluate(labeled).foreach { case (mae, rmse) =>
-          println(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f")
-        }
+      score(spark, tf, plane, pipelineModel, result.model, outputDir,
+        "test_predictions")
     }
     prepared.unpersist()
+  }
+
+  /** The scoring steps both lifecycles run: CSV scan → leakage drop →
+    * prepare → pipeline transform → tree (when trained) → ±10-min labels
+    * → sinks as `name`, then MAE/RMSE when the input carries the target. */
+  private[apps] def score(spark: SparkSession, inputPath: String,
+      plane: DataFrame, pipelineModel: PipelineModel,
+      tree: Option[DecisionTreeRegressionModel], outputDir: String,
+      name: String): Unit = {
+    val raw = IO.readCsv(spark, inputPath, Some(Schemas.flights))
+    val prepared = Prepare.prepareData(Cleaning.dropForbidden(raw), plane)
+    val transformed = pipelineModel.transform(prepared)
+    val scored = tree.map(_.transform(transformed)).getOrElse(transformed)
+    val labeled = FlightModel.addLabels(scored)
+    sink(labeled, outputDir, name)
+    if (labeled.columns.contains("prediction") &&
+        labeled.columns.contains(FlightModel.TargetCol))
+      FlightModel.evaluate(labeled).foreach { case (mae, rmse) =>
+        println(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f")
+      }
+  }
+
+  /** `--plane-data` CSV, or the generated plane table by default. */
+  private[apps] def planeData(spark: SparkSession,
+      planePath: Option[String]): DataFrame =
+    planePath
+      .map(p => IO.readCsv(spark, p, Some(Schemas.planeData)))
+      .getOrElse(graft.sources.FlightsGenerator.planeData(spark))
+
+  /** The value after `flag` in `args`, if any. */
+  private[apps] def optArg(args: Array[String], flag: String): Option[String] = {
+    val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
 
   /** S4 + S5/S6: parquet dir + single-file CSV of the primitive columns
@@ -120,30 +136,16 @@ object ScoreApp {
     require(positional.length >= 3,
       "usage: ScoreApp <input.csv> <modelDir> <outputDir> [--plane-data p]")
     val Array(inputPath, modelDir, outputDir) = positional.take(3)
-    def optArg(flag: String): Option[String] = {
-      val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-    }
     val spark = TrainApp.session("FlightDelayScoringApp")
-    try run(spark, inputPath, modelDir, outputDir, optArg("--plane-data"))
+    try run(spark, inputPath, modelDir, outputDir,
+      TrainApp.optArg(args, "--plane-data"))
     finally spark.stop()
   }
 
   def run(spark: SparkSession, inputPath: String, modelDir: String,
       outputDir: String, planePath: Option[String]): Unit = {
     val (pipelineModel, tree) = FlightModel.loadModels(spark, modelDir)
-    val raw = IO.readCsv(spark, inputPath, Some(Schemas.flights))
-    val plane = planePath
-      .map(p => IO.readCsv(spark, p, Some(Schemas.planeData)))
-      .getOrElse(graft.sources.FlightsGenerator.planeData(spark))
-    val prepared = Prepare.prepareData(Cleaning.dropForbidden(raw), plane)
-    val transformed = pipelineModel.transform(prepared)
-    val scored = tree.map(_.transform(transformed)).getOrElse(transformed)
-    val labeled = FlightModel.addLabels(scored)
-    TrainApp.sink(labeled, outputDir, "scored")
-    if (labeled.columns.contains("prediction") &&
-        labeled.columns.contains(FlightModel.TargetCol))
-      FlightModel.evaluate(labeled).foreach { case (mae, rmse) =>
-        println(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f")
-      }
+    TrainApp.score(spark, inputPath, TrainApp.planeData(spark, planePath),
+      pipelineModel, tree, outputDir, "scored")
   }
 }

@@ -1,13 +1,19 @@
 package graft.gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Gate, Gate.Sql
+import graft.operators.Calibration
 import Shared._
 
 /** Scalar-function battery (SURVEY §2.8) and the UDF surface
   * (SURVEY §2.9). */
 private[graft] object FunctionGates {
+  // the isotonic fit q_f_isotonic and q_f_calibrate share, once per sfDir
+  private val isoFit = new PerDir[DataFrame, Calibration.IsoFit](
+    (lineitem, _) => Calibration.fitDiscountIsotonic(lineitem))
+
   val gates: Seq[Gate] = Seq(
     // F1 concat_ws, F2 regexp_replace, F3 substring, F4 cast, F5 when,
     // F6 sin (rounded), F7 arithmetic incl. integer div/mod on epoch nanos,
@@ -322,20 +328,27 @@ private[graft] object FunctionGates {
     // F-isotonic: PAV calibration repair of the discrete forecast (the
     // q_a_brier panel) — one bin aggregate is the data-scale pass, the
     // exact-integer PAV runs driver-side on the config-sized panel
-    Gate("q_f_isotonic", (s, dir) =>
-      graft.operators.Calibration.isotonicGate(t(s, dir, "lineitem"), dir),
+    Gate.fitted("q_f_isotonic", "p" -> "DOUBLE", "n" -> "BIGINT",
+        "rate_raw" -> "DOUBLE", "rate_iso" -> "DOUBLE")((s, dir) => {
+      val fit = isoFit(t(s, dir, "lineitem"), dir)
+      fit -> Calibration.isotonicTable(s, fit)
+    })(
       // isotonic: bins + raw rates recomputed independently; the PAV
-      // fit joins in as dump-time memo literals (spec-gated solve)
-      Sql(() => graft.operators.Calibration.isotonicOracleSql())),
+      // fit joins in as dump-time literals (spec-gated solve)
+      Calibration.isotonicOracleSql(_)),
 
     // F-calibrate: APPLY side of the isotonic fit — per-row map-side
     // step-function lookup (literal threshold/rate arrays, no join) of
     // a score the fit never saw, then a (score, score_iso) census
-    Gate("q_f_calibrate", (s, dir) =>
-      graft.operators.Calibration.calibrateGate(t(s, dir, "lineitem"), dir),
-      // calibrate-apply: fitted map as memo VALUES; the step lookup is
+    Gate.fitted("q_f_calibrate", "score" -> "DOUBLE", "score_iso" -> "DOUBLE",
+        "n" -> "BIGINT")((s, dir) => {
+      val lineitem = t(s, dir, "lineitem")
+      val fit = isoFit(lineitem, dir)
+      fit -> Calibration.calibrateCensus(lineitem, fit)
+    })(
+      // calibrate-apply: fitted map as VALUES; the step lookup is
       // recomputed independently as a correlated last-threshold subquery
-      Sql(() => graft.operators.Calibration.calibrateOracleSql())),
+      Calibration.calibrateOracleSql(_)),
 
     // F-impute: per-entity mean imputation of planted nulls — the
     // group mean computed in the same window pass that fills (no

@@ -341,11 +341,15 @@ private[graft] object ScanGates {
     // a million-file lake inventories in a map pass. ORACLED against
     // DuckDB's own parquet_metadata() over the SAME file — a genuinely
     // independent footer reader, not a self-computed golden.
-    Gate("q_s_footers", (s, dir) =>
-      graft.sources.ParquetMeta.gateProfile(s, dir),
-      // parquet footers: DuckDB's parquet_metadata() over the memoized
-      // gate path — an independent footer reader over the same bytes
-      Sql(() => graft.sources.ParquetMeta.gateOracleSql())),
+    Gate.fitted("q_s_footers", "column_path" -> "VARCHAR", "n_chunks" -> "BIGINT",
+        "num_values" -> "BIGINT", "null_count" -> "BIGINT",
+        "compressed_bytes" -> "BIGINT", "uncompressed_bytes" -> "BIGINT")((s, dir) => {
+      val path = s"$dir/lineitem.parquet"
+      path -> graft.sources.ParquetMeta.columnProfile(s, path)
+    })(
+      // parquet footers: DuckDB's parquet_metadata() over the gate's
+      // last path — an independent footer reader over the same bytes
+      graft.sources.ParquetMeta.footersOracleSql(_)),
 
     // S-compact: sorted-compaction maintenance pass — range-partitioned,
     // within-file-sorted rewrite (restores row-group skipping for key

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Helpers every gate family shares: fixture reads, per-sfDir scratch
-  * names, decimal-exact aggregates, the IVF index fixture and the
-  * oracle twins more than one gate uses. */
+  * names, the per-sfDir fit memo, decimal-exact aggregates, the IVF
+  * index fixture and the oracle twins more than one gate uses. */
 private[graft] object Shared {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -37,6 +37,15 @@ private[graft] object Shared {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
+  /** Engine-trained gate state, fitted once per sfDir from the gate's
+    * own input `I` (so a fit reads nothing its gate did not) and reused
+    * by every later call on that dir — gates that share a fit share one
+    * instance. */
+  final class PerDir[I, S](fit: (I, String) => S) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, S]()
+    def apply(in: I, dir: String): S = memo.computeIfAbsent(dir, fit(in, _))
+  }
+
   /** Pre-built IVF index fixture: quantizer training + corpus assignment
     * run ONCE per (sfDir) and land on disk as a cid-partitioned parquet
     * (the "stored bucketed by list" layout a deployed IVF index uses) +
@@ -45,25 +54,23 @@ private[graft] object Shared {
     * nprobe lists — not the offline index build. */
   final case class IvfIdx(listsDir: String,
       centroids: Seq[(Int, Seq[Float])], query: Array[Float])
-  private val ivfIndexCache = new java.util.concurrent.ConcurrentHashMap[String, IvfIdx]()
-  def ivfIndex(s: SparkSession, dir: String): IvfIdx =
-    ivfIndexCache.computeIfAbsent(dir, _ => {
-      val sim = graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val centroids = sim.trainCentroids(emb, "embedding", k = 8, maxIter = 5)
-      val assigned = sim.ivfAssign(emb, "vec_id", "embedding", centroids)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_index_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-      graft.sources.IO.writePartitioned(assigned, s"$out/lists", Seq("cid"))
-      // centroid table + fixture query vector are config-sized — they live
-      // with the index as driver-side data (a deployment ships them with
-      // the model artifact), so the probe pays no lookup jobs for them
-      val cents = centroids.collect().map(r =>
-        (r.getInt(0), r.getSeq[Float](1))).toSeq
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      IvfIdx(s"$out/lists", cents, q)
-    })
+  val ivfIndex = new PerDir[SparkSession, IvfIdx]((s, dir) => {
+    val sim = graft.operators.Similarity
+    val emb = t(s, dir, "embeddings")
+    val centroids = sim.trainCentroids(emb, "embedding", k = 8, maxIter = 5)
+    val assigned = sim.ivfAssign(emb, "vec_id", "embedding", centroids)
+    val out = new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_ivf_index_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
+    graft.sources.IO.writePartitioned(assigned, s"$out/lists", Seq("cid"))
+    // centroid table + fixture query vector are config-sized — they live
+    // with the index as driver-side data (a deployment ships them with
+    // the model artifact), so the probe pays no lookup jobs for them
+    val cents = centroids.collect().map(r =>
+      (r.getInt(0), r.getSeq[Float](1))).toSeq
+    val q = emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).head().getSeq[Float](0).toArray
+    IvfIdx(s"$out/lists", cents, q)
+  })
 
   /** Shared engine side of the two ANN contract gates (the twin of
     * [[annContractOracleSql]]): the exact brute-force top-k rows

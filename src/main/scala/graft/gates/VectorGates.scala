@@ -1,12 +1,50 @@
 package graft.gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Gate, Gate.Sql
+import graft.operators.{Alignment, Pca, ProductQuantization, Similarity}
 import Shared._
 
 /** Embedding gates: similarity search, ANN indexes, clustering,
   * quantization, PCA and selection. */
 private[graft] object VectorGates {
+  // Engine-trained state the fitted gates' twins inline, fitted once per
+  // sfDir; gates that share a fit share its instance.
+  private val pcaFit = new PerDir[DataFrame, Pca.PcaModel](
+    (emb, _) => Pca.fit(emb, "embedding", 64, k = 2))
+  private val pqFit =
+    new PerDir[DataFrame, (ProductQuantization.PQModel, Array[Double])]((emb, _) => {
+      val model = ProductQuantization.train(emb, "vec_id", "embedding", 64, 4, 8, 2)
+      val q = emb.orderBy(col("vec_id")).limit(1)
+        .select(col("embedding").cast("array<double>"))
+        .head().getSeq[Double](0).toArray
+      (model, q)
+    })
+  private val opqFit = new PerDir[DataFrame, ProductQuantization.OpqModel](
+    (base, _) => ProductQuantization.trainOpq(base, "vec_id", "__xs", 16, 4, 8, 2))
+  private val procrustesFit = new PerDir[DataFrame, Alignment.ProcrustesModel](
+    (paired, _) => Alignment.fitPair(paired))
+  private val pipeline5Fit =
+    new PerDir[DataFrame, (Alignment.ProcrustesModel, Similarity.Codebook)](
+      (paired, dir) => (procrustesFit(paired, dir), Alignment.trainPairCodebook(paired)))
+  private val mnnIvfFit = new PerDir[DataFrame, Similarity.Codebook](
+    (emb, _) => Similarity.trainCodebook(emb, "embedding", 8))
+  private val pipeline3Fit = new PerDir[DataFrame, (Pca.PcaModel, Similarity.Codebook)](
+    (emb, _) => Similarity.fitPcaIvf(emb))
+  private val pipeline3AutoFit = new PerDir[DataFrame, (Pca.PcaModel, Similarity.Codebook)](
+    (emb, _) => Similarity.fitPcaIvf(emb, kIvf = 0))
+
+  /** The OPQ gates' corpus: the first 16 embedding dims as `__xs`. */
+  private def opqBase(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), expr("slice(embedding, 1, 16)").as("__xs"))
+
+  // empty-marker columns several fitted gates share
+  private val adistCols = Seq("vec_id" -> "BIGINT", "adist" -> "DOUBLE")
+  private val pcaCols = Seq("vec_id" -> "BIGINT", "pc1" -> "DOUBLE", "pc2" -> "DOUBLE")
+  private val mnnCols =
+    Seq("cid" -> "INTEGER", "id1" -> "BIGINT", "id2" -> "BIGINT", "cos" -> "DOUBLE")
+
   val gates: Seq[Gate] = Seq(
     // X-sim: brute-force cosine top-k against the vec_id=0 embedding —
     // the exact ANN baseline (fused native cosine expression)
@@ -53,17 +91,18 @@ private[graft] object VectorGates {
     // (map-side); ADC distance folds m literal-table lookups and plans
     // as TakeOrderedAndProject. The generated oracle re-encodes every
     // vector independently from the inlined codebooks.
-    Gate("q_x_pq", (s, dir) => {
-      val pq = graft.operators.ProductQuantization
+    Gate.fitted("q_x_pq", adistCols: _*)((s, dir) => {
+      val pq = ProductQuantization
       val emb = t(s, dir, "embeddings")
-      val (model, qv) = pq.gateModel(emb, dir)
-      pq.adcTopK(pq.encode(emb, "vec_id", "embedding", model),
+      val (model, qv) = pqFit(emb, dir)
+      (model, qv) -> pq.adcTopK(pq.encode(emb, "vec_id", "embedding", model),
         "vec_id", "codes", model, qv, 10)
-    },
+    })(
       // product quantization: generated twin re-encodes from the inlined
       // codebooks (same distance fold + tie rule as the fused expression)
       // and re-ranks with the same literal lookup chain
-      Sql(() => graft.operators.ProductQuantization.gateOracleSql(10))),
+      { case (model, qv) => ProductQuantization.adcOracleSql(
+        "embeddings", "vec_id", "embedding", model, qv, 10) }),
 
     // X-opq: OPTIMIZED product quantization (Ge et al., CVPR'13, one
     // non-parametric alternation) — rotate the space (orthogonal
@@ -74,28 +113,40 @@ private[graft] object VectorGates {
     // reconstruction error under raw PQ vs OPQ (the training objective)
     // — the oracle independently re-encodes every vector against BOTH
     // inlined codebooks and re-derives both distortions.
-    Gate("q_x_opq", (s, dir) =>
-      graft.operators.ProductQuantization.opqGate(
-        t(s, dir, "embeddings"), dir),
-      // OPQ: rotation + both codebooks inlined from the dump-time memo;
+    Gate.fitted("q_x_opq", "n" -> "BIGINT", "distortion_raw" -> "DOUBLE",
+        "distortion_opq" -> "DOUBLE", "orth_err" -> "DOUBLE")((s, dir) => {
+      val base = opqBase(t(s, dir, "embeddings"))
+      val model = opqFit(base, dir)
+      model -> ProductQuantization.opqDistortionReport(base, "__xs", model)
+    })(
+      // OPQ: rotation + both codebooks inlined from the fitted model;
       // identical assignment tie rules and left-assoc distortion folds
-      Sql(() => graft.operators.ProductQuantization.opqOracleSql())),
+      ProductQuantization.opqOracleSql(_)),
 
     // X-opq-serve: the OPQ SERVE shape an ANN user actually runs —
     // rotate the query (driver, model-sized), rotate+encode the corpus
     // map-side (fused argmins over rotated slices), ADC top-k against
     // the OPQ codebooks via the rotated query's literal lookup tables
     // (TakeOrderedAndProject bounded heap; zero pre-top-k shuffles).
-    // Same per-dir trained model as q_x_opq (shared memo); the oracle
+    // Same per-dir trained model as q_x_opq (shared fit — whichever gate
+    // runs first trains), probing the first-16 slice of the vec_id=5
+    // fixture vector the codebooks were trained over; the oracle
     // re-derives rotation → assignment → ADC fold end to end.
-    Gate("q_x_opq_serve", (s, dir) =>
-      graft.operators.ProductQuantization.opqServeGate(
-        t(s, dir, "embeddings"), dir),
+    Gate.fitted("q_x_opq_serve", adistCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val base = opqBase(emb)
+      val model = opqFit(base, dir)
+      val q = emb.filter(col("vec_id") === 5L)
+        .select(expr("slice(embedding, 1, 16)"))
+        .head().getSeq[Float](0).toArray
+      (model, ProductQuantization.rotateQuery(model.rotation, q)) ->
+        ProductQuantization.opqServeTopK(base, "vec_id", "__xs", model, q, 10)
+    })(
       // OPQ serve: rotation, OPQ codebooks and the ROTATED query's ADC
-      // lookup tables inlined from the dump-time memo; the twin re-rotates
+      // lookup tables inlined from the fitted state; the twin re-rotates
       // every corpus vector, re-assigns with the shared (d, cid) tie rule
       // and re-ranks with the same literal lookup chain
-      Sql(() => graft.operators.ProductQuantization.opqServeOracleSql())),
+      { case (model, rq) => ProductQuantization.opqServeOracleSql(model, rq) }),
 
     // X-sim: hyperplane-LSH ANN top-k, gated through its recall
     // contract (SimilaritySpec additionally asserts recall on planted
@@ -652,54 +703,69 @@ private[graft] object VectorGates {
     // (config-sized), then pure map-side projection through the fused
     // dot expression; the oracle is generated at dump time from the
     // fitted components (the q_x_pq memo pattern)
-    Gate("q_x_pca", (s, dir) =>
-      graft.operators.Pca.pcaGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("vec_id")),
+    Gate.fitted("q_x_pca", pcaCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val model = pcaFit(emb, dir)
+      model -> Pca.project(emb, "vec_id", "embedding", model).orderBy(col("vec_id"))
+    })(
       // PCA projection: dump-time twin from the fitted components as
       // DOUBLE[] literals — same dot fold, same offset literal, round-6
-      Sql(() => graft.operators.Pca.pcaOracleSql())),
+      Pca.oracleSql(_)),
 
     // X-outliers: whitened-subspace outlier mining — Mahalanobis
     // distance in the kept PCA subspace as one map-side pass over the
     // memoized model, top-k via TakeOrderedAndProject
-    Gate("q_x_outliers", (s, dir) =>
-      graft.operators.Pca.pcaOutlierGate(t(s, dir, "embeddings"), dir),
+    Gate.fitted("q_x_outliers", "vec_id" -> "BIGINT", "score" -> "DOUBLE")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val model = pcaFit(emb, dir)
+      model -> Pca.outlierTopK(emb, model)
+    })(
       // outliers: whitened-projection twin as a subquery, same
       // left-fold squared norm and top-k tie rule
-      Sql(() => graft.operators.Pca.pcaOutlierOracleSql())),
+      Pca.outlierOracleSql(_)),
 
     // X-procrustes: embedding-version alignment — one dim² cross-moment
     // aggregate + driver polar-factor solve (Jacobi on MᵀM), then one
     // map-side residual pass scoring the shipped float rotation against
     // a planted signed-permutation target (must recover: mean_cos 1.0,
     // frob_rel 0.0)
-    Gate("q_x_procrustes", (s, dir) =>
-      graft.operators.Alignment.procrustesGate(t(s, dir, "embeddings"),
-        dir),
-      // procrustes: dump-time memo twin — literal rotation rows, same
+    Gate.fitted("q_x_procrustes", "n" -> "BIGINT", "mean_cos" -> "DOUBLE",
+        "frob_rel" -> "DOUBLE", "orth_err" -> "DOUBLE")((s, dir) => {
+      val paired = Alignment.withPair(t(s, dir, "embeddings"))
+      val model = procrustesFit(paired, dir)
+      model -> Alignment.procrustesResidual(paired, model)
+    })(
+      // procrustes: dump-time twin — literal rotation rows, same
       // planted pair, left-fold dots, round-6 cosine, round-9 residuals
-      Sql(() => graft.operators.Alignment.procrustesOracleSql())),
+      Alignment.procrustesOracleSql(_)),
 
     // X-pipeline5: serve-while-backfilling capstone — old-space queries
     // align through the fitted rotation, then hit the NEW-space IVF
     // index (fused map-side assign both sides, one block-keyed top-1
     // join); per-centroid census of self-retrieval + mean cosine
-    Gate("q_x_pipeline5", (s, dir) =>
-      graft.operators.Alignment.alignedServeGate(t(s, dir, "embeddings"),
-        dir),
-      // pipeline5: rotation + codebook as memo literals; the oracle
+    // (the rotation is q_x_procrustes' shared fit)
+    Gate.fitted("q_x_pipeline5", "cid" -> "INTEGER", "n_q" -> "BIGINT",
+        "n_self" -> "BIGINT", "mean_cos" -> "DOUBLE")((s, dir) => {
+      val paired = Alignment.withPair(t(s, dir, "embeddings"))
+      val (model, cents) = pipeline5Fit(paired, dir)
+      (model, cents) -> Alignment.alignedServe(paired, model, cents)
+    })(
+      // pipeline5: rotation + codebook as literals; the oracle
       // realigns, re-assigns both sides (crossJoin+window argmax twin),
       // and recomputes the top-1 census independently
-      Sql(() => graft.operators.Alignment.alignedServeOracleSql())),
+      { case (model, cents) => Alignment.alignedServeOracleSql(model, cents) }),
 
     // X-pca: WHITENED projection — the same memoized fit, each
     // component scaled to unit variance by / sqrt(λ) with λ as an
     // in-plan literal both engines sqrt at execution (IEEE-exact)
-    Gate("q_x_pca_whiten", (s, dir) =>
-      graft.operators.Pca.pcaWhitenGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("vec_id")),
+    Gate.fitted("q_x_pca_whiten", pcaCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val model = pcaFit(emb, dir)
+      model -> Pca.projectWhitened(emb, "vec_id", "embedding", model)
+        .orderBy(col("vec_id"))
+    })(
       // PCA whitening: the same dump-time twin with / sqrt(λ) literals
-      Sql(() => graft.operators.Pca.pcaOracleSql(whiten = true))),
+      Pca.oracleSql(_, whiten = true)),
 
     // X-mutualnn: mutual-nearest-neighbor pairs within label blocks —
     // the reciprocity-filtered embedding-dedup refinement; quadratic
@@ -987,13 +1053,15 @@ private[graft] object VectorGates {
     // inside the trained centroid blocks; the oracle is generated at
     // dump time from the trained centroids (the q_x_pq pattern), so
     // the engine-specific training state is itself under the gate
-    Gate("q_x_mnn_ivf", (s, dir) =>
-      graft.operators.Similarity.mnnIvfGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("id1")),
-      // MNN over trained IVF blocks: dump-time twin from the memoized
+    Gate.fitted("q_x_mnn_ivf", mnnCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val cents = mnnIvfFit(emb, dir)
+      cents -> Similarity.mnnIvf(emb, cents).orderBy(col("id1"))
+    })(
+      // MNN over trained IVF blocks: dump-time twin from the trained
       // centroids — same raw-cosine argmax assignment (fold order, ties
       // to lowest cid) and the same block-scoped MNN
-      Sql(() => graft.operators.Similarity.mnnIvfOracleSql())),
+      Similarity.mnnIvfOracleSql(_)),
 
     // X-pipeline3: the FULL production embedding chain — PCA(k=16)
     // reduction (one moment aggregate + map-side projection) → IVF
@@ -1001,12 +1069,14 @@ private[graft] object VectorGates {
     // inside the trained blocks; PCA components and the trained
     // codebook both memoize per dir so the dump-time twin regenerates
     // the whole chain from literals
-    Gate("q_x_pipeline3", (s, dir) =>
-      graft.operators.Similarity.pcaIvfMnnGate(t(s, dir, "embeddings"), dir)
-        .orderBy(col("id1")),
+    Gate.fitted("q_x_pipeline3", mnnCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val (model, cents) = pipeline3Fit(emb, dir)
+      (model, cents) -> Similarity.pcaIvfMnn(emb, model, cents).orderBy(col("id1"))
+    })(
       // PCA → trained IVF → block MNN: dump-time twin regenerating the
       // whole chain (projection literals → argmax assignment → MNN)
-      Sql(() => graft.operators.Similarity.pcaIvfMnnOracleSql())),
+      { case (model, cents) => Similarity.pcaIvfMnnOracleSql(model, cents) }),
 
     // X-pipeline3-auto: the PRODUCTION variant of the chain above —
     // the IVF codebook AUTO-SIZES with the corpus (kIvf = 0 →
@@ -1016,14 +1086,15 @@ private[graft] object VectorGates {
     // data at the round-11 sf1 sweep — this path is what a user gets
     // by DEFAULT now, and the sweep gates its ratio. Same dump-time
     // oracle mechanics (the twin inlines the trained codebook).
-    Gate("q_x_pipeline3_auto", (s, dir) =>
-      graft.operators.Similarity.pcaIvfMnnGate(t(s, dir, "embeddings"), dir,
-          kIvf = 0)
-        .orderBy(col("id1")),
+    Gate.fitted("q_x_pipeline3_auto", mnnCols: _*)((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val (model, cents) = pipeline3AutoFit(emb, dir)
+      (model, cents) -> Similarity.pcaIvfMnn(emb, model, cents).orderBy(col("id1"))
+    })(
       // the AUTO-SIZED production path: same dump-time twin, regenerated
-      // from the auto variant's memoized model + codebook (the twin
+      // from the auto variant's fitted model + codebook (the twin
       // inlines whatever centroid count training produced)
-      Sql(() => graft.operators.Similarity.pcaIvfMnnOracleSql(auto = true))),
+      { case (model, cents) => Similarity.pcaIvfMnnOracleSql(model, cents) }),
 
     // X-pipeline4-auto: the annotation-budget chain on the PRODUCTION
     // defaults — mutualNearestPairs' maxBlock auto-resolves to

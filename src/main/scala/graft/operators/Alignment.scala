@@ -78,11 +78,7 @@ object Alignment {
     ProcrustesModel(dim, n, r, math.sqrt(oe))
   }
 
-  // ───────── q_x_procrustes gate + generated oracle (memo) ─────────
-
-  private val gateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ProcrustesModel]()
-  @volatile private var lastDir: Option[String] = None
+  // ───────── q_x_procrustes gate + generated oracle ─────────
 
   private val GateDim = 16
 
@@ -91,7 +87,7 @@ object Alignment {
     * orthogonal (signed-permutation) transform, so the fit must
     * recover it and the residual must vanish up to float quantization
     * of the shipped rotation. */
-  private def withPair(emb: DataFrame): DataFrame =
+  def withPair(emb: DataFrame): DataFrame =
     emb
       .withColumn("__xs", expr(s"slice(embedding, 1, $GateDim)"))
       // GateDim is a compile-time constant, so the signed reversal
@@ -103,17 +99,17 @@ object Alignment {
         if (j % 2 == 1) src else negate(src)
       }: _*))
 
-  /** The q_x_procrustes gate body: fit (memoized per dir) on the
-    * planted pair, then ONE residual pass scoring the shipped
-    * rotation — per-row round-6 cosine between R·x and y (decimal
-    * mean) and the relative Frobenius error Σ‖Rx−y‖²/Σ‖y‖² (round-9
-    * decimal sums). A perfect recovery reads mean_cos 1.0 and
-    * frob_rel 0.0. */
-  def procrustesGate(emb: DataFrame, dir: String): DataFrame = {
-    val paired = withPair(emb)
-    val model = gateCache.computeIfAbsent(dir,
-      _ => fitProcrustes(paired, "__xs", "__ys", GateDim))
-    lastDir = Some(dir)
+  /** The q_x_procrustes fit: the rotation recovering the planted
+    * pair of [[withPair]]. */
+  def fitPair(paired: DataFrame): ProcrustesModel =
+    fitProcrustes(paired, "__xs", "__ys", GateDim)
+
+  /** The q_x_procrustes gate body: ONE residual pass over the planted
+    * pair of [[withPair]] scoring the shipped rotation of `model` —
+    * per-row round-6 cosine between R·x and y (decimal mean) and the
+    * relative Frobenius error Σ‖Rx−y‖²/Σ‖y‖² (round-9 decimal sums). A
+    * perfect recovery reads mean_cos 1.0 and frob_rel 0.0. */
+  def procrustesResidual(paired: DataFrame, model: ProcrustesModel): DataFrame = {
     val comps = model.rotation.map(rowW =>
       graft.functions.VectorExprs.dot(col("__xs"),
         typedLit(rowW)))
@@ -149,16 +145,20 @@ object Alignment {
   // align through the fitted rotation and then QUERY that index — so
   // a cache/index built on the new space keeps serving old-space
   // queries while re-embedding backfills. Engine-trained state
-  // (rotation + k-means codebook) memoizes per dir; the oracle
+  // (rotation + k-means codebook) is fitted once per dir; the oracle
   // regenerates the entire chain (align → assign both sides →
   // within-block top-1 → per-block census) from literals at dump time.
 
-  private val p5Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (ProcrustesModel, Array[(Int, Array[Float])])]()
-  @volatile private var p5LastDir: Option[String] = None
+  /** The new-space codebook of q_x_pipeline5: `kIvf` centroids trained
+    * on the planted pair's destination vectors. */
+  def trainPairCodebook(paired: DataFrame, kIvf: Int = 8): Similarity.Codebook =
+    Similarity.trainCodebook(paired.select(col("vec_id"),
+      col("__ys").cast("array<float>").as("nvec")), "nvec", kIvf)
 
-  /** The q_x_pipeline5 gate body. Data-scale passes: the one
-    * cross-moment aggregate inside the (memoized) fit, one map-side
+  /** The q_x_pipeline5 gate body over the planted pair of
+    * [[withPair]], its rotation `model` and the new-space codebook
+    * `cents`. Data-scale passes (the fits add one cross-moment
+    * aggregate and the k-means jobs): one map-side
     * align+assign scan per side (fused [[graft.functions.VectorExprs
     * .nearestCentroidCosine]] argmax — zero exchanges), and ONE
     * block-keyed join for the top-1 retrieval (blocks guarded by
@@ -168,23 +168,9 @@ object Alignment {
     * twin as top-1 (the serve-correctness number; all of them, for an
     * exactly-recoverable planted transform), and the round-6 decimal
     * mean retrieval cosine. */
-  def alignedServeGate(emb: DataFrame, dir: String, kIvf: Int = 8): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val paired = withPair(emb)
-    val (model, cents) = p5Cache.computeIfAbsent(dir, _ => {
-      val m = gateCache.computeIfAbsent(dir,
-        _ => fitProcrustes(paired, "__xs", "__ys", GateDim))
-      val newCorpus = paired.select(col("vec_id"),
-        col("__ys").cast("array<float>").as("nvec"))
-      val c = Similarity.trainCentroids(newCorpus, "nvec", kIvf).collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
-      (m, c)
-    })
-    p5LastDir = Some(dir)
-    val cdf = cents.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cvec")
-      .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
+  def alignedServe(paired: DataFrame, model: ProcrustesModel,
+      cents: Similarity.Codebook): DataFrame = {
+    val cdf = Similarity.codebookFrame(paired.sparkSession, cents)
     // old-space queries, aligned into the new space through R (float
     // quantization matches the REAL cast in the twin exactly)
     val comps = model.rotation.map(rw =>
@@ -211,141 +197,131 @@ object Alignment {
       .orderBy(col("cid"))
   }
 
-  /** Generated twin of [[alignedServeGate]]: pair + rotation folds as
+  /** Generated twin of [[alignedServe]]: pair + rotation folds as
     * in [[procrustesOracleSql]], the crossJoin+window argmax
     * assignment of BOTH sides against the centroid literals (the
     * [[Similarity.pcaIvfMnnOracleSql]] pattern), within-block top-1,
     * per-cid census. */
-  def alignedServeOracleSql(table: String = "embeddings"): String =
-    p5LastDir.flatMap(d => Option(p5Cache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS INTEGER) AS cid, CAST(NULL AS BIGINT) AS n_q, " +
-          "CAST(NULL AS BIGINT) AS n_self, CAST(NULL AS DOUBLE) AS mean_cos " +
-          "WHERE FALSE"
-      case Some((model, cents)) =>
-        val dim = model.dim
-        val rx = model.rotation.zipWithIndex.map { case (w, j) =>
-          val lits = w.map(_.toDouble.toString).mkString(", ")
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
-             |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
-        }.mkString(",\n    ")
-        val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
-        val ceRows = cents.map { case (cid, v) =>
-          s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-        }.mkString(",\n    ")
-        def fold(x: String, y: String) =
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)),
-             |        (a, b) -> a + b)""".stripMargin
-        def cfold(x: String) =
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> CAST($x[i] AS DOUBLE) * c.cv[i]),
-             |        (a, b) -> a + b)""".stripMargin
-        val cnorm =
-          s"""sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))""".stripMargin
-        s"""WITH pair AS (
-           |  SELECT vec_id, embedding[1:$dim] AS xs,
-           |    list_transform(range(1, ${dim + 1}), j ->
-           |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
-           |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
-           |  FROM $table),
-           |pr AS (
-           |  SELECT vec_id, CAST(ys AS REAL[]) AS nv, av FROM (
-           |    SELECT vec_id, ys, CAST([$rxArr] AS REAL[]) AS av FROM (
-           |      SELECT vec_id, ys,
-           |    $rx
-           |      FROM pair))),
-           |ce AS (SELECT * FROM (VALUES
-           |    $ceRows) t(cid, cv)),
-           |qa AS (
-           |  SELECT vec_id, cid, av FROM (
-           |    SELECT e.vec_id, c.cid, e.av,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cfold("e.av")} / (sqrt(${fold("e.av", "e.av")}) * $cnorm)
-           |        DESC, c.cid) AS rn
-           |    FROM pr e CROSS JOIN ce c)
-           |  WHERE rn = 1),
-           |na AS (
-           |  SELECT vec_id, cid, nv FROM (
-           |    SELECT e.vec_id, c.cid, e.nv,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cfold("e.nv")} / (sqrt(${fold("e.nv", "e.nv")}) * $cnorm)
-           |        DESC, c.cid) AS rn
-           |    FROM pr e CROSS JOIN ce c)
-           |  WHERE rn = 1),
-           |s AS (
-           |  SELECT q.cid, q.vec_id AS qid, n.vec_id AS nid,
-           |    ROUND(${fold("q.av", "n.nv")}
-           |      / (sqrt(${fold("q.av", "q.av")})
-           |       * sqrt(${fold("n.nv", "n.nv")})), 6) AS cos
-           |  FROM qa q JOIN na n ON q.cid = n.cid),
-           |t1 AS (
-           |  SELECT cid, qid, nid, cos FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY qid
-           |      ORDER BY cos DESC, nid) AS rn FROM s)
-           |  WHERE rn = 1)
-           |SELECT cid, CAST(count(*) AS BIGINT) AS n_q,
-           |  CAST(SUM(CASE WHEN qid = nid THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_self,
-           |  ROUND(CAST(SUM(CAST(cos AS DECIMAL(38,6))) AS DOUBLE)
-           |    / count(*), 6) AS mean_cos
-           |FROM t1 GROUP BY cid ORDER BY cid""".stripMargin
-    }
+  def alignedServeOracleSql(model: ProcrustesModel,
+      cents: Similarity.Codebook, table: String = "embeddings"): String = {
+    val dim = model.dim
+    val rx = model.rotation.zipWithIndex.map { case (w, j) =>
+      val lits = w.map(_.toDouble.toString).mkString(", ")
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
+         |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
+    }.mkString(",\n    ")
+    val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
+    val ceRows = cents.map { case (cid, v) =>
+      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
+    }.mkString(",\n    ")
+    def fold(x: String, y: String) =
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |        i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)),
+         |        (a, b) -> a + b)""".stripMargin
+    def cfold(x: String) =
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |        i -> CAST($x[i] AS DOUBLE) * c.cv[i]),
+         |        (a, b) -> a + b)""".stripMargin
+    val cnorm =
+      s"""sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
+         |        i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))""".stripMargin
+    s"""WITH pair AS (
+       |  SELECT vec_id, embedding[1:$dim] AS xs,
+       |    list_transform(range(1, ${dim + 1}), j ->
+       |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
+       |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
+       |  FROM $table),
+       |pr AS (
+       |  SELECT vec_id, CAST(ys AS REAL[]) AS nv, av FROM (
+       |    SELECT vec_id, ys, CAST([$rxArr] AS REAL[]) AS av FROM (
+       |      SELECT vec_id, ys,
+       |    $rx
+       |      FROM pair))),
+       |ce AS (SELECT * FROM (VALUES
+       |    $ceRows) t(cid, cv)),
+       |qa AS (
+       |  SELECT vec_id, cid, av FROM (
+       |    SELECT e.vec_id, c.cid, e.av,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${cfold("e.av")} / (sqrt(${fold("e.av", "e.av")}) * $cnorm)
+       |        DESC, c.cid) AS rn
+       |    FROM pr e CROSS JOIN ce c)
+       |  WHERE rn = 1),
+       |na AS (
+       |  SELECT vec_id, cid, nv FROM (
+       |    SELECT e.vec_id, c.cid, e.nv,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${cfold("e.nv")} / (sqrt(${fold("e.nv", "e.nv")}) * $cnorm)
+       |        DESC, c.cid) AS rn
+       |    FROM pr e CROSS JOIN ce c)
+       |  WHERE rn = 1),
+       |s AS (
+       |  SELECT q.cid, q.vec_id AS qid, n.vec_id AS nid,
+       |    ROUND(${fold("q.av", "n.nv")}
+       |      / (sqrt(${fold("q.av", "q.av")})
+       |       * sqrt(${fold("n.nv", "n.nv")})), 6) AS cos
+       |  FROM qa q JOIN na n ON q.cid = n.cid),
+       |t1 AS (
+       |  SELECT cid, qid, nid, cos FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qid
+       |      ORDER BY cos DESC, nid) AS rn FROM s)
+       |  WHERE rn = 1)
+       |SELECT cid, CAST(count(*) AS BIGINT) AS n_q,
+       |  CAST(SUM(CASE WHEN qid = nid THEN 1 ELSE 0 END) AS BIGINT)
+       |    AS n_self,
+       |  ROUND(CAST(SUM(CAST(cos AS DECIMAL(38,6))) AS DOUBLE)
+       |    / count(*), 6) AS mean_cos
+       |FROM t1 GROUP BY cid ORDER BY cid""".stripMargin
+  }
 
-  /** Generated twin of [[procrustesGate]]: the same planted pair in
-    * SQL, the rotation rows inlined as DOUBLE literals from the memo
-    * (dump-time, the q_x_pq pattern), the same left-fold dots,
-    * round-6 cosine, and round-9 decimal residual sums. */
-  def procrustesOracleSql(table: String = "embeddings"): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS mean_cos, " +
-          "CAST(NULL AS DOUBLE) AS frob_rel, CAST(NULL AS DOUBLE) AS orth_err " +
-          "WHERE FALSE"
-      case Some(model) =>
-        val dim = model.dim
-        val rx = model.rotation.zipWithIndex.map { case (w, j) =>
-          val lits = w.map(_.toDouble.toString).mkString(", ")
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
-             |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
-        }.mkString(",\n    ")
-        val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
-        val d2 = (1 to dim)
-          .map(j => s"(rx$j - CAST(ys[$j] AS DOUBLE)) * " +
-            s"(rx$j - CAST(ys[$j] AS DOUBLE))")
-          .mkString(" + ")
-        val y2 = (1 to dim)
-          .map(j => s"CAST(ys[$j] AS DOUBLE) * CAST(ys[$j] AS DOUBLE)")
-          .mkString(" + ")
-        val orth = BigDecimal(model.orthErr)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        s"""WITH pair AS (
-           |  SELECT embedding[1:$dim] AS xs,
-           |    list_transform(range(1, ${dim + 1}), j ->
-           |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
-           |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
-           |  FROM $table),
-           |proj AS (
-           |  SELECT xs, ys,
-           |    $rx
-           |  FROM pair),
-           |scored AS (
-           |  SELECT
-           |    ROUND(list_cosine_similarity(
-           |      CAST(CAST([$rxArr] AS REAL[]) AS DOUBLE[]),
-           |      CAST(ys AS DOUBLE[])), 6) AS cos,
-           |    ROUND($d2, 9) AS d2, ROUND($y2, 9) AS y2
-           |  FROM proj)
-           |SELECT CAST(count(*) AS BIGINT) AS n,
-           |  ROUND(CAST(SUM(CAST(cos AS DECIMAL(38,6))) AS DOUBLE)
-           |    / count(*), 6) AS mean_cos,
-           |  ROUND(CAST(SUM(CAST(d2 AS DECIMAL(38,9))) AS DOUBLE) /
-           |    CAST(SUM(CAST(y2 AS DECIMAL(38,9))) AS DOUBLE), 6)
-           |    AS frob_rel,
-           |  $orth AS orth_err
-           |FROM scored""".stripMargin
-    }
+  /** Generated twin of [[procrustesResidual]]: the same planted pair
+    * in SQL, the rotation rows inlined as DOUBLE literals from the
+    * fitted model (dump-time, the q_x_pq pattern), the same left-fold
+    * dots, round-6 cosine, and round-9 decimal residual sums. */
+  def procrustesOracleSql(model: ProcrustesModel,
+      table: String = "embeddings"): String = {
+    val dim = model.dim
+    val rx = model.rotation.zipWithIndex.map { case (w, j) =>
+      val lits = w.map(_.toDouble.toString).mkString(", ")
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
+         |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
+    }.mkString(",\n    ")
+    val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
+    val d2 = (1 to dim)
+      .map(j => s"(rx$j - CAST(ys[$j] AS DOUBLE)) * " +
+        s"(rx$j - CAST(ys[$j] AS DOUBLE))")
+      .mkString(" + ")
+    val y2 = (1 to dim)
+      .map(j => s"CAST(ys[$j] AS DOUBLE) * CAST(ys[$j] AS DOUBLE)")
+      .mkString(" + ")
+    val orth = BigDecimal(model.orthErr)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    s"""WITH pair AS (
+       |  SELECT embedding[1:$dim] AS xs,
+       |    list_transform(range(1, ${dim + 1}), j ->
+       |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
+       |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
+       |  FROM $table),
+       |proj AS (
+       |  SELECT xs, ys,
+       |    $rx
+       |  FROM pair),
+       |scored AS (
+       |  SELECT
+       |    ROUND(list_cosine_similarity(
+       |      CAST(CAST([$rxArr] AS REAL[]) AS DOUBLE[]),
+       |      CAST(ys AS DOUBLE[])), 6) AS cos,
+       |    ROUND($d2, 9) AS d2, ROUND($y2, 9) AS y2
+       |  FROM proj)
+       |SELECT CAST(count(*) AS BIGINT) AS n,
+       |  ROUND(CAST(SUM(CAST(cos AS DECIMAL(38,6))) AS DOUBLE)
+       |    / count(*), 6) AS mean_cos,
+       |  ROUND(CAST(SUM(CAST(d2 AS DECIMAL(38,9))) AS DOUBLE) /
+       |    CAST(SUM(CAST(y2 AS DECIMAL(38,9))) AS DOUBLE), 6)
+       |    AS frob_rel,
+       |  $orth AS orth_err
+       |FROM scored""".stripMargin
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Isotonic (monotone non-decreasing) calibration of a discrete
@@ -93,133 +93,106 @@ object Calibration {
       "fit thresholds must be strictly ascending")
   }
 
-  // ───────── q_f_isotonic gate + generated oracle (memo) ─────────
+  // ───────── q_f_isotonic / q_f_calibrate gates + generated oracles ─────────
 
-  private final case class IsoMemo(bins: Seq[(Double, Long, Long)],
-      fitted: Seq[Double])
-  private val gateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IsoMemo]()
-  @volatile private var lastDir: Option[String] = None
+  /** A fitted isotonic map: the p-ascending `(p, n, s)` bins and the
+    * PAV rate of each. */
+  final case class IsoFit(bins: Seq[(Double, Long, Long)], fitted: Seq[Double])
 
-  /** The q_f_isotonic gate body: bin the discount-as-probability
-    * forecast against the return label (the q_a_brier panel), PAV on
-    * the driver, and emit the per-bin calibration table. The bin
-    * relation and raw rates are recomputed INDEPENDENTLY by the
-    * oracle; the fitted rates join in as dump-time memo literals
-    * (spec-gated PAV properties pin the solve itself). */
-  def isotonicGate(lineitem: DataFrame, dir: String): DataFrame = {
-    val memo = gateCache.computeIfAbsent(dir, _ => {
-      val rows = lineitem
-        .where(col("l_discount").isNotNull && col("l_returnflag").isNotNull)
-        .groupBy((col("l_discount") * lit(10.0)).as("__p"))
-        .agg(count(lit(1)).as("__n"),
-          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("__s"))
-        .collect()
-      require(rows.length <= 1024, "bin panel must be config-sized")
-      val bins = rows.toSeq
-        .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      IsoMemo(bins, pavFit(bins))
-    })
-    lastDir = Some(dir)
-    val spark = lineitem.sparkSession
+  /** The gates' fit: bin the discount-as-probability forecast against
+    * the return label (the q_a_brier panel), PAV on the driver. */
+  def fitDiscountIsotonic(lineitem: DataFrame): IsoFit = {
+    val rows = lineitem
+      .where(col("l_discount").isNotNull && col("l_returnflag").isNotNull)
+      .groupBy((col("l_discount") * lit(10.0)).as("__p"))
+      .agg(count(lit(1)).as("__n"),
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("__s"))
+      .collect()
+    require(rows.length <= 1024, "bin panel must be config-sized")
+    val bins = rows.toSeq
+      .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    IsoFit(bins, pavFit(bins))
+  }
+
+  /** The q_f_isotonic gate body: the per-bin calibration table of
+    * `fit`. The bin relation and raw rates are recomputed
+    * INDEPENDENTLY by the oracle; the fitted rates join in as
+    * dump-time literals (spec-gated PAV properties pin the solve
+    * itself). */
+  def isotonicTable(spark: SparkSession, fit: IsoFit): DataFrame = {
     import spark.implicits._
-    memo.bins.zip(memo.fitted).map { case ((p, n, s), iso) =>
+    fit.bins.zip(fit.fitted).map { case ((p, n, s), iso) =>
       val raw = BigDecimal.valueOf(s.toDouble / n.toDouble)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       (p, n, raw, iso)
     }.toDF("p", "n", "rate_raw", "rate_iso").orderBy(col("p"))
   }
 
-  /** Generated twin of [[isotonicGate]]: bins and raw rates recomputed
+  /** Generated twin of [[isotonicTable]]: bins and raw rates recomputed
     * from the parquet table; fitted rates inlined as a VALUES relation
-    * from the memo (literal doubles round-trip via toString). */
-  def isotonicOracleSql(table: String = "lineitem"): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS DOUBLE) AS p, CAST(NULL AS BIGINT) AS n, " +
-          "CAST(NULL AS DOUBLE) AS rate_raw, CAST(NULL AS DOUBLE) AS rate_iso " +
-          "WHERE FALSE"
-      case Some(memo) =>
-        val vals = memo.bins.zip(memo.fitted)
-          .map { case ((p, _, _), iso) => s"($p, $iso)" }
-          .mkString(", ")
-        s"""WITH c AS (
-           |  SELECT l_discount * 10.0 AS p,
-           |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
-           |  FROM $table
-           |  WHERE l_discount IS NOT NULL AND l_returnflag IS NOT NULL),
-           |bins AS (
-           |  SELECT p, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(SUM(y) AS BIGINT) AS s
-           |  FROM c GROUP BY p),
-           |iso AS (SELECT * FROM (VALUES $vals) v(p, rate_iso))
-           |SELECT b.p, b.n, ROUND(CAST(b.s AS DOUBLE) / b.n, 6) AS rate_raw,
-           |  i.rate_iso
-           |FROM bins b JOIN iso i ON b.p = i.p
-           |ORDER BY b.p""".stripMargin
-    }
+    * from `fit` (literal doubles round-trip via toString). */
+  def isotonicOracleSql(fit: IsoFit, table: String = "lineitem"): String = {
+    val vals = fit.bins.zip(fit.fitted)
+      .map { case ((p, _, _), iso) => s"($p, $iso)" }
+      .mkString(", ")
+    s"""WITH c AS (
+       |  SELECT l_discount * 10.0 AS p,
+       |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+       |  FROM $table
+       |  WHERE l_discount IS NOT NULL AND l_returnflag IS NOT NULL),
+       |bins AS (
+       |  SELECT p, CAST(count(*) AS BIGINT) AS n,
+       |    CAST(SUM(y) AS BIGINT) AS s
+       |  FROM c GROUP BY p),
+       |iso AS (SELECT * FROM (VALUES $vals) v(p, rate_iso))
+       |SELECT b.p, b.n, ROUND(CAST(b.s AS DOUBLE) / b.n, 6) AS rate_raw,
+       |  i.rate_iso
+       |FROM bins b JOIN iso i ON b.p = i.p
+       |ORDER BY b.p""".stripMargin
+  }
 
-  /** The q_f_calibrate gate body: fit on the discount panel (same memo
-    * as [[isotonicGate]]), then APPLY per-row to a score the fit never
-    * saw — `l_tax·10 + 0.05` lands strictly BETWEEN the discount-grid
-    * thresholds, so every row exercises the step-function floor lookup,
-    * not an exact-hit join. Per-row apply first (the serving shape),
-    * then a (score, score_iso) census for a bounded gate output. The
-    * score arithmetic is IEEE ops on shared doubles (decimal→double
-    * cast + literal multiply/add), bit-identical across engines. */
-  def calibrateGate(lineitem: DataFrame, dir: String): DataFrame = {
-    val memo = gateCache.computeIfAbsent(dir, _ => {
-      val rows = lineitem
-        .where(col("l_discount").isNotNull && col("l_returnflag").isNotNull)
-        .groupBy((col("l_discount") * lit(10.0)).as("__p"))
-        .agg(count(lit(1)).as("__n"),
-          sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("__s"))
-        .collect()
-      require(rows.length <= 1024, "bin panel must be config-sized")
-      val bins = rows.toSeq
-        .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      IsoMemo(bins, pavFit(bins))
-    })
-    lastDir = Some(dir)
-    val fit = memo.bins.map(_._1).zip(memo.fitted)
+  /** The q_f_calibrate gate body: APPLY `fit` (the q_f_isotonic fit)
+    * per-row to a score the fit never saw — `l_tax·10 + 0.05` lands
+    * strictly BETWEEN the discount-grid thresholds, so every row
+    * exercises the step-function floor lookup, not an exact-hit join.
+    * Per-row apply first (the serving shape), then a (score, score_iso)
+    * census for a bounded gate output. The score arithmetic is IEEE ops
+    * on shared doubles (decimal→double cast + literal multiply/add),
+    * bit-identical across engines. */
+  def calibrateCensus(lineitem: DataFrame, fit: IsoFit): DataFrame = {
+    val steps = fit.bins.map(_._1).zip(fit.fitted)
     lineitem.where(col("l_tax").isNotNull)
       .select((col("l_tax").cast("double") * lit(10.0) + lit(0.05))
         .as("score"))
-      .withColumn("score_iso", calibrateColumn(col("score"), fit))
+      .withColumn("score_iso", calibrateColumn(col("score"), steps))
       .groupBy(col("score"), col("score_iso"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("score"))
   }
 
-  /** Generated twin of [[calibrateGate]]: scores and the census
-    * recomputed from parquet; the fitted map inlined as VALUES from the
-    * memo; the step lookup recomputed INDEPENDENTLY as a correlated
+  /** Generated twin of [[calibrateCensus]]: scores and the census
+    * recomputed from parquet; the fitted map inlined as VALUES from
+    * `fit`; the step lookup recomputed INDEPENDENTLY as a correlated
     * "last threshold ≤ score" subquery (no HOF semantics shared with
     * the engine). */
-  def calibrateOracleSql(table: String = "lineitem"): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS DOUBLE) AS score, CAST(NULL AS DOUBLE) AS score_iso, " +
-          "CAST(NULL AS BIGINT) AS n WHERE FALSE"
-      case Some(memo) =>
-        val vals = memo.bins.zip(memo.fitted)
-          .map { case ((p, _, _), iso) => s"($p, $iso)" }
-          .mkString(", ")
-        s"""WITH iso AS (SELECT * FROM (VALUES $vals) v(p, rate_iso)),
-           |c AS (
-           |  SELECT CAST(l_tax AS DOUBLE) * 10.0 + 0.05 AS score
-           |  FROM $table WHERE l_tax IS NOT NULL),
-           |s AS (
-           |  SELECT score, CAST(count(*) AS BIGINT) AS n
-           |  FROM c GROUP BY score)
-           |SELECT s.score,
-           |  COALESCE(
-           |    (SELECT i.rate_iso FROM iso i WHERE i.p <= s.score
-           |     ORDER BY i.p DESC LIMIT 1),
-           |    (SELECT i.rate_iso FROM iso i ORDER BY i.p LIMIT 1)) AS score_iso,
-           |  s.n
-           |FROM s ORDER BY s.score""".stripMargin
-    }
+  def calibrateOracleSql(fit: IsoFit, table: String = "lineitem"): String = {
+    val vals = fit.bins.zip(fit.fitted)
+      .map { case ((p, _, _), iso) => s"($p, $iso)" }
+      .mkString(", ")
+    s"""WITH iso AS (SELECT * FROM (VALUES $vals) v(p, rate_iso)),
+       |c AS (
+       |  SELECT CAST(l_tax AS DOUBLE) * 10.0 + 0.05 AS score
+       |  FROM $table WHERE l_tax IS NOT NULL),
+       |s AS (
+       |  SELECT score, CAST(count(*) AS BIGINT) AS n
+       |  FROM c GROUP BY score)
+       |SELECT s.score,
+       |  COALESCE(
+       |    (SELECT i.rate_iso FROM iso i WHERE i.p <= s.score
+       |     ORDER BY i.p DESC LIMIT 1),
+       |    (SELECT i.rate_iso FROM iso i ORDER BY i.p LIMIT 1)) AS score_iso,
+       |  s.n
+       |FROM s ORDER BY s.score""".stripMargin
+  }
 }

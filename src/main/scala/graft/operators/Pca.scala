@@ -174,42 +174,16 @@ object Pca {
       Array.tabulate(n)(cc => Array.tabulate(n)(r => v(r)(cc))))
   }
 
-  // ───────────── q_x_pca gate + generated oracle (memo) ─────────────
-
-  private val gateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PcaModel]()
-  @volatile private var lastDir: Option[String] = None
-
-  /** The q_x_pca gate body: fit (memoized per dir) on the full
-    * embedding table, project onto the top-2 components. */
-  def pcaGate(emb: DataFrame, dir: String, dim: Int = 64): DataFrame = {
-    val model = gateCache.computeIfAbsent(dir,
-      _ => fit(emb, "embedding", dim, k = 2))
-    lastDir = Some(dir)
-    project(emb, "vec_id", "embedding", model)
-  }
-
-  /** The q_x_pca_whiten gate body: same memoized fit, whitened
-    * projection ([[projectWhitened]]). */
-  def pcaWhitenGate(emb: DataFrame, dir: String, dim: Int = 64): DataFrame = {
-    val model = gateCache.computeIfAbsent(dir,
-      _ => fit(emb, "embedding", dim, k = 2))
-    lastDir = Some(dir)
-    projectWhitened(emb, "vec_id", "embedding", model)
-  }
+  // ───────────── q_x_pca gates' bodies + generated oracles ─────────────
 
   /** The q_x_outliers gate body: whitened-subspace outlier mining —
     * the per-row Mahalanobis distance IN THE KEPT SUBSPACE is the norm
     * of the whitened projection, so the embedding-curation question
     * "which rows are far from everything" is one map-side pass over
-    * the memoized model + a top-k (TakeOrderedAndProject, no global
+    * the fitted model + a top-k (TakeOrderedAndProject, no global
     * sort). Score = √(Σ pc_c²) on the round-6 whitened components
     * (shared doubles — *, +, √ are IEEE-safe), round 6. */
-  def pcaOutlierGate(emb: DataFrame, dir: String, k: Int = 20,
-      dim: Int = 64): DataFrame = {
-    val model = gateCache.computeIfAbsent(dir,
-      _ => fit(emb, "embedding", dim, k = 2))
-    lastDir = Some(dir)
+  def outlierTopK(emb: DataFrame, model: PcaModel, k: Int = 20): DataFrame = {
     val p = projectWhitened(emb, "vec_id", "embedding", model)
     val score = round(sqrt(model.components.indices
       .map(i => col(s"pc${i + 1}") * col(s"pc${i + 1}"))
@@ -219,44 +193,34 @@ object Pca {
       .limit(k)
   }
 
-  /** Generated twin of [[pcaOutlierGate]]: the whitened-projection
+  /** Generated twin of [[outlierTopK]]: the whitened-projection
     * oracle as a subquery, the same left-fold squared norm. */
-  def pcaOutlierOracleSql(table: String = "embeddings",
-      k: Int = 20): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS DOUBLE) " +
-          "AS score WHERE FALSE"
-      case Some(model) =>
-        val norm = model.components.indices
-          .map(i => s"pc${i + 1} * pc${i + 1}").mkString(" + ")
-        s"""SELECT vec_id, ROUND(sqrt($norm), 6) AS score
-           |FROM (${pcaOracleSql(table, whiten = true)})
-           |ORDER BY score DESC, vec_id LIMIT $k""".stripMargin
-    }
+  def outlierOracleSql(model: PcaModel, table: String = "embeddings",
+      k: Int = 20): String = {
+    val norm = model.components.indices
+      .map(i => s"pc${i + 1} * pc${i + 1}").mkString(" + ")
+    s"""SELECT vec_id, ROUND(sqrt($norm), 6) AS score
+       |FROM (${oracleSql(model, table, whiten = true)})
+       |ORDER BY score DESC, vec_id LIMIT $k""".stripMargin
+  }
 
-  /** Generated twin of [[pcaGate]]: components inline as DOUBLE[]
+  /** Generated twin of [[project]]: components inline as DOUBLE[]
     * literals, the same dot fold and offset literal, round-6. With
-    * `whiten`, the twin of [[pcaWhitenGate]]: divide by sqrt(λ_c) with
+    * `whiten`, the twin of [[projectWhitened]]: divide by sqrt(λ_c) with
     * λ_c as the same literal BOTH engines sqrt at execution. */
-  def pcaOracleSql(table: String = "embeddings",
-      whiten: Boolean = false): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS DOUBLE) AS pc1, " +
-          "CAST(NULL AS DOUBLE) AS pc2 WHERE FALSE"
-      case Some(model) =>
-        val off = model.offsets
-        val pcs = model.components.zipWithIndex.map { case (w, c) =>
-          val lits = w.map(_.toDouble.toString).mkString(", ")
-          val scale = if (whiten) s" / sqrt(${model.eigenvalues(c)})" else ""
-          s"""ROUND((list_reduce(list_transform(range(1, ${model.dim + 1}),
-             |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
-             |      (a, b) -> a + b) - ${off(c)})$scale, 6) AS pc${c + 1}""".stripMargin
-        }.mkString(",\n    ")
-        s"""SELECT e.vec_id,
-           |    $pcs
-           |FROM $table e
-           |ORDER BY e.vec_id""".stripMargin
-    }
+  def oracleSql(model: PcaModel, table: String = "embeddings",
+      whiten: Boolean = false): String = {
+    val off = model.offsets
+    val pcs = model.components.zipWithIndex.map { case (w, c) =>
+      val lits = w.map(_.toDouble.toString).mkString(", ")
+      val scale = if (whiten) s" / sqrt(${model.eigenvalues(c)})" else ""
+      s"""ROUND((list_reduce(list_transform(range(1, ${model.dim + 1}),
+         |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
+         |      (a, b) -> a + b) - ${off(c)})$scale, 6) AS pc${c + 1}""".stripMargin
+    }.mkString(",\n    ")
+    s"""SELECT e.vec_id,
+       |    $pcs
+       |FROM $table e
+       |ORDER BY e.vec_id""".stripMargin
+  }
 }

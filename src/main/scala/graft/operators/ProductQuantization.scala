@@ -106,44 +106,6 @@ object ProductQuantization {
       .limit(topK)
   }
 
-  // ───────────────────── correctness-gate plumbing ─────────────────────
-
-  /** Per-sfDir memo of (model, query vector) for the q_x_pq gate — the
-    * model is driver-tiny (m·k·subDim doubles) but costs m·iters
-    * aggregate jobs to train, and the battery plans the query several
-    * times. `lastDir` remembers the most recent gate dir so the
-    * dump-time oracle generator reads the model for exactly the dir
-    * under verification (Verify runs every query before dumping
-    * oracle_sql.json — same in-process contract the IVF fixture cache
-    * relies on). */
-  private val gateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (PQModel, Array[Double])]()
-  @volatile private var lastDir: Option[String] = None
-
-  def gateModel(emb: DataFrame, dir: String,
-      dim: Int = 64, m: Int = 4, k: Int = 8, iters: Int = 2): (PQModel, Array[Double]) = {
-    val got = gateCache.computeIfAbsent(dir, _ => {
-      val model = train(emb, "vec_id", "embedding", dim, m, k, iters)
-      val q = emb.orderBy(col("vec_id")).limit(1)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
-      (model, q)
-    })
-    lastDir = Some(dir)
-    got
-  }
-
-  /** Oracle for the gate: generated from the model trained for the dir
-    * the queries last ran against. A dump that never ran q_x_pq has no
-    * model — emit an empty-result marker instead of a wrong oracle. */
-  def gateOracleSql(topK: Int = 10): String =
-    lastDir.flatMap(d => Option(gateCache.get(d))) match {
-      case Some((model, q)) =>
-        adcOracleSql("embeddings", "vec_id", "embedding", model, q, topK)
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS DOUBLE) AS adist WHERE FALSE"
-    }
-
   // ───────────── OPQ: optimized product quantization ─────────────
 
   /** OPQ model: an orthogonal rotation applied BEFORE product
@@ -223,14 +185,6 @@ object ProductQuantization {
     adcTopK(encoded, idCol, "__codes", model.opq,
       rotateQuery(model.rotation, query), topK)
   }
-
-  private val opqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, OpqModel]()
-  @volatile private var opqLastDir: Option[String] = None
-  // per-dir (model, ROTATED query) for the serve gate's oracle generator
-  private val opqServeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (OpqModel, Array[Double])]()
-  @volatile private var opqServeLastDir: Option[String] = None
 
   /** Trains OPQ by alternating (non-parametric OPQ): codes given the
     * rotation (per-subspace k-means in the rotated space), then the
@@ -336,29 +290,23 @@ object ProductQuantization {
     }
   }
 
-  /** The q_x_opq gate body: train (memoized per dir) on the first
-    * `dim` embedding dims, then ONE scoring pass computing mean squared
-    * reconstruction error under raw PQ vs OPQ (round-9 per-row decimal
-    * sums, mean in double, round-6 outputs). The oracle re-encodes
-    * every vector against BOTH inlined codebooks and re-derives both
-    * distortions independently. */
-  def opqGate(emb: DataFrame, dir: String, dim: Int = 16,
-      m: Int = 4, k: Int = 8, iters: Int = 2): DataFrame = {
-    val base = emb.select(col("vec_id"),
-      expr(s"slice(embedding, 1, $dim)").as("__xs"))
-    val model = opqCache.computeIfAbsent(dir,
-      _ => trainOpq(base, "vec_id", "__xs", dim, m, k, iters))
-    opqLastDir = Some(dir)
+  /** The q_x_opq gate body: ONE scoring pass over `base`'s `vecCol`
+    * computing mean squared reconstruction error under raw PQ vs OPQ
+    * (round-9 per-row decimal sums, mean in double, round-6 outputs).
+    * The oracle re-encodes every vector against BOTH inlined codebooks
+    * and re-derives both distortions independently. */
+  def opqDistortionReport(base: DataFrame, vecCol: String,
+      model: OpqModel): DataFrame = {
     val comps = model.rotation.map(w =>
-      VectorExprs.dot(col("__xs"), typedLit(w)))
+      VectorExprs.dot(col(vecCol), typedLit(w)))
     val scored = base
-      .withColumn("__cr", codesExpr(col("__xs"), model.raw))
+      .withColumn("__cr", codesExpr(col(vecCol), model.raw))
       .withColumn("__xr", array(comps: _*))
       .withColumn("__co", codesExpr(col("__xr"), model.opq))
     val d9 = "decimal(38,9)"
     scored
       .agg(count(lit(1)).as("__n"),
-        sum(round(reconD2(col("__xs"), col("__cr"), model.raw), 9).cast(d9))
+        sum(round(reconD2(col(vecCol), col("__cr"), model.raw), 9).cast(d9))
           .as("__dr"),
         sum(round(reconD2(col("__xr"), col("__co"), model.opq), 9).cast(d9))
           .as("__do"))
@@ -372,78 +320,54 @@ object ProductQuantization {
           .as("orth_err"))
   }
 
-  /** The q_x_opq_serve gate body: the [[opqServeTopK]] chain against
-    * the SAME per-dir trained model as q_x_opq (shared memo — whichever
-    * gate runs first trains), probing the first-`dim` slice of a fixture
-    * query vector the codebooks were trained over. The oracle re-derives
-    * the WHOLE serve chain independently: corpus rotation from the
-    * inlined rotation literals, per-subspace assignment with the shared
-    * (d, cid) tie rule, and the ADC fold from the inlined lookup tables
-    * of the rotated query. */
-  def opqServeGate(emb: DataFrame, dir: String, dim: Int = 16,
-      m: Int = 4, k: Int = 8, iters: Int = 2, topK: Int = 10): DataFrame = {
-    val base = emb.select(col("vec_id"),
-      expr(s"slice(embedding, 1, $dim)").as("__xs"))
-    val model = opqCache.computeIfAbsent(dir,
-      _ => trainOpq(base, "vec_id", "__xs", dim, m, k, iters))
-    opqLastDir = Some(dir)
-    val q = emb.filter(col("vec_id") === 5L)
-      .select(expr(s"slice(embedding, 1, $dim)"))
-      .head().getSeq[Float](0).toArray
-    opqServeCache.put(dir, (model, rotateQuery(model.rotation, q)))
-    opqServeLastDir = Some(dir)
-    opqServeTopK(base, "vec_id", "__xs", model, q, topK)
-  }
-
-  /** Generated twin of [[opqServeGate]] (see there). */
-  def opqServeOracleSql(table: String = "embeddings", dim: Int = 16,
-      topK: Int = 10): String =
-    opqServeLastDir.flatMap(d => Option(opqServeCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS DOUBLE) AS adist WHERE FALSE"
-      case Some((model, rq)) =>
-        val pq = model.opq
-        val sub = pq.subDim
-        val m = pq.m
-        val tables = lookupTables(pq, rq)
-        val (rx, rxArr) = rotationExprs(model, dim)
-        val cbCtes = (0 until m).map { j =>
-          val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
-            s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
-          }.mkString(", ")
-          s"cb$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
-        }
-        val cdCtes = (0 until m).map { j =>
-          s"""cd$j AS (
-             |  SELECT vid, cid AS code$j FROM (
-             |    SELECT e.vid, c.cid,
-             |      list_reduce(list_transform(range(1, ${sub + 1}),
-             |        i -> (e.xr[${j * sub} + i] - c.cv[i])
-             |           * (e.xr[${j * sub} + i] - c.cv[i])),
-             |        (a, b) -> a + b) AS d
-             |    FROM base e, cb$j c)
-             |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
-        }
-        val joins = (1 until m).map(j => s"JOIN cd$j USING (vid)").mkString(" ")
-        val luts = (0 until m).map { j =>
-          val cases = tables(j).zipWithIndex
-            .map { case (t, c) => s"WHEN $c THEN CAST($t AS DOUBLE)" }.mkString(" ")
-          s"(CASE code$j $cases END)"
-        }.mkString("\n         + ")
-        s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
-           |base AS (
-           |  SELECT vid, [$rxArr]::DOUBLE[] AS xr FROM (
-           |    SELECT vid, xs,
-           |    $rx
-           |    FROM emb0)),
-           |${cbCtes.mkString(",\n")},
-           |${cdCtes.mkString(",\n")},
-           |codes AS (SELECT * FROM cd0 $joins)
-           |SELECT vid AS vec_id,
-           |       ROUND($luts, 6) AS adist
-           |FROM codes
-           |ORDER BY adist, vid LIMIT $topK""".stripMargin
+  /** Generated twin of [[opqServeTopK]] for `model` and the rotated
+    * query `rq`: the corpus re-rotated from the inlined rotation
+    * literals, per-subspace assignment with the shared (d, cid) tie
+    * rule, and the ADC fold from the inlined lookup tables of `rq`. */
+  def opqServeOracleSql(model: OpqModel, rq: Array[Double],
+      table: String = "embeddings", dim: Int = 16, topK: Int = 10): String = {
+    val pq = model.opq
+    val sub = pq.subDim
+    val m = pq.m
+    val tables = lookupTables(pq, rq)
+    val (rx, rxArr) = rotationExprs(model, dim)
+    val cbCtes = (0 until m).map { j =>
+      val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
+        s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
+      }.mkString(", ")
+      s"cb$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
     }
+    val cdCtes = (0 until m).map { j =>
+      s"""cd$j AS (
+         |  SELECT vid, cid AS code$j FROM (
+         |    SELECT e.vid, c.cid,
+         |      list_reduce(list_transform(range(1, ${sub + 1}),
+         |        i -> (e.xr[${j * sub} + i] - c.cv[i])
+         |           * (e.xr[${j * sub} + i] - c.cv[i])),
+         |        (a, b) -> a + b) AS d
+         |    FROM base e, cb$j c)
+         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
+    }
+    val joins = (1 until m).map(j => s"JOIN cd$j USING (vid)").mkString(" ")
+    val luts = (0 until m).map { j =>
+      val cases = tables(j).zipWithIndex
+        .map { case (t, c) => s"WHEN $c THEN CAST($t AS DOUBLE)" }.mkString(" ")
+      s"(CASE code$j $cases END)"
+    }.mkString("\n         + ")
+    s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
+       |base AS (
+       |  SELECT vid, [$rxArr]::DOUBLE[] AS xr FROM (
+       |    SELECT vid, xs,
+       |    $rx
+       |    FROM emb0)),
+       |${cbCtes.mkString(",\n")},
+       |${cdCtes.mkString(",\n")},
+       |codes AS (SELECT * FROM cd0 $joins)
+       |SELECT vid AS vec_id,
+       |       ROUND($luts, 6) AS adist
+       |FROM codes
+       |ORDER BY adist, vid LIMIT $topK""".stripMargin
+  }
 
   /** Per-component rotation projections as DuckDB exprs: (the rx column
     * defs, the array-assembly list) — shared by the OPQ gate twins. */
@@ -458,74 +382,71 @@ object ProductQuantization {
     (rx, rxArr)
   }
 
-  /** Generated twin of [[opqGate]]: rotation + BOTH codebooks inline
-    * as literals; identical per-subspace assignment tie rule, identical
-    * left-assoc distortion folds, round-9 decimal sums, round-6 means. */
-  def opqOracleSql(table: String = "embeddings", dim: Int = 16): String =
-    opqLastDir.flatMap(d => Option(opqCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS distortion_raw, " +
-          "CAST(NULL AS DOUBLE) AS distortion_opq, CAST(NULL AS DOUBLE) AS orth_err WHERE FALSE"
-      case Some(model) =>
-        val sub = model.raw.subDim
-        val m = model.raw.m
-        def cbCtes(tag: String, pq: PQModel) = (0 until m).map { j =>
-          val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
-            s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
-          }.mkString(", ")
-          s"cb$tag$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
-        }
-        def cdCtes(tag: String, src: String, vcol: String, cast: Boolean) =
-          (0 until m).map { j =>
-            val el = if (cast) s"CAST($src.$vcol[${j * sub} + i] AS DOUBLE)"
-              else s"$src.$vcol[${j * sub} + i]"
-            s"""cd$tag$j AS (
-               |  SELECT vid, cid AS code$tag$j, cv AS cv$tag$j FROM (
-               |    SELECT e.vid, c.cid, c.cv,
-               |      list_reduce(list_transform(range(1, ${sub + 1}),
-               |        i -> ($el - c.cv[i]) * ($el - c.cv[i])),
-               |        (a, b) -> a + b) AS d
-               |    FROM base e, cb$tag$j c)
-               |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
-          }
-        val (rx, rxArr) = rotationExprs(model, dim)
-        def d2(tag: String, vcol: String, cast: Boolean) =
-          (0 until m).map { j =>
-            val el = if (cast) s"CAST($vcol[${j * sub} + i] AS DOUBLE)"
-              else s"$vcol[${j * sub} + i]"
-            s"""list_reduce(list_transform(range(1, ${sub + 1}),
-               |      i -> ($el - cv$tag$j[i]) * ($el - cv$tag$j[i])),
-               |      (a, b) -> a + b)""".stripMargin
-          }.mkString("\n    + ")
-        val joinsR = (0 until m).map(j => s"JOIN cdr$j USING (vid)").mkString(" ")
-        val joinsO = (0 until m).map(j => s"JOIN cdo$j USING (vid)").mkString(" ")
-        s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
-           |base AS (
-           |  SELECT vid, xs, [$rxArr]::DOUBLE[] AS xr FROM (
-           |    SELECT vid, xs,
-           |    $rx
-           |    FROM emb0)),
-           |${cbCtes("r", model.raw).mkString(",\n")},
-           |${cbCtes("o", model.opq).mkString(",\n")},
-           |${cdCtes("r", "e", "xs", cast = true).mkString(",\n")},
-           |${cdCtes("o", "e", "xr", cast = false).mkString(",\n")},
-           |joined AS (
-           |  SELECT * FROM base $joinsR $joinsO),
-           |perrow AS (
-           |  SELECT vid,
-           |    ${d2("r", "xs", cast = true)} AS d2r,
-           |    ${d2("o", "xr", cast = false)} AS d2o
-           |  FROM joined)
-           |SELECT CAST(count(*) AS BIGINT) AS n,
-           |  ROUND(CAST(SUM(CAST(ROUND(d2r, 9) AS DECIMAL(38,9))) AS DOUBLE)
-           |    / count(*), 6) AS distortion_raw,
-           |  ROUND(CAST(SUM(CAST(ROUND(d2o, 9) AS DECIMAL(38,9))) AS DOUBLE)
-           |    / count(*), 6) AS distortion_opq,
-           |  CAST(${BigDecimal(model.orthErr)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble} AS DOUBLE)
-           |    AS orth_err
-           |FROM perrow""".stripMargin
+  /** Generated twin of [[opqDistortionReport]]: rotation + BOTH codebooks
+    * inline as literals; identical per-subspace assignment tie rule,
+    * identical left-assoc distortion folds, round-9 decimal sums,
+    * round-6 means. */
+  def opqOracleSql(model: OpqModel, table: String = "embeddings",
+      dim: Int = 16): String = {
+    val sub = model.raw.subDim
+    val m = model.raw.m
+    def cbCtes(tag: String, pq: PQModel) = (0 until m).map { j =>
+      val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
+        s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
+      }.mkString(", ")
+      s"cb$tag$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
     }
+    def cdCtes(tag: String, src: String, vcol: String, cast: Boolean) =
+      (0 until m).map { j =>
+        val el = if (cast) s"CAST($src.$vcol[${j * sub} + i] AS DOUBLE)"
+          else s"$src.$vcol[${j * sub} + i]"
+        s"""cd$tag$j AS (
+           |  SELECT vid, cid AS code$tag$j, cv AS cv$tag$j FROM (
+           |    SELECT e.vid, c.cid, c.cv,
+           |      list_reduce(list_transform(range(1, ${sub + 1}),
+           |        i -> ($el - c.cv[i]) * ($el - c.cv[i])),
+           |        (a, b) -> a + b) AS d
+           |    FROM base e, cb$tag$j c)
+           |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
+      }
+    val (rx, rxArr) = rotationExprs(model, dim)
+    def d2(tag: String, vcol: String, cast: Boolean) =
+      (0 until m).map { j =>
+        val el = if (cast) s"CAST($vcol[${j * sub} + i] AS DOUBLE)"
+          else s"$vcol[${j * sub} + i]"
+        s"""list_reduce(list_transform(range(1, ${sub + 1}),
+           |      i -> ($el - cv$tag$j[i]) * ($el - cv$tag$j[i])),
+           |      (a, b) -> a + b)""".stripMargin
+      }.mkString("\n    + ")
+    val joinsR = (0 until m).map(j => s"JOIN cdr$j USING (vid)").mkString(" ")
+    val joinsO = (0 until m).map(j => s"JOIN cdo$j USING (vid)").mkString(" ")
+    s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
+       |base AS (
+       |  SELECT vid, xs, [$rxArr]::DOUBLE[] AS xr FROM (
+       |    SELECT vid, xs,
+       |    $rx
+       |    FROM emb0)),
+       |${cbCtes("r", model.raw).mkString(",\n")},
+       |${cbCtes("o", model.opq).mkString(",\n")},
+       |${cdCtes("r", "e", "xs", cast = true).mkString(",\n")},
+       |${cdCtes("o", "e", "xr", cast = false).mkString(",\n")},
+       |joined AS (
+       |  SELECT * FROM base $joinsR $joinsO),
+       |perrow AS (
+       |  SELECT vid,
+       |    ${d2("r", "xs", cast = true)} AS d2r,
+       |    ${d2("o", "xr", cast = false)} AS d2o
+       |  FROM joined)
+       |SELECT CAST(count(*) AS BIGINT) AS n,
+       |  ROUND(CAST(SUM(CAST(ROUND(d2r, 9) AS DECIMAL(38,9))) AS DOUBLE)
+       |    / count(*), 6) AS distortion_raw,
+       |  ROUND(CAST(SUM(CAST(ROUND(d2o, 9) AS DECIMAL(38,9))) AS DOUBLE)
+       |    / count(*), 6) AS distortion_opq,
+       |  CAST(${BigDecimal(model.orthErr)
+              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble} AS DOUBLE)
+       |    AS orth_err
+       |FROM perrow""".stripMargin
+  }
 
   /** Generated DuckDB twin of encode→ADC→top-k: codebooks and lookup
     * tables inline as literals (Double.toString round-trips exactly);

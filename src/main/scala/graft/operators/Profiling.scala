@@ -20,12 +20,6 @@ object Profiling {
     df.agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Approximate variant for 100 TB profiling: HLL++ sketches, still one pass. */
-  def approxDistinctCounts(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame = {
-    val aggs = cols.map(c => approx_count_distinct(col(c), rsd).as(c))
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** P9 rewrite: all per-column null counts in ONE pass
     * (vs `where(isNull).count()` per column, `helper_methods.py:68`). */
   def nullCounts(df: DataFrame, cols: Seq[String]): DataFrame = {
@@ -194,11 +188,6 @@ object Profiling {
       .withColumn("bucket_lo", round(lit(lo) + col("bucket") * lit(w), 6))
       .withColumn("bucket_hi", round(lit(lo) + (col("bucket") + 1) * lit(w), 6))
   }
-
-  /** A9: mean of two measures by group (`tools/generate_report_figures.py:122`). */
-  def meanByGroup(df: DataFrame, groupCol: String, m1: String, m2: String): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(avg(col(m1)).as(s"avg_$m1"), avg(col(m2)).as(s"avg_$m2"))
 
   /** A11 as pure SQL aggregates: MAE / RMSE without an evaluator pass each
     * (`helper_methods.py:346-369` equivalents). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -275,13 +275,27 @@ object Similarity {
   // The production composition — trainCentroids → ivfAssign → block →
   // mutualNearestPairs — gated end-to-end. The centroids are engine-
   // trained (MLlib k-means — seeded but engine-specific), so the
-  // DuckDB twin is generated at DUMP time from the per-dir memo filled
-  // when the query ran (the q_x_pq pattern: Verify executes every
+  // DuckDB twin is generated at DUMP time from the codebook the gate's
+  // last run trained ([[graft.Gate.fitted]]: Verify executes every
   // query before writing oracle_sql.json in the same process).
 
-  private val mnnGateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Float])]]()
-  @volatile private var mnnLastDir: Option[String] = None
+  /** A trained codebook collected to the driver: (cid, centroid) rows,
+    * cid-ascending — the literal state the dump-time twins inline. */
+  type Codebook = Array[(Int, Array[Float])]
+
+  /** [[trainCentroids]] collected as a [[Codebook]]. */
+  def trainCodebook(df: DataFrame, vecCol: String, k: Int): Codebook =
+    trainCentroids(df, vecCol, k).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+
+  /** The (cid, cvec array<float>) centroid relation of a collected
+    * codebook, as [[ivfAssign]] takes it. */
+  def codebookFrame(spark: SparkSession, cents: Codebook): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cvec")
+      .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
+  }
 
   /** Gate-fixture guard: fail fast if any `groupCol` block exceeds
     * `maxBlock` — the exhaustive within-block oracle twins
@@ -302,22 +316,12 @@ object Similarity {
         "twin would not; shrink the fixture or generate the capped twin")
   }
 
-  /** The q_x_mnn_ivf gate body: train (memoized per dir), assign every
-    * row to its nearest trained centroid, then mutual-NN inside the
-    * centroid blocks. */
-  def mnnIvfGate(emb: DataFrame, dir: String, k: Int = 8,
-      dim: Int = 64): DataFrame = {
-    val cents = mnnGateCache.computeIfAbsent(dir, _ =>
-      trainCentroids(emb, "embedding", k).collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1))
-    mnnLastDir = Some(dir)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cdf = cents.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cvec")
-      .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
+  /** The q_x_mnn_ivf gate body: assign every row to its nearest
+    * centroid of the trained codebook `cents`, then mutual-NN inside
+    * the centroid blocks. */
+  def mnnIvf(emb: DataFrame, cents: Codebook, dim: Int = 64): DataFrame = {
     val assigned = ivfAssign(emb.select("vec_id", "embedding"),
-      "vec_id", "embedding", cdf)
+      "vec_id", "embedding", codebookFrame(emb.sparkSession, cents))
     // explicit exact-regime cap: the dump-time twin replays ALL pairs
     // within cells, valid only while nothing refines (guard above)
     requireBlocksWithin(assigned, "cid", 4096, "q_x_mnn_ivf")
@@ -325,58 +329,54 @@ object Similarity {
       maxBlock = 4096, dim = dim)
   }
 
-  /** Generated twin of [[mnnIvfGate]]: the trained centroids inline as
+  /** Generated twin of [[mnnIvf]]: the trained centroids inline as
     * DOUBLE[] literals (Float→Double widens exactly and Double.toString
     * round-trips), assignment replicated as the same raw-cosine argmax
     * (identical fold order, ties to the lowest cid), then the
     * block-scoped MNN with the same round-6 scoring and tie rules. */
-  def mnnIvfOracleSql(table: String = "embeddings", dim: Int = 64): String =
-    mnnLastDir.flatMap(d => Option(mnnGateCache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS INTEGER) AS cid, CAST(NULL AS BIGINT) AS id1, " +
-          "CAST(NULL AS BIGINT) AS id2, CAST(NULL AS DOUBLE) AS cos WHERE FALSE"
-      case Some(cents) =>
-        def fold(x: String, y: String) =
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> CAST($x.embedding[i] AS DOUBLE) * CAST($y.embedding[i] AS DOUBLE)),
-             |        (a, b) -> a + b)""".stripMargin
-        def cfold(x: String) =
-          s"""list_reduce(list_transform(range(1, ${dim + 1}),
-             |        i -> CAST($x.embedding[i] AS DOUBLE) * c.cv[i]),
-             |        (a, b) -> a + b)""".stripMargin
-        val ceRows = cents.map { case (cid, v) =>
-          s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-        }.mkString(",\n    ")
-        s"""WITH ce AS (SELECT * FROM (VALUES
-           |    $ceRows) t(cid, cv)),
-           |asn AS (
-           |  SELECT vec_id, cid, embedding FROM (
-           |    SELECT e.vec_id, c.cid, e.embedding,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cfold("e")}
-           |        / (sqrt(${fold("e", "e")})
-           |         * sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
-           |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
-           |        c.cid) AS rn
-           |    FROM $table e CROSS JOIN ce c)
-           |  WHERE rn = 1),
-           |s AS (
-           |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
-           |    ROUND(${fold("a", "b")}
-           |      / (sqrt(${fold("a", "a")})
-           |       * sqrt(${fold("b", "b")})), 6) AS cos
-           |  FROM asn a JOIN asn b
-           |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
-           |t1 AS (
-           |  SELECT cid, ida, idb, cos FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY cid, ida
-           |      ORDER BY cos DESC, idb) AS rn FROM s)
-           |  WHERE rn = 1)
-           |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
-           |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-           |WHERE x.ida < x.idb
-           |ORDER BY id1""".stripMargin
-    }
+  def mnnIvfOracleSql(cents: Codebook, table: String = "embeddings",
+      dim: Int = 64): String = {
+    def fold(x: String, y: String) =
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |        i -> CAST($x.embedding[i] AS DOUBLE) * CAST($y.embedding[i] AS DOUBLE)),
+         |        (a, b) -> a + b)""".stripMargin
+    def cfold(x: String) =
+      s"""list_reduce(list_transform(range(1, ${dim + 1}),
+         |        i -> CAST($x.embedding[i] AS DOUBLE) * c.cv[i]),
+         |        (a, b) -> a + b)""".stripMargin
+    val ceRows = cents.map { case (cid, v) =>
+      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
+    }.mkString(",\n    ")
+    s"""WITH ce AS (SELECT * FROM (VALUES
+       |    $ceRows) t(cid, cv)),
+       |asn AS (
+       |  SELECT vec_id, cid, embedding FROM (
+       |    SELECT e.vec_id, c.cid, e.embedding,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${cfold("e")}
+       |        / (sqrt(${fold("e", "e")})
+       |         * sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
+       |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
+       |        c.cid) AS rn
+       |    FROM $table e CROSS JOIN ce c)
+       |  WHERE rn = 1),
+       |s AS (
+       |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
+       |    ROUND(${fold("a", "b")}
+       |      / (sqrt(${fold("a", "a")})
+       |       * sqrt(${fold("b", "b")})), 6) AS cos
+       |  FROM asn a JOIN asn b
+       |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
+       |t1 AS (
+       |  SELECT cid, ida, idb, cos FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY cid, ida
+       |      ORDER BY cos DESC, idb) AS rn FROM s)
+       |  WHERE rn = 1)
+       |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
+       |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
+       |WHERE x.ida < x.idb
+       |ORDER BY id1""".stripMargin
+  }
 
   // ── q_x_pipeline3: PCA(k=16) → trained IVF → block-scoped MNN ──
   //
@@ -385,20 +385,12 @@ object Similarity {
   // cheaper distance math, better-conditioned clusters), the quantizer
   // trains ON THE REDUCED vectors, and mutual-NN dedup runs inside the
   // trained blocks. Engine-trained state (PCA moments are exact, but
-  // the k-means codebook is MLlib-specific) memoizes per dir so the
-  // DuckDB twin regenerates the whole chain from literals at dump time
-  // (the q_x_pq / q_x_mnn_ivf pattern).
+  // the k-means codebook is MLlib-specific) is fitted once per dir so
+  // the DuckDB twin regenerates the whole chain from literals at dump
+  // time (the q_x_pq / q_x_mnn_ivf pattern).
 
-  private val p3Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Pca.PcaModel, Array[(Int, Array[Float])])]()
-  @volatile private var p3LastDir: Option[String] = None
-  @volatile private var p3AutoLastDir: Option[String] = None
-
-  /** The q_x_pipeline3 gate body: PCA fit + quantizer training memoized
-    * per dir, then project → assign → mutual-NN, all map-side /
-    * block-bounded (the only data-scale passes are the one moment
-    * aggregate inside the fit, the projection scan, and the
-    * block-scoped MNN).
+  /** The q_x_pipeline3 fit: PCA(`kPca`) over `emb`, then the quantizer
+    * trained on the projected vectors.
     *
     * `kIvf = 0` is the PRODUCTION path (q_x_pipeline3_auto): the
     * codebook auto-sizes with the corpus ([[trainCentroids]] →
@@ -407,97 +399,88 @@ object Similarity {
     * The fixed-kIvf form stays for the original gate (the codebook
     * size is part of that oracle's contract) and for callers pinning a
     * serving-side codebook. */
-  def pcaIvfMnnGate(emb: DataFrame, dir: String, dim: Int = 64,
-      kPca: Int = 16, kIvf: Int = 8): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val key = s"$dir#k$kIvf"
-    val (model, cents) = p3Cache.computeIfAbsent(key, _ => {
-      val m = Pca.fit(emb, "embedding", dim, kPca)
-      val proj = Pca.projectedVec(emb, "vec_id", "embedding", m)
-      val c = trainCentroids(proj, "pvec", kIvf).collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
-      (m, c)
-    })
-    if (kIvf == 0) p3AutoLastDir = Some(key) else p3LastDir = Some(key)
+  def fitPcaIvf(emb: DataFrame, dim: Int = 64, kPca: Int = 16,
+      kIvf: Int = 8): (Pca.PcaModel, Codebook) = {
+    val m = Pca.fit(emb, "embedding", dim, kPca)
+    (m, trainCodebook(Pca.projectedVec(emb, "vec_id", "embedding", m), "pvec", kIvf))
+  }
+
+  /** The q_x_pipeline3 gate body over a [[fitPcaIvf]] fit: project →
+    * assign → mutual-NN, all map-side / block-bounded (the only
+    * data-scale passes are the projection scan and the block-scoped
+    * MNN; the fit adds its one moment aggregate). */
+  def pcaIvfMnn(emb: DataFrame, model: Pca.PcaModel,
+      cents: Codebook): DataFrame = {
     val proj = Pca.projectedVec(emb, "vec_id", "embedding", model)
-    val cdf = cents.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cvec")
-      .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
-    val assigned = ivfAssign(proj, "vec_id", "pvec", cdf)
+    val assigned = ivfAssign(proj, "vec_id", "pvec",
+      codebookFrame(emb.sparkSession, cents))
     // explicit exact-regime cap: both pipeline3 twins replay all pairs
     // within cells (the auto path keeps cells ~targetCell-sized anyway)
     requireBlocksWithin(assigned, "cid", 4096, "q_x_pipeline3")
     mutualNearestPairs(assigned, "vec_id", "pvec", "cid",
-      maxBlock = 4096, dim = kPca)
+      maxBlock = 4096, dim = model.components.length)
   }
 
-  /** Generated twin of [[pcaIvfMnnGate]]: the PCA components/offsets
+  /** Generated twin of [[pcaIvfMnn]]: the PCA components/offsets
     * AND the trained centroids inline as literals; the projection
     * quantizes through `ROUND(·,6)::REAL` exactly like the engine's
     * array<float> cast, then the same raw-cosine argmax assignment and
     * block-scoped MNN as [[mnnIvfOracleSql]]. */
-  def pcaIvfMnnOracleSql(table: String = "embeddings",
-      auto: Boolean = false): String =
-    (if (auto) p3AutoLastDir else p3LastDir)
-      .flatMap(d => Option(p3Cache.get(d))) match {
-      case None =>
-        "SELECT CAST(NULL AS INTEGER) AS cid, CAST(NULL AS BIGINT) AS id1, " +
-          "CAST(NULL AS BIGINT) AS id2, CAST(NULL AS DOUBLE) AS cos WHERE FALSE"
-      case Some((model, cents)) =>
-        val off = model.offsets
-        val kPca = model.components.length
-        val pcExprs = model.components.zipWithIndex.map { case (w, c) =>
-          val lits = w.map(_.toDouble.toString).mkString(", ")
-          s"""ROUND(list_reduce(list_transform(range(1, ${model.dim + 1}),
-             |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
-             |      (a, b) -> a + b) - ${off(c)}, 6)""".stripMargin
-        }.mkString(",\n      ")
-        def fold(x: String, y: String) =
-          s"""list_reduce(list_transform(range(1, ${kPca + 1}),
-             |        i -> CAST($x.pv[i] AS DOUBLE) * CAST($y.pv[i] AS DOUBLE)),
-             |        (a, b) -> a + b)""".stripMargin
-        def cfold(x: String) =
-          s"""list_reduce(list_transform(range(1, ${kPca + 1}),
-             |        i -> CAST($x.pv[i] AS DOUBLE) * c.cv[i]),
-             |        (a, b) -> a + b)""".stripMargin
-        val ceRows = cents.map { case (cid, v) =>
-          s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-        }.mkString(",\n    ")
-        s"""WITH pr AS (
-           |  SELECT e.vec_id,
-           |    [$pcExprs]::REAL[] AS pv
-           |  FROM $table e),
-           |ce AS (SELECT * FROM (VALUES
-           |    $ceRows) t(cid, cv)),
-           |asn AS (
-           |  SELECT vec_id, cid, pv FROM (
-           |    SELECT e.vec_id, c.cid, e.pv,
-           |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${cfold("e")}
-           |        / (sqrt(${fold("e", "e")})
-           |         * sqrt(list_reduce(list_transform(range(1, ${kPca + 1}),
-           |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
-           |        c.cid) AS rn
-           |    FROM pr e CROSS JOIN ce c)
-           |  WHERE rn = 1),
-           |s AS (
-           |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
-           |    ROUND(${fold("a", "b")}
-           |      / (sqrt(${fold("a", "a")})
-           |       * sqrt(${fold("b", "b")})), 6) AS cos
-           |  FROM asn a JOIN asn b
-           |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
-           |t1 AS (
-           |  SELECT cid, ida, idb, cos FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY cid, ida
-           |      ORDER BY cos DESC, idb) AS rn FROM s)
-           |  WHERE rn = 1)
-           |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
-           |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-           |WHERE x.ida < x.idb
-           |ORDER BY id1""".stripMargin
-    }
+  def pcaIvfMnnOracleSql(model: Pca.PcaModel, cents: Codebook,
+      table: String = "embeddings"): String = {
+    val off = model.offsets
+    val kPca = model.components.length
+    val pcExprs = model.components.zipWithIndex.map { case (w, c) =>
+      val lits = w.map(_.toDouble.toString).mkString(", ")
+      s"""ROUND(list_reduce(list_transform(range(1, ${model.dim + 1}),
+         |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
+         |      (a, b) -> a + b) - ${off(c)}, 6)""".stripMargin
+    }.mkString(",\n      ")
+    def fold(x: String, y: String) =
+      s"""list_reduce(list_transform(range(1, ${kPca + 1}),
+         |        i -> CAST($x.pv[i] AS DOUBLE) * CAST($y.pv[i] AS DOUBLE)),
+         |        (a, b) -> a + b)""".stripMargin
+    def cfold(x: String) =
+      s"""list_reduce(list_transform(range(1, ${kPca + 1}),
+         |        i -> CAST($x.pv[i] AS DOUBLE) * c.cv[i]),
+         |        (a, b) -> a + b)""".stripMargin
+    val ceRows = cents.map { case (cid, v) =>
+      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
+    }.mkString(",\n    ")
+    s"""WITH pr AS (
+       |  SELECT e.vec_id,
+       |    [$pcExprs]::REAL[] AS pv
+       |  FROM $table e),
+       |ce AS (SELECT * FROM (VALUES
+       |    $ceRows) t(cid, cv)),
+       |asn AS (
+       |  SELECT vec_id, cid, pv FROM (
+       |    SELECT e.vec_id, c.cid, e.pv,
+       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |        ${cfold("e")}
+       |        / (sqrt(${fold("e", "e")})
+       |         * sqrt(list_reduce(list_transform(range(1, ${kPca + 1}),
+       |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
+       |        c.cid) AS rn
+       |    FROM pr e CROSS JOIN ce c)
+       |  WHERE rn = 1),
+       |s AS (
+       |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
+       |    ROUND(${fold("a", "b")}
+       |      / (sqrt(${fold("a", "a")})
+       |       * sqrt(${fold("b", "b")})), 6) AS cos
+       |  FROM asn a JOIN asn b
+       |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
+       |t1 AS (
+       |  SELECT cid, ida, idb, cos FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY cid, ida
+       |      ORDER BY cos DESC, idb) AS rn FROM s)
+       |  WHERE rn = 1)
+       |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
+       |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
+       |WHERE x.ida < x.idb
+       |ORDER BY id1""".stripMargin
+  }
 
   /** Per-group embedding centroids, exploded to (group, pos, c) rows:
     * the element-wise mean of each group's vectors — cluster

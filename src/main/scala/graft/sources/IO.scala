@@ -35,10 +35,6 @@ object IO {
     }
   }
 
-  /** S3: small-dimension CSV scan (plane-data, airports, carriers). */
-  def readDimensionCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    readCsv(spark, path, Some(schema))
-
   /** S4: parquet sink, overwrite mode. */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)

@@ -100,37 +100,19 @@ object ParquetMeta {
         sum(col("uncompressed_bytes")).as("uncompressed_bytes"))
       .orderBy(col("column_path"))
 
-  // ─────────────────────────── gate + oracle ───────────────────────────
+  // ─────────────────────────── gate oracle ───────────────────────────
 
-  @volatile private var lastGatePath: Option[String] = None
-
-  /** Gate body: the column profile of the fixture's lineitem file,
-    * memoizing the path so the dump-time oracle targets the same file. */
-  def gateProfile(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/lineitem.parquet"
-    lastGatePath = Some(path)
-    columnProfile(spark, path)
-  }
-
-  /** Oracle: DuckDB's own footer reader over the same file — the
-    * independent implementation, not a self-computed golden. Emits the
-    * empty-result marker when a subset dump skipped the gate. */
-  def gateOracleSql(): String = lastGatePath match {
-    case Some(path) =>
-      s"""SELECT path_in_schema AS column_path,
-         |  CAST(COUNT(*) AS BIGINT) AS n_chunks,
-         |  CAST(SUM(num_values) AS BIGINT) AS num_values,
-         |  CAST(SUM(stats_null_count) AS BIGINT) AS null_count,
-         |  CAST(SUM(total_compressed_size) AS BIGINT) AS compressed_bytes,
-         |  CAST(SUM(total_uncompressed_size) AS BIGINT) AS uncompressed_bytes
-         |FROM parquet_metadata('$path')
-         |GROUP BY path_in_schema
-         |ORDER BY path_in_schema""".stripMargin
-    case None =>
-      "SELECT CAST(NULL AS VARCHAR) AS column_path, " +
-        "CAST(NULL AS BIGINT) AS n_chunks, CAST(NULL AS BIGINT) AS num_values, " +
-        "CAST(NULL AS BIGINT) AS null_count, " +
-        "CAST(NULL AS BIGINT) AS compressed_bytes, " +
-        "CAST(NULL AS BIGINT) AS uncompressed_bytes WHERE FALSE"
-  }
+  /** The q_s_footers oracle: DuckDB's own footer reader over the file
+    * at `path` — the independent implementation, not a self-computed
+    * golden — aggregated like [[columnProfile]]. */
+  def footersOracleSql(path: String): String =
+    s"""SELECT path_in_schema AS column_path,
+       |  CAST(COUNT(*) AS BIGINT) AS n_chunks,
+       |  CAST(SUM(num_values) AS BIGINT) AS num_values,
+       |  CAST(SUM(stats_null_count) AS BIGINT) AS null_count,
+       |  CAST(SUM(total_compressed_size) AS BIGINT) AS compressed_bytes,
+       |  CAST(SUM(total_uncompressed_size) AS BIGINT) AS uncompressed_bytes
+       |FROM parquet_metadata('$path')
+       |GROUP BY path_in_schema
+       |ORDER BY path_in_schema""".stripMargin
 }

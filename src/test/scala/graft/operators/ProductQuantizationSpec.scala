@@ -95,7 +95,10 @@ class ProductQuantizationSpec extends SparkSpec {
 
   test("opq improves distortion on the embeddings fixture (the gate's claim)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val out = ProductQuantization.opqGate(emb, "/root/testdata/sf0.001").head()
+    // the q_x_opq gate's fit and scoring pass
+    val base = emb.select(col("vec_id"), expr("slice(embedding, 1, 16)").as("__xs"))
+    val model = ProductQuantization.trainOpq(base, "vec_id", "__xs", 16, 4, 8, 2)
+    val out = ProductQuantization.opqDistortionReport(base, "__xs", model).head()
     assert(out.getAs[Double]("distortion_opq") <
       out.getAs[Double]("distortion_raw"))
     assert(out.getAs[Double]("orth_err") < 1e-4)

@@ -49,7 +49,7 @@ class ParquetMetaSpec extends SparkSpec {
     // the real cross-engine check is the q_s_footers oracle; here pin
     // that the gate output equals an independent aggregate of the raw
     // chunk rows (ordering, aliasing, null-sum semantics)
-    val gate = ParquetMeta.gateProfile(spark, sfDir).collect()
+    val gate = graft.SparkEntry.queries("q_s_footers")(spark, sfDir).collect()
     val raw = ParquetMeta.footers(spark, s"$sfDir/lineitem.parquet").collect()
     val byCol = raw.groupBy(_.column_path)
     assert(gate.map(_.getString(0)).toSeq == byCol.keySet.toSeq.sorted)
@@ -60,6 +60,6 @@ class ParquetMetaSpec extends SparkSpec {
       assert(r.getLong(3) == cs.flatMap(_.null_count).sum)
       assert(r.getLong(4) == cs.map(_.compressed_bytes).sum)
     }
-    assert(ParquetMeta.gateOracleSql().contains("parquet_metadata"))
+    assert(graft.SparkEntry.oracleSql("q_s_footers").contains("parquet_metadata"))
   }
 }
