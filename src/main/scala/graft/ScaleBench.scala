@@ -37,7 +37,8 @@ object ScaleBench {
 
   private def perturbed(spark: SparkSession, srcDir: String, table: String,
       copies: Int): DataFrame = {
-    val base = spark.read.parquet(s"$srcDir/$table.parquet")
+    // not IO.table: the scaled fixture keeps events.ts as the source wrote it
+    val base = graft.sources.IO.readParquet(spark, s"$srcDir/$table.parquet")
     def shifted(c: Int): DataFrame = {
       val k = lit(c.toLong * Off)
       table match {

@@ -565,7 +565,9 @@ object TimeSeries {
     * seasonal base joins on exact period index p−season (a gap yields
     * no forecast — the row is skipped for that model, counted in
     * `n_scored`). `anchor` must lower-bound every timestamp (integer
-    * div vs floor at negatives — enforced).
+    * div vs floor at negatives — enforced) and `widthNanos` must be
+    * positive (a zero width fails the `div`, a negative one buckets
+    * backwards — both rejected up front).
     *
     * Scale shape: the data-scale pass is the one bucket aggregate; all
     * windows/joins run over the calendar-bounded period panel (≤ span
@@ -578,6 +580,7 @@ object TimeSeries {
   def rollingOriginBacktest(df: DataFrame, tsCol: String, valCol: String,
       anchorNanos: Long, widthNanos: Long, season: Int, k: Int): DataFrame = {
     require(season >= 1 && k >= 1, s"need season, k >= 1: $season/$k")
+    require(widthNanos > 0, s"need widthNanos > 0: $widthNanos")
     val per = df
       .where(col(valCol).isNotNull && col(tsCol).isNotNull &&
         col(tsCol) >= lit(anchorNanos))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -134,10 +135,23 @@ object IO {
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
+  /** Parquet scan that starts no Spark job for a single file: its schema
+    * is read from the footer on the driver (with Spark's own converter,
+    * see [[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]])
+    * and handed to the reader, where `spark.read.parquet` would launch a
+    * job to read that one footer. Every call reads its footer afresh. Any
+    * other path (a directory, a glob, a missing or unreadable file) goes
+    * through Spark's inference unchanged. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.ofSingleFile(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
   /** Convenience loader for the driver-provided parquet fixtures. The
     * `events` table normalizes through [[epochNanos]]. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") epochNanos(df) else df
   }
 

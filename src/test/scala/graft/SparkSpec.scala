@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,37 @@ import org.scalatest.funsuite.AnyFunSuite
   * shuffle partitions on any host. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Jobs started by `body` on this thread (and threads it spawns), read
+    * after a marker job has passed through the listener bus behind them. */
+  def countJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"count-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

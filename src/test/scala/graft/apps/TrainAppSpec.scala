@@ -102,4 +102,40 @@ class TrainAppSpec extends SparkSpec {
       .select(col("prediction")).collect().map(_.getDouble(0)).sorted.toSeq
     assert(fromArtifact.nonEmpty && fromArtifact == inSession)
   }
+
+  test("ScoreApp on a header-only file and on an all-NA ArrDelay file") {
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("scoreedge").toFile.getAbsolutePath
+    try {
+      val flights = FlightsGenerator.flights(spark, 2500, seed = 7L)
+      IO.writeSingleCsv(flights, s"$dir/in_csv", s"$dir/flights.csv")
+      TrainApp.run(spark, s"$dir/flights.csv", s"$dir/out", countOnly = false,
+        planePath = None, testFile = None, saveModelDir = Some(s"$dir/model"))
+
+      val header = graft.sources.Schemas.flights.fieldNames.mkString(",")
+      Files.write(java.nio.file.Paths.get(s"$dir/empty.csv"),
+        (header + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val noTarget = FlightsGenerator.flights(spark, 300, seed = 9L)
+        .withColumn("ArrDelay", lit("NA"))
+      IO.writeSingleCsv(noTarget, s"$dir/na_csv", s"$dir/na.csv")
+      assert(IO.readCsv(spark, s"$dir/na.csv", Some(graft.sources.Schemas.flights))
+        .where("ArrDelay IS NULL").count() == 300L)
+
+      // cleaning drops rows without ArrDelay (reference semantics), so
+      // both inputs score nothing: empty sinks, a header-only CSV and no
+      // MAE line, without an exception
+      for ((input, out) <- Seq("empty.csv" -> "empty_out", "na.csv" -> "na_out")) {
+        val log = new java.io.ByteArrayOutputStream
+        Console.withOut(log)(ScoreApp.run(spark, s"$dir/$input",
+          s"$dir/model", s"$dir/$out", planePath = None))
+        assert(!log.toString("UTF-8").contains("[score] MAE"), input)
+        assert(spark.read.parquet(s"$dir/$out/scored.parquet").count() == 0L,
+          input)
+        val csv = scala.io.Source.fromFile(s"$dir/$out/scored.csv")
+        val lines = try csv.getLines().toList finally csv.close()
+        assert(lines.length == 1 && lines.head.split(",").contains("prediction"),
+          s"$input: $lines")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

@@ -335,4 +335,15 @@ class TimeSeriesSpec extends SparkSpec {
     assert(got("seasonal_naive") == (1L, 2.0))
     assert(got("expanding_mean") == (1L, 3.0))
   }
+
+  test("rollingOriginBacktest rejects a zero or negative period width") {
+    import spark.implicits._
+    val rows = Seq((0L, 1.0), (1L, 2.0)).toDF("ts", "value")
+    for (width <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException](
+        TimeSeries.rollingOriginBacktest(rows, "ts", "value",
+          anchorNanos = 0L, widthNanos = width, season = 1, k = 1))
+      assert(e.getMessage.contains(s"widthNanos > 0: $width"))
+    }
+  }
 }
