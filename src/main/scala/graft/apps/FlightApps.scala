@@ -2,7 +2,8 @@ package graft.apps
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ml.{FlightModel, FlightPipeline}
 import graft.operators.{Cleaning, Prepare}
@@ -58,11 +59,10 @@ object TrainApp {
     val result = FlightModel.trainModel(prepared, pipelineModel)
 
     result.predictions.foreach { preds =>
-      val labeled = FlightModel.addLabels(preds)
-      sink(labeled, outputDir, "predictions")
-      FlightModel.evaluate(labeled).foreach { case (mae, rmse) =>
-        println(f"[train] MAE=$mae%.3f RMSE=$rmse%.3f")
-      }
+      sink(FlightModel.addLabels(preds), outputDir, "predictions")
+        .foreach { case (mae, rmse) =>
+          println(f"[train] MAE=$mae%.3f RMSE=$rmse%.3f")
+        }
     }
     // predictions are sunk and evaluated — safe to drop the cached feature
     // table their lineage runs through
@@ -91,13 +91,9 @@ object TrainApp {
     val prepared = Prepare.prepareData(Cleaning.dropForbidden(raw), plane)
     val transformed = pipelineModel.transform(prepared)
     val scored = tree.map(_.transform(transformed)).getOrElse(transformed)
-    val labeled = FlightModel.addLabels(scored)
-    sink(labeled, outputDir, name)
-    if (labeled.columns.contains("prediction") &&
-        labeled.columns.contains(FlightModel.TargetCol))
-      FlightModel.evaluate(labeled).foreach { case (mae, rmse) =>
-        println(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f")
-      }
+    sink(FlightModel.addLabels(scored), outputDir, name).foreach {
+      case (mae, rmse) => println(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f")
+    }
   }
 
   /** `--plane-data` CSV, or the generated plane table by default. */
@@ -112,11 +108,30 @@ object TrainApp {
     val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
 
-  /** S4 + S5/S6: parquet dir + single-file CSV of the primitive columns
-    * (`main.py:116-162`). */
-  private[apps] def sink(df: DataFrame, outputDir: String, name: String): Unit = {
-    IO.writeParquet(df, s"$outputDir/$name.parquet")
-    IO.writeSingleCsv(df, s"$outputDir/${name}_csv", s"$outputDir/$name.csv")
+  /** S4 + S5/S6 + M9: parquet dir + single-file CSV of the primitive
+    * columns (`main.py:116-162`), and MAE/RMSE when `df` carries both
+    * `prediction` and `ArrDelay` (None otherwise, or when no row has both).
+    * Every flight output comes from one computation of each row: `df` is
+    * persisted, the parquet write computes it and collects the metrics in
+    * the same job (`Dataset.observe`), and the CSV reads the persisted
+    * rows. The persisted plan keeps its input's partitioning (Spark does
+    * not coalesce a cached plan), so the CSV lists the rows partition by
+    * partition: an order that is reproducible run to run, not the input's. */
+  private[apps] def sink(df: DataFrame, outputDir: String,
+      name: String): Option[(Double, Double)] = {
+    val kept = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val observation =
+        if (kept.columns.contains("prediction") &&
+            kept.columns.contains(FlightModel.TargetCol)) Some(Observation())
+        else None
+      val metrics = FlightModel.metricColumns
+      IO.writeParquet(observation.fold(kept)(o =>
+        kept.observe(o, metrics.head, metrics.tail: _*)),
+        s"$outputDir/$name.parquet")
+      IO.writeSingleCsv(kept, s"$outputDir/${name}_csv", s"$outputDir/$name.csv")
+      observation.flatMap(o => FlightModel.metricsOf(o.get))
+    } finally kept.unpersist()
   }
 }
 

@@ -229,10 +229,11 @@ private[graft] object ScanGates {
     // planning time (PartitionFilters, asserted in PlanShapeSpec)
     Gate("q_s_partitioned", (s, dir) => {
       val path = tmpFor(dir, "part")
-      graft.sources.IO.writePartitioned(
-        t(s, dir, "documents").select("doc_id", "text", "n_chars", "lang"),
-        path, Seq("lang"))
-      s.read.parquet(path)
+      val src = t(s, dir, "documents").select("doc_id", "text", "n_chars", "lang")
+      graft.sources.IO.writePartitioned(src, path, Seq("lang"))
+      // read back with the written schema (the partition column last, as
+      // partition discovery places it): no schema-inference job
+      s.read.schema(src.drop("lang").schema.add(src.schema("lang"))).parquet(path)
         .filter(col("lang") === "en")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
@@ -357,11 +358,10 @@ private[graft] object ScanGates {
     // round-trip proves the rewrite lost/changed nothing
     Gate("q_s_compacted", (s, dir) => {
       val path = tmpFor(dir, "compacted")
-      graft.sources.IO.compact(
-        t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity"),
-        path, Seq("l_orderkey", "l_linenumber"), partitions = 8,
-        maxRecordsPerFile = 100000L)
-      s.read.parquet(path)
+      val src = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
+      graft.sources.IO.compact(src, path, Seq("l_orderkey", "l_linenumber"),
+        partitions = 8, maxRecordsPerFile = 100000L)
+      s.read.schema(src.schema).parquet(path)
         .groupBy((col("l_orderkey") % 7).as("grp"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(38,2)")).cast("double")
@@ -389,7 +389,7 @@ private[graft] object ScanGates {
       val src = t(s, dir, "part").select("p_partkey", "p_size", "p_retailprice")
       graft.sources.Layout.writeZordered(src, path,
         Seq("p_size", "p_retailprice"), partitions = 4, bits = 8)
-      s.read.parquet(path)
+      s.read.schema(src.schema).parquet(path)
         .select(col("p_partkey"), col("p_size"),
           graft.sources.Layout.mortonCode(Seq(
             pmod(col("p_partkey"), lit(256)).cast("long"),

@@ -5,7 +5,7 @@ import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor, LinearRegression, LinearRegressionModel}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** M7-M12: training, evaluation, tuning and label post-processing
@@ -118,14 +118,25 @@ object FlightModel {
     * 500k-row scale). None when no row has both `prediction` and
     * `ArrDelay` non-null, empty input included. */
   def evaluate(predictions: DataFrame): Option[(Double, Double)] = {
-    val d = col("prediction") - col(TargetCol)
-    val row = predictions.agg(
-      count(d).as("n"),
-      avg(abs(d)).as("mae"),
-      sqrt(avg(d * d)).as("rmse")).first()
-    if (row.getLong(0) == 0L) None
-    else Some((row.getDouble(1), row.getDouble(2)))
+    val metrics = metricColumns
+    val row = predictions.agg(metrics.head, metrics.tail: _*).first()
+    metricsOf(c => row.getAs[Any](c))
   }
+
+  /** The aggregates behind [[evaluate]], over d = prediction − ArrDelay:
+    * `n` = count(d), `mae` = avg(|d|), `rmse` = sqrt(avg(d²)). Also
+    * observable on a sink's own write (`Dataset.observe`), so the metrics
+    * need no pass of their own. */
+  private[graft] def metricColumns: Seq[Column] = {
+    val d = col("prediction") - col(TargetCol)
+    Seq(count(d).as("n"), avg(abs(d)).as("mae"), sqrt(avg(d * d)).as("rmse"))
+  }
+
+  /** (MAE, RMSE) from the values of [[metricColumns]] by name; None when
+    * `n` is 0. */
+  private[graft] def metricsOf(value: String => Any): Option[(Double, Double)] =
+    if (value("n").asInstanceOf[Long] == 0L) None
+    else Some((value("mae").asInstanceOf[Double], value("rmse").asInstanceOf[Double]))
 
   /** ±10-minute three-way labels (`main.py:94-113`): prediction ≥ 10 →
     * delayed, ≤ −10 → early, else on time; same for the actual ArrDelay

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Re-expresses the reference's column-expression feature engineering
   * (`/root/reference/src/main/dataset_utils.py:55-117`,
   * `/root/reference/src/main/custom_features.py`) as codegen-friendly native
-  * Catalyst expressions — no Python/Scala UDFs in the hot path.
+  * Catalyst expressions — no Python/Scala UDFs in the hot path. A stage
+  * that reads HHMM columns parses each of them once per row and derives
+  * hour, minute and minutes-since-midnight from that one int.
   */
 object Features {
 
@@ -25,35 +27,58 @@ object Features {
 
   /** HHMM → hour. Division is double (matches Python `/`), truncated by the
     * int cast (`dataset_utils.py:86`). */
-  def hourFromTime(c: Column): Column = (timeAsInt(c) / 100).cast("int")
+  def hourFromTime(c: Column): Column = hourOf(timeAsInt(c))
 
   /** HHMM → minutes past the hour (`dataset_utils.py:87`). */
-  def minuteFromTime(c: Column): Column = (timeAsInt(c) % 100).cast("int")
+  def minuteFromTime(c: Column): Column = minuteOf(timeAsInt(c))
 
   /** HHMM → minutes since midnight, null-safe (`dataset_utils.py:90`). */
-  def minutesSinceMidnight(c: Column): Column = {
-    val asInt = timeAsInt(c)
-    when(asInt.isNotNull, hourFromTime(c) * 60 + minuteFromTime(c))
+  def minutesSinceMidnight(c: Column): Column = minutesOf(timeAsInt(c))
+
+  // the same three derivations from an already parsed [[timeAsInt]] value
+  private def hourOf(t: Column): Column = (t / 100).cast("int")
+  private def minuteOf(t: Column): Column = (t % 100).cast("int")
+  private def minutesOf(t: Column): Column =
+    when(t.isNotNull, hourOf(t) * 60 + minuteOf(t))
+
+  /** Temporary column holding the parsed HHMM int of `c` inside one stage. */
+  private def parsedName(c: String): String = s"__hhmm_$c"
+
+  /** Runs `stage` with the [[timeAsInt]] parse of each of `timeCols`
+    * added as a temporary column (handed to `stage` as a column lookup),
+    * then drops them. Each HHMM column is parsed once per row: Catalyst's
+    * CollapseProject does not inline a non-cheap alias that is referenced
+    * more than once, so hour, minute and minutes-since-midnight all read
+    * the one parsed int instead of repeating the two `regexp_replace`s. */
+  private def withParsedTimes(df: DataFrame, timeCols: Seq[String])(
+      stage: (DataFrame, String => Column) => DataFrame): DataFrame = {
+    val reserved = timeCols.map(parsedName)
+    val clash = df.columns.toSet.intersect(reserved.toSet)
+    require(clash.isEmpty,
+      s"Features reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    val parsed = timeCols.foldLeft(df)((acc, c) =>
+      acc.withColumn(parsedName(c), timeAsInt(col(c))))
+    stage(parsed, c => col(parsedName(c))).drop(reserved: _*)
   }
 
   /** W2-adjacent: cyclical sin/cos encodings of one HHMM time column, plus
     * the not-null row filter the reference applies per column
     * (`dataset_utils.py:79-108`). Null encodings become 0.0, matching the
-    * reference's `otherwise(0)`. */
-  def cyclicalLocaltime(df: DataFrame, timeCol: String): DataFrame = {
-    val c = col(timeCol)
-    val msm = minutesSinceMidnight(c)
-    val hrs = hourFromTime(c)
-    df.filter(c.isNotNull)
-      .withColumn(s"${timeCol}_minutes_cosine",
-        when(msm.isNotNull, cos(lit(TwoPi) * msm / 1440)).otherwise(0))
-      .withColumn(s"${timeCol}_minutes_sine",
-        when(msm.isNotNull, sin(lit(TwoPi) * msm / 1440)).otherwise(0))
-      .withColumn(s"${timeCol}_hours_cosine",
-        when(hrs.isNotNull, cos(lit(TwoPi) * hrs / 24)).otherwise(0))
-      .withColumn(s"${timeCol}_hours_sine",
-        when(hrs.isNotNull, sin(lit(TwoPi) * hrs / 24)).otherwise(0))
-  }
+    * reference's `otherwise(0)`. The column is parsed once per row. */
+  def cyclicalLocaltime(df: DataFrame, timeCol: String): DataFrame =
+    withParsedTimes(df.filter(col(timeCol).isNotNull), Seq(timeCol)) { (in, parsed) =>
+      val t = parsed(timeCol)
+      val msm = minutesOf(t)
+      val hrs = hourOf(t)
+      in.withColumn(s"${timeCol}_minutes_cosine",
+          when(msm.isNotNull, cos(lit(TwoPi) * msm / 1440)).otherwise(0))
+        .withColumn(s"${timeCol}_minutes_sine",
+          when(msm.isNotNull, sin(lit(TwoPi) * msm / 1440)).otherwise(0))
+        .withColumn(s"${timeCol}_hours_cosine",
+          when(hrs.isNotNull, cos(lit(TwoPi) * hrs / 24)).otherwise(0))
+        .withColumn(s"${timeCol}_hours_sine",
+          when(hrs.isNotNull, sin(lit(TwoPi) * hrs / 24)).otherwise(0))
+    }
 
   /** The three HHMM columns the reference encodes (`dataset_utils.py:111-117`). */
   def cyclicalLocaltimeAll(df: DataFrame): DataFrame =
@@ -107,11 +132,14 @@ object Features {
       else "unknown")
 
   /** Feature 1: time-of-day buckets for the three schedule columns
-    * (`custom_features.py:27-47`). */
-  def addFlightTimeWindow(df: DataFrame): DataFrame =
-    df.withColumn("DepTime_TOD", timeOfDay(hourFromTime(col("DepTime"))))
-      .withColumn("CRSDepTime_TOD", timeOfDay(hourFromTime(col("CRSDepTime"))))
-      .withColumn("CRSArrTime_TOD", timeOfDay(hourFromTime(col("CRSArrTime"))))
+    * (`custom_features.py:27-47`), each column parsed once per row. */
+  def addFlightTimeWindow(df: DataFrame): DataFrame = {
+    val timeCols = Seq("DepTime", "CRSDepTime", "CRSArrTime")
+    withParsedTimes(df, timeCols) { (in, parsed) =>
+      timeCols.foldLeft(in)((acc, c) =>
+        acc.withColumn(s"${c}_TOD", timeOfDay(hourOf(parsed(c)))))
+    }
+  }
 
   /** Feature 2: weekend indicator, DayOfWeek ∈ {5,6,7}
     * (`custom_features.py:52-57`). */
@@ -120,17 +148,18 @@ object Features {
       when(col("DayOfWeek").isin(5, 6, 7), "Weekend").otherwise("Weekday"))
 
   /** Feature 3: scheduled-slack bucketing of CRSArrTime − CRSDepTime in
-    * minutes (`custom_features.py:62-90`). Null diff falls through every
-    * `when` to "MORE_THAN_ENOUGH", matching the reference. */
-  def addEnoughTimeEstimation(df: DataFrame): DataFrame = {
-    val diff = minutesSinceMidnight(col("CRSArrTime")) -
-      minutesSinceMidnight(col("CRSDepTime"))
-    df.withColumn("TimeBetweenDepartures",
-      when(diff <= 30, "NOT_ENOUGH")
-        .when(diff > 30 && diff <= 60, "BARELY_ENOUGH")
-        .when(diff > 60 && diff <= 120, "ENOUGH")
-        .otherwise("MORE_THAN_ENOUGH"))
-  }
+    * minutes (`custom_features.py:62-90`), each column parsed once per
+    * row. Null diff falls through every `when` to "MORE_THAN_ENOUGH",
+    * matching the reference. */
+  def addEnoughTimeEstimation(df: DataFrame): DataFrame =
+    withParsedTimes(df, Seq("CRSArrTime", "CRSDepTime")) { (in, parsed) =>
+      val diff = minutesOf(parsed("CRSArrTime")) - minutesOf(parsed("CRSDepTime"))
+      in.withColumn("TimeBetweenDepartures",
+        when(diff <= 30, "NOT_ENOUGH")
+          .when(diff > 30 && diff <= 60, "BARELY_ENOUGH")
+          .when(diff > 60 && diff <= 120, "ENOUGH")
+          .otherwise("MORE_THAN_ENOUGH"))
+    }
 
   /** All three custom features (`custom_features.py`, composed at
     * `dataset_utils.py:26-30`). */

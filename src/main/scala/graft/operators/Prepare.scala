@@ -11,6 +11,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Everything stays one lazy Catalyst plan; the only materialization
   * boundary is the 1-row broadcast inside [[Features.cyclicalMonthWeek]].
+  * Each [[Features]] stage parses an HHMM column once per row, so the
+  * optimized plan holds one `timeAsInt` parse per column per stage that
+  * survives the final projection (six), not one per derived value.
   */
 object Prepare {
 

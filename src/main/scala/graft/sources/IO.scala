@@ -54,7 +54,10 @@ object IO {
   /** S5: single-file CSV with header: coalesce(1) → write dir → move the
     * lone part file to `finalFile`. The single-task funnel is intentional
     * reference semantics (one output file), not a scaling strategy — large
-    * outputs should use [[writeParquet]].
+    * outputs should use [[writeParquet]]. The `coalesce(1)` reaches up to
+    * the nearest shuffle or cached relation: the flight apps hand it a
+    * persisted frame (`TrainApp.sink`), so only the file write runs in
+    * one task, not the scoring lineage.
     */
   def writeSingleCsv(df: DataFrame, dir: String, finalFile: String): Path = {
     csvSafeColumns(df)

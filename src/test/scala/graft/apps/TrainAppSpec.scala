@@ -2,8 +2,13 @@ package graft.apps
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.SparkSpec
-import graft.sources.{FlightsGenerator, IO}
+import graft.ml.FlightModel
+import graft.operators.{Cleaning, Prepare}
+import graft.sources.{FlightsGenerator, IO, Schemas}
 
 /** End-to-end CLI lifecycle smoke: CSV in → train → parquet + single CSV
   * out, then score a held-out file with the same run (SURVEY §3.1/§3.2). */
@@ -137,5 +142,115 @@ class TrainAppSpec extends SparkSpec {
           s"$input: $lines")
       }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  /** A model trained on 2,500 generated flights and a 500-row holdout
+    * CSV, shared by the scoring cases below. */
+  private lazy val scoring: (String, String) = {
+    val dir = Files.createTempDirectory("scoring").toFile.getAbsolutePath
+    IO.writeSingleCsv(FlightsGenerator.flights(spark, 2500, seed = 7L),
+      s"$dir/in_csv", s"$dir/flights.csv")
+    IO.writeSingleCsv(FlightsGenerator.flights(spark, 500, seed = 8L),
+      s"$dir/hold_csv", s"$dir/holdout.csv")
+    TrainApp.run(spark, s"$dir/flights.csv", s"$dir/out", countOnly = false,
+      planePath = None, testFile = None, saveModelDir = Some(s"$dir/model"))
+    (dir, s"$dir/holdout.csv")
+  }
+
+  /** `ScoreApp.run`'s stdout. */
+  private def scoreRun(input: String, out: String,
+      planePath: Option[String] = None): String = {
+    val log = new java.io.ByteArrayOutputStream
+    Console.withOut(log)(ScoreApp.run(spark, input, s"${scoring._1}/model",
+      out, planePath))
+    log.toString("UTF-8")
+  }
+
+  /** The labeled scoring lineage of `input`, as `ScoreApp.run` builds it. */
+  private def labeled(input: String): DataFrame = {
+    val (pm, tree) = FlightModel.loadModels(spark, s"${scoring._1}/model")
+    val raw = IO.readCsv(spark, input, Some(Schemas.flights))
+    val transformed = pm.transform(Prepare.prepareData(
+      Cleaning.dropForbidden(raw), TrainApp.planeData(spark, None)))
+    FlightModel.addLabels(tree.map(_.transform(transformed)).getOrElse(transformed))
+  }
+
+  test("ScoreApp computes each row once: <= 3x its input rows read, >= 10 fewer jobs than three passes") {
+    val (dir, holdout) = scoring
+    val inputRows = IO.readCsv(spark, holdout, Some(Schemas.flights)).count()
+    val oneRun = countRun(scoreRun(holdout, s"$dir/once"))
+    // the same outputs as three passes over the unpersisted lineage:
+    // parquet sink, CSV sink, then the metrics
+    val threePasses = countRun {
+      val df = labeled(holdout)
+      IO.writeParquet(df, s"$dir/thrice/scored.parquet")
+      IO.writeSingleCsv(df, s"$dir/thrice/scored_csv", s"$dir/thrice/scored.csv")
+      FlightModel.evaluate(df)
+    }
+    // the model artifact's own parquet rows are not scoring input
+    val modelRecords =
+      countRun(FlightModel.loadModels(spark, s"$dir/model")).inputRecords
+    info(s"one run $oneRun, three passes $threePasses, $inputRows input " +
+      s"rows, $modelRecords model records")
+    assert(oneRun.inputRecords - modelRecords <= 3 * inputRows,
+      s"ScoreApp read ${oneRun.inputRecords} records ($modelRecords of " +
+        s"them the model's) for $inputRows input rows")
+    assert(oneRun.jobs <= threePasses.jobs - 10,
+      s"ScoreApp ran ${oneRun.jobs} jobs, three passes ${threePasses.jobs}")
+  }
+
+  test("ScoreApp's MAE/RMSE equal evaluate over its parquet; the CSV holds the parquet's rows in a stable order") {
+    val (dir, holdout) = scoring
+    val log = scoreRun(holdout, s"$dir/check")
+    val parquet = spark.read.parquet(s"$dir/check/scored.parquet")
+    val (mae, rmse) = FlightModel.evaluate(parquet).get
+    assert(log.contains(f"[score] MAE=$mae%.3f RMSE=$rmse%.3f"), log)
+
+    // the sink's own metrics, unrounded, against the written rows
+    val (sinkMae, sinkRmse) =
+      TrainApp.sink(labeled(holdout), s"$dir/direct", "scored").get
+    val (pqMae, pqRmse) =
+      FlightModel.evaluate(spark.read.parquet(s"$dir/direct/scored.parquet")).get
+    assert(math.abs(sinkMae - pqMae) < 1e-9 && math.abs(sinkRmse - pqRmse) < 1e-9,
+      s"sink ($sinkMae, $sinkRmse) vs parquet ($pqMae, $pqRmse)")
+
+    // CSV lines == the parquet's CSV-safe rows, as a multiset
+    val safe = IO.csvSafeColumns(parquet)
+    val csv = scala.io.Source.fromFile(s"$dir/check/scored.csv")
+    val lines = try csv.getLines().toList finally csv.close()
+    assert(lines.head == safe.columns.mkString(","))
+    val fromCsv = spark.read.schema(safe.schema).option("header", "true")
+      .csv(s"$dir/check/scored.csv")
+    assert(fromCsv.count() == lines.size - 1 && fromCsv.count() == safe.count())
+    assert(fromCsv.exceptAll(safe).isEmpty && safe.exceptAll(fromCsv).isEmpty)
+
+    // a second run writes the same bytes
+    scoreRun(holdout, s"$dir/again")
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/check/scored.csv")),
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/again/scored.csv"))))
+  }
+
+  test("ScoreApp scores every row when no plane categorical was seen in training") {
+    val (dir, holdout) = scoring
+    // the default plane table's tail numbers, every categorical renamed
+    val unseen = TrainApp.planeData(spark, None).select(col("tailnum"),
+      lit("UnseenType").as("type"), lit("UnseenMaker").as("manufacturer"),
+      col("issue_date"), lit("UnseenModel").as("model"), col("status"),
+      lit("UnseenAircraft").as("aircraft_type"),
+      lit("UnseenEngine").as("engine_type"), lit("1901").as("year"))
+    IO.writeSingleCsv(unseen, s"$dir/plane_csv", s"$dir/plane.csv")
+    val plane = IO.readCsv(spark, s"$dir/plane.csv", Some(Schemas.planeData))
+    val joined = Prepare.prepareData(Cleaning.dropForbidden(
+      IO.readCsv(spark, holdout, Some(Schemas.flights))), plane).count()
+    assert(joined > 0)
+
+    val log = scoreRun(holdout, s"$dir/unseen", Some(s"$dir/plane.csv"))
+    assert(log.contains("[score] MAE="), log)
+    val scored = spark.read.parquet(s"$dir/unseen/scored.parquet")
+    assert(scored.count() == joined)
+    assert(scored.where(col("prediction").isNull).count() == 0L)
+    assert(scored.select("manufacturer").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("UnseenMaker"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.sources.FlightsGenerator
 
 /** Per-operator semantics tests for Features (SURVEY.md §5 unit plan):
   * HHMM parsing edge cases, trig identities, TOD bucket boundaries, weekend
@@ -99,5 +101,93 @@ class FeaturesSpec extends SparkSpec {
       .where(col("FlightNum") === 7 && col("CRSDepTime") === 900).first()
     assert(out.getAs[Int]("PrevDeparture") == 600) // 600 precedes 900
     assert(out.getAs[Int]("TimeSincePrevDeparture") == 180)
+  }
+
+  /** The HHMM stages as written with a fresh parse inside every derived
+    * value: the reference the parse-once stages must reproduce exactly. */
+  private object PerValueParse {
+    def asInt(c: Column): Column = {
+      val cleaned = regexp_replace(c.cast("string"), "[^0-9]", "")
+      when(cleaned === "", null).otherwise(cleaned.cast("int"))
+    }
+    def hour(c: Column): Column = (asInt(c) / 100).cast("int")
+    def minute(c: Column): Column = (asInt(c) % 100).cast("int")
+    def msm(c: Column): Column =
+      when(asInt(c).isNotNull, hour(c) * 60 + minute(c))
+
+    def cyclicalLocaltime(df: DataFrame, timeCol: String): DataFrame = {
+      val c = col(timeCol)
+      val twoPi = lit(2.0 * math.Pi)
+      df.filter(c.isNotNull)
+        .withColumn(s"${timeCol}_minutes_cosine",
+          when(msm(c).isNotNull, cos(twoPi * msm(c) / 1440)).otherwise(0))
+        .withColumn(s"${timeCol}_minutes_sine",
+          when(msm(c).isNotNull, sin(twoPi * msm(c) / 1440)).otherwise(0))
+        .withColumn(s"${timeCol}_hours_cosine",
+          when(hour(c).isNotNull, cos(twoPi * hour(c) / 24)).otherwise(0))
+        .withColumn(s"${timeCol}_hours_sine",
+          when(hour(c).isNotNull, sin(twoPi * hour(c) / 24)).otherwise(0))
+    }
+    def addFlightTimeWindow(df: DataFrame): DataFrame =
+      df.withColumn("DepTime_TOD", Features.timeOfDay(hour(col("DepTime"))))
+        .withColumn("CRSDepTime_TOD", Features.timeOfDay(hour(col("CRSDepTime"))))
+        .withColumn("CRSArrTime_TOD", Features.timeOfDay(hour(col("CRSArrTime"))))
+    def addEnoughTimeEstimation(df: DataFrame): DataFrame = {
+      val diff = msm(col("CRSArrTime")) - msm(col("CRSDepTime"))
+      df.withColumn("TimeBetweenDepartures",
+        when(diff <= 30, "NOT_ENOUGH")
+          .when(diff > 30 && diff <= 60, "BARELY_ENOUGH")
+          .when(diff > 60 && diff <= 120, "ENOUGH")
+          .otherwise("MORE_THAN_ENOUGH"))
+    }
+  }
+
+  private def assertSameRows(actual: DataFrame, expected: DataFrame): Unit = {
+    assert(actual.columns.toSeq == expected.columns.toSeq)
+    val a = actual.collect().map(_.toSeq.map(String.valueOf)).map(_.mkString("|")).sorted
+    val e = expected.collect().map(_.toSeq.map(String.valueOf)).map(_.mkString("|")).sorted
+    assert(a.toSeq == e.toSeq)
+  }
+
+  test("parse-once HHMM stages equal the per-value-parse formulas on odd inputs") {
+    val values = Seq("0730", "07:30", "730", "", "ab", null, "0", "2359")
+    // every value in every column, beside different values in the others,
+    // plus a scheduled arrival earlier than the departure
+    val rows = values.indices.map(i => (values(i),
+      values((i + 1) % values.size), values((i + 3) % values.size))) ++
+      Seq(("1800", "1800", "0630"), ("2359", "2300", "0005"))
+    val strings = rows.toDF("DepTime", "CRSDepTime", "CRSArrTime")
+    val ints = Seq[(Integer, Integer, Integer)]((0, 0, 2359), (2359, 2359, 0),
+      (730, 1800, 630), (null, 5, null), (1824, 959, 1001))
+      .toDF("DepTime", "CRSDepTime", "CRSArrTime")
+    for (df <- Seq(strings, ints)) {
+      for (c <- Seq("DepTime", "CRSDepTime", "CRSArrTime"))
+        assertSameRows(Features.cyclicalLocaltime(df, c),
+          PerValueParse.cyclicalLocaltime(df, c))
+      assertSameRows(Features.addFlightTimeWindow(df),
+        PerValueParse.addFlightTimeWindow(df))
+      assertSameRows(Features.addEnoughTimeEstimation(df),
+        PerValueParse.addEnoughTimeEstimation(df))
+    }
+  }
+
+  test("the parse-once stages refuse an input holding their temporary column") {
+    val df = Seq((730, 1800, 630)).toDF("DepTime", "CRSDepTime", "__hhmm_DepTime")
+    intercept[IllegalArgumentException](Features.addFlightTimeWindow(
+      df.withColumn("CRSArrTime", lit(900))))
+  }
+
+  test("the optimized prepareData plan parses each HHMM column once per stage") {
+    val flights = graft.operators.Cleaning.dropForbidden(
+      FlightsGenerator.flights(spark, 200, seed = 3L))
+    val plan = Prepare.prepareData(flights, FlightsGenerator.planeData(spark))
+      .queryExecution.optimizedPlan
+    val parses = plan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect { case r: RegExpReplace => r }.size).sum
+    }.sum
+    // one timeAsInt (two regexp_replace nodes) per column per stage that
+    // survives the model projection: CRSDepTime for the cyclical stage,
+    // three for the time-of-day buckets, two for the slack buckets
+    assert(parses <= 12, s"$parses regexp_replace nodes in\n$plan")
   }
 }

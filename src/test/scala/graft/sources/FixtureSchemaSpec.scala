@@ -186,4 +186,14 @@ class FixtureSchemaSpec extends SparkSpec {
     assert(tableJobs == 0 && buildJobs == 0, s"IO.table over every " +
       s"table started $tableJobs jobs, building the gates $buildJobs")
   }
+
+  test("the sink round-trip gates read their output back without a schema-inference job") {
+    val dir = sfDirs(1)
+    // write jobs only: the partitioned sink's one write, the compaction's
+    // range sample and write, the z-order's stats, range sample and write
+    val jobs = Seq("q_s_partitioned", "q_s_compacted", "q_s_zorder")
+      .map(g => g -> countJobs(SparkEntry.queries(g)(spark, dir)))
+    assert(jobs == Seq("q_s_partitioned" -> 1, "q_s_compacted" -> 3,
+      "q_s_zorder" -> 5), jobs)
+  }
 }
