@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL registration for the native graft expressions, so `spark.sql`
   * users get the same fused kernels as the Column API:
@@ -15,9 +14,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *   min_k_hashes(arr, k)             array<string> → array<long>
   *   simhash64(tokens)                array<string> → long
   *
-  * Two paths: [[GraftExtensions]] for `spark.sql.extensions` at session
-  * build time (the production route), [[GraftFunctions.registerAll]] for an
-  * already-running session (tests, notebooks).
+  * One path: [[GraftExtensions]] injects them through
+  * `spark.sql.extensions` when [[graft.GraftSession]] builds the session,
+  * so every session the project builds has them.
   */
 object GraftFunctions {
 
@@ -34,12 +33,6 @@ object GraftFunctions {
     "minhash_signature" -> (args => MinHashSignature(args(0), intArg(args(1), "k"))),
     "min_k_hashes" -> (args => MinKHashes(args(0), intArg(args(1), "k"))),
     "simhash64" -> (args => SimHash64(args(0))))
-
-  /** Register every graft function on a live session. */
-  def registerAll(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      ColumnBridge.registerFunction(spark, name, b)
-    }
 }
 
 /** `spark.sql.extensions` entry point: injects the graft functions and

@@ -18,7 +18,7 @@ private[graft] object Shared {
     * index fixture uses deliberately. */
   def tmpFor(dir: String, name: String): String =
     new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
+      s"graft_${name}_${runToken(dir)}").getAbsolutePath
 
   /** Catalog-object suffix with the same per-(sfDir) isolation as
     * [[tmpFor]] (table names collide across concurrent runs too). */
@@ -59,8 +59,7 @@ private[graft] object Shared {
     val emb = t(s, dir, "embeddings")
     val centroids = sim.trainCentroids(emb, "embedding", k = 8, maxIter = 5)
     val assigned = sim.ivfAssign(emb, "vec_id", "embedding", centroids)
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ivf_index_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
+    val out = tmpFor(dir, "ivf_index")
     graft.sources.IO.writePartitioned(assigned, s"$out/lists", Seq("cid"))
     // centroid table + fixture query vector are config-sized — they live
     // with the index as driver-side data (a deployment ships them with

@@ -198,69 +198,27 @@ object Alignment {
   }
 
   /** Generated twin of [[alignedServe]]: pair + rotation folds as
-    * in [[procrustesOracleSql]], the crossJoin+window argmax
-    * assignment of BOTH sides against the centroid literals (the
+    * in [[procrustesOracleSql]], the raw-cosine argmax assignment of
+    * BOTH sides against the centroid literals (the
     * [[Similarity.pcaIvfMnnOracleSql]] pattern), within-block top-1,
     * per-cid census. */
   def alignedServeOracleSql(model: ProcrustesModel,
       cents: Similarity.Codebook, table: String = "embeddings"): String = {
     val dim = model.dim
-    val rx = model.rotation.zipWithIndex.map { case (w, j) =>
-      val lits = w.map(_.toDouble.toString).mkString(", ")
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
-         |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
-    }.mkString(",\n    ")
-    val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
-    val ceRows = cents.map { case (cid, v) =>
-      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n    ")
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)),
-         |        (a, b) -> a + b)""".stripMargin
-    def cfold(x: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($x[i] AS DOUBLE) * c.cv[i]),
-         |        (a, b) -> a + b)""".stripMargin
-    val cnorm =
-      s"""sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))""".stripMargin
-    s"""WITH pair AS (
-       |  SELECT vec_id, embedding[1:$dim] AS xs,
-       |    list_transform(range(1, ${dim + 1}), j ->
-       |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
-       |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
-       |  FROM $table),
+    val tw = VectorTwinSql
+    s"""WITH ${pairCte(dim, table)},
        |pr AS (
        |  SELECT vec_id, CAST(ys AS REAL[]) AS nv, av FROM (
-       |    SELECT vec_id, ys, CAST([$rxArr] AS REAL[]) AS av FROM (
+       |    SELECT vec_id, ys, CAST([${tw.projectedList("rx", dim)}] AS REAL[]) AS av FROM (
        |      SELECT vec_id, ys,
-       |    $rx
+       |    ${rotatedCols(model)}
        |      FROM pair))),
-       |ce AS (SELECT * FROM (VALUES
-       |    $ceRows) t(cid, cv)),
-       |qa AS (
-       |  SELECT vec_id, cid, av FROM (
-       |    SELECT e.vec_id, c.cid, e.av,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${cfold("e.av")} / (sqrt(${fold("e.av", "e.av")}) * $cnorm)
-       |        DESC, c.cid) AS rn
-       |    FROM pr e CROSS JOIN ce c)
-       |  WHERE rn = 1),
-       |na AS (
-       |  SELECT vec_id, cid, nv FROM (
-       |    SELECT e.vec_id, c.cid, e.nv,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${cfold("e.nv")} / (sqrt(${fold("e.nv", "e.nv")}) * $cnorm)
-       |        DESC, c.cid) AS rn
-       |    FROM pr e CROSS JOIN ce c)
-       |  WHERE rn = 1),
+       |${Similarity.codebookCte(cents)},
+       |${tw.cosineArgmaxCte("qa", "pr", "vec_id", "av", "ce", dim)},
+       |${tw.cosineArgmaxCte("na", "pr", "vec_id", "nv", "ce", dim)},
        |s AS (
        |  SELECT q.cid, q.vec_id AS qid, n.vec_id AS nid,
-       |    ROUND(${fold("q.av", "n.nv")}
-       |      / (sqrt(${fold("q.av", "q.av")})
-       |       * sqrt(${fold("n.nv", "n.nv")})), 6) AS cos
+       |    ROUND(${tw.cosine(dim, "q.av", "n.nv")}, 6) AS cos
        |  FROM qa q JOIN na n ON q.cid = n.cid),
        |t1 AS (
        |  SELECT cid, qid, nid, cos FROM (
@@ -275,6 +233,19 @@ object Alignment {
        |FROM t1 GROUP BY cid ORDER BY cid""".stripMargin
   }
 
+  /** `pair(vec_id, xs, ys)`: the planted pair of [[withPair]] in SQL. */
+  private def pairCte(dim: Int, table: String): String =
+    s"""pair AS (
+       |  SELECT vec_id, embedding[1:$dim] AS xs,
+       |    list_transform(range(1, ${dim + 1}), j ->
+       |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
+       |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
+       |  FROM $table)""".stripMargin
+
+  /** R·xs as columns rx1..rxdim, the rotation rows inlined as literals. */
+  private def rotatedCols(model: ProcrustesModel): String =
+    VectorTwinSql.projectionCols(model.dim, "xs", model.rotation, "rx")
+
   /** Generated twin of [[procrustesResidual]]: the same planted pair
     * in SQL, the rotation rows inlined as DOUBLE literals from the
     * fitted model (dump-time, the q_x_pq pattern), the same left-fold
@@ -282,13 +253,6 @@ object Alignment {
   def procrustesOracleSql(model: ProcrustesModel,
       table: String = "embeddings"): String = {
     val dim = model.dim
-    val rx = model.rotation.zipWithIndex.map { case (w, j) =>
-      val lits = w.map(_.toDouble.toString).mkString(", ")
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
-         |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
-    }.mkString(",\n    ")
-    val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
     val d2 = (1 to dim)
       .map(j => s"(rx$j - CAST(ys[$j] AS DOUBLE)) * " +
         s"(rx$j - CAST(ys[$j] AS DOUBLE))")
@@ -298,20 +262,15 @@ object Alignment {
       .mkString(" + ")
     val orth = BigDecimal(model.orthErr)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    s"""WITH pair AS (
-       |  SELECT embedding[1:$dim] AS xs,
-       |    list_transform(range(1, ${dim + 1}), j ->
-       |      CASE WHEN j % 2 = 1 THEN embedding[1:$dim][${dim + 1} - j]
-       |           ELSE -embedding[1:$dim][${dim + 1} - j] END) AS ys
-       |  FROM $table),
+    s"""WITH ${pairCte(dim, table)},
        |proj AS (
        |  SELECT xs, ys,
-       |    $rx
+       |    ${rotatedCols(model)}
        |  FROM pair),
        |scored AS (
        |  SELECT
        |    ROUND(list_cosine_similarity(
-       |      CAST(CAST([$rxArr] AS REAL[]) AS DOUBLE[]),
+       |      CAST(CAST([${VectorTwinSql.projectedList("rx", dim)}] AS REAL[]) AS DOUBLE[]),
        |      CAST(ys AS DOUBLE[])), 6) AS cos,
        |    ROUND($d2, 9) AS d2, ROUND($y2, 9) AS y2
        |  FROM proj)

@@ -111,9 +111,11 @@ object Clustering {
     KMeansResult(centroids, assignments, cents)
   }
 
-  /** The unrolled-CTE prefix shared by both oracle twins: init from the
-    * first k vectors, then `iters` (assign, sum, carry-forward) stages,
-    * then the final assignment `af` under the last centroids. */
+  /** The unrolled-CTE prefix every [[kMeans]] twin shares: init from
+    * the first k vectors, then `iters` (assign, sum, carry-forward)
+    * stages, then the final assignment `af` under the last centroids.
+    * Each assignment is [[VectorTwinSql.l2ArgminCte]], the twin of the
+    * loop's [[graft.functions.VectorExprs.nearestCentroid]]. */
   private def loopCtes(table: String, idCol: String, vecCol: String,
       k: Int, dim: Int, iters: Int): String = {
     val base =
@@ -125,18 +127,9 @@ object Clustering {
          |  SELECT cid, CAST(u.pos AS INTEGER) AS pos, CAST(v[u.pos + 1] AS DOUBLE) AS c
          |  FROM seed, LATERAL unnest(range(0, $dim)) u(pos)),
          |cv0 AS (SELECT cid, list(c ORDER BY pos) AS cv FROM c0 GROUP BY cid)""".stripMargin
-    def assign(t: Int, from: Int) =
-      s"""a$t AS (
-         |  SELECT vid, cid FROM (
-         |    SELECT e.vid, c.cid,
-         |      list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> (CAST(e.v[i] AS DOUBLE) - c.cv[i])
-         |           * (CAST(e.v[i] AS DOUBLE) - c.cv[i])),
-         |        (a, b) -> a + b) AS d
-         |    FROM emb e, cv$from c)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
+    val tw = VectorTwinSql
     val stages = (1 to iters).map { t =>
-      s"""${assign(t, t - 1)},
+      s"""${tw.l2ArgminCte(s"a$t", "emb", "vid", "v", 0, dim, s"cv${t - 1}")},
          |s$t AS (
          |  SELECT a.cid, CAST(u.pos AS INTEGER) AS pos,
          |    ROUND(CAST(SUM(CAST(CAST(e.v[u.pos + 1] AS DOUBLE) AS DECIMAL(38,9)))
@@ -148,7 +141,7 @@ object Clustering {
          |  FROM c${t - 1} p LEFT JOIN s$t s USING (cid, pos)),
          |cv$t AS (SELECT cid, list(c ORDER BY pos) AS cv FROM c$t GROUP BY cid)""".stripMargin
     }
-    val fin = assign(iters + 1, iters).replace(s"a${iters + 1} AS (", "af AS (")
+    val fin = tw.l2ArgminCte("af", "emb", "vid", "v", 0, dim, s"cv$iters")
     (Seq(base) ++ stages ++ Seq(fin)).mkString(",\n")
   }
 
@@ -191,8 +184,7 @@ object Clustering {
     * ([[semanticDedupCappedOracleSql]]). */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, dim: Int, iters: Int, minCos: Double,
-      maxBlock: Int = 4096, overflowWindow: Int = 16,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      maxBlock: Int = 4096, overflowWindow: Int = 16): DataFrame = {
     // k = 0 auto-sizes the cluster count with the corpus (expected
     // cell ~256 rows — Similarity.suggestedNlist): a FIXED k lets the
     // within-cluster pair scope grow quadratically as the corpus does
@@ -215,11 +207,10 @@ object Clustering {
     val planes = Similarity.subBucketPlanes(dim)
     val refined = Similarity.refineOversizedBlocks(withCid, "cid", "__id",
       "__e", maxBlock, planes)
-    val pairs = materialize(
-      Similarity.boundedBlockPairs(refined, overflowWindow, planes.last)
-        .withColumn("__cos",
-          graft.functions.VectorExprs.cosine(col("v1"), col("v2")))
-        .filter(col("__cos") >= minCos))
+    val pairs = Similarity.boundedBlockPairs(refined, overflowWindow, planes.last)
+      .withColumn("__cos",
+        graft.functions.VectorExprs.cosine(col("v1"), col("v2")))
+      .filter(col("__cos") >= minCos)
     pairs.groupBy(col("id2").as(idCol))
       .agg(min(col("id1")).as("dup_of"),
         round(min_by(col("__cos"), col("id1")), 6).as("cos"))
@@ -228,103 +219,35 @@ object Clustering {
   /** Oracle twin of [[semanticDedup]] — the same kMeans CTE chain, the
     * same within-cluster pair scope, the same three cosine folds. */
   def semanticDedupOracleSql(table: String, idCol: String, vecCol: String,
-      k: Int, dim: Int, iters: Int, minCos: Double): String = {
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST($x.v[i] AS DOUBLE) * CAST($y.v[i] AS DOUBLE)),
-         |      (a, b) -> a + b)""".stripMargin
-    loopCtes(table, idCol, vecCol, k, dim, iters) +
-      s"""
-         |, wc AS (SELECT a.vid, a.cid, e.v FROM af a JOIN emb e USING (vid)),
-         |pr AS (
-         |  SELECT * FROM (
-         |    SELECT x.vid AS id1, y.vid AS id2,
-         |      ${fold("x", "y")}
-         |      / (sqrt(${fold("x", "x")})
-         |       * sqrt(${fold("y", "y")})) AS cos
-         |    FROM wc x JOIN wc y ON x.cid = y.cid AND x.vid < y.vid)
-         |  WHERE cos >= $minCos)
-         |SELECT id2 AS $idCol, MIN(id1) AS dup_of,
-         |       ROUND(MIN_BY(cos, id1), 6) AS cos
-         |FROM pr GROUP BY id2 ORDER BY id2""".stripMargin
-  }
+      k: Int, dim: Int, iters: Int, minCos: Double): String =
+    dedupOracleSql(table, idCol, vecCol, k, dim, iters, minCos,
+      VectorTwinSql.blockPairsCte("cand", "asg", Seq("cid"), "vid", "v", dim))
 
   /** Oracle twin of the CAPPED [[semanticDedup]] — the same kMeans CTE
-    * chain, then the refinement replicated stage by stage: block
-    * census, integer-exact bit count (printf('%b') bit-length, no
-    * libm), sub-bucket signs over the SAME plane literals
-    * (Float→Double widening round-trips through toString), the second
-    * census's overflow flag, all-pairs inside fitting sub-buckets, and
-    * the sorted-neighborhood window inside overflow ones. */
+    * chain, then the refinement replicated stage by stage
+    * ([[VectorTwinSql.boundedPairCtes]] over the cluster blocks). */
   def semanticDedupCappedOracleSql(table: String, idCol: String,
       vecCol: String, k: Int, dim: Int, iters: Int, minCos: Double,
-      maxBlock: Int, overflowWindow: Int): String = {
-    val planes = Similarity.subBucketPlanes(dim)
-    val maxBits = planes.length - 1
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST($x.v[i] AS DOUBLE) * CAST($y.v[i] AS DOUBLE)),
-         |      (a, b) -> a + b)""".stripMargin
-    def planeFold(v: String, p: Array[Float]) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($v.v[i] AS DOUBLE) * ([${p.map(_.toDouble.toString).mkString(", ")}])[i]),
-         |        (a, b) -> a + b)""".stripMargin
-    val plRows = planes.init.zipWithIndex.map { case (p, i) =>
-      s"($i, [${p.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n    ")
+      maxBlock: Int, overflowWindow: Int): String =
+    dedupOracleSql(table, idCol, vecCol, k, dim, iters, minCos,
+      VectorTwinSql.boundedPairCtes("asg", "cid", "vid", "v", dim,
+        maxBlock, overflowWindow))
+
+  /** The kMeans chain, `asg(vid, cid, v)` (every vector with its final
+    * cluster), the `candidates` CTEs over it ending in `cand`, then the
+    * dropped side: pairs at cos >= `minCos`, each dropped id pointing at
+    * its smallest smaller-id near-dup. */
+  private def dedupOracleSql(table: String, idCol: String, vecCol: String,
+      k: Int, dim: Int, iters: Int, minCos: Double,
+      candidates: String): String =
     loopCtes(table, idCol, vecCol, k, dim, iters) +
-      s"""
-         |, pl AS (SELECT * FROM (VALUES
-         |    $plRows) t(pid, pv)),
-         |cs1 AS (SELECT cid, count(*) AS n FROM af GROUP BY cid),
-         |bt AS (
-         |  SELECT cid, CASE WHEN n <= $maxBlock THEN 0
-         |    ELSE LEAST($maxBits,
-         |      length(printf('%b', (n + ${maxBlock - 1}) // $maxBlock - 1)))
-         |    END AS b
-         |  FROM cs1),
-         |sg AS (
-         |  SELECT a.vid, a.cid,
-         |    SUM(CASE WHEN p.pid < b.b AND ROUND(
-         |        list_reduce(list_transform(range(1, ${dim + 1}),
-         |          i -> CAST(e.v[i] AS DOUBLE) * p.pv[i]),
-         |          (x, y) -> x + y), 9) > 0
-         |      THEN (1::BIGINT << p.pid) ELSE 0 END) AS sub
-         |  FROM af a JOIN emb e USING (vid) JOIN bt b USING (cid)
-         |  CROSS JOIN pl p
-         |  GROUP BY a.vid, a.cid),
-         |cs2 AS (SELECT cid, sub, count(*) AS n2 FROM sg GROUP BY 1, 2),
-         |wc AS (
-         |  SELECT s.vid, s.cid, s.sub, (c.n2 > $maxBlock) AS ovf, e.v
-         |  FROM sg s JOIN cs2 c USING (cid, sub) JOIN emb e USING (vid)),
-         |np AS (
-         |  SELECT x.vid AS id1, y.vid AS id2,
-         |    ${fold("x", "y")}
-         |    / (sqrt(${fold("x", "x")})
-         |     * sqrt(${fold("y", "y")})) AS cos
-         |  FROM wc x JOIN wc y
-         |    ON x.cid = y.cid AND x.sub = y.sub AND x.vid < y.vid
-         |  WHERE NOT x.ovf),
-         |ovr AS (
-         |  SELECT vid, cid, sub, v,
-         |    row_number() OVER (PARTITION BY cid, sub
-         |      ORDER BY ROUND(${planeFold("wc", planes.last)}, 9), vid) AS rn
-         |  FROM wc WHERE ovf),
-         |op AS (
-         |  SELECT LEAST(x.vid, y.vid) AS id1, GREATEST(x.vid, y.vid) AS id2,
-         |    ${fold("x", "y")}
-         |    / (sqrt(${fold("x", "x")})
-         |     * sqrt(${fold("y", "y")})) AS cos
-         |  FROM ovr x JOIN ovr y
-         |    ON x.cid = y.cid AND x.sub = y.sub
-         |   AND y.rn > x.rn AND y.rn <= x.rn + $overflowWindow),
-         |pr AS (
-         |  SELECT * FROM (SELECT * FROM np UNION ALL SELECT * FROM op)
-         |  WHERE cos >= $minCos)
+      s""",
+         |asg AS (SELECT a.vid, a.cid, e.v FROM af a JOIN emb e USING (vid)),
+         |$candidates,
+         |pr AS (SELECT * FROM cand WHERE cos >= $minCos)
          |SELECT id2 AS $idCol, MIN(id1) AS dup_of,
          |       ROUND(MIN_BY(cos, id1), 6) AS cos
          |FROM pr GROUP BY id2 ORDER BY id2""".stripMargin
-  }
 
   /** Oracle twin of [[kMeans]].assignments over the `docFilter` slice. */
   def assignOracleSql(table: String, idCol: String, vecCol: String,

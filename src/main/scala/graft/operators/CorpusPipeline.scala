@@ -26,20 +26,11 @@ object CorpusPipeline {
     * gated query uses 8), or `packShards = 1` to OPT IN to one global
     * bin sequence — a single window partition that serializes the whole
     * corpus on one task; only for small corpora that genuinely need one
-    * global order.
-    *
-    * `materializeDedup` is applied to the deduplicated intermediate —
-    * the pipeline's only twice-consumed DataFrame (the decontamination
-    * probe and the keep-join both read it, so without materialization
-    * the dedup window evaluates twice per action). Pass
-    * `_.localCheckpoint()` (or [[graft.sources.IO.durableCheckpoint]] on
-    * a cluster) for large corpora; the identity default keeps the
-    * plan fully declarative for small/oracled runs. */
+    * global order. */
   def trainingChunks(docs: DataFrame, benchmark: DataFrame,
       minQuality: Double = 0.5, keepLang: String = "en",
       chunkWidth: Int = 120, chunkOverlap: Int = 20,
-      packTarget: Long = 200L, packShards: Int = 0,
-      materializeDedup: DataFrame => DataFrame = identity): DataFrame = {
+      packTarget: Long = 200L, packShards: Int = 0): DataFrame = {
     val ta = TextAnalysis
     val cleaned = docs.select(col("doc_id"),
       ta.cleanText(col("text")).as("text"))
@@ -49,8 +40,7 @@ object CorpusPipeline {
       .select(col("doc_id"), col("text"))
     // exact dedup keeping the smallest id per distinct cleaned text
     // (hash-led window keys — document bodies only compared on digest ties)
-    val deduped = materializeDedup(
-      Dedup.exactByText(scored, "text", col("doc_id")))
+    val deduped = Dedup.exactByText(scored, "text", col("doc_id"))
     // drop docs sharing >= 3 distinct trigram shingles with the benchmark
     val contaminated = Dedup.contaminationFlags(
       deduped, "doc_id", "text", benchmark, "text")

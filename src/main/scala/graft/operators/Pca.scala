@@ -211,13 +211,12 @@ object Pca {
   def oracleSql(model: PcaModel, table: String = "embeddings",
       whiten: Boolean = false): String = {
     val off = model.offsets
-    val pcs = model.components.zipWithIndex.map { case (w, c) =>
-      val lits = w.map(_.toDouble.toString).mkString(", ")
-      val scale = if (whiten) s" / sqrt(${model.eigenvalues(c)})" else ""
-      s"""ROUND((list_reduce(list_transform(range(1, ${model.dim + 1}),
-         |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
-         |      (a, b) -> a + b) - ${off(c)})$scale, 6) AS pc${c + 1}""".stripMargin
-    }.mkString(",\n    ")
+    val pcs = VectorTwinSql.projection(model.dim, "e.embedding",
+        model.components)
+      .zipWithIndex.map { case (p, c) =>
+        val scale = if (whiten) s" / sqrt(${model.eigenvalues(c)})" else ""
+        s"ROUND(($p - ${off(c)})$scale, 6) AS pc${c + 1}"
+      }.mkString(",\n    ")
     s"""SELECT e.vec_id,
        |    $pcs
        |FROM $table e

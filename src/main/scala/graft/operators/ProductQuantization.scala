@@ -325,61 +325,56 @@ object ProductQuantization {
     * literals, per-subspace assignment with the shared (d, cid) tie
     * rule, and the ADC fold from the inlined lookup tables of `rq`. */
   def opqServeOracleSql(model: OpqModel, rq: Array[Double],
-      table: String = "embeddings", dim: Int = 16, topK: Int = 10): String = {
-    val pq = model.opq
-    val sub = pq.subDim
-    val m = pq.m
-    val tables = lookupTables(pq, rq)
-    val (rx, rxArr) = rotationExprs(model, dim)
-    val cbCtes = (0 until m).map { j =>
-      val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
-        s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
-      }.mkString(", ")
-      s"cb$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
-    }
-    val cdCtes = (0 until m).map { j =>
-      s"""cd$j AS (
-         |  SELECT vid, cid AS code$j FROM (
-         |    SELECT e.vid, c.cid,
-         |      list_reduce(list_transform(range(1, ${sub + 1}),
-         |        i -> (e.xr[${j * sub} + i] - c.cv[i])
-         |           * (e.xr[${j * sub} + i] - c.cv[i])),
-         |        (a, b) -> a + b) AS d
-         |    FROM base e, cb$j c)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
-    }
-    val joins = (1 until m).map(j => s"JOIN cd$j USING (vid)").mkString(" ")
-    val luts = (0 until m).map { j =>
+      table: String = "embeddings", dim: Int = 16, topK: Int = 10): String =
+    s"""WITH ${rotatedBase(model, table, dim)},
+       |${adcTopKSql(model.opq, rq, "base", "xr", "vec_id", topK, typed = true)}""".stripMargin
+
+  /** `emb0(vid, xs)` and `base(vid, xs, xr)`: the first `dim` elements
+    * of each embedding and their rotation by the inlined OPQ rotation
+    * rows — shared by the OPQ gate twins. */
+  private def rotatedBase(model: OpqModel, table: String, dim: Int): String = {
+    val tw = VectorTwinSql
+    s"""emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
+       |base AS (
+       |  SELECT vid, xs, [${tw.projectedList("rx", dim)}]::DOUBLE[] AS xr FROM (
+       |    SELECT vid, xs,
+       |    ${tw.projectionCols(dim, "xs", model.rotation, "rx")}
+       |    FROM emb0))""".stripMargin
+  }
+
+  /** Per-subspace codebook CTEs `cb<tag>j(cid, cv)` of `pq` — with
+    * `typed`, each centroid cast to DOUBLE[]. */
+  private def codebookCtes(tag: String, pq: PQModel, typed: Boolean): Seq[String] =
+    (0 until pq.m).map(j => VectorTwinSql.valuesCte(s"cb$tag$j", "cid", "cv",
+      pq.codebooks(j).toSeq.zipWithIndex.map(_.swap), typed))
+
+  /** Per-subspace assignment CTEs `cd<tag>j(vid, cid, cv)`: each `from`
+    * row's nearest `cb<tag>j` centroid to its j-th slice of `vec`. */
+  private def assignCtes(tag: String, pq: PQModel, from: String,
+      vec: String): Seq[String] =
+    (0 until pq.m).map(j => VectorTwinSql.l2ArgminCte(s"cd$tag$j", from,
+      "vid", vec, j * pq.subDim, pq.subDim, s"cb$tag$j"))
+
+  /** Encode `from`.`vec` (vid-keyed) against `pq`, then rank by the
+    * left-assoc ADC sum of `query`'s inlined lookup tables, round 6,
+    * ties by id — the twin of [[encode]] → [[adcTopK]]. */
+  private def adcTopKSql(pq: PQModel, query: Array[Double], from: String,
+      vec: String, idCol: String, topK: Int, typed: Boolean): String = {
+    val tables = lookupTables(pq, query)
+    val codes = (0 until pq.m).map(j => s"cd$j.cid AS code$j").mkString(", ")
+    val joins = (1 until pq.m).map(j => s"JOIN cd$j USING (vid)").mkString(" ")
+    val luts = (0 until pq.m).map { j =>
       val cases = tables(j).zipWithIndex
         .map { case (t, c) => s"WHEN $c THEN CAST($t AS DOUBLE)" }.mkString(" ")
       s"(CASE code$j $cases END)"
     }.mkString("\n         + ")
-    s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
-       |base AS (
-       |  SELECT vid, [$rxArr]::DOUBLE[] AS xr FROM (
-       |    SELECT vid, xs,
-       |    $rx
-       |    FROM emb0)),
-       |${cbCtes.mkString(",\n")},
-       |${cdCtes.mkString(",\n")},
-       |codes AS (SELECT * FROM cd0 $joins)
-       |SELECT vid AS vec_id,
+    val ctes = codebookCtes("", pq, typed) ++ assignCtes("", pq, from, vec)
+    s"""${ctes.mkString(",\n")},
+       |codes AS (SELECT vid, $codes FROM cd0 $joins)
+       |SELECT vid AS $idCol,
        |       ROUND($luts, 6) AS adist
        |FROM codes
        |ORDER BY adist, vid LIMIT $topK""".stripMargin
-  }
-
-  /** Per-component rotation projections as DuckDB exprs: (the rx column
-    * defs, the array-assembly list) — shared by the OPQ gate twins. */
-  private def rotationExprs(model: OpqModel, dim: Int): (String, String) = {
-    val rx = model.rotation.zipWithIndex.map { case (w, j) =>
-      val lits = w.map(_.toDouble.toString).mkString(", ")
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST(xs[i] AS DOUBLE) * ([$lits])[i]),
-         |      (a, b) -> a + b) AS rx${j + 1}""".stripMargin
-    }.mkString(",\n    ")
-    val rxArr = (1 to dim).map(j => s"rx$j").mkString(", ")
-    (rx, rxArr)
   }
 
   /** Generated twin of [[opqDistortionReport]]: rotation + BOTH codebooks
@@ -388,54 +383,28 @@ object ProductQuantization {
     * round-6 means. */
   def opqOracleSql(model: OpqModel, table: String = "embeddings",
       dim: Int = 16): String = {
-    val sub = model.raw.subDim
     val m = model.raw.m
-    def cbCtes(tag: String, pq: PQModel) = (0 until m).map { j =>
-      val rows = pq.codebooks(j).zipWithIndex.map { case (c, cid) =>
-        s"($cid, [${c.mkString(", ")}]::DOUBLE[])"
-      }.mkString(", ")
-      s"cb$tag$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
-    }
-    def cdCtes(tag: String, src: String, vcol: String, cast: Boolean) =
-      (0 until m).map { j =>
-        val el = if (cast) s"CAST($src.$vcol[${j * sub} + i] AS DOUBLE)"
-          else s"$src.$vcol[${j * sub} + i]"
-        s"""cd$tag$j AS (
-           |  SELECT vid, cid AS code$tag$j, cv AS cv$tag$j FROM (
-           |    SELECT e.vid, c.cid, c.cv,
-           |      list_reduce(list_transform(range(1, ${sub + 1}),
-           |        i -> ($el - c.cv[i]) * ($el - c.cv[i])),
-           |        (a, b) -> a + b) AS d
-           |    FROM base e, cb$tag$j c)
-           |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
-      }
-    val (rx, rxArr) = rotationExprs(model, dim)
-    def d2(tag: String, vcol: String, cast: Boolean) =
-      (0 until m).map { j =>
-        val el = if (cast) s"CAST($vcol[${j * sub} + i] AS DOUBLE)"
-          else s"$vcol[${j * sub} + i]"
-        s"""list_reduce(list_transform(range(1, ${sub + 1}),
-           |      i -> ($el - cv$tag$j[i]) * ($el - cv$tag$j[i])),
-           |      (a, b) -> a + b)""".stripMargin
-      }.mkString("\n    + ")
-    val joinsR = (0 until m).map(j => s"JOIN cdr$j USING (vid)").mkString(" ")
-    val joinsO = (0 until m).map(j => s"JOIN cdo$j USING (vid)").mkString(" ")
-    s"""WITH emb0 AS (SELECT vec_id AS vid, embedding[1:$dim] AS xs FROM $table),
-       |base AS (
-       |  SELECT vid, xs, [$rxArr]::DOUBLE[] AS xr FROM (
-       |    SELECT vid, xs,
-       |    $rx
-       |    FROM emb0)),
-       |${cbCtes("r", model.raw).mkString(",\n")},
-       |${cbCtes("o", model.opq).mkString(",\n")},
-       |${cdCtes("r", "e", "xs", cast = true).mkString(",\n")},
-       |${cdCtes("o", "e", "xr", cast = false).mkString(",\n")},
+    val sub = model.raw.subDim
+    def d2(tag: String, vcol: String) = (0 until m)
+      .map(j => VectorTwinSql.sqDist(sub, vcol, j * sub, s"cv$tag$j"))
+      .mkString("\n    + ")
+    val cvs = for (tag <- Seq("r", "o"); j <- 0 until m)
+      yield s"cd$tag$j.cv AS cv$tag$j"
+    val joins = for (tag <- Seq("r", "o"); j <- 0 until m)
+      yield s"JOIN cd$tag$j USING (vid)"
+    val ctes = codebookCtes("r", model.raw, typed = true) ++
+      codebookCtes("o", model.opq, typed = true) ++
+      assignCtes("r", model.raw, "base", "xs") ++
+      assignCtes("o", model.opq, "base", "xr")
+    s"""WITH ${rotatedBase(model, table, dim)},
+       |${ctes.mkString(",\n")},
        |joined AS (
-       |  SELECT * FROM base $joinsR $joinsO),
+       |  SELECT vid, xs, xr, ${cvs.mkString(", ")}
+       |  FROM base ${joins.mkString(" ")}),
        |perrow AS (
        |  SELECT vid,
-       |    ${d2("r", "xs", cast = true)} AS d2r,
-       |    ${d2("o", "xr", cast = false)} AS d2o
+       |    ${d2("r", "xs")} AS d2r,
+       |    ${d2("o", "xr")} AS d2o
        |  FROM joined)
        |SELECT CAST(count(*) AS BIGINT) AS n,
        |  ROUND(CAST(SUM(CAST(ROUND(d2r, 9) AS DECIMAL(38,9))) AS DOUBLE)
@@ -450,43 +419,11 @@ object ProductQuantization {
 
   /** Generated DuckDB twin of encode→ADC→top-k: codebooks and lookup
     * tables inline as literals (Double.toString round-trips exactly);
-    * per-subspace assignment uses the same list_reduce distance fold
-    * and (d, cid) tie rule as the engine's fused expression, the ADC
-    * sum is the same left-assoc literal chain. */
+    * per-subspace assignment uses the same left-fold distance and
+    * (d, cid) tie rule as the engine's fused expression, the ADC sum is
+    * the same left-assoc literal chain. */
   def adcOracleSql(table: String, idCol: String, vecCol: String,
-      model: PQModel, query: Array[Double], topK: Int): String = {
-    val sub = model.subDim
-    val tables = lookupTables(model, query)
-    val cbCtes = (0 until model.m).map { j =>
-      val rows = model.codebooks(j).zipWithIndex.map { case (c, cid) =>
-        s"($cid, [${c.mkString(", ")}])"
-      }.mkString(", ")
-      s"cb$j AS (SELECT * FROM (VALUES $rows) AS t(cid, cv))"
-    }
-    val cdCtes = (0 until model.m).map { j =>
-      s"""cd$j AS (
-         |  SELECT vid, cid AS code$j FROM (
-         |    SELECT e.vid, c.cid,
-         |      list_reduce(list_transform(range(1, ${sub + 1}),
-         |        i -> (CAST(e.v[${j * sub} + i] AS DOUBLE) - c.cv[i])
-         |           * (CAST(e.v[${j * sub} + i] AS DOUBLE) - c.cv[i])),
-         |        (a, b) -> a + b) AS d
-         |    FROM emb e, cb$j c)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vid ORDER BY d, cid) = 1)""".stripMargin
-    }
-    val joins = (1 until model.m).map(j => s"JOIN cd$j USING (vid)").mkString(" ")
-    val luts = (0 until model.m).map { j =>
-      val cases = tables(j).zipWithIndex
-        .map { case (t, c) => s"WHEN $c THEN CAST($t AS DOUBLE)" }.mkString(" ")
-      s"(CASE code$j $cases END)"
-    }.mkString("\n         + ")
+      model: PQModel, query: Array[Double], topK: Int): String =
     s"""WITH emb AS (SELECT $idCol AS vid, $vecCol AS v FROM $table),
-       |${cbCtes.mkString(",\n")},
-       |${cdCtes.mkString(",\n")},
-       |codes AS (SELECT * FROM cd0 $joins)
-       |SELECT vid AS $idCol,
-       |       ROUND($luts, 6) AS adist
-       |FROM codes
-       |ORDER BY adist, vid LIMIT $topK""".stripMargin
-  }
+       |${adcTopKSql(model, query, "emb", "v", idCol, topK, typed = false)}""".stripMargin
 }

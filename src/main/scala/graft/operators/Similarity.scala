@@ -335,48 +335,27 @@ object Similarity {
     * (identical fold order, ties to the lowest cid), then the
     * block-scoped MNN with the same round-6 scoring and tie rules. */
   def mnnIvfOracleSql(cents: Codebook, table: String = "embeddings",
-      dim: Int = 64): String = {
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($x.embedding[i] AS DOUBLE) * CAST($y.embedding[i] AS DOUBLE)),
-         |        (a, b) -> a + b)""".stripMargin
-    def cfold(x: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($x.embedding[i] AS DOUBLE) * c.cv[i]),
-         |        (a, b) -> a + b)""".stripMargin
-    val ceRows = cents.map { case (cid, v) =>
-      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n    ")
-    s"""WITH ce AS (SELECT * FROM (VALUES
-       |    $ceRows) t(cid, cv)),
-       |asn AS (
-       |  SELECT vec_id, cid, embedding FROM (
-       |    SELECT e.vec_id, c.cid, e.embedding,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${cfold("e")}
-       |        / (sqrt(${fold("e", "e")})
-       |         * sqrt(list_reduce(list_transform(range(1, ${dim + 1}),
-       |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
-       |        c.cid) AS rn
-       |    FROM $table e CROSS JOIN ce c)
-       |  WHERE rn = 1),
-       |s AS (
-       |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
-       |    ROUND(${fold("a", "b")}
-       |      / (sqrt(${fold("a", "a")})
-       |       * sqrt(${fold("b", "b")})), 6) AS cos
-       |  FROM asn a JOIN asn b
-       |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
-       |t1 AS (
-       |  SELECT cid, ida, idb, cos FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY cid, ida
-       |      ORDER BY cos DESC, idb) AS rn FROM s)
-       |  WHERE rn = 1)
-       |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
-       |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-       |WHERE x.ida < x.idb
+      dim: Int = 64): String =
+    s"WITH ${ivfMnnSql(table, "embedding", dim, cents)}"
+
+  /** The codebook, the raw-cosine assignment of `from` (vec_id, `vec`)
+    * and the exhaustive within-cell mutual-NN: the part both IVF-MNN
+    * twins share. */
+  private def ivfMnnSql(from: String, vec: String, dim: Int,
+      cents: Codebook): String = {
+    val tw = VectorTwinSql
+    s"""${codebookCte(cents)},
+       |${tw.cosineArgmaxCte("asn", from, "vec_id", vec, "ce", dim)},
+       |${tw.blockPairsCte("s", "asn", Seq("cid"), "vec_id", vec, dim)},
+       |${tw.mutualNnCtes("s", "cid")}
+       |SELECT cid, id1, id2, cos FROM mnn
        |ORDER BY id1""".stripMargin
   }
+
+  /** The `ce(cid, cv)` literal CTE of a trained codebook. */
+  private[operators] def codebookCte(cents: Codebook): String =
+    VectorTwinSql.valuesCte("ce", "cid", "cv",
+      cents.toSeq.map { case (c, v) => (c, v.map(_.toDouble)) }, typed = true)
 
   // ── q_x_pipeline3: PCA(k=16) → trained IVF → block-scoped MNN ──
   //
@@ -429,57 +408,15 @@ object Similarity {
   def pcaIvfMnnOracleSql(model: Pca.PcaModel, cents: Codebook,
       table: String = "embeddings"): String = {
     val off = model.offsets
-    val kPca = model.components.length
-    val pcExprs = model.components.zipWithIndex.map { case (w, c) =>
-      val lits = w.map(_.toDouble.toString).mkString(", ")
-      s"""ROUND(list_reduce(list_transform(range(1, ${model.dim + 1}),
-         |      i -> CAST(e.embedding[i] AS DOUBLE) * ([$lits])[i]),
-         |      (a, b) -> a + b) - ${off(c)}, 6)""".stripMargin
-    }.mkString(",\n      ")
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${kPca + 1}),
-         |        i -> CAST($x.pv[i] AS DOUBLE) * CAST($y.pv[i] AS DOUBLE)),
-         |        (a, b) -> a + b)""".stripMargin
-    def cfold(x: String) =
-      s"""list_reduce(list_transform(range(1, ${kPca + 1}),
-         |        i -> CAST($x.pv[i] AS DOUBLE) * c.cv[i]),
-         |        (a, b) -> a + b)""".stripMargin
-    val ceRows = cents.map { case (cid, v) =>
-      s"($cid, [${v.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n    ")
+    val pcExprs = VectorTwinSql.projection(model.dim, "e.embedding",
+        model.components)
+      .zipWithIndex.map { case (p, c) => s"ROUND($p - ${off(c)}, 6)" }
+      .mkString(",\n      ")
     s"""WITH pr AS (
        |  SELECT e.vec_id,
        |    [$pcExprs]::REAL[] AS pv
        |  FROM $table e),
-       |ce AS (SELECT * FROM (VALUES
-       |    $ceRows) t(cid, cv)),
-       |asn AS (
-       |  SELECT vec_id, cid, pv FROM (
-       |    SELECT e.vec_id, c.cid, e.pv,
-       |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${cfold("e")}
-       |        / (sqrt(${fold("e", "e")})
-       |         * sqrt(list_reduce(list_transform(range(1, ${kPca + 1}),
-       |             i -> c.cv[i] * c.cv[i]), (a, b) -> a + b))) DESC,
-       |        c.cid) AS rn
-       |    FROM pr e CROSS JOIN ce c)
-       |  WHERE rn = 1),
-       |s AS (
-       |  SELECT a.cid, a.vec_id AS ida, b.vec_id AS idb,
-       |    ROUND(${fold("a", "b")}
-       |      / (sqrt(${fold("a", "a")})
-       |       * sqrt(${fold("b", "b")})), 6) AS cos
-       |  FROM asn a JOIN asn b
-       |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
-       |t1 AS (
-       |  SELECT cid, ida, idb, cos FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY cid, ida
-       |      ORDER BY cos DESC, idb) AS rn FROM s)
-       |  WHERE rn = 1)
-       |SELECT x.cid AS cid, x.ida AS id1, x.idb AS id2, x.cos AS cos
-       |FROM t1 x JOIN t1 y ON x.ida = y.idb AND x.idb = y.ida
-       |WHERE x.ida < x.idb
-       |ORDER BY id1""".stripMargin
+       |${ivfMnnSql("pr", "pv", model.components.length, cents)}""".stripMargin
   }
 
   /** Per-group embedding centroids, exploded to (group, pos, c) rows:
@@ -552,8 +489,7 @@ object Similarity {
     * Output: (`__g` block, `__id`, `__v`, `__sub` sub-bucket,
     * `__ovf`). Null blocks refine as one more block. */
   def refineOversizedBlocks(df: DataFrame, blockCol: String, idCol: String,
-      vecCol: String, maxBlock: Int, planes: Array[Array[Float]],
-      smallCensus: Boolean = true): DataFrame = {
+      vecCol: String, maxBlock: Int, planes: Array[Array[Float]]): DataFrame = {
     require(maxBlock >= 2, s"maxBlock must be >= 2, got $maxBlock")
     val maxBits = planes.length - 1 // last plane is the overflow projection
     require(maxBits >= 1, s"need at least 2 planes, got ${planes.length}")
@@ -563,9 +499,7 @@ object Similarity {
     // labels — never corpus-sized for a sane blocking), so broadcasting
     // it keeps the corpus+vector payload out of BOTH census joins
     // entirely (at the 100M embfam rung the two row shuffles alone
-    // exceed the machine's disk). `smallCensus = false` restores
-    // shuffle joins for a pathological unbounded block column.
-    def maybeB(c: DataFrame): DataFrame = if (smallCensus) broadcast(c) else c
+    // exceed the machine's disk)
     val census = rows.groupBy(col("__g").as("__cg"))
       .agg(count(lit(1)).as("__n"))
     // bits = bit-length of (ceil(n/maxBlock) - 1): the smallest b with
@@ -574,7 +508,7 @@ object Similarity {
     val bits = when(col("__n") <= maxBlock, lit(0))
       .otherwise(least(lit(maxBits), length(bin(m - lit(1))).cast("int")))
     val withBits = rows
-      .join(maybeB(census.select(col("__cg"), bits.as("__bits"))),
+      .join(broadcast(census.select(col("__cg"), bits.as("__bits"))),
         col("__g") <=> col("__cg"))
       .drop("__cg")
     val vf = asFloatVec(rows, "__v") // ephemeral: __v itself stays int8 for code vectors
@@ -591,7 +525,7 @@ object Similarity {
     // sizes its pair-work salting from it (a block's all-pairs volume
     // is __n2², known here for free from the census join)
     withSub
-      .join(maybeB(census2),
+      .join(broadcast(census2),
         col("__g") <=> col("__cg") && col("__sub") === col("__cs"))
       .select(col("__g"), col("__id"), col("__v"), col("__sub"),
         (col("__n2") > maxBlock).as("__ovf"), col("__n2"))
@@ -782,98 +716,21 @@ object Similarity {
   }
 
   /** Generated oracle CTEs for the BOUNDED [[mutualNearestPairs]] —
-    * the refinement path itself under the gate, the
-    * [[Clustering.semanticDedupCappedOracleSql]] recipe extended to
-    * mutual-top-1: block census, integer-exact bit count, sub-bucket
-    * signs over the same plane literals, all-pairs inside fitting
-    * sub-buckets, the sorted-neighborhood window inside overflow ones,
-    * then DIRECTED round-6 scoring, the (cos DESC, idb) top-1 window,
-    * and the mutual join. Appends to a caller-provided CTE named
-    * `baseName` with columns (`blockCol`, `idCol`, `vecCol`); the
-    * final CTE `mnn` has columns (`blockCol`, id1, id2, cos) with
-    * id1 < id2 — exactly [[mutualNearestPairs]]' output. */
+    * the refinement path itself under the gate:
+    * [[VectorTwinSql.boundedPairCtes]] (census, bit count, sub-bucket
+    * signs, all-pairs inside fitting sub-buckets, the sorted-neighborhood
+    * window inside overflow ones), then [[VectorTwinSql.mutualNnCtes]]
+    * (directed round-6 scoring, the (cos DESC, idb) top-1 window, the
+    * mutual join). Appends to a caller-provided CTE named `baseName`
+    * with columns (`blockCol`, `idCol`, `vecCol`); the final CTE `mnn`
+    * has columns (`blockCol`, id1, id2, cos) with id1 < id2 — exactly
+    * [[mutualNearestPairs]]' output. */
   def mnnBoundedOracleCtes(baseName: String, blockCol: String,
       idCol: String, vecCol: String, dim: Int, maxBlock: Int,
-      overflowWindow: Int): String = {
-    val planes = subBucketPlanes(dim)
-    val maxBits = planes.length - 1
-    def fold(x: String, y: String) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |      i -> CAST($x.$vecCol[i] AS DOUBLE) * CAST($y.$vecCol[i] AS DOUBLE)),
-         |      (a, b) -> a + b)""".stripMargin
-    def cosExpr(x: String, y: String) =
-      s"""ROUND(${fold(x, y)}
-         |    / (sqrt(${fold(x, x)})
-         |     * sqrt(${fold(y, y)})), 6)""".stripMargin
-    def planeFold(v: String, p: Array[Float]) =
-      s"""list_reduce(list_transform(range(1, ${dim + 1}),
-         |        i -> CAST($v.$vecCol[i] AS DOUBLE) * ([${p.map(_.toDouble.toString).mkString(", ")}])[i]),
-         |        (a, b) -> a + b)""".stripMargin
-    val plRows = planes.init.zipWithIndex.map { case (p, i) =>
-      s"($i, [${p.map(_.toDouble.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n    ")
-    s"""pl AS (SELECT * FROM (VALUES
-       |    $plRows) t(pid, pv)),
-       |cs1 AS (SELECT $blockCol, count(*) AS n FROM $baseName GROUP BY 1),
-       |bt AS (
-       |  SELECT $blockCol, CASE WHEN n <= $maxBlock THEN 0
-       |    ELSE LEAST($maxBits,
-       |      length(printf('%b', (n + ${maxBlock - 1}) // $maxBlock - 1)))
-       |    END AS b
-       |  FROM cs1),
-       |sg AS (
-       |  SELECT e.$idCol, e.$blockCol,
-       |    SUM(CASE WHEN p.pid < b.b AND ROUND(
-       |        list_reduce(list_transform(range(1, ${dim + 1}),
-       |          i -> CAST(e.$vecCol[i] AS DOUBLE) * p.pv[i]),
-       |          (x, y) -> x + y), 9) > 0
-       |      THEN (1::BIGINT << p.pid) ELSE 0 END) AS sub
-       |  FROM $baseName e JOIN bt b USING ($blockCol)
-       |  CROSS JOIN pl p
-       |  GROUP BY e.$idCol, e.$blockCol),
-       |cs2 AS (SELECT $blockCol, sub, count(*) AS n2 FROM sg GROUP BY 1, 2),
-       |wc AS (
-       |  SELECT s.$idCol, s.$blockCol, s.sub, (c.n2 > $maxBlock) AS ovf,
-       |    e.$vecCol
-       |  FROM sg s JOIN cs2 c USING ($blockCol, sub)
-       |  JOIN $baseName e USING ($idCol)),
-       |np AS (
-       |  SELECT x.$blockCol, x.$idCol AS id1, y.$idCol AS id2,
-       |    ${cosExpr("x", "y")} AS cos
-       |  FROM wc x JOIN wc y
-       |    ON x.$blockCol = y.$blockCol AND x.sub = y.sub
-       |   AND x.$idCol < y.$idCol
-       |  WHERE NOT x.ovf),
-       |ovr AS (
-       |  SELECT $idCol, $blockCol, sub, $vecCol,
-       |    row_number() OVER (PARTITION BY $blockCol, sub
-       |      ORDER BY ROUND(${planeFold("wc", planes.last)}, 9), $idCol) AS rn
-       |  FROM wc WHERE ovf),
-       |op AS (
-       |  SELECT x.$blockCol,
-       |    LEAST(x.$idCol, y.$idCol) AS id1,
-       |    GREATEST(x.$idCol, y.$idCol) AS id2,
-       |    ${cosExpr("x", "y")} AS cos
-       |  FROM ovr x JOIN ovr y
-       |    ON x.$blockCol = y.$blockCol AND x.sub = y.sub
-       |   AND y.rn > x.rn AND y.rn <= x.rn + $overflowWindow),
-       |cand AS (SELECT * FROM np UNION ALL SELECT * FROM op),
-       |dirs AS (
-       |  SELECT $blockCol, id1 AS ida, id2 AS idb, cos FROM cand
-       |  UNION ALL
-       |  SELECT $blockCol, id2 AS ida, id1 AS idb, cos FROM cand),
-       |t1 AS (
-       |  SELECT $blockCol, ida, idb, cos FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY $blockCol, ida
-       |      ORDER BY cos DESC, idb) AS rn FROM dirs)
-       |  WHERE rn = 1),
-       |mnn AS (
-       |  SELECT x.$blockCol, x.ida AS id1, x.idb AS id2, x.cos AS cos
-       |  FROM t1 x JOIN t1 y
-       |    ON x.$blockCol = y.$blockCol
-       |   AND x.ida = y.idb AND x.idb = y.ida
-       |  WHERE x.ida < x.idb)""".stripMargin
-  }
+      overflowWindow: Int): String =
+    VectorTwinSql.boundedPairCtes(baseName, blockCol, idCol, vecCol, dim,
+      maxBlock, overflowWindow) + ",\n" +
+      VectorTwinSql.mutualNnCtes("cand", blockCol)
 
   /** k-NN GRAPH within groups: per node, its top-`k` cosine neighbors
     * (rank 1..k, ties to the lowest neighbor id) — the adjacency that

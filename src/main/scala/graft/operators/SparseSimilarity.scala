@@ -29,18 +29,10 @@ object SparseSimilarity {
     * places (cross-engine libm parity); dot products and norms accumulate
     * as DECIMAL so results are aggregation-order-independent.
     *
-    * The weight table is consumed THREE times (the norm aggregate and
-    * both sides of the pair join) — Catalyst replays its full
-    * tokenize+join lineage per consumer, so at corpus scale pass
-    * `materialize` (cache, localCheckpoint, or [[graft.sources.IO
-    * .durableCheckpoint]]) to pay for it once. Identity default keeps
-    * the gated fixture runs allocation-free.
-    *
     * Output: (id1, id2, cos) with id1 < id2, cosine rounded to 6.
     */
   def tfidfPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxDf: Long, minCos: Double,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      maxDf: Long, minCos: Double): DataFrame = {
     val tf = docs
       .select(col(idCol).as("__doc"),
         explode(split(trim(col(textCol)), "\\s+")).as("word"))
@@ -51,12 +43,12 @@ object SparseSimilarity {
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
     val nDocs = docs.agg(count(lit(1)).as("__n"))
-    val weights = materialize(tf
+    val weights = tf
       .join(df, "word") // inner: drops capped terms from every doc vector
       .crossJoin(broadcast(nDocs))
       .select(col("__doc"), col("word"),
         (col("tf") * round(log(col("__n").cast("double") / col("df")), 6))
-          .as("w")))
+          .as("w"))
     val norms = weights
       .groupBy(col("__doc"))
       .agg(sqrt(sum((col("w") * col("w")).cast("decimal(38,12)"))

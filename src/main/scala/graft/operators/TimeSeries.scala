@@ -32,16 +32,11 @@ object TimeSeries {
     * empty buckets take the latest preceding bucket's mean (null until the
     * key's first observed value — there is nothing to fill from).
     *
-    * The observed-bucket aggregate feeds BOTH the spine bounds and the
-    * fill join — two consumers replaying one shuffle's lineage; pass
-    * `materialize` (cache / checkpoint) to compute it once at scale.
-    *
     * Output: (key, bucket, n_obs, v_obs, v_filled) — one row per grid cell
     * between the key's first and last observation inclusive.
     */
   def resampleFill(df: DataFrame, keyCol: String, tsCol: String,
-      valCol: String, bucketWidth: Long,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      valCol: String, bucketWidth: Long): DataFrame = {
     val clash = df.columns.toSet.intersect(Set("__v", "__b0", "__b1"))
     require(clash.isEmpty,
       s"resampleFill reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
@@ -51,13 +46,13 @@ object TimeSeries {
     // epoch-nanos value (~1.7e18) exceeds double's 2^53 integer range, so
     // bucket boundaries would shift by rounding
     val bucket = expr(s"`$tsCol` div ${bucketWidth}L")
-    val obs = materialize(df
+    val obs = df
       .select(col(keyCol), bucket.as("bucket"), col(valCol).as("__v"))
       .groupBy(col(keyCol), col("bucket"))
       .agg(
         count(col("__v")).as("n_obs"),
         (sum(col("__v").cast("decimal(38,6)")).cast("double") /
-          count(col("__v"))).as("v_obs")))
+          count(col("__v"))).as("v_obs"))
     // per-key grid: one sequence per key spanning its observed range —
     // the explode fans out on the key, so grid generation is distributed
     val spine = obs

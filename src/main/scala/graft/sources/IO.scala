@@ -230,10 +230,10 @@ object IO {
     * what iterative algorithms (connected components) and reused
     * intermediates must use on a real cluster: point `dir` at durable
     * shared storage (HDFS/object store). Sets `spark.checkpoint.dir`
-    * once per session if unset; `eager` forces materialization now. */
-  def durableCheckpoint(df: DataFrame, dir: String, eager: Boolean = true): DataFrame = {
+    * once per session if unset, and materializes now. */
+  def durableCheckpoint(df: DataFrame, dir: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-    df.checkpoint(eager)
+    df.checkpoint()
   }
 }

@@ -373,14 +373,14 @@ object EventStreams {
       .orderBy(col("click_id"), col("purchase_id"))
   }
 
-  /** Batch twin of [[windowedTypeCounts]] over the fixture `events` table
-    * (epoch-nano long ts) — used by the DuckDB-oracled correctness query. */
+  /** [[windowedTypeCounts]] over the fixture's epoch-nano long `ts`,
+    * bucket starts as epoch-millis — the DuckDB-oracled batch gate
+    * (`q_st_window_counts`) runs the streaming plan that ships (the
+    * watermark is a no-op on a batch frame). */
   def windowedTypeCountsBatch(eventsNs: DataFrame): DataFrame =
-    eventsNs
-      .withColumn("tstamp", timestamp_micros(expr("ts DIV 1000")))
-      .groupBy(functions.window(col("tstamp"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("bucket_ms"),
+    windowedTypeCounts(
+        eventsNs.withColumn("ts", timestamp_micros(expr("ts DIV 1000"))))
+      .select(unix_millis(col("bucket_start")).as("bucket_ms"),
         col("event_type"), col("n"))
       .orderBy(col("bucket_ms"), col("event_type"))
 

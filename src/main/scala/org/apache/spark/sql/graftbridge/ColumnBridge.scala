@@ -62,12 +62,4 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
-
-  /** Register a temp SQL function on an EXISTING session (the
-    * `SparkSessionExtensions` path only applies at session construction;
-    * the registry itself is `private[sql]`). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import graft.SparkSpec
 
-/** SQL-surface registration: the native kernels callable from spark.sql. */
+/** SQL-surface registration: the native kernels callable from spark.sql
+  * on a session built by [[graft.GraftSession]], which injects them
+  * through `spark.sql.extensions`. */
 class GraftFunctionsSpec extends SparkSpec {
 
   test("registered SQL functions evaluate the native kernels") {
-    GraftFunctions.registerAll(spark)
-
     val cos = spark.sql(
       """SELECT cosine_similarity(
         |  array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
