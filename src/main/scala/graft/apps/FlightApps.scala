@@ -19,8 +19,8 @@ import graft.sources.{IO, Schemas}
   * ±10-min labels → parquet + single-file CSV sinks → MAE/RMSE report.
   * `--test-file` reuses the fitted pipeline+model on a held-out file
   * (train-once / score-many — `main.py:170-260`); `--save-model` persists
-  * the fitted pipeline+tree so [[ScoreApp]] can score later runs without
-  * retraining (the durable version of that lifecycle).
+  * the fitted pipeline+tree to a local dir so [[ScoreApp]] can score later
+  * runs without retraining (the durable version of that lifecycle).
   */
 object TrainApp {
 
@@ -53,31 +53,34 @@ object TrainApp {
     val plane = planeData(spark, planePath)
 
     val fullData = Cleaning.dropForbidden(raw)
+    // cached for its readers — the pipeline fit, the split and the train
+    // sink, whose predictions recompute the validation split from it — and
+    // released once the sink is done: the model save and the --test-file
+    // scoring do not read it
     val prepared = Prepare.prepareData(fullData, plane).cache()
-
-    val pipelineModel: PipelineModel = FlightPipeline().fit(prepared)
-    val result = FlightModel.trainModel(prepared, pipelineModel)
-
-    result.predictions.foreach { preds =>
-      sink(FlightModel.addLabels(preds), outputDir, "predictions")
-        .foreach { case (mae, rmse) =>
-          println(f"[train] MAE=$mae%.3f RMSE=$rmse%.3f")
-        }
-    }
-    // predictions are sunk and evaluated — safe to drop the cached feature
-    // table their lineage runs through
-    result.release()
+    val (pipelineModel, model) = try {
+      val pm = FlightPipeline().fit(prepared)
+      val result = FlightModel.trainModel(prepared, pm)
+      // the tree is fit: nothing reads the persisted train split again
+      result.release()
+      result.predictions.foreach { preds =>
+        sink(FlightModel.addLabels(preds), outputDir, "predictions")
+          .foreach { case (mae, rmse) =>
+            println(f"[train] MAE=$mae%.3f RMSE=$rmse%.3f")
+          }
+      }
+      (pm, result.model)
+    } finally prepared.unpersist()
 
     saveModelDir.foreach { dir =>
-      FlightModel.saveModels(dir, pipelineModel, result.model)
+      FlightModel.saveModels(dir, pipelineModel, model)
       println(s"[train] model saved to $dir")
     }
 
     testFile.foreach { tf => // scoring lifecycle, main.py:170-260
-      score(spark, tf, plane, pipelineModel, result.model, outputDir,
+      score(spark, tf, plane, pipelineModel, model, outputDir,
         "test_predictions")
     }
-    prepared.unpersist()
   }
 
   /** The scoring steps both lifecycles run: CSV scan → leakage drop →

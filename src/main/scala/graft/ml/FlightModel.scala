@@ -1,8 +1,12 @@
 package graft.ml
 
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.ml.graftbridge.LocalModelIO
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor, LinearRegression, LinearRegressionModel}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -24,18 +28,23 @@ object FlightModel {
       .setMaxDepth(maxDepth).setMaxBins(maxBins).setSeed(seed)
 
   /** Outcome of [[trainModel]]: validation predictions plus the fitted tree
-    * (None when the constant-prediction fallback fired — M12). The
-    * predictions' lineage runs through the cached feature table; call
-    * `release()` once they have been sunk/evaluated to unpersist it —
-    * unpersisting before consumption would replay the full pipeline
-    * transform on every downstream action (measured 160 s at 500k rows). */
+    * (None when the constant-prediction fallback fired — M12).
+    *
+    * Cache boundaries: `train` is the `(features, ArrDelay)` columns of the
+    * train split, persisted once for the fit — call `release()` when done
+    * with it. The predictions and `validation` are lazy: they recompute
+    * the split from `data` (a per-row pipeline transform, a sample, a
+    * partition-local sort and a second sample) on each action, so a caller
+    * that reads them more than once persists them itself, as
+    * `TrainApp.sink` does. Their lineage does not run through `train`, so
+    * `release()` may come before or after they are consumed.
+    *
+    * `train` and `validation` let quality tracking (MLQuality) fit the LR
+    * baseline and the CV grid on the same rows the tree saw. */
   final case class TrainResult(
       predictions: Option[DataFrame],
       model: Option[DecisionTreeRegressionModel],
       release: () => Unit = () => (),
-      // the split itself, exposed so quality tracking (MLQuality) can
-      // fit the LR baseline / CV grid on the SAME data the tree saw;
-      // both run through the cached feature table until release()
       train: Option[DataFrame] = None,
       validation: Option[DataFrame] = None)
 
@@ -47,27 +56,36 @@ object FlightModel {
     *  - empty train split → train and validate on the full data;
     *  - nothing to fit on → constant mean-ArrDelay prediction, no model.
     *
-    * The transformed feature table is cached: splits, counts and the tree's
-    * per-depth passes would otherwise each replay the full pipeline lineage
-    * (the reference recomputes it every action — SURVEY.md §4.5).
+    * The split runs over the uncached `pipelineModel.transform(data)`:
+    * the stages are per-row maps and `randomSplit` sorts each partition on
+    * the frame's output columns, so as long as `data` keeps its
+    * partitioning and row order (cache it — `TrainApp` does) each split
+    * holds the rows it would hold over a cached transform. The train
+    * split's `(features, ArrDelay)` is persisted and counted once: its
+    * emptiness and every action of the tree fit read those rows instead of
+    * re-running the split lineage (the reference recomputes it every
+    * action — SURVEY.md §4.5).
     */
   def trainModel(data: DataFrame, pipelineModel: PipelineModel,
       trainRatio: Double = 0.9, seed: Long = 42L): TrainResult = {
-    val transformed = pipelineModel.transform(data).cache()
-    val release = () => { transformed.unpersist(); () }
+    val transformed = pipelineModel.transform(data)
+    val totalRows = transformed.count()
+    if (totalRows == 0) return TrainResult(None, None)
+
+    val ratios = Array(trainRatio, 1.0 - trainRatio)
+    val Array(train0, validation0) =
+      if (totalRows < 50) transformed.randomSplit(ratios, seed)
+      else transformed.sample(0.5, seed).randomSplit(ratios, seed)
+
+    val fitColumns = Seq(col("features"), col(TargetCol))
+    val split = train0.select(fitColumns: _*).cache()
+    val release = () => { split.unpersist(); () }
     try {
-      val totalRows = transformed.count()
-      if (totalRows == 0) { release(); return TrainResult(None, None) }
-
-      val ratios = Array(trainRatio, 1.0 - trainRatio)
-      val Array(train0, validation0) =
-        if (totalRows < 50) transformed.randomSplit(ratios, seed)
-        else transformed.sample(0.5, seed).randomSplit(ratios, seed)
-
       val (train, validation) =
-        if (train0.isEmpty) (transformed, transformed) else (train0, validation0)
+        if (split.count() == 0) (transformed.select(fitColumns: _*), transformed)
+        else (split, validation0)
 
-      val fitData = train.select(col("features"), col(TargetCol)).na.drop()
+      val fitData = train.na.drop()
       if (fitData.isEmpty) {
         val meanDelay = Option(transformed.agg(avg(col(TargetCol))).first().get(0))
           .map(_.asInstanceOf[Number].doubleValue()).getOrElse(0.0)
@@ -159,29 +177,53 @@ object FlightModel {
     * the durable train-once/score-many lifecycle (the reference holds the
     * fitted PipelineModel in memory across train→score,
     * `/root/reference/src/main/main.py:82,181`; a real deployment writes
-    * it out). Uses the built-in `MLWritable` layout (metadata JSON +
-    * parquet-backed model data), so the artifact round-trips through any
-    * Hadoop-compatible filesystem — local dir here, object store on a
-    * cluster. Layout: `<dir>/pipeline` (always) + `<dir>/tree` (when a
-    * tree was fit — absent for the constant-prediction fallback). */
+    * it out). Layout: `<dir>/pipeline` (always) + `<dir>/tree` (when a
+    * tree was fit — absent for the constant-prediction fallback), each
+    * Spark ML's stage-directory tree (metadata JSON + model data per
+    * stage), written by the driver through `java.nio` with no Spark job
+    * ([[org.apache.spark.ml.graftbridge.LocalModelIO]]). So `dir` is a
+    * local path — plain, relative or a `file:` URI — like the apps' CSV
+    * sink; any other scheme (`hdfs://`, `s3a://`) is refused with an
+    * IllegalArgumentException before anything is written. An earlier
+    * artifact in `dir` is replaced, its tree included. */
   def saveModels(dir: String, pipelineModel: PipelineModel,
       tree: Option[DecisionTreeRegressionModel]): Unit = {
-    pipelineModel.write.overwrite().save(s"$dir/pipeline")
-    tree.foreach(_.write.overwrite().save(s"$dir/tree"))
+    val (pipelineDir, treeDir) = modelDirs(dir)
+    Seq(pipelineDir, treeDir).foreach(d => FileUtils.deleteDirectory(d.toFile))
+    LocalModelIO.save(pipelineModel.write, pipelineDir.toString)
+    tree.foreach(t => LocalModelIO.save(t.write, treeDir.toString))
   }
 
-  /** Load a [[saveModels]] artifact. The tree is optional (a fallback
-    * train run has none); existence is probed through the Hadoop
-    * filesystem of the path, not java.io, so remote stores work. */
+  /** Load a [[saveModels]] artifact with no Spark job: the driver reads
+    * the metadata and model data itself. The tree is optional (a fallback
+    * train run has none). A non-local `dir` is refused as in
+    * [[saveModels]]; a `dir` that holds no saved pipeline fails with an
+    * IllegalArgumentException naming it. */
   def loadModels(spark: org.apache.spark.sql.SparkSession,
       dir: String): (PipelineModel, Option[DecisionTreeRegressionModel]) = {
-    val pm = PipelineModel.load(s"$dir/pipeline")
-    val treePath = new org.apache.hadoop.fs.Path(s"$dir/tree")
-    val fs = treePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (pipelineDir, treeDir) = modelDirs(dir)
+    require(Files.isRegularFile(pipelineDir.resolve("metadata")),
+      s"$dir holds no flight model written by saveModels: no metadata file " +
+        s"at ${pipelineDir.resolve("metadata")}")
+    val pm = LocalModelIO.load(PipelineModel.read.session(spark),
+      pipelineDir.toString)
     val tree =
-      if (fs.exists(treePath)) Some(DecisionTreeRegressionModel.load(s"$dir/tree"))
+      if (Files.isDirectory(treeDir))
+        Some(LocalModelIO.load(DecisionTreeRegressionModel.read.session(spark),
+          treeDir.toString))
       else None
     (pm, tree)
+  }
+
+  /** The local `pipeline` and `tree` directories of the artifact at `dir`;
+    * refuses a scheme other than `file:`. */
+  private def modelDirs(dir: String): (Path, Path) = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    Option(uri.getScheme).foreach(scheme => require(scheme.equalsIgnoreCase("file"),
+      s"model dir $dir: scheme '$scheme' is not the local filesystem; the " +
+        "driver writes and reads the model itself, so give a local path or a file: URI"))
+    val root = Paths.get(uri.getPath).toAbsolutePath
+    (root.resolve("pipeline"), root.resolve("tree"))
   }
 
   /** M11: map feature-importance vector slots back to column names via the

@@ -94,25 +94,152 @@ class FlightModelSpec extends SparkSpec {
     val pipelineModel = FlightPipeline().fit(prepared)
     val result = FlightModel.trainModel(prepared, pipelineModel)
     assert(result.model.isDefined)
-    val dir = java.nio.file.Files.createTempDirectory("graft_model_rt").toString
+    val root = java.nio.file.Files.createTempDirectory("graft_model_rt")
     try {
-      FlightModel.saveModels(dir, pipelineModel, result.model)
-      val (loadedPm, loadedTree) = FlightModel.loadModels(spark, dir)
-      assert(loadedTree.isDefined)
       // score the same fixture batch through both artifacts: predictions
       // must be bit-identical (same tree, same pipeline transforms)
       val batch = prepared.limit(200)
       val expect = result.model.get.transform(pipelineModel.transform(batch))
         .select("prediction").as[Double].collect().toSeq
-      val actual = loadedTree.get.transform(loadedPm.transform(batch))
-        .select("prediction").as[Double].collect().toSeq
-      assert(expect.nonEmpty && actual == expect)
-      // depth/bins survive the round-trip too
-      assert(loadedTree.get.getMaxDepth == result.model.get.getMaxDepth)
+      assert(expect.nonEmpty)
+      val relative = java.nio.file.Paths.get("").toAbsolutePath
+        .relativize(root.resolve("relative")).toString
+      val uri = root.resolve("uri").toUri.toString
+      assert(!java.nio.file.Paths.get(relative).isAbsolute && uri.startsWith("file:"))
+      for (dir <- Seq(root.resolve("plain").toString, relative, uri)) {
+        FlightModel.saveModels(dir, pipelineModel, result.model)
+        val (loadedPm, loadedTree) = FlightModel.loadModels(spark, dir)
+        val actual = loadedTree.get.transform(loadedPm.transform(batch))
+          .select("prediction").as[Double].collect().toSeq
+        assert(actual == expect, dir)
+        // depth/bins survive the round-trip too
+        assert(loadedTree.get.getMaxDepth == result.model.get.getMaxDepth)
+      }
+      // a later save without a tree (the constant fallback) replaces the
+      // earlier artifact whole: no stale tree is loaded beside the pipeline
+      FlightModel.saveModels(uri, pipelineModel, None)
+      assert(FlightModel.loadModels(spark, uri)._2.isEmpty)
     } finally {
       result.release()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
     }
+  }
+
+  /** What [[FlightModel.trainModel]] did while it cached the transformed
+    * frame: the split, the tree and the predictions of that recipe, kept
+    * as the reference the current one must reproduce row for row. */
+  private case class CachedRecipe(train: Option[DataFrame],
+      validation: DataFrame, predictions: DataFrame,
+      model: Option[org.apache.spark.ml.regression.DecisionTreeRegressionModel],
+      release: () => Unit)
+
+  private def cachedRecipe(data: DataFrame,
+      pm: org.apache.spark.ml.PipelineModel, trainRatio: Double = 0.9,
+      seed: Long = 42L): CachedRecipe = {
+    val transformed = pm.transform(data).cache()
+    val totalRows = transformed.count()
+    val ratios = Array(trainRatio, 1.0 - trainRatio)
+    val Array(train0, validation0) =
+      if (totalRows < 50) transformed.randomSplit(ratios, seed)
+      else transformed.sample(0.5, seed).randomSplit(ratios, seed)
+    val (train, validation) =
+      if (train0.isEmpty) (transformed, transformed) else (train0, validation0)
+    val fitData = train.select(col("features"), col(FlightModel.TargetCol)).na.drop()
+    val release = () => { transformed.unpersist(); () }
+    if (fitData.isEmpty) {
+      val meanDelay = Option(transformed.agg(avg(col(FlightModel.TargetCol)))
+        .first().get(0)).map(_.asInstanceOf[Number].doubleValue()).getOrElse(0.0)
+      CachedRecipe(None, validation,
+        validation.withColumn("prediction", lit(meanDelay)), None, release)
+    } else {
+      val model = FlightModel.decisionTree(seed = seed).fit(fitData)
+      CachedRecipe(Some(train), validation, model.transform(validation),
+        Some(model), release)
+    }
+  }
+
+  /** The rows of `df` as a sorted list of their strings (vectors included). */
+  private def rowSet(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** `trainModel(data, …)` against [[cachedRecipe]]: the same train and
+    * validation rows, the same tree and the same predictions. The recipe
+    * runs after the current call is read and released, so neither reads
+    * the other's cached rows. */
+  private def assertSameAsCachedRecipe(data: DataFrame,
+      trainRatio: Double = 0.9): FlightModel.TrainResult = {
+    val pm = FlightPipeline().fit(data)
+    val fit = Seq(col("features"), col(FlightModel.TargetCol))
+    val result = FlightModel.trainModel(data, pm, trainRatio)
+    val (train, validation, predictions) =
+      try (result.train.map(t => rowSet(t.select(fit: _*))),
+        rowSet(result.validation.get), rowSet(result.predictions.get))
+      finally result.release()
+    val recipe = cachedRecipe(data, pm, trainRatio)
+    try {
+      assert(train == recipe.train.map(t => rowSet(t.select(fit: _*))))
+      assert(validation == rowSet(recipe.validation))
+      assert(predictions == rowSet(recipe.predictions))
+      // the tree's text without its header line, which names its uid
+      def tree(m: Option[org.apache.spark.ml.regression.DecisionTreeRegressionModel]) =
+        m.map(t => t.toDebugString.dropWhile(_ != '\n'))
+      assert(tree(result.model) == tree(recipe.model))
+      assert(result.model.map(_.featureImportances) ==
+        recipe.model.map(_.featureImportances))
+      result
+    } finally recipe.release()
+  }
+
+  test("trainModel splits, fits and predicts exactly as the cached-transform recipe did") {
+    val result = assertSameAsCachedRecipe(prepared)
+    assert(result.model.isDefined && !result.validation.get.isEmpty)
+    // the persisted train split is the tree's (features, ArrDelay) input
+    assert(result.train.get.columns.toSeq == Seq("features", FlightModel.TargetCol))
+  }
+
+  test("trainModel fallbacks match the cached-transform recipe: < 50 rows, empty train split, nothing to fit") {
+    val small = prepared.limit(40).cache()
+    val unlabeled = prepared.withColumn(FlightModel.TargetCol,
+      lit(null).cast("int")).cache()
+    try {
+      // < 50 rows: a 90/10 split of all of them, no 50% sample
+      assert(small.count() == 40L)
+      assert(assertSameAsCachedRecipe(small).model.isDefined)
+      // a zero train ratio leaves the train split empty: train and
+      // validate on the full data
+      val full = assertSameAsCachedRecipe(small, trainRatio = 0.0)
+      assert(full.model.isDefined && full.validation.get.count() == 40L)
+      // no row has a label: the constant fallback, no tree
+      val constant = assertSameAsCachedRecipe(unlabeled)
+      assert(constant.model.isEmpty && constant.train.isEmpty)
+      assert(constant.predictions.get.where(col("prediction") =!= 0.0).isEmpty)
+    } finally { small.unpersist(); unlabeled.unpersist() }
+  }
+
+  test("model IO refuses a dir on a non-local filesystem, naming the scheme") {
+    val pm = FlightPipeline().fit(prepared.limit(200))
+    for ((dir, scheme) <- Seq("hdfs://namenode:8020/models/m" -> "hdfs",
+        "s3a://bucket/models/m" -> "s3a")) {
+      val save = intercept[IllegalArgumentException](
+        FlightModel.saveModels(dir, pm, None))
+      assert(save.getMessage.contains(s"'$scheme'"), save.getMessage)
+      val load = intercept[IllegalArgumentException](
+        FlightModel.loadModels(spark, dir))
+      assert(load.getMessage.contains(s"'$scheme'"), load.getMessage)
+    }
+  }
+
+  test("loading a dir without a saveModels artifact fails naming the dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft_not_a_model")
+    try {
+      // Spark's job-based writer keeps each metadata file in a directory
+      val jobWritten = root.resolve("job_written").toString
+      FlightPipeline().fit(prepared.limit(200)).write.save(s"$jobWritten/pipeline")
+      for (dir <- Seq(root.toString, root.resolve("missing").toString, jobWritten)) {
+        val e = intercept[IllegalArgumentException](FlightModel.loadModels(spark, dir))
+        assert(e.getMessage.contains(dir), e.getMessage)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
   test("evaluate: None without a non-null pair; MAE/RMSE over the non-null pairs") {

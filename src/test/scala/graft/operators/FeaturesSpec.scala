@@ -190,4 +190,62 @@ class FeaturesSpec extends SparkSpec {
     // three for the time-of-day buckets, two for the slack buckets
     assert(parses <= 12, s"$parses regexp_replace nodes in\n$plan")
   }
+
+  test("prepareData equals the chain with the polar step, over one CSV scan and no nested-loop join") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import graft.sources.{IO, Schemas}
+    val dir = java.nio.file.Files.createTempDirectory("prepare_scan").toFile
+    try {
+      // generated flights with extra nulls, plus 150 rows that repeat an
+      // earlier row's unique_id with other values, read back from one CSV
+      def nullWhen(c: String, k: Int) =
+        when(col("FlightNum") % k === 0, lit(null)).otherwise(col(c)).as(c)
+      val base = FlightsGenerator.flights(spark, 1500, seed = 5L, nullFrac = 0.1)
+      val nulled = base.select(base.columns.map {
+        case "TaxiOut" => nullWhen("TaxiOut", 5)
+        case "DayofMonth" => nullWhen("DayofMonth", 9)
+        case "CRSArrTime" => nullWhen("CRSArrTime", 13)
+        case "TailNum" => nullWhen("TailNum", 17)
+        case c => col(c)
+      }: _*)
+      val dups = nulled.limit(150).withColumn("DepDelay", col("DepDelay") + 7)
+        .withColumn("TaxiOut", col("TaxiOut") + 1)
+      IO.writeSingleCsv(nulled.union(dups), s"$dir/in_csv", s"$dir/flights.csv")
+      val flights = Cleaning.dropForbidden(
+        IO.readCsv(spark, s"$dir/flights.csv", Some(Schemas.flights)))
+      val plane = FlightsGenerator.planeData(spark)
+
+      val actual = Prepare.prepareData(flights, plane)
+      val withPolar = {
+        val localtime = Features.cyclicalLocaltimeAll(
+          Cleaning.cleanData(Cleaning.appendUniqueId(flights)))
+        val polar = Features.cyclicalMonthWeek(localtime)
+        val joined = Cleaning.joinPlaneData(polar, Cleaning.preparePlaneData(plane))
+        Features.selectModelFeatures(Features.addNewCustomFeatures(joined))
+      }
+      def csvScans(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
+        case l: LogicalRelation => l.relation
+      }.count {
+        case r: HadoopFsRelation => r.fileFormat.isInstanceOf[CSVFileFormat]
+        case _ => false
+      }
+      def nestedLoopJoins(df: DataFrame): Int = df.queryExecution.sparkPlan
+        .collect { case j: BroadcastNestedLoopJoinExec => j }.size
+      assert(csvScans(withPolar) == 2 && nestedLoopJoins(withPolar) == 1)
+      assert(csvScans(actual) == 1 && nestedLoopJoins(actual) == 0)
+
+      // both sides cached: exceptAll straight over a dropDuplicates
+      // lineage fails to bind an attribute at execution
+      // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), with or without the polar step
+      val (a, e) = (actual.cache(), withPolar.cache())
+      try {
+        val n = e.count()
+        assert(n > 500 && a.count() == n)
+        assert(a.columns.toSeq == e.columns.toSeq)
+        assert(a.exceptAll(e).isEmpty && e.exceptAll(a).isEmpty)
+      } finally { a.unpersist(); e.unpersist() }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }
