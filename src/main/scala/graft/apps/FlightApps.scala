@@ -27,7 +27,8 @@ object TrainApp {
   def main(args: Array[String]): Unit = {
     val positional = args.filterNot(_.startsWith("--"))
     require(positional.length >= 2,
-      "usage: TrainApp <input.csv> <outputDir> [--count-only] [--plane-data p] [--test-file t]")
+      "usage: TrainApp <input.csv> <outputDir> [--count-only] [--plane-data p] " +
+        "[--test-file t] [--save-model modelDir]")
     val Array(inputPath, outputDir) = positional.take(2)
     val countOnly = args.contains("--count-only")
 

@@ -18,11 +18,11 @@ private[graft] object StreamingGates {
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // ST: native session_window aggregation — dynamic-gap sessions as a
-    // first-class aggregate (the built-in twin of the stateful
-    // sessionize); same plan runs batch and watermarked-streaming. Merge
-    // rule: windows that overlap or TOUCH merge (delta <= gap), pinned in
-    // EventStreamsSpec; oracle assigns sessions with the lag/cumsum
-    // delta > gap rule over µs-truncated timestamps.
+    // first-class aggregate (EventStreams' one sessionizer); same plan
+    // runs batch and watermarked-streaming. Merge rule: windows that
+    // overlap or TOUCH merge (delta <= gap), pinned in EventStreamsSpec;
+    // oracle assigns sessions with the lag/cumsum delta > gap rule over
+    // µs-truncated timestamps.
     Gate("q_st_sessions", (s, dir) =>
       graft.streaming.EventStreams.sessionWindowsBatch(
         t(s, dir, "events").where(col("ts").isNotNull)),

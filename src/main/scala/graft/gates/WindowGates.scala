@@ -127,8 +127,8 @@ private[graft] object WindowGates {
         |FROM events ORDER BY event_id""".stripMargin)),
 
     // W-stacked: batch sessionization — lag marks gap starts, running sum
-    // numbers the sessions (the batch twin of the streaming
-    // flatMapGroupsWithState sessionizer; 30-min gap on epoch-nano ts)
+    // numbers the sessions (the same delta > gap split as the streaming
+    // session_window sessionizer; 30-min gap on epoch-nano ts)
     Gate("q_w_sessionize", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val gapStart = when(

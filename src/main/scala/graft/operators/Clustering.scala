@@ -326,8 +326,7 @@ object Clustering {
     * cluster null for noise. */
   def dbscan(df: DataFrame, idCol: String, vecCol: String,
       groupCol: String, minCos: Double, minPts: Int,
-      maxBlock: Int = 4096, overflowWindow: Int = 16, dim: Int = 0,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      maxBlock: Int = 4096, overflowWindow: Int = 16, dim: Int = 0): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1, got $minPts")
     val d = if (dim > 0) dim else Similarity.inferDim(df, vecCol)
     val planes = Similarity.subBucketPlanes(d)
@@ -340,26 +339,29 @@ object Clustering {
     // corpus under the bounded-block contract) so the blocking +
     // cosine-scoring subtree runs exactly one time, not once per
     // downstream consumer
-    val nbrs = checkpoint(und.select(col("id1"), col("id2"),
+    val nbrs = und.select(col("id1"), col("id2"),
         round(graft.functions.VectorExprs.cosine(col("v1"), col("v2")), 6)
           .as("__cos"))
       .filter(col("__cos") >= lit(minCos))
-      .select(col("id1"), col("id2")))
+      .select(col("id1"), col("id2"))
+      .localCheckpoint()
     val directed = nbrs.select(col("id1").as("id"), col("id2").as("nbr"))
       .unionByName(nbrs.select(col("id2").as("id"), col("id1").as("nbr")))
     val deg = directed.groupBy(col("id")).agg(count(lit(1)).as("__deg"))
-    val withCore = checkpoint(df.select(col(idCol).as("id"))
+    val withCore = df.select(col(idCol).as("id"))
       .join(deg, Seq("id"), "left")
       .select(col("id"),
-        (coalesce(col("__deg"), lit(0L)) + lit(1L) >= minPts).as("__core")))
+        (coalesce(col("__deg"), lit(0L)) + lit(1L) >= minPts).as("__core"))
+      .localCheckpoint()
     val coreIds = withCore.where(col("__core")).select(col("id"))
     val coreEdges = nbrs
       .join(coreIds.select(col("id").as("id1")), Seq("id1"), "left_semi")
       .join(coreIds.select(col("id").as("id2")), Seq("id2"), "left_semi")
-    val cc = Dedup.connectedComponents(coreEdges, checkpoint = checkpoint)
+    val cc = Dedup.connectedComponents(coreEdges)
     // isolated cores (no core neighbor) seed their own singleton cluster
-    val coreClusters = checkpoint(coreIds.join(cc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster")))
+    val coreClusters = coreIds.join(cc, Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
+      .localCheckpoint()
     val borderAssign = directed
       .join(coreClusters.select(col("id").as("nbr"), col("cluster")),
         Seq("nbr"))

@@ -98,10 +98,7 @@ object Cohort {
   def rfmScores(df: DataFrame, entityCol: String, tsCol: String,
       amountCol: String, k: Int = 5): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    val clash = df.columns.toSet
-      .intersect(Set("recency", "frequency", "monetary", "r", "f", "m", "segment"))
-    require(clash.isEmpty,
-      s"rfmScores reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("rfmScores", df, "recency", "frequency", "monetary", "r", "f", "m", "segment")
     val base = df
       .where(col(entityCol).isNotNull && col(tsCol).isNotNull &&
         col(amountCol).isNotNull)

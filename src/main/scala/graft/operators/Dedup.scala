@@ -626,16 +626,13 @@ object Dedup {
 
   /** Near-dup groups end-to-end: MinHash-LSH pairs at `threshold`, then
     * connected components — the full "pair list → duplicate clusters"
-    * pipeline a corpus-level dedup actually ships. `checkpoint` is the
-    * per-round lineage cut (see [[connectedComponents]]). */
+    * pipeline a corpus-level dedup actually ships. */
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+      threshold: Double = 0.8): DataFrame =
     connectedComponents(
       minhashNearDups(df, idCol, textCol, shingleN, k, bands, threshold)
-        .select("id1", "id2"),
-      checkpoint = checkpoint)
+        .select("id1", "id2"))
 
   // ───────────────── incremental (Bloom-gated) dedup ─────────────────
 
@@ -735,9 +732,7 @@ object Dedup {
     */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
       window: Int = 40, stride: Int = 10, minDocs: Int = 2): DataFrame = {
-    val clash = docs.columns.toSet.intersect(Set("__id", "__pos", "__t"))
-    require(clash.isEmpty,
-      s"duplicatedSpans reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("duplicatedSpans", docs, "__id", "__pos", "__t")
     val spans = docs
       .filter(length(col(textCol)) >= window)
       .select(col(idCol).as("__id"),
@@ -777,9 +772,7 @@ object Dedup {
       window: Int = 40, gram: Int = 8, sel: String = "0",
       minDocs: Int = 2): DataFrame = {
     require(gram > 0 && window >= gram, s"need 0 < gram <= window, got $gram/$window")
-    val clash = docs.columns.toSet.intersect(Set("__id", "__pos", "__t"))
-    require(clash.isEmpty,
-      s"anchoredSpans reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("anchoredSpans", docs, "__id", "__pos", "__t")
     val spans = docs
       .filter(length(col(textCol)) >= window)
       .select(col(idCol).as("__id"),
@@ -810,9 +803,7 @@ object Dedup {
   def anchoredSpansFast(docs: DataFrame, idCol: String, textCol: String,
       window: Int = 40, gram: Int = 8, maskBits: Int = 4,
       minDocs: Int = 2): DataFrame = {
-    val clash = docs.columns.toSet.intersect(Set("__id"))
-    require(clash.isEmpty,
-      s"anchoredSpansFast reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("anchoredSpansFast", docs, "__id")
     docs
       .select(col(idCol).as("__id"),
         explode(graft.functions.TextSketches.cdcSpans(

@@ -20,18 +20,12 @@ import org.apache.spark.sql.functions._
   */
 object FeatureScaling {
 
-  private def guard(df: DataFrame, op: String, names: String*): Unit = {
-    val clash = df.columns.toSet.intersect(names.toSet)
-    require(clash.isEmpty,
-      s"$op reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
-  }
-
   /** Adds `out` = (x − mean)/sd with mean/sd of the row's OWN group —
     * sample sd (n−1) from decimal power sums. Groups with one row or
     * zero variance yield null (no meaningful scale), rather than ±inf. */
   def groupZScore(df: DataFrame, groupCol: String, valueCol: String,
       out: String = "z"): DataFrame = {
-    guard(df, "groupZScore", "__n", "__s1", "__s2", "__mean", "__sd", out)
+    Reserved.guard("groupZScore", df, "__n", "__s1", "__s2", "__mean", "__sd", out)
     val x = col(valueCol)
     val stats = df.groupBy(col(groupCol)).agg(
         count(x).cast("double").as("__n"),
@@ -52,7 +46,7 @@ object FeatureScaling {
     * null for constant groups. Integer-exact until the one division. */
   def groupMinMax(df: DataFrame, groupCol: String, valueCol: String,
       out: String = "scaled"): DataFrame = {
-    guard(df, "groupMinMax", "__lo", "__hi", out)
+    Reserved.guard("groupMinMax", df, "__lo", "__hi", out)
     val x = col(valueCol)
     val stats = df.groupBy(col(groupCol))
       .agg(min(x).as("__lo"), max(x).as("__hi"))
@@ -76,7 +70,7 @@ object FeatureScaling {
       zOut: String = "z", mmOut: String = "scaled", clipOut: String = "clipped",
       pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, s"bad band [$pLo, $pHi]")
-    guard(df, "scaleAll", "__n", "__s1", "__s2", "__mean", "__sd",
+    Reserved.guard("scaleAll", df, "__n", "__s1", "__s2", "__mean", "__sd",
       "__lo", "__hi", "__plo", "__phi", zOut, mmOut, clipOut)
     val x = col(valueCol)
     val stats = df.groupBy(col(groupCol)).agg(
@@ -111,7 +105,7 @@ object FeatureScaling {
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
       pLo: Double, pHi: Double, out: String = "clipped"): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, s"bad band [$pLo, $pHi]")
-    guard(df, "winsorize", "__lo", "__hi", out)
+    Reserved.guard("winsorize", df, "__lo", "__hi", out)
     val stats = df.groupBy(col(groupCol)).agg(
       expr(s"percentile(`$valueCol`, $pLo)").as("__lo"),
       expr(s"percentile(`$valueCol`, $pHi)").as("__hi"))
@@ -174,7 +168,7 @@ object FeatureScaling {
 
   def quantileNormalize(df: DataFrame, groupCol: String, valueCol: String,
       tieCol: String, out: String = "qnorm"): DataFrame = {
-    guard(df, "quantileNormalize", "__rank", "__ref", out)
+    Reserved.guard("quantileNormalize", df, "__rank", "__ref", out)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol)).orderBy(col(valueCol), col(tieCol))
     val ranked = df.where(col(valueCol).isNotNull)

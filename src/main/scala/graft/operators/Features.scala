@@ -53,9 +53,7 @@ object Features {
   private def withParsedTimes(df: DataFrame, timeCols: Seq[String])(
       stage: (DataFrame, String => Column) => DataFrame): DataFrame = {
     val reserved = timeCols.map(parsedName)
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"Features reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("Features", df, reserved: _*)
     val parsed = timeCols.foldLeft(df)((acc, c) =>
       acc.withColumn(parsedName(c), timeAsInt(col(c))))
     stage(parsed, c => col(parsedName(c))).drop(reserved: _*)

@@ -30,8 +30,7 @@ object Graph {
     * mirrored in the generated oracle). Returns (`node`, `rank`).
     * Damping is expressed as the literal 0.85/0.15 pair inline so both
     * engines fold the same constants. */
-  def pageRank(spark: SparkSession, edges: DataFrame, iters: Int,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def pageRank(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     // Static weighted adjacency (src, dst, outdeg): outdeg is
     // loop-invariant, so resolve it ONCE as a window count over the
     // src-partitioned distinct edges — one shuffle + sort of the edge
@@ -112,7 +111,7 @@ object Graph {
       // every update rounds to 12 places with decimal-accumulated sums,
       // so the cut cannot change values — only kill the doubled lineage
       // (ranks is consumed twice per round)
-      ranks = checkpoint(ranks)
+      ranks = ranks.localCheckpoint()
     }
     // the returned ranks is checkpointed (lineage cut), so the loop's
     // caches can be released instead of pinning storage for the session
@@ -165,13 +164,12 @@ object Graph {
     * and src-partitioned once; each half-step is one edge-keyed join +
     * node-keyed aggregate, with the node-sized score relation the only
     * thing moving per round; totals attach as 1-row broadcast scalars;
-    * `checkpoint` cuts lineage every half-step.
+    * a local checkpoint cuts lineage every half-step.
     *
     * Returns (`node`, `authority`, `hub`), both rounded to 12 per round
     * (contributions accumulate as DECIMAL(28,12)).
     */
-  def hits(spark: SparkSession, edges: DataFrame, iters: Int,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def hits(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
     // combined-shuffle dedup build (see pageRank's adj note): the
     // exchange carries per-partition DISTINCT edges, not the multiset;
@@ -214,7 +212,7 @@ object Graph {
       // aggregate and the per-node division both consume it, and
       // un-materialized the edge gather above would plan (and its
       // post-exchange half execute) twice per half-step
-      val all = checkpoint(gathered)
+      val all = gathered.localCheckpoint()
       val tot = all.agg(
         sum(col("__raw").cast("decimal(28,12)")).cast("double").as("__t"))
       all.crossJoin(broadcast(tot))
@@ -280,12 +278,11 @@ object Graph {
     * Scale shape: the symmetric adjacency is cached and src-partitioned
     * once; each round is one edge-keyed join + (node, label) count +
     * node-partitioned rank window — the node-sized label relation is the
-    * only thing moving. `checkpoint` cuts lineage per round.
+    * only thing moving. A local checkpoint cuts lineage per round.
     *
     * Returns (`node`, `community`) after `iters` rounds.
     */
-  def labelPropagation(spark: SparkSession, edges: DataFrame, iters: Int,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def labelPropagation(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"need at least one round, got $iters")
     val dir0 = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
@@ -302,13 +299,13 @@ object Graph {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("c").desc, col("label").asc)
     for (_ <- 1 to iters) {
-      labels = checkpoint(
-        sym.join(labels.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"), col("label"))
-          .agg(count(lit(1)).as("c"))
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1)
-          .select(col("node"), col("label")))
+      labels = sym.join(labels.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node"), col("label"))
+        .agg(count(lit(1)).as("c"))
+        .withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1)
+        .select(col("node"), col("label"))
+        .localCheckpoint()
     }
     val out = labels.withColumnRenamed("label", "community")
     grouped.unpersist(blocking = false)
@@ -529,11 +526,10 @@ object Graph {
     * Scale shape: each round is one degree count over the shrinking
     * edge set plus two semi-joins against the ≥k node list — the same
     * cached-adjacency regime as [[labelPropagation]]; the node-sized
-    * degree relation is broadcastable. `checkpoint` cuts lineage per
-    * round. Returns (`node`, `degree`) of the surviving subgraph.
+    * degree relation is broadcastable. A local checkpoint cuts lineage
+    * per round. Returns (`node`, `degree`) of the surviving subgraph.
     */
-  def kCore(spark: SparkSession, edges: DataFrame, k: Int, rounds: Int,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def kCore(spark: SparkSession, edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"need at least one peel round, got $rounds")
     val dir0 = edges.select(col("src"), col("dst"))
@@ -546,10 +542,10 @@ object Graph {
         .agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select(col("node"))
-      sym = checkpoint(
-        sym.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
-          .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
-          .select(col("src"), col("dst")))
+      sym = sym.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
+        .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
+        .select(col("src"), col("dst"))
+        .localCheckpoint()
     }
     sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("bigint").as("degree"))
@@ -586,12 +582,11 @@ object Graph {
     *
     * Scale shape: the directed adjacency is deduped and src-partitioned
     * once; each round joins the node-sized distance relation to it and
-    * min-aggregates — the pageRank movement pattern. `checkpoint` cuts
-    * lineage per round. Returns (`node`, `dist`).
+    * min-aggregates — the pageRank movement pattern. A local checkpoint
+    * cuts lineage per round. Returns (`node`, `dist`).
     */
   def bfsDistances(spark: SparkSession, edges: DataFrame, source: Long,
-      maxDepth: Int,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"need at least one hop, got $maxDepth")
     // combined-shuffle dedup build (see pageRank's adj note)
     val adj = edges.select(col("src"), col("dst"))
@@ -601,12 +596,12 @@ object Graph {
     var dist = adj.sparkSession.range(1)
       .select(lit(source).as("node"), lit(0L).as("dist"))
     for (_ <- 1 to maxDepth) {
-      dist = checkpoint(
-        dist.union(
-            adj.join(dist.withColumnRenamed("node", "src"), "src")
-              .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
-          .groupBy(col("node"))
-          .agg(min(col("dist")).as("dist")))
+      dist = dist.union(
+          adj.join(dist.withColumnRenamed("node", "src"), "src")
+            .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
+        .groupBy(col("node"))
+        .agg(min(col("dist")).as("dist"))
+        .localCheckpoint()
     }
     adj.unpersist(blocking = false)
     dist

@@ -51,11 +51,8 @@ object Intervals {
     * negative-length intervals participate as points. */
   def coalesceIntervals(df: DataFrame, keyCol: String, startCol: String,
       endCol: String, tieCol: String): DataFrame = {
-    val clash = df.columns.toSet
-      .intersect(Set("island", "span_start", "span_end", "n_intervals",
-        "__pmax", "__new"))
-    require(clash.isEmpty,
-      s"coalesceIntervals reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("coalesceIntervals", df, "island", "span_start", "span_end", "n_intervals",
+      "__pmax", "__new")
     val ord = Window.partitionBy(col(keyCol))
       .orderBy(col(startCol), col(endCol), col(tieCol))
     val before = ord.rowsBetween(Window.unboundedPreceding, -1)

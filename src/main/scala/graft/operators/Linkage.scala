@@ -88,10 +88,7 @@ object Linkage {
       clusters: DataFrame, precedence: Seq[org.apache.spark.sql.Column])
       : DataFrame = {
     require(precedence.nonEmpty, "need at least one precedence column")
-    val clash = records.columns.toSet
-      .intersect(Set("cluster", "n_members", "__rn", "id"))
-    require(clash.isEmpty,
-      s"goldenRecords reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("goldenRecords", records, "cluster", "n_members", "__rn", "id")
     val assigned = records.join(clusters.select(col("id"), col("cluster")),
         records(idCol) === col("id"), "left")
       .withColumn("cluster",

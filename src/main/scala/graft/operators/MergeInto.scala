@@ -39,8 +39,7 @@ object MergeInto {
       dataCols.filterNot(changes.columns.contains)
     require(missing.isEmpty,
       s"changes is missing column(s): ${missing.mkString(", ")}")
-    require(!snapshot.columns.contains("__rn"),
-      "applyChanges reserves column name __rn — rename it in the input")
+    Reserved.guard("applyChanges", snapshot, "__rn")
 
     val latest = changes
       .withColumn("__rn", row_number().over(

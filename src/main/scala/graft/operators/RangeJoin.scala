@@ -29,9 +29,7 @@ object RangeJoin {
     // the internal bucket key must not collide with a caller column: a
     // pre-existing __b would be silently replaced by withColumn (or make
     // the using-join ambiguous) and corrupt the join
-    val clash = (points.columns ++ ranges.columns).toSet.intersect(Set("__b"))
-    require(clash.isEmpty,
-      s"bandJoin reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Seq(points, ranges).foreach(Reserved.guard("bandJoin", _, "__b"))
     // The quantizer must be ONE monotone map applied to every value —
     // then lo <= pt <= hi guarantees bucket(pt) lands inside the exploded
     // [bucket(lo), bucket(hi)] integer interval. Integral columns use

@@ -42,11 +42,8 @@ object Repetition {
       dupN: Int = 5): DataFrame = {
     require(topNs.nonEmpty, "gopherSignals needs at least one top-n size")
     require((topNs :+ dupN).forall(_ >= 1), "n-gram sizes must be >= 1")
-    val reserved = Seq("__doc", "__chars", "__toks", "__lines", "__g",
+    Reserved.guard("gopherSignals", docs, "__doc", "__chars", "__toks", "__lines", "__g",
       "__n", "gram", "__c", "__gl", "__rn", "__line")
-    val clash = docs.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"gopherSignals reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
 
     val text = col(textCol)
     val toks = when(length(trim(text)) === 0, array().cast("array<string>"))

@@ -73,10 +73,7 @@ object Sampling {
   def bottomKPerGroup(df: DataFrame, groupCol: String, keyCol: String,
       k: Int, salt: String = ""): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val reserved = Seq("__h", "__rn")
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"bottomKPerGroup reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("bottomKPerGroup", df, "__h", "__rn")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol)).orderBy(col("__h"), col(keyCol))
     df.withColumn("__h", hash(col(keyCol), salt))
@@ -110,10 +107,7 @@ object Sampling {
       cap: Int, salt: String = "", oversample: Double = 4.0): DataFrame = {
     require(cap > 0, s"cap must be positive, got $cap")
     require(oversample >= 2.0, s"oversample must be >= 2, got $oversample")
-    val reserved = Seq("__u", "__gn", "__rn", "__cg")
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"groupCappedSample reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("groupCappedSample", df, "__u", "__gn", "__rn", "__cg")
     // 13 hex chars = 52 bits, exact in a double (the sequentialPoisson
     // uniform); the census threshold arithmetic is one IEEE division +
     // multiply — identical in any engine
@@ -231,10 +225,7 @@ object Sampling {
   def temperatureMix(df: DataFrame, sourceCol: String, keyCol: String,
       targetRows: Long, salt: String = ""): DataFrame = {
     require(targetRows > 0, s"targetRows must be positive, got $targetRows")
-    val reserved = Seq("__src", "__n", "__share", "__w", "__rate", "__u")
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"temperatureMix reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("temperatureMix", df, "__src", "__n", "__share", "__w", "__rate", "__u")
     val srcKey = coalesce(col(sourceCol).cast("string"), lit("\u0000null"))
     val counts = df.groupBy(srcKey.as("__src"))
       .agg(count(lit(1)).as("__n"))
@@ -275,10 +266,8 @@ object Sampling {
   def neymanAllocation(df: DataFrame, strataCol: String, keyCol: String,
       valueCol: String, totalBudget: Long, salt: String = ""): DataFrame = {
     require(totalBudget > 0, s"totalBudget must be positive, got $totalBudget")
-    val reserved = Seq("__src", "__n", "__s1", "__s2", "__w", "__wt", "__rate")
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"neymanAllocation reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("neymanAllocation", df,
+      "__src", "__n", "__s1", "__s2", "__w", "__wt", "__rate")
     val srcKey = coalesce(col(strataCol).cast("string"), lit("\u0000null"))
     val v = col(valueCol)
     val stats = df.groupBy(srcKey.as("__src")).agg(

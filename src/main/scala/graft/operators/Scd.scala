@@ -32,10 +32,7 @@ object Scd {
       attrCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty && attrCols.nonEmpty,
       "scd2 needs at least one key column and one attribute column")
-    val reserved = Seq("__prev", "valid_from", "valid_to", "is_current")
-    val clash = changes.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"scd2 reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("scd2", changes, "__prev", "valid_from", "valid_to", "is_current")
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol))
     val attrs = struct(attrCols.map(col): _*)
     changes

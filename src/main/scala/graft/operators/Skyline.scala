@@ -33,9 +33,7 @@ object Skyline {
   def skyline2d(df: DataFrame, xCol: String, yCol: String,
       bucketWidth: Double): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
-    val clash = df.columns.toSet.intersect(Set("__b", "__rm", "__bm"))
-    require(clash.isEmpty,
-      s"skyline2d reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("skyline2d", df, "__b", "__rm", "__bm")
     val x = col(xCol)
     val y = col(yCol)
     // stage 1: per-x minimum — the single full-data aggregate

@@ -37,11 +37,7 @@ object Spatial {
       "leftId and rightId must differ (both survive into the output)")
     val reserved = Seq("__xl", "__yl", "__xr", "__yr", "__cx", "__cy",
       "__dx", "__dy", "__gx", "__gy", "dist")
-    Seq(left, right).foreach { df =>
-      val clash = df.columns.toSet.intersect(reserved.toSet)
-      require(clash.isEmpty,
-        s"radiusJoin reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
-    }
+    Seq(left, right).foreach(Reserved.guard("radiusJoin", _, reserved: _*))
     val l = left
       .where(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(leftId), col(xCol).as("__xl"), col(yCol).as("__yl"))

@@ -34,9 +34,7 @@ object TargetEncoding {
   def looEncode(df: DataFrame, catCol: String, labelCol: String,
       outCol: String = "encoded"): DataFrame = {
     val reserved = Seq("__cat", "__n", "__s", "__gn", "__gs")
-    val clash = df.columns.toSet.intersect((reserved :+ outCol).toSet)
-    require(clash.isEmpty,
-      s"looEncode reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("looEncode", df, reserved :+ outCol: _*)
     val stats = df
       .groupBy(col(catCol).as("__cat"))
       .agg(count(col(labelCol)).as("__n"),

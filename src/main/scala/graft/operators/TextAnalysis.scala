@@ -209,10 +209,7 @@ object TextAnalysis {
   def bigramPerplexity(docs: DataFrame, idCol: String, textCol: String,
       addK: Double = 1.0): DataFrame = {
     require(addK > 0, s"additive smoothing needs addK > 0, got $addK")
-    val reserved = Seq("__doc", "__t", "__bg", "__lp", "__v", "w1", "g")
-    val clash = docs.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"bigramPerplexity reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("bigramPerplexity", docs, "__doc", "__t", "__bg", "__lp", "__v", "w1", "g")
     val toks = split(trim(col(textCol)), "\\s+")
     val words = docs.select(col(idCol).as("__doc"), explode(toks).as("w1"))
     val uni = words.groupBy("w1").agg(count(lit(1)).as("cu"))
@@ -340,10 +337,7 @@ object TextAnalysis {
   def packSpans(rows: DataFrame, groupCol: String, orderCol: String,
       tokenCol: String, seqLen: Long): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    val reserved = Seq("__start", "__fin", "seq_id", "tok_start", "tok_end")
-    val clash = rows.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"packSpans reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("packSpans", rows, "__start", "__fin", "seq_id", "tok_start", "tok_end")
     val w = Window.partitionBy(col(groupCol)).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rows.where(col(tokenCol).isNotNull && col(tokenCol) > 0)
@@ -447,9 +441,7 @@ object TextAnalysis {
     */
   def percentileGate(docs: DataFrame, groupCols: Seq[String],
       scoreCol: String, tieCol: String, minPct: Double): DataFrame = {
-    val clash = docs.columns.toSet.intersect(Set("__rk", "__n"))
-    require(clash.isEmpty,
-      s"percentileGate reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("percentileGate", docs, "__rk", "__n")
     val part = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCols.map(col): _*)
     val w = part.orderBy(col(scoreCol), col(tieCol))
@@ -559,10 +551,7 @@ object TextAnalysis {
       minCount: Long = 5, k: Int = 20): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(k > 0, s"k must be positive, got $k")
-    val reserved = Seq("__t", "__bg", "w1", "w2", "c1", "c2", "cb")
-    val clash = docs.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"pmiCollocations reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("pmiCollocations", docs, "__t", "__bg", "w1", "w2", "c1", "c2", "cb")
     val toks = split(trim(col(textCol)), "\\s+")
     val words = docs.select(explode(toks).as("w1"))
     val uni = words.groupBy("w1").agg(count(lit(1)).as("c"))

@@ -37,9 +37,7 @@ object TimeSeries {
     */
   def resampleFill(df: DataFrame, keyCol: String, tsCol: String,
       valCol: String, bucketWidth: Long): DataFrame = {
-    val clash = df.columns.toSet.intersect(Set("__v", "__b0", "__b1"))
-    require(clash.isEmpty,
-      s"resampleFill reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("resampleFill", df, "__v", "__b0", "__b1")
     require(keyCol != "bucket" && valCol != "bucket" && tsCol != "bucket",
       "resampleFill emits a `bucket` column — rename the input's `bucket` first")
     // integer division — `/` on longs is DOUBLE division in Spark, and an
@@ -110,11 +108,8 @@ object TimeSeries {
       zThresh: Double = 3.0, minObs: Int = 4): DataFrame = {
     require(lookback >= minObs && minObs >= 2,
       s"need lookback >= minObs >= 2, got lookback=$lookback minObs=$minObs")
-    val clash = df.columns.toSet
-      .intersect(Set("__n", "__s1", "__s2", "__cn", "__c1", "__c2",
-        "n_prev", "z", "is_anomaly"))
-    require(clash.isEmpty,
-      s"rollingAnomaly reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("rollingAnomaly", df, "__n", "__s1", "__s2", "__cn", "__c1", "__c2",
+      "n_prev", "z", "is_anomaly")
     val ord = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val v = col(valCol)
@@ -188,11 +183,8 @@ object TimeSeries {
       threshold: Double): DataFrame = {
     require(slack >= 0, s"slack must be >= 0, got $slack")
     require(threshold > 0, s"threshold must be > 0, got $threshold")
-    val clash = df.columns.toSet
-      .intersect(Set("__dp", "__dn", "__cp", "__cn", "cusum_pos",
-        "cusum_neg", "is_alarm"))
-    require(clash.isEmpty,
-      s"cusum reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("cusum", df, "__dp", "__dn", "__cp", "__cn", "cusum_pos",
+      "cusum_neg", "is_alarm")
     val ord = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val zero = lit(0).cast("decimal(38,6)")
@@ -391,10 +383,7 @@ object TimeSeries {
     */
   def seasonalBaseline(df: DataFrame, idCol: String, tsCol: String,
       valCol: String): DataFrame = {
-    val clash = df.columns.toSet
-      .intersect(Set("dow", "hour", "baseline", "residual"))
-    require(clash.isEmpty,
-      s"seasonalBaseline reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("seasonalBaseline", df, "dow", "hour", "baseline", "residual")
     val parts = calendarParts(df, idCol, tsCol, valCol)
     parts.join(broadcast(seasonalProfile(parts)), Seq("dow", "hour"))
       .select(col(idCol), col("dow"), col("hour"), col("v"),
@@ -465,11 +454,8 @@ object TimeSeries {
       minObs: Int = 3): DataFrame = {
     require(lookback >= minObs && minObs >= 2,
       s"need lookback >= minObs >= 2, got lookback=$lookback minObs=$minObs")
-    val clash = df.columns.toSet
-      .intersect(Set("n_win", "corr", "__cn", "__cx", "__cy", "__cxy",
-        "__cxx", "__cyy"))
-    require(clash.isEmpty,
-      s"rollingCorrelation reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("rollingCorrelation", df, "n_win", "corr", "__cn", "__cx", "__cy", "__cxy",
+      "__cxx", "__cyy")
     val ord = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val x = col(xCol); val y = col(yCol)

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Reserved
+
 /** Z-order (Morton-curve) file layout — multi-dimensional data skipping.
   *
   * `IO.compact` sorts by ONE key, so parquet min/max stats prune scans
@@ -70,9 +72,7 @@ object Layout {
       partitions: Int, bits: Int = 16, maxRecordsPerFile: Long = 0L): Unit = {
     require(layoutCols.nonEmpty, "writeZordered needs layout columns")
     val reserved = "__z" +: layoutCols.flatMap(c => Seq(s"__min_$c", s"__max_$c"))
-    val clash = df.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"writeZordered reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("writeZordered", df, reserved: _*)
     val stats = df.agg(
       layoutCols.flatMap(c =>
         Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))).head,
@@ -121,10 +121,7 @@ object Layout {
   def compactionPlan(files: DataFrame, partCol: String, pathCol: String,
       bytesCol: String, targetBytes: Long): DataFrame = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val reserved = Seq("__prefix", "bin", "oversized")
-    val clash = files.columns.toSet.intersect(reserved.toSet)
-    require(clash.isEmpty,
-      s"compactionPlan reserves column name(s) ${clash.mkString(", ")} — rename them in the input")
+    Reserved.guard("compactionPlan", files, "__prefix", "bin", "oversized")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(partCol))
       .orderBy(col(bytesCol).desc, col(pathCol))

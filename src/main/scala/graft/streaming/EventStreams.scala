@@ -9,8 +9,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming surface over the `events` shape (build brief §
   * "Structured Streaming for streams"). The reference is batch-only
   * (SURVEY §2.11), so this is extension surface: event-time windowed
-  * aggregation with watermarks, stateful sessionization via
-  * flatMapGroupsWithState, and stateful stream dedup.
+  * aggregation with watermarks, gap sessions through Spark's native
+  * `session_window` aggregate, sharded per-window heavy hitters through
+  * flatMapGroupsWithState with an event-time timeout, and stateful
+  * stream dedup. Each capability has one implementation, and none needs
+  * a particular state store provider (the default HDFS-backed one and
+  * RocksDB both serve).
   *
   * Every transform is `DataFrame => DataFrame` so the same code runs on
   * `readStream` sources in production and on MemoryStream / batch frames in
@@ -21,13 +25,6 @@ object EventStreams {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
-
-  final case class Session(user_id: Long, session_start: Timestamp,
-      session_end: Timestamp, n_events: Int, total_value: Double)
-
-  /** Per-user state for [[sessionize]] — public: the state encoder's
-    * generated code can't access a private nested class. */
-  final case class OpenSession(start: Long, end: Long, n: Int, total: Double)
 
   /** Event-time tumbling-window counts with a watermark: the canonical
     * streaming aggregate. State is bounded by the watermark — windows older
@@ -41,62 +38,6 @@ object EventStreams {
       .select(col("window.start").as("bucket_start"), col("event_type"), col("n"))
 
   private val functions = org.apache.spark.sql.functions
-
-  /** Stateful gap-based sessionization: events within `gap` of each other
-    * (per user) belong to one session. A later event closes and emits the
-    * previous session, and — the part a NoTimeout formulation gets wrong —
-    * an *idle* session is emitted when the event-time watermark passes
-    * `session_end + gap`, which also evicts the user's state. State per
-    * user is therefore one open session, bounded by the watermark:
-    * O(users active inside the watermark window), not O(all users ever
-    * seen), and the last session of a user who never returns still
-    * materializes. */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L,
-      watermark: String = "1 hour"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // watermark passed end+gap with no new events: the session is
-            // final — emit it and evict the state
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(userId, new Timestamp(s.start),
-              new Timestamp(s.end), s.n, s.total))
-          } else {
-            val sorted = batch.toSeq.sortBy(_.ts.getTime)
-            var open = state.getOption
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              open match {
-                case Some(s) if t - s.end <= gapMs =>
-                  open = Some(s.copy(end = math.max(s.end, t), n = s.n + 1,
-                    total = s.total + e.value))
-                case Some(s) =>
-                  closed += Session(userId, new Timestamp(s.start),
-                    new Timestamp(s.end), s.n, s.total)
-                  open = Some(OpenSession(t, t, 1, e.value))
-                case None =>
-                  open = Some(OpenSession(t, t, 1, e.value))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // fire once the watermark passes the gap horizon; the timeout
-              // timestamp must stay ahead of the current watermark (late
-              // sessions would otherwise throw on an in-the-past timeout)
-              state.setTimeoutTimestamp(
-                math.max(s.end + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            closed.result().iterator
-          }
-      }
-  }
 
   final case class WindowTop(bucket_start: Timestamp, rank: Int,
       item: String, est: Long)
@@ -203,103 +144,6 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[ShardTop], _: Long) =>
         sink(topKWithinWindows(batch, k))
       }
-
-  /** Stage-1 processor for [[windowedTopTypesChained]]: one Misra-Gries
-    * summary per (window, shard) group on the `transformWithState` API.
-    * Counters live in a [[org.apache.spark.sql.streaming.MapState]] —
-    * each counter is its OWN state-store entry, so on RocksDB an update
-    * touches the changed counters instead of rewriting one serialized
-    * blob per event batch. A per-group timer at the window end emits the
-    * shard's top-k and clears the state. */
-  /** Stage-1 emission for the chained formulation: `emit_ts` is the
-    * CHAINING event time — the instant the window finalized (its end,
-    * floored to just above the current watermark, because a chained
-    * stateful operator may not emit rows behind the watermark); the
-    * window's identity travels as the plain `bucket_ms` payload. All
-    * shards of a window fire in the same micro-batch (one global
-    * watermark), so they share one `emit_ts`. */
-  final case class ShardTopEmit(emit_ts: Timestamp, bucket_ms: Long,
-      shard: Int, item: String, est: Long)
-
-  private class MgShardProcessor(windowMs: Long, capacity: Int, k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      (Long, Int), Event, ShardTopEmit] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig}
-    import org.apache.spark.sql.{Encoders, streaming}
-
-    @transient private var counts: streaming.MapState[String, Long] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      counts = getHandle.getMapState[String, Long]("mg",
-        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, Int), rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[ShardTopEmit] = {
-      val buf = new graft.functions.FreqSketch.Buffer(capacity)
-      counts.iterator().foreach { case (i, c) => buf.counts.update(i, c) }
-      rows.foreach(e => buf.add(e.event_type))
-      // rewrite the summary (≤ capacity entries); a delta write of only
-      // the changed counters is the further refinement MapState allows
-      counts.clear()
-      buf.counts.foreach { case (i, c) => counts.updateValue(i, c) }
-      // fire at the window end; re-registering the same timestamp across
-      // batches is idempotent (timers are (key, ts) state entries)
-      getHandle.registerTimer((key._1 + 1) * windowMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: (Long, Int),
-        timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo): Iterator[ShardTopEmit] = {
-      val top = counts.iterator().toSeq
-        .sortBy { case (i, c) => (-c, i) }.take(k)
-      counts.clear()
-      val emitTs = new Timestamp(math.max((key._1 + 1) * windowMs,
-        timerValues.getCurrentWatermarkInMs() + 1))
-      top.iterator.map { case (item, c) =>
-        ShardTopEmit(emitTs, key._1 * windowMs, key._2, item, c)
-      }
-    }
-  }
-
-  /** Streaming heavy hitters as ONE streaming query — the
-    * `transformWithState` formulation of [[windowedTopTypes]]. The TWS
-    * operator declares `bucket_start` as its OUTPUT event-time column,
-    * which is what legalizes a SECOND stateful operator downstream: the
-    * per-window merge is an ordinary watermarked streaming aggregation
-    * over the ≤ shards·k candidate rows, using the bounded-heap
-    * [[graft.functions.TopKAgg]] (ties among equal counts break by item
-    * hash). No `foreachBatch` seam; Append-mode end to end.
-    *
-    * Requires the RocksDB state store
-    * (`spark.sql.streaming.stateStore.providerClass` →
-    * `RocksDBStateStoreProvider`): transformWithState keeps each state
-    * variable in its own column family, which the default HDFS-backed
-    * provider does not support — and RocksDB is the spillable backend a
-    * 100 TB/day event rate needs anyway.
-    *
-    * Output: one row per finalized window — (bucket_start,
-    * tops: array<struct<item, est>>), est-descending. */
-  def windowedTopTypesChained(events: Dataset[Event],
-      windowMs: Long = 3600 * 1000L, capacity: Int = 64, k: Int = 3,
-      shards: Int = 32, watermark: String = "2 hours"): DataFrame = {
-    require(shards > 0, s"shards must be positive, got $shards")
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.ts.getTime / windowMs,
-        math.floorMod(e.event_type.hashCode, shards)))
-      .transformWithState(new MgShardProcessor(windowMs, capacity, k),
-        "emit_ts", OutputMode.Append())
-      // grouping on (emit_ts, bucket_ms): emit_ts satisfies the append-
-      // mode watermark requirement; bucket_ms keeps two windows that
-      // finalize in the same batch apart
-      .groupBy(col("emit_ts"), col("bucket_ms"))
-      .agg(graft.functions.TopK.topK(col("est"), xxhash64(col("item")),
-        struct(col("item"), col("est")), k).as("tops"))
-      .select(timestamp_millis(col("bucket_ms")).as("bucket_start"),
-        col("tops"))
-  }
 
   /** Stream-static enrichment join: each micro-batch joins the (small)
     * static dimension broadcast — the standard streaming enrich, no
@@ -450,17 +294,17 @@ object EventStreams {
         col("event_type"), col("n"))
       .orderBy(col("win_start_ms"), col("event_type"))
 
-  /** Native `session_window` aggregation: dynamic-gap sessions as a
-    * first-class streaming-capable AGGREGATE — the built-in alternative to
-    * [[sessionize]]'s hand-rolled flatMapGroupsWithState (no custom state
-    * code, and Spark merges session state inside the aggregation operator).
-    * Each event opens a [ts, ts+gap) window; windows that overlap OR touch
-    * merge, so consecutive events up to and INCLUDING exactly `gap` apart
-    * share a session (pinned empirically in [[EventStreamsSpec]] — the
-    * same `delta <= gap` rule as [[sessionize]]) and the emitted end is
-    * last event + gap. The same plan runs on a batch frame (watermark is a no-op) and
-    * on a watermarked stream, where append mode materializes a session
-    * once the watermark passes its end. */
+  /** Gap sessionization as Spark's native `session_window` aggregate:
+    * no custom state code, and Spark merges session state inside the
+    * aggregation operator. Each event opens a [ts, ts+gap) window;
+    * windows that overlap OR touch merge, so consecutive events of a user
+    * up to and INCLUDING exactly `gap` apart share a session (the
+    * `delta <= gap` rule, pinned in [[EventStreamsSpec]]). The emitted
+    * `session_end` is the last event + gap, not the last event. The same
+    * plan runs on a batch frame (the watermark is a no-op) and on a
+    * watermarked stream, where append mode emits a session once, when
+    * the watermark passes its end — also for a user who never returns —
+    * and evicts its state. */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "1 hour"): DataFrame =
     events

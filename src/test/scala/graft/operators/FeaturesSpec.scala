@@ -238,7 +238,13 @@ class FeaturesSpec extends SparkSpec {
 
       // both sides cached: exceptAll straight over a dropDuplicates
       // lineage fails to bind an attribute at execution
-      // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), with or without the polar step
+      // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), with or without the polar
+      // step. That is a Spark 4.1.2 bug, not one of this engine: a plain
+      // spark-shell with no spark.sql.extensions fails the same way on
+      // `val d = spark.range(100).select(col("id"), (col("id") % 10).as("k"))
+      // .dropDuplicates("k"); d.exceptAll(d).count()`, while exceptAll on
+      // the undeduplicated frame passes. No program path runs exceptAll
+      // over a dropDuplicates lineage.
       val (a, e) = (actual.cache(), withPolar.cache())
       try {
         val n = e.count()

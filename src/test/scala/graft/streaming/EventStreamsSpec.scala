@@ -6,10 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
-import graft.streaming.EventStreams.{Event, Session}
+import graft.streaming.EventStreams.Event
 
 /** Streaming semantics on MemoryStream sources: watermarked windowed
-  * aggregation, gap sessionization state, stream dedup. */
+  * aggregation, native session windows, sharded heavy hitters on both
+  * state store providers, stream dedup. */
 class EventStreamsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,66 +34,6 @@ class EventStreamsSpec extends SparkSpec {
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
       assert(rows.contains((ts(0), "click", 2L)))
       assert(rows.contains((ts(60), "view", 1L)))
-    } finally q.stop()
-  }
-
-  test("sessionize closes a session when the gap is exceeded") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = EventStreams.sessionize(in.toDS(), gapMs = 30 * 60 * 1000L)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        Event(1, ts(0), 7, "click", 2.0),
-        Event(2, ts(10), 7, "click", 3.0))
-      q.processAllAvailable()
-      assert(spark.table("sessions").count() == 0) // session still open
-
-      in.addData(Event(3, ts(180), 7, "click", 1.0)) // 3h later → closes it
-      q.processAllAvailable()
-      val sessions = spark.table("sessions").as[Session].collect()
-      assert(sessions.length == 1)
-      val s = sessions.head
-      assert(s.user_id == 7 && s.n_events == 2 && s.total_value == 5.0)
-      assert(s.session_start == ts(0) && s.session_end == ts(10))
-    } finally q.stop()
-  }
-
-  test("sessionize emits an idle session once the watermark passes end+gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = EventStreams.sessionize(in.toDS(), gapMs = 30 * 60 * 1000L,
-      watermark = "1 hour")
-      .writeStream.format("memory").queryName("idle_sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // user 7 has two events then goes idle forever
-      in.addData(
-        Event(1, ts(0), 7, "click", 2.0),
-        Event(2, ts(10), 7, "click", 3.0))
-      q.processAllAvailable()
-      assert(spark.table("idle_sessions").count() == 0) // still open
-
-      // a different user's much-later event advances the watermark to
-      // ts(600) - 1h = ts(540), far past user 7's end+gap = ts(40): the
-      // timeout must fire and emit user 7's session even though user 7
-      // never produced another event
-      in.addData(Event(3, ts(600), 9, "view", 1.0))
-      q.processAllAvailable()
-      val sessions = spark.table("idle_sessions").as[Session].collect()
-        .filter(_.user_id == 7)
-      assert(sessions.length == 1)
-      val s = sessions.head
-      assert(s.n_events == 2 && s.total_value == 5.0)
-      assert(s.session_start == ts(0) && s.session_end == ts(10))
-
-      // state for user 7 is evicted: advancing the watermark further must
-      // not re-emit the session
-      in.addData(Event(4, ts(1300), 9, "view", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("idle_sessions").as[Session].collect()
-        .count(_.user_id == 7) == 1)
     } finally q.stop()
   }
 
@@ -145,34 +86,59 @@ class EventStreamsSpec extends SparkSpec {
 
   test("windowedTopTypes emits a window's heavy hitters when the watermark passes") {
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, Int, String, Long)]
-    // shards = 4 so click/view/scroll land in (possibly) different state
-    // groups — the per-batch merge must still produce the global ranking
-    val q = EventStreams.windowedTopTypes(in.toDS(),
-        windowMs = 3600 * 1000L, capacity = 16, k = 2, shards = 4,
-        watermark = "10 minutes") { tops =>
-        got.synchronized {
-          got ++= tops.collect().map(t => (t.bucket_start, t.rank, t.item, t.est))
-        }
-      }.start()
-    try {
-      in.addData(
-        Event(1, ts(5), 1, "click", 1.0),
-        Event(2, ts(10), 2, "click", 1.0),
-        Event(3, ts(15), 3, "click", 1.0),
-        Event(4, ts(20), 4, "view", 1.0),
-        Event(5, ts(25), 5, "view", 1.0),
-        Event(6, ts(30), 6, "scroll", 1.0))
-      q.processAllAvailable()
-      assert(got.synchronized(got.isEmpty)) // window still open
+    // one run per state store provider: None is the default HDFS-backed
+    // store; the flatMapGroupsWithState shard stage needs no code of its
+    // own for RocksDB, so both must emit the same rows
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    def run(provider: Option[String]): (Seq[(Timestamp, Int, String, Long)], Set[String]) = {
+      val prev = spark.conf.getOption(providerKey)
+      provider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
+      val in = MemoryStream[Event]
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, Int, String, Long)]
+      // shards = 4 so click/view/scroll land in (possibly) different state
+      // groups — the per-batch merge must still produce the global ranking
+      val q = EventStreams.windowedTopTypes(in.toDS(),
+          windowMs = 3600 * 1000L, capacity = 16, k = 2, shards = 4,
+          watermark = "10 minutes") { tops =>
+          got.synchronized {
+            got ++= tops.collect().map(t => (t.bucket_start, t.rank, t.item, t.est))
+          }
+        }.start()
+      try {
+        in.addData(
+          Event(1, ts(5), 1, "click", 1.0),
+          Event(2, ts(10), 2, "click", 1.0),
+          Event(3, ts(15), 3, "click", 1.0),
+          Event(4, ts(20), 4, "view", 1.0),
+          Event(5, ts(25), 5, "view", 1.0),
+          Event(6, ts(30), 6, "scroll", 1.0),
+          Event(7, ts(65), 7, "view", 1.0),
+          Event(8, ts(70), 8, "view", 1.0))
+        q.processAllAvailable()
+        assert(got.synchronized(got.isEmpty)) // windows still open
 
-      // event far past hour 0 + watermark → finalizes the first window
-      in.addData(Event(7, ts(300), 7, "click", 1.0))
-      q.processAllAvailable()
-      val rows = got.synchronized(got.toSeq).sortBy(_._2)
-      assert(rows == Seq((ts(0), 1, "click", 3L), (ts(0), 2, "view", 2L)))
-    } finally q.stop()
+        // event far past hour 1 + watermark → finalizes hours 0 and 1 in
+        // the same micro-batch; the merge must keep their rows apart
+        in.addData(Event(9, ts(300), 9, "click", 1.0))
+        q.processAllAvailable()
+        val metrics = q.recentProgress.toSeq.flatMap(_.stateOperators)
+          .flatMap(_.customMetrics.keySet.toArray(Array.empty[String])).toSet
+        (got.synchronized(got.toSeq).sortBy(r => (r._1.getTime, r._2)), metrics)
+      } finally {
+        q.stop()
+        prev.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
+      }
+    }
+    val (onDefault, defaultMetrics) = run(None)
+    val (onRocksDb, rocksDbMetrics) = run(Some(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    assert(onDefault == Seq((ts(0), 1, "click", 3L), (ts(0), 2, "view", 2L),
+      (ts(60), 1, "view", 2L)))
+    assert(onRocksDb == onDefault)
+    // the provider in play is the one asked for: only RocksDB reports
+    // its rocksdb* state metrics
+    assert(rocksDbMetrics.exists(_.startsWith("rocksdb")), rocksDbMetrics)
+    assert(!defaultMetrics.exists(_.startsWith("rocksdb")), defaultMetrics)
   }
 
   test("windowedShardTops spreads a window's state across (window, shard) groups") {
@@ -211,128 +177,6 @@ class EventStreamsSpec extends SparkSpec {
       assert(merged.map(t => (t.rank, t.item, t.est)).toSeq ==
         Seq((1, "buy", 1L), (2, "click", 1L), (3, "hover", 1L)))
     } finally q.stop()
-  }
-
-  test("windowedTopTypesChained merges shards in ONE query via transformWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState needs multi-column-family state → RocksDB
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = EventStreams.windowedTopTypesChained(in.toDS(),
-        windowMs = 3600 * 1000L, capacity = 16, k = 2, shards = 4,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("chained_top")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        Event(1, ts(5), 1, "click", 1.0),
-        Event(2, ts(10), 2, "click", 1.0),
-        Event(3, ts(15), 3, "click", 1.0),
-        Event(4, ts(20), 4, "view", 1.0),
-        Event(5, ts(25), 5, "view", 1.0),
-        Event(6, ts(30), 6, "scroll", 1.0))
-      q.processAllAvailable()
-      // finalize window 0 (shard stage), then the downstream aggregate
-      // needs its own watermark advance past the emit timestamp — each
-      // later batch finalizes the previous batch's windows, so three
-      // far-apart batches push both stateful operators over the line
-      in.addData(Event(7, ts(300), 7, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(8, ts(900), 8, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(9, ts(1500), 9, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("chained_top").collect()
-      val win0 = rows.filter(_.getTimestamp(0) == ts(0))
-      assert(win0.length == 1, s"expected one finalized window-0 row: ${rows.toSeq}")
-      val tops = win0.head.getSeq[org.apache.spark.sql.Row](1)
-        .map(r => (r.getString(0), r.getLong(1)))
-      assert(tops == Seq(("click", 3L), ("view", 2L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("windowedTopTypesChained keeps co-finalizing windows apart") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = EventStreams.windowedTopTypesChained(in.toDS(),
-        windowMs = 3600 * 1000L, capacity = 16, k = 1, shards = 4,
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("cofinal_top")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // two DIFFERENT hour windows populated before any watermark moves:
-      // a later jump finalizes both in the same micro-batch, so both
-      // share one emit_ts — the bucket_ms grouping key must keep their
-      // top-k rows separate
-      in.addData(
-        Event(1, ts(5), 1, "click", 1.0), Event(2, ts(10), 2, "click", 1.0),
-        Event(3, ts(65), 3, "view", 1.0), Event(4, ts(70), 4, "view", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(5, ts(600), 5, "flush", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(6, ts(1200), 6, "flush", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(7, ts(1800), 7, "flush", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("cofinal_top").collect()
-        .map(r => (r.getTimestamp(0),
-          r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getString(0), x.getLong(1)))))
-        .toMap
-      assert(rows.get(ts(0)).map(_.toSeq) == Some(Seq(("click", 2L))),
-        s"window 0 wrong: $rows")
-      assert(rows.get(ts(60)).map(_.toSeq) == Some(Seq(("view", 2L))),
-        s"window 1 wrong: $rows")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("sessionize runs on the RocksDB state store provider") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Event]
-    val q = EventStreams.sessionize(in.toDS(), gapMs = 30 * 60 * 1000L)
-      .writeStream.format("memory").queryName("rocks_sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        Event(1, ts(0), 7, "click", 2.0),
-        Event(2, ts(10), 7, "click", 3.0))
-      q.processAllAvailable()
-      in.addData(Event(3, ts(180), 7, "click", 1.0)) // 3h later → closes it
-      q.processAllAvailable()
-      val sessions = spark.table("rocks_sessions").as[Session].collect()
-      assert(sessions.length == 1)
-      assert(sessions.head.n_events == 2 && sessions.head.total_value == 5.0)
-      // the state store actually in play is RocksDB, not the default HDFS map
-      assert(q.lastProgress.stateOperators.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("enrich joins each micro-batch against the broadcast static dim") {
@@ -632,6 +476,16 @@ class EventStreamsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
           r.getDouble(3))).toSet
       assert(batch.nonEmpty && streamed == batch)
+
+      // a session is emitted once: after a later watermark advance the
+      // closed sessions' state is gone, so none of them is emitted again
+      in.addData(Event(10, ts(20000), 9, "click", 0.0))
+      q.processAllAvailable()
+      val closedUsers = closed.map(_.user_id).toSet
+      val emitted = spark.table("native_sessions")
+        .select("user_id", "session_start").as[(Long, Timestamp)].collect()
+        .filter { case (u, _) => closedUsers(u) }
+      assert(emitted.length == batch.size && emitted.distinct.length == batch.size)
     } finally q.stop()
   }
 }
