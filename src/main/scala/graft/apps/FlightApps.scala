@@ -25,16 +25,17 @@ import graft.sources.{IO, Schemas}
 object TrainApp {
 
   def main(args: Array[String]): Unit = {
-    val positional = args.filterNot(_.startsWith("--"))
-    require(positional.length >= 2,
+    val cli = CliArgs.parse(args, switches = Set("--count-only"),
+      valueFlags = Set("--plane-data", "--test-file", "--save-model"))
+    require(cli.positional.length == 2,
       "usage: TrainApp <input.csv> <outputDir> [--count-only] [--plane-data p] " +
         "[--test-file t] [--save-model modelDir]")
-    val Array(inputPath, outputDir) = positional.take(2)
-    val countOnly = args.contains("--count-only")
+    val Seq(inputPath, outputDir) = cli.positional
 
     val spark = session()
-    try run(spark, inputPath, outputDir, countOnly, optArg(args, "--plane-data"),
-      optArg(args, "--test-file"), optArg(args, "--save-model"))
+    try run(spark, inputPath, outputDir, cli.switches("--count-only"),
+      cli.values.get("--plane-data"), cli.values.get("--test-file"),
+      cli.values.get("--save-model"))
     finally spark.stop()
   }
 
@@ -107,11 +108,6 @@ object TrainApp {
       .map(p => IO.readCsv(spark, p, Some(Schemas.planeData)))
       .getOrElse(graft.sources.FlightsGenerator.planeData(spark))
 
-  /** The value after `flag` in `args`, if any. */
-  private[apps] def optArg(args: Array[String], flag: String): Option[String] = {
-    val i = args.indexOf(flag); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-  }
-
   /** S4 + S5/S6 + M9: parquet dir + single-file CSV of the primitive
     * columns (`main.py:116-162`), and MAE/RMSE when `df` carries both
     * `prediction` and `ArrDelay` (None otherwise, or when no row has both).
@@ -151,13 +147,13 @@ object TrainApp {
 object ScoreApp {
 
   def main(args: Array[String]): Unit = {
-    val positional = args.filterNot(_.startsWith("--"))
-    require(positional.length >= 3,
+    val cli = CliArgs.parse(args, switches = Set.empty,
+      valueFlags = Set("--plane-data"))
+    require(cli.positional.length == 3,
       "usage: ScoreApp <input.csv> <modelDir> <outputDir> [--plane-data p]")
-    val Array(inputPath, modelDir, outputDir) = positional.take(3)
+    val Seq(inputPath, modelDir, outputDir) = cli.positional
     val spark = TrainApp.session("FlightDelayScoringApp")
-    try run(spark, inputPath, modelDir, outputDir,
-      TrainApp.optArg(args, "--plane-data"))
+    try run(spark, inputPath, modelDir, outputDir, cli.values.get("--plane-data"))
     finally spark.stop()
   }
 
@@ -166,5 +162,34 @@ object ScoreApp {
     val (pipelineModel, tree) = FlightModel.loadModels(spark, modelDir)
     TrainApp.score(spark, inputPath, TrainApp.planeData(spark, planePath),
       pipelineModel, tree, outputDir, "scored")
+  }
+}
+
+/** A parsed app command line: positionals in order, the switches given,
+  * and each value flag's value. */
+private[apps] final case class CliArgs(positional: Seq[String],
+    switches: Set[String], values: Map[String, String])
+
+private[apps] object CliArgs {
+
+  /** Splits `args` into positionals, `switches` (flags alone) and
+    * `valueFlags` (flags that take the next argument as their value),
+    * in any order. An unknown `--flag`, or a value flag with no value
+    * after it, throws an `IllegalArgumentException` naming the flag. */
+  def parse(args: Seq[String], switches: Set[String],
+      valueFlags: Set[String]): CliArgs = {
+    @scala.annotation.tailrec
+    def go(rest: List[String], acc: CliArgs): CliArgs = rest match {
+      case Nil => acc
+      case f :: tail if switches(f) => go(tail, acc.copy(switches = acc.switches + f))
+      case f :: v :: tail if valueFlags(f) && !v.startsWith("--") =>
+        go(tail, acc.copy(values = acc.values + (f -> v)))
+      case f :: _ if valueFlags(f) =>
+        throw new IllegalArgumentException(s"$f needs a value")
+      case f :: _ if f.startsWith("--") =>
+        throw new IllegalArgumentException(s"unknown flag $f")
+      case p :: tail => go(tail, acc.copy(positional = acc.positional :+ p))
+    }
+    go(args.toList, CliArgs(Vector.empty, Set.empty, Map.empty))
   }
 }

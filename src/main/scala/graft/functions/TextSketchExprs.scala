@@ -194,44 +194,18 @@ object TextSketches {
   @inline private def isCjk(c: Char): Boolean =
     (c >= 0x4E00 && c <= 0x9FFF) || (c >= 0x3400 && c <= 0x4DBF)
 
-  /** Count of word-runs whose ASCII-lowercased form is in `set`. Word-runs
-    * are maximal `\w`-ish runs (see [[isWordChar]]), so punctuation is a
-    * token boundary and this matches `regexp_count(lower(text),
-    * '\b(w1|w2|…)\b')` for ASCII marker words — 'the,' and 'the.' count —
-    * without the regex engine (the regex formulation was the bench's least
-    * stable hot path: JIT warm-up of the generated matcher code produced
-    * 10-100× run-to-run swings). CJK ideographs each form their own token
-    * ([[isCjk]]), so single-char markers match UNSEGMENTED text too — the
-    * equivalent oracle formulation for those is a char-class occurrence
-    * count, not `\b` matching (RE2's `\w` excludes ideographs, so `\b` can
-    * never fire inside a CJK run). */
-  def tokenSetHits(text: UTF8String, set: java.util.HashSet[String]): Int = {
-    val s = text.toString
-    var hits = 0
-    var i = 0
-    val n = s.length
-    val sb = new java.lang.StringBuilder(16)
-    while (i <= n) {
-      val c = if (i == n) ' ' else s.charAt(i)
-      val cjk = i < n && isCjk(c)
-      if (i < n && !cjk && isWordChar(c)) {
-        sb.append(if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-      } else {
-        if (sb.length > 0) {
-          if (set.contains(sb.toString)) hits += 1
-          sb.setLength(0)
-        }
-        if (cjk && set.contains(String.valueOf(c))) hits += 1
-      }
-      i += 1
-    }
-    hits
-  }
-
   /** ONE fused scan computing every per-document text signal the
     * quality/language-ID surface needs: whitespace token count, ASCII punct
     * count, ASCII uppercase count, non-whitespace char count, and per-
-    * lexicon marker hits (word-run tokenization as [[tokenSetHits]]).
+    * lexicon marker hits. Marker tokens are maximal word-runs (see
+    * [[isWordChar]]), ASCII-lowercased, so punctuation is a token boundary
+    * and a lexicon's hits match `regexp_count(lower(text), '\b(w1|w2|…)\b')`
+    * for ASCII marker words — 'the,' and 'the.' count — without the regex
+    * engine (whose generated matcher's JIT warm-up swung the bench 10-100×
+    * run to run). CJK ideographs each form their own token ([[isCjk]]), so
+    * single-char markers match UNSEGMENTED text too; the oracle counts
+    * those as char-class occurrences, since RE2's `\b` never fires inside a
+    * CJK run.
     * Replaces up to 9 separate char scans in the capstone pipeline.
     * `lookup` maps a lowercased marker word to a bitmask of lexicon
     * indices (a word may belong to several lexicons). */
@@ -441,8 +415,6 @@ object TextSketches {
     ColumnBridge.column(MinKHashes(ColumnBridge.expression(arr), k))
   def shingles(text: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
-  def tokenHits(text: Column, words: Seq[String]): Column =
-    ColumnBridge.column(TokenSetHits(ColumnBridge.expression(text), words))
   def stat(text: Column, mode: TextStatMode.Value): Column =
     ColumnBridge.column(TextStat(ColumnBridge.expression(text), mode.id))
   def profile(text: Column, lexicons: Seq[Seq[String]]): Column =
@@ -530,30 +502,6 @@ case class SimHash60Md5(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.functions.TextSketches.simhash60Md5($a);")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** string → int: tokens whose lowercased form is in the marker set. */
-case class TokenSetHits(child: Expression, words: Seq[String]) extends UnaryExpression {
-  override def prettyName: String = "token_set_hits"
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](words.size * 2)
-    words.foreach(w => s.add(w.toLowerCase))
-    s
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    java.lang.Integer.valueOf(TextSketches.tokenSetHits(v.asInstanceOf[UTF8String], set))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // raw type: janino's generics support is unreliable in casts
-    val setRef = ctx.addReferenceObj("wordSet", set, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TextSketches.tokenSetHits($a, $setRef);")
-  }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -2,7 +2,6 @@ package graft.gates
 
 import org.apache.spark.sql.functions._
 import graft.Gate, Gate.Sql
-import Shared._
 
 /** Multimodal and media-container gates (H.264, MP4, ADTS). */
 private[graft] object MediaGates {

@@ -1,6 +1,5 @@
 package graft.gates
 
-import org.apache.spark.sql.functions._
 import graft.Gate, Gate.Sql
 import Shared._
 

@@ -31,7 +31,6 @@ object Funnel {
                 tsCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     val stepArr = array(steps.map(lit): _*)
-    val nullTs = lit(null).cast("bigint")
     events
       .where(col(typeCol).isin(steps: _*))
       .select(col(entity), col(tsCol).cast("bigint").as("__ts"),

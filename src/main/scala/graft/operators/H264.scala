@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** H.264/AVC (ISO/IEC 14496-10) Annex-B STRUCTURAL decode — the
   * compressed-video seam of the multimodal surface (build brief;
@@ -100,10 +99,6 @@ object H264 {
       bits(0L, len - 1); bits(v, len)
     }
     def se(k: Int): Unit = ue(if (k > 0) 2 * k - 1 else -2 * k)
-    def byteArray(b: Array[Byte]): Unit = {
-      var i = 0
-      while (i < b.length) { bits(b(i) & 0xffL, 8); i += 1 }
-    }
     /** rbsp_trailing_bits(): stop bit then zero-pad to alignment. */
     def trailing(): Unit = { bit(1); while (n != 0) bit(0) }
     def toBytes: Array[Byte] = {

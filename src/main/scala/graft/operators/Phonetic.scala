@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Phonetic blocking for entity resolution: Soundex codes collapse
   * same-sounding name variants ("Robert"/"Rupert") onto one blocking

@@ -266,8 +266,6 @@ object Privacy {
       s"bins must be config-sized in [2, 1024], got $bins")
     require(eps > 0, s"epsilon must be positive, got $eps")
     require(salt.nonEmpty, "salt (the release seed) must be non-empty")
-    val spark = df.sparkSession
-    import spark.implicits._
     val width = (hi - lo) / bins
     val v = col(valueCol).cast("double")
     val clamped = when(v < lit(lo), lit(lo))

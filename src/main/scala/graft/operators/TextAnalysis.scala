@@ -38,16 +38,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "von", "zu", "den", "mit", "ist", "im"),
     "zh" -> Seq("的", "了", "是", "我", "不", "在", "有", "人", "这", "他"))
 
-  /** Marker-word occurrences: word-runs (lowercased, punctuation-bounded)
-    * that are in the lexicon — `regexp_count(lower(text), "\\b(w1|…)\\b")`
-    * semantics for ASCII markers. CJK ideographs each count as their own
-    * token (char-level fallback), so the single-char zh markers fire on
-    * UNSEGMENTED Chinese text too — the oracle formulation for those is a
-    * char-class occurrence count (`[的了…]`), since RE2's `\b` cannot
-    * match inside an ideograph run. */
-  private def markerHits(text: Column, words: Seq[String]): Column =
-    TextSketches.tokenHits(text, words)
-
   private val SortedLangs: Seq[String] = LangMarkers.keys.toSeq.sorted
 
   /** The shared fused-profile struct (ONE char scan for token/punct/upper/

@@ -71,7 +71,7 @@ class QuantizeFusedSpec extends SparkSpec {
     // force the interpreted path through a fresh expression eval
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types._
     val arr = new GenericArrayData(Array[Any](2.0f, -4.0f, 1.0f))
     val expr = QuantizeSymmetric(BoundReference(0, ArrayType(FloatType), nullable = true))

@@ -134,7 +134,7 @@ class FlightModelSpec extends SparkSpec {
       release: () => Unit)
 
   private def cachedRecipe(data: DataFrame,
-      pm: org.apache.spark.ml.PipelineModel, trainRatio: Double = 0.9,
+      pm: org.apache.spark.ml.PipelineModel, trainRatio: Double,
       seed: Long = 42L): CachedRecipe = {
     val transformed = pm.transform(data).cache()
     val totalRows = transformed.count()

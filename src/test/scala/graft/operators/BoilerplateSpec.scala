@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** C4-style corpus-level boilerplate removal: census threshold,

@@ -84,7 +84,6 @@ class ExperimentSpec extends SparkSpec {
   // ─────────────── mSPRT always-valid sequential test ───────────────
 
   test("msprt: null effect stays accepted, planted effect eventually rejects") {
-    import org.apache.spark.sql.functions._
     // 40 periods × 200 obs/arm; deterministic pseudo-noise from the id
     def corpus(uplift: Double) = spark.range(0, 16000).selectExpr(
         "id % 40 AS period", "(id DIV 40) % 2 = 0 AS treat",
@@ -108,7 +107,6 @@ class ExperimentSpec extends SparkSpec {
   }
 
   test("msprt: degenerate periods (arm below 2 obs) yield null ln_lambda, no reject") {
-    import org.apache.spark.sql.functions._
     val df = Seq(
       (0L, true, 1.0), (0L, false, 2.0), // 1 obs/arm at period 0
       (1L, true, 1.5), (1L, false, 2.5)) // cumulative: 2/arm at period 1

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Funnel semantics: strict ordering, tie rejection, greedy-earliest

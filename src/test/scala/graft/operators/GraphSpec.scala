@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -215,5 +214,49 @@ class GraphSpec extends SparkSpec {
     val b = Graph.linkPrediction(noisy, "src", "dst").collect().toSeq
     assert(a == b && a.size == 1)
     assert(a.head.getLong(0) == 1L && a.head.getLong(1) == 3L)
+  }
+
+  // ───────────────────── null endpoints (pageRank / hits) ─────────────────────
+
+  // 1→2, 1→3, 2→3, 4→3 (node 3 dangles), plus a null-src and a null-dst
+  // edge. Both operators drop an edge with a null endpoint, so nodes 5 and
+  // 6 never appear and the null edges change nothing.
+  private val baseEdges: Seq[(Option[Long], Option[Long])] =
+    Seq(1L -> 2L, 1L -> 3L, 2L -> 3L, 4L -> 3L).map { case (a, b) => (Some(a), Some(b)) }
+  private val nullEdges: Seq[(Option[Long], Option[Long])] =
+    Seq((None, Some(5L)), (Some(6L), None))
+
+  private def assertClose(got: Map[Long, Double], want: Map[Long, Double]): Unit = {
+    assert(got.keySet == want.keySet)
+    want.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-12, s"node $k: ${got(k)} != $v") }
+  }
+
+  test("pageRank drops null-endpoint edges: hand-computed ranks, same as without them") {
+    def run(edges: Seq[(Option[Long], Option[Long])]) =
+      Graph.pageRank(spark, edges.toDF("src", "dst"), 2)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val withNulls = run(baseEdges ++ nullEdges)
+    // N = 4, r0 = 1/4; rank = 0.15/N + 0.85·(Σ rank(src)/outdeg(src) + dangling/N)
+    //   iter 1: dangling 0.25 → 1, 4: 0.090625; 2: 0.196875; 3: 0.621875
+    //   iter 2: dangling 0.621875 → 1, 4: 0.1696484375; 2: 0.2081640625;
+    //           3: 0.4525390625
+    assertClose(withNulls, Map(1L -> 0.1696484375, 2L -> 0.2081640625,
+      3L -> 0.4525390625, 4L -> 0.1696484375))
+    assert(withNulls == run(baseEdges))
+  }
+
+  test("hits drops null-endpoint edges: hand-computed scores, same as without them") {
+    def run(edges: Seq[(Option[Long], Option[Long])]) =
+      Graph.hits(spark, edges.toDF("src", "dst"), 1)
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val withNulls = run(baseEdges ++ nullEdges)
+    // h0 = 1/4; authority = Σ hub(src) over in-edges = (0, 1/4, 3/4, 0),
+    // L1 total 1; hub = Σ authority(dst) over out-edges = (1, 3/4, 0, 3/4),
+    // L1 total 5/2 → (0.4, 0.3, 0, 0.3)
+    assertClose(withNulls.map { case (k, v) => k -> v._1 },
+      Map(1L -> 0.0, 2L -> 0.25, 3L -> 0.75, 4L -> 0.0))
+    assertClose(withNulls.map { case (k, v) => k -> v._2 },
+      Map(1L -> 0.4, 2L -> 0.3, 3L -> 0.0, 4L -> 0.3))
+    assert(withNulls == run(baseEdges))
   }
 }

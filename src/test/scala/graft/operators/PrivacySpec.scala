@@ -37,7 +37,6 @@ class PrivacySpec extends SparkSpec {
   // ─────────────── DP noisy-count release ───────────────
 
   test("dp release is deterministic per (group, salt) and salt-sensitive") {
-    import org.apache.spark.sql.functions._
     val df = spark.range(0, 1000)
       .selectExpr("CAST(id % 7 AS STRING) AS g")
     def release(salt: String) =
@@ -64,7 +63,6 @@ class PrivacySpec extends SparkSpec {
   // ─────────────── DP noisy sums/means ───────────────
 
   test("dp sums: clamping bounds an outlier's contribution (the ε claim)") {
-    import org.apache.spark.sql.functions._
     // one group with a 1e9 outlier: clamped to hi=100, the released sum
     // must sit near the clamped total (max |Laplace| at b=200 is
     // 200·52·ln2 ≈ 7.2e3 under the seeded 52-bit uniform), nowhere near 1e9
@@ -77,7 +75,6 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("dp sums: deterministic rerun, independent sum/count draws, mean is post-processing") {
-    import org.apache.spark.sql.functions._
     val df = spark.range(0, 2000)
       .selectExpr("CAST(id % 5 AS STRING) AS g", "CAST(id % 97 AS DOUBLE) AS v")
     def release(salt: String) =
@@ -102,7 +99,6 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("dp sums: small-group mean release floors its denominator at 1") {
-    import org.apache.spark.sql.functions._
     // groups of size 1: n_noisy can land below 1 (or negative); the
     // mean must divide by the floored denominator, never blow up
     val df = (0 until 40).map(i => (s"g$i", 10.0)).toDF("g", "v")
@@ -217,7 +213,6 @@ class PrivacySpec extends SparkSpec {
   // ─────────────── DP noisy quantile (exponential mechanism) ───────────────
 
   test("dp quantile: high-epsilon release lands at the true median cell") {
-    import org.apache.spark.sql.functions._
     // 10k values uniform on [0, 100): true median 50; at eps=50 the
     // utility term dominates every Gumbel draw (score gap between the
     // best and second-best cell is eps/2 = 25 per unit rank error,
@@ -233,7 +228,6 @@ class PrivacySpec extends SparkSpec {
   }
 
   test("dp quantile: deterministic rerun, salt-sensitive, q respected") {
-    import org.apache.spark.sql.functions._
     val df = spark.range(0, 5000)
       .selectExpr("CAST(id % 3 AS STRING) AS g",
         "CAST((id * 13) % 200 AS DOUBLE) AS v")

@@ -70,7 +70,6 @@ class ProductQuantizationSpec extends SparkSpec {
   // ─────────────── OPQ (rotation + PQ) ───────────────
 
   test("opq rotation is orthogonal and cuts distortion on cross-subspace correlation") {
-    import org.apache.spark.sql.functions._
     // dims (i, i+4) are strongly correlated ACROSS the subspace
     // boundary (x[i+4] = x[i] + small noise): independent per-subspace
     // codebooks pay for the shared signal twice, while a rotation can
@@ -105,7 +104,6 @@ class ProductQuantizationSpec extends SparkSpec {
   }
 
   test("opq training is deterministic (same model twice)") {
-    import org.apache.spark.sql.functions._
     val corpus = spark.range(0, 300).map { i =>
       val r = new scala.util.Random(i)
       (i, Seq.fill(8)(r.nextGaussian().toFloat))
@@ -186,7 +184,6 @@ class ProductQuantizationSpec extends SparkSpec {
   /** (raw, opq) mean squared reconstruction error via the public pieces. */
 
   test("trainOpqSampled: keep-better policy never publishes a worse model") {
-    import org.apache.spark.sql.functions._
     // planted cross-subspace correlation (the case OPQ exists for)
     val corpus = spark.range(0, 1200).map { i =>
       val r = new scala.util.Random(i)

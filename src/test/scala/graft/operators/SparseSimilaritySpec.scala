@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Inverted-index TF-IDF similarity: identical docs score 1, overlap ranks

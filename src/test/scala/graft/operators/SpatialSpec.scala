@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Grid-bucketed radius join semantics ([[Spatial.radiusJoin]]). */

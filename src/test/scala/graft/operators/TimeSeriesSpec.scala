@@ -1,8 +1,6 @@
 package graft.operators
 // (rollingAnomaly coverage appended below)
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Resample + forward-fill semantics: grid coverage, gap fill, null heads. */

@@ -105,7 +105,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactionPlan is per-partition: identical files in two partitions get identical bins") {
-    import org.apache.spark.sql.functions._
     val files = (for (p <- Seq("a", "b"); i <- 0 until 6)
       yield (p, f"f$i", 700L + i * 10)).toDF("part", "path", "bytes")
     val plan = Layout.compactionPlan(files, "part", "path", "bytes", 1500L)

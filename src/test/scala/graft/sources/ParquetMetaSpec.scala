@@ -31,7 +31,6 @@ class ParquetMetaSpec extends SparkSpec {
   }
 
   test("multi-file layout: one chunk row per file per column") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pmeta_multi").toString
     spark.range(300).select(col("id"), (col("id") % 7).as("v"))
       .repartition(3).write.mode("overwrite").parquet(dir)
