@@ -102,48 +102,19 @@ case class WordNGrams(child: Expression, ns: Seq[Int])
     copy(child = c)
 }
 
-/** Fused fixed-width token re-chunking — tokens joined in `chunk`-sized
-  * lines (words joined by `wordSep`, lines by `lineSep`), replacing the
-  * `array_join(transform(sequence(…), i -> array_join(slice(…))), sep)`
-  * higher-order chain that derives line structure from a single-line
-  * token stream (the q_x_repetition gate's 8-token lines).
-  *
-  * Parity contract with the HOF twin (spec-gated), character for
-  * character:
-  *   - the line count is `((len − 1) / chunk)` under Spark's int→double
-  *     division truncated toward zero, plus one — an EMPTY token array
-  *     yields ONE empty line (""), exactly like
-  *     `sequence(0, cast((size-1)/chunk as long))`;
-  *   - null tokens are skipped inside a line (array_join semantics);
-  *   - a null token array is null. */
-object ChunkJoin {
-  /** Delegates to [[ChunkSegments.compute]] — one chunk loop to
-    * maintain, not two. The empty-array edge is preserved: zero
-    * segments concatWs to "" exactly like the HOF's one empty line. */
-  def compute(arr: ArrayData, chunk: Int, wordSep: UTF8String,
-      lineSep: UTF8String): UTF8String = {
-    val segs = ChunkSegments.compute(arr, chunk, wordSep)
-    val n = segs.numElements()
-    val lines = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) { lines(i) = segs.getUTF8String(i); i += 1 }
-    UTF8String.concatWs(lineSep, lines: _*)
-  }
-
-  def column(tokens: Column, chunk: Int, wordSep: String,
-      lineSep: String): Column =
-    ColumnBridge.column(ChunkJoin(ColumnBridge.expression(tokens), chunk,
-      wordSep, lineSep))
-}
-
 /** Fused non-overlapping chunk SEGMENTS — `ceil(len/chunk)` strings of
   * `chunk` tokens joined by `sep` (the boilerplate-census segment
   * construction: one output element per segment, never per token),
   * replacing the `transform(sequence(0, ceil(n/c)−1), i ->
-  * array_join(slice(…)))` HOF chain. Same parity rules as [[ChunkJoin]]
-  * (null tokens skipped inside a segment; null array is null); an EMPTY
+  * array_join(slice(…)))` HOF chain. Null tokens are skipped inside a
+  * segment (array_join semantics); a null array is null; an EMPTY
   * token array yields an EMPTY segment array (the HOF form was only ever
-  * planned behind a non-empty-text filter). */
+  * planned behind a non-empty-text filter).
+  *
+  * Fixed-width LINES are `array_join(ChunkSegments.column(toks, n, " "),
+  * "\n")`: an empty token array then gives "" — one empty line, exactly
+  * the `array_join(transform(sequence(0, (size-1)/n), …), "\n")` twin
+  * (spec-gated in WordNGramsFusedSpec, generated inputs included). */
 object ChunkSegments {
   def compute(arr: ArrayData, chunk: Int, sep: UTF8String): ArrayData = {
     val len = arr.numElements()
@@ -194,175 +165,6 @@ case class ChunkSegments(child: Expression, chunk: Int, sep: String)
       "org.apache.spark.unsafe.types.UTF8String")
     defineCodeGen(ctx, ev,
       c => s"graft.functions.ChunkSegments.compute($c, $chunk, $sepRef)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** Fused string-field join over an `array<struct>` — extracts one
-  * string field from each struct and joins with `sep`, replacing the
-  * `array_join(transform(arr, s -> s.getField(f)), sep)` HOF pair on
-  * post-aggregate reassembly paths (ordered-concat of
-  * `sort_array(collect_list(struct(idx, seg)))`). Null structs and
-  * null field values are SKIPPED (array_join semantics); a null array
-  * is null. */
-object StructFieldJoin {
-  /** Delegates to [[StructFieldExtract.compute]] — concatWs SKIPS the
-    * null elements Extract keeps, which is exactly the
-    * array_join-over-transform null contract. One extraction loop. */
-  def compute(arr: ArrayData, ordinal: Int, nFields: Int,
-      sep: UTF8String): UTF8String = {
-    val extracted = StructFieldExtract.compute(arr, ordinal, nFields)
-    val n = extracted.numElements()
-    val parts = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) {
-      if (!extracted.isNullAt(i)) parts(i) = extracted.getUTF8String(i)
-      i += 1
-    }
-    UTF8String.concatWs(sep, parts: _*)
-  }
-
-  def column(arr: Column, fieldName: String, sep: String): Column =
-    ColumnBridge.column(StructFieldJoin(ColumnBridge.expression(arr),
-      fieldName, sep))
-}
-
-case class StructFieldJoin(child: Expression, fieldName: String, sep: String)
-    extends UnaryExpression {
-
-  override def prettyName: String = "struct_field_join"
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-        if st.fields.exists(f => f.name == fieldName &&
-          f.dataType == StringType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct> with a string field " +
-        s"'$fieldName', got ${other.catalogString}")
-  }
-
-  @transient private lazy val structType =
-    child.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-  // indexWhere with the SAME predicate the type check used — fieldIndex
-  // returns the FIRST field with the name, which on a struct with
-  // duplicate field names could be a non-string occurrence the check
-  // never looked at (checked-field / read-field mismatch)
-  @transient private lazy val ordinal = structType.fields.indexWhere(f =>
-    f.name == fieldName && f.dataType == StringType)
-  @transient private lazy val sepU = UTF8String.fromString(sep)
-
-  override def nullSafeEval(input: Any): Any =
-    StructFieldJoin.compute(input.asInstanceOf[ArrayData], ordinal,
-      structType.size, sepU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sepRef = ctx.addReferenceObj("sep", sepU,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.StructFieldJoin.compute($c, $ordinal, ${structType.size}, $sepRef)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** Fused string-field EXTRACTION over an `array<struct>` — the array
-  * form of [[StructFieldJoin]], replacing
-  * `transform(arr, s -> s.getField(f))` (CodegenFallback) on the
-  * sorted-struct → payload-array idiom (prefix-filter set joins,
-  * rarity-ordered token sets). Null structs and null field values
-  * become NULL ELEMENTS (transform semantics — not skipped); a null
-  * array is null. */
-object StructFieldExtract {
-  def compute(arr: ArrayData, ordinal: Int, nFields: Int): ArrayData = {
-    val n = arr.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val row = arr.getStruct(i, nFields)
-        if (!row.isNullAt(ordinal)) out(i) = row.getUTF8String(ordinal)
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def column(arr: Column, fieldName: String): Column =
-    ColumnBridge.column(StructFieldExtract(ColumnBridge.expression(arr),
-      fieldName))
-}
-
-case class StructFieldExtract(child: Expression, fieldName: String)
-    extends UnaryExpression {
-
-  override def prettyName: String = "struct_field_extract"
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-        if st.fields.exists(f => f.name == fieldName &&
-          f.dataType == StringType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct> with a string field " +
-        s"'$fieldName', got ${other.catalogString}")
-  }
-
-  @transient private lazy val structType =
-    child.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-  // indexWhere with the SAME predicate the type check used — fieldIndex
-  // returns the FIRST field with the name, which on a struct with
-  // duplicate field names could be a non-string occurrence the check
-  // never looked at (checked-field / read-field mismatch)
-  @transient private lazy val ordinal = structType.fields.indexWhere(f =>
-    f.name == fieldName && f.dataType == StringType)
-
-  override def nullSafeEval(input: Any): Any =
-    StructFieldExtract.compute(input.asInstanceOf[ArrayData], ordinal,
-      structType.size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.StructFieldExtract.compute($c, $ordinal, ${structType.size})")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-case class ChunkJoin(child: Expression, chunk: Int, wordSep: String,
-    lineSep: String) extends UnaryExpression {
-  require(chunk >= 1, s"chunk size must be >= 1, got $chunk")
-
-  override def prettyName: String = "chunk_join"
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
-
-  @transient private lazy val wsU = UTF8String.fromString(wordSep)
-  @transient private lazy val lsU = UTF8String.fromString(lineSep)
-
-  override def nullSafeEval(input: Any): Any =
-    ChunkJoin.compute(input.asInstanceOf[ArrayData], chunk, wsU, lsU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wsRef = ctx.addReferenceObj("wordSep", wsU,
-      "org.apache.spark.unsafe.types.UTF8String")
-    val lsRef = ctx.addReferenceObj("lineSep", lsU,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ChunkJoin.compute($c, $chunk, $wsRef, $lsRef)")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =

@@ -1,13 +1,9 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructField, StructType}
 
@@ -75,7 +71,8 @@ object RankTopKAgg {
     * rides as a constructor param only so tests can exercise it without
     * materializing 256 MB; production buffers always get the default. */
   final class Buffer(val k: Int, val dense: Boolean,
-      maxRetainedBytes: Long = RankTopKAgg.MaxRetainedBytes) {
+      maxRetainedBytes: Long = RankTopKAgg.MaxRetainedBytes)
+      extends TopKEntries.Buffer {
 
     /** Threshold key multiset — keys descending would be natural, but
       * TreeMap's firstKey (smallest) IS the threshold, so natural
@@ -103,6 +100,9 @@ object RankTopKAgg {
     private var retainedBytes = 0L
 
     def size: Int = rows.length
+    def ordAt(i: Int): Long = ords(i)
+    def tieAt(i: Int): Long = ties(i)
+    def rowAt(i: Int): UnsafeRow = rows(i)
 
     private def belowT(o: Long, t: Long): Boolean =
       tValid && (o < tOrd || (o == tOrd && t < tTie))
@@ -162,7 +162,7 @@ object RankTopKAgg {
     }
 
     /** Drop retained rows that fell below the (risen) threshold. */
-    def compact(): Unit = {
+    override def compact(): Unit = {
       if (!tValid) return
       var w = 0
       var i = 0
@@ -180,13 +180,6 @@ object RankTopKAgg {
       rows.dropRightInPlace(n - w)
       retainedBytes = bytes
     }
-
-    /** Survivor indices in (ord, tie) DESCENDING order (compacted). */
-    def sortedIndices: Array[Int] = {
-      compact()
-      (0 until rows.length).toArray.sortWith((a, b) =>
-        ords(a) > ords(b) || (ords(a) == ords(b) && ties(a) > ties(b)))
-    }
   }
 }
 
@@ -198,61 +191,17 @@ case class RankTopKAgg(
     dense: Boolean, nullAsLowest: Boolean = false,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[RankTopKAgg.Buffer] with TernaryLike[Expression] {
+  extends TopKEntries[RankTopKAgg.Buffer] {
 
   require(k > 0, s"k must be positive, got $k")
-
-  override def first: Expression = ord
-  override def second: Expression = tie
-  override def third: Expression = payload
 
   override def prettyName: String = if (dense) "dense_rank_top_k" else "rank_top_k"
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("p", payload.dataType, nullable = false),
     StructField("r", IntegerType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-
-  @transient private lazy val wrap = UnsafeProjection.create(Array(payload.dataType))
-
-  @transient private lazy val ordIsLong =
-    ord.dataType == org.apache.spark.sql.types.LongType
 
   override def createAggregationBuffer(): RankTopKAgg.Buffer =
     new RankTopKAgg.Buffer(k, dense)
-
-  override def update(b: RankTopKAgg.Buffer, input: InternalRow): RankTopKAgg.Buffer = {
-    val o = ord.eval(input)
-    // same long-ord null contract as TopKAgg: the null sentinel is a
-    // real long, so a nullAsLowest caller must prove non-nullability
-    // (the rewrite rule does) — fail loudly, never rank wrongly
-    if (o == null && nullAsLowest && ordIsLong)
-      throw new IllegalStateException(
-        "rank_top_k with a LONG ord and nullAsLowest met a NULL ord value — " +
-          "the null sentinel is a real long; wrap the ord in coalesce")
-    if (o != null || nullAsLowest) {
-      val ov =
-        if (o == null) TopKAgg.NullKey
-        else if (ordIsLong) o.asInstanceOf[Number].longValue()
-        else TopKAgg.sortableKey(o.asInstanceOf[Number].doubleValue())
-      val t = tie.eval(input)
-      val tl = if (t == null) Long.MinValue else t.asInstanceOf[Number].longValue()
-      b.insert(ov, tl, wrap(InternalRow(payload.eval(input))).copy())
-    }
-    b
-  }
-
-  override def merge(b: RankTopKAgg.Buffer, other: RankTopKAgg.Buffer): RankTopKAgg.Buffer = {
-    // a partial buffer retains EVERY row that could rank <= k within its
-    // partition; a row dropped there had > k rows above it locally, so
-    // it has > k above it globally — merging retained sets loses nothing
-    var i = 0
-    val n = other.size
-    while (i < n) {
-      b.insert(other.ords(i), other.ties(i), other.rows(i))
-      i += 1
-    }
-    b
-  }
 
   override def eval(b: RankTopKAgg.Buffer): Any = {
     val idx = b.sortedIndices
@@ -268,50 +217,10 @@ case class RankTopKAgg(
       if (!isTie) { rank = i + 1; denseRank += 1 }
       prevOrd = b.ords(j); prevTie = b.ties(j)
       val r = if (dense) denseRank else rank
-      val p = b.rows(j).get(0, payload.dataType) match {
-        case ir: InternalRow => ir.copy()
-        case v => v
-      }
-      out(i) = InternalRow(p, r)
+      out(i) = InternalRow(payloadAt(b, j), r)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def serialize(b: RankTopKAgg.Buffer): Array[Byte] = {
-    b.compact()
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(b.size)
-    var i = 0
-    while (i < b.size) {
-      out.writeLong(b.ords(i)); out.writeLong(b.ties(i))
-      val bytes = b.rows(i).getBytes
-      out.writeInt(bytes.length); out.write(bytes)
-      i += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): RankTopKAgg.Buffer = {
-    // re-inserting rebuilds the threshold structure exactly: the wire
-    // format is just the retained rows, k/dense live in the expression
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val b = new RankTopKAgg.Buffer(k, dense)
-    val n = in.readInt()
-    var i = 0
-    while (i < n) {
-      val o = in.readLong(); val t = in.readLong()
-      val len = in.readInt()
-      val rowBytes = new Array[Byte](len)
-      in.readFully(rowBytes)
-      val row = new UnsafeRow(1)
-      row.pointTo(rowBytes, len)
-      b.insert(o, t, row)
-      i += 1
-    }
-    b
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): RankTopKAgg =

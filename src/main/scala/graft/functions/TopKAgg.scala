@@ -1,12 +1,7 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType}
@@ -53,11 +48,15 @@ object TopKAgg {
     * Ord keys are pre-embedded longs ([[sortableKey]] for doubles; raw
     * values for long ords), so the heap itself is type-agnostic and a
     * long primary never rounds through a double (exact above 2^53). */
-  final class Buffer(val k: Int) {
+  final class Buffer(val k: Int) extends TopKEntries.Buffer {
     val ords = new Array[Long](k)
     val ties = new Array[Long](k)
     val rows = new Array[UnsafeRow](k)
     var size = 0
+
+    def ordAt(i: Int): Long = ords(i)
+    def tieAt(i: Int): Long = ties(i)
+    def rowAt(i: Int): UnsafeRow = rows(i)
 
     private def less(o1: Long, t1: Long, o2: Long, t2: Long): Boolean =
       o1 < o2 || (o1 == o2 && t1 < t2)
@@ -96,14 +95,6 @@ object TopKAgg {
         ords(0) = o; ties(0) = t; rows(0) = row
         siftDown()
       }
-
-    /** Indices of the heap entries in (ord, tie) DESCENDING order.
-      * Compared directly, NOT by negating the keys — −Long.MinValue
-      * wraps to itself, which would rank a MinValue tie (a null tie, or
-      * the bitwise-NOT of a MaxValue ascending tie) as the LARGEST. */
-    def sortedIndices: Array[Int] =
-      (0 until size).toArray.sortWith((a, b) =>
-        ords(a) > ords(b) || (ords(a) == ords(b) && ties(a) > ties(b)))
   }
 }
 
@@ -121,103 +112,17 @@ case class TopKAgg(
     nullAsLowest: Boolean = false,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKAgg.Buffer] with TernaryLike[Expression] {
+  extends TopKEntries[TopKAgg.Buffer] {
 
   require(k > 0, s"k must be positive, got $k")
 
-  override def first: Expression = ord
-  override def second: Expression = tie
-  override def third: Expression = payload
-
   override def prettyName: String = "top_k"
   override def dataType: DataType = ArrayType(payload.dataType, containsNull = false)
-  override def nullable: Boolean = false
-
-  // 1-field row wrapper so any payload type (struct or atomic) serializes
-  // through UnsafeRow uniformly
-  @transient private lazy val wrap = UnsafeProjection.create(Array(payload.dataType))
-
-  // a LONG ord ranks by its own value (lossless above 2^53 — the double
-  // embedding would collide there); everything else embeds via sortableKey
-  @transient private lazy val ordIsLong =
-    ord.dataType == org.apache.spark.sql.types.LongType
 
   override def createAggregationBuffer(): TopKAgg.Buffer = new TopKAgg.Buffer(k)
 
-  override def update(b: TopKAgg.Buffer, input: InternalRow): TopKAgg.Buffer = {
-    val o = ord.eval(input)
-    // long-ord mode keys the heap on the RAW value, so the null sentinel
-    // (Long.MinValue) is a real long — an ACTUAL null under nullAsLowest
-    // would silently tie with real MinValue values. The rewrite rule
-    // proves non-nullability before building this; a direct caller who
-    // didn't gets a clear error at the first null, not a wrong ranking.
-    // (A constructor require would false-positive: plan transformations
-    // rebuild this expression with conservatively-nullable children.)
-    if (o == null && nullAsLowest && ordIsLong)
-      throw new IllegalStateException(
-        "top_k with a LONG ord and nullAsLowest met a NULL ord value — " +
-          "the null sentinel is a real long; wrap the ord in coalesce")
-    if (o != null || nullAsLowest) {
-      val ov =
-        if (o == null) TopKAgg.NullKey
-        else if (ordIsLong) o.asInstanceOf[Number].longValue()
-        else TopKAgg.sortableKey(o.asInstanceOf[Number].doubleValue())
-      val t = tie.eval(input)
-      val tl = if (t == null) Long.MinValue else t.asInstanceOf[Number].longValue()
-      b.insert(ov, tl, wrap(InternalRow(payload.eval(input))).copy())
-    }
-    b
-  }
-
-  override def merge(b: TopKAgg.Buffer, other: TopKAgg.Buffer): TopKAgg.Buffer = {
-    var i = 0
-    while (i < other.size) {
-      b.insert(other.ords(i), other.ties(i), other.rows(i))
-      i += 1
-    }
-    b
-  }
-
   override def eval(b: TopKAgg.Buffer): Any =
-    new GenericArrayData(b.sortedIndices.map { i =>
-      b.rows(i).get(0, payload.dataType) match {
-        case r: InternalRow => r.copy()
-        case v => v
-      }
-    })
-
-  override def serialize(b: TopKAgg.Buffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(b.k); out.writeInt(b.size)
-    var i = 0
-    while (i < b.size) {
-      out.writeLong(b.ords(i)); out.writeLong(b.ties(i))
-      val bytes = b.rows(i).getBytes
-      out.writeInt(bytes.length); out.write(bytes)
-      i += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKAgg.Buffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val b = new TopKAgg.Buffer(in.readInt())
-    val n = in.readInt()
-    var i = 0
-    while (i < n) {
-      val o = in.readLong(); val t = in.readLong()
-      val len = in.readInt()
-      val rowBytes = new Array[Byte](len)
-      in.readFully(rowBytes)
-      val row = new UnsafeRow(1)
-      row.pointTo(rowBytes, len)
-      b.insert(o, t, row)
-      i += 1
-    }
-    b
-  }
+    new GenericArrayData(b.sortedIndices.map(payloadAt(b, _)))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
     copy(mutableAggBufferOffset = newOffset)

@@ -793,11 +793,10 @@ private[graft] object TextGates {
     // (doc, n, gram) count shuffle covers all four gram sizes.
     Gate("q_x_repetition", (s, dir) => {
       val toks = split(trim(col("text")), "\\s+")
-      // fused 8-token line derivation (ChunkJoin) — the HOF
-      // array_join(transform(sequence(...))) twin is spec-pinned in
-      // WordNGramsFusedSpec; this per-token loop plus the gram emission
-      // inside gopherSignals were the gate's interpreted hot paths
-      val mltext = graft.functions.ChunkJoin.column(toks, 8, " ", "\n")
+      // 8-token lines: the fused ChunkSegments under a plain array_join
+      // (no lambda; the HOF twin is spec-pinned in WordNGramsFusedSpec)
+      val mltext = array_join(
+        graft.functions.ChunkSegments.column(toks, 8, " "), "\n")
       val d = tw(s, dir, "documents").select(col("doc_id"), mltext.as("mtext"))
       graft.operators.Repetition.gopherSignals(d, "doc_id", "mtext")
         .orderBy(col("doc_id"))

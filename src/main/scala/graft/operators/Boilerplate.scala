@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   * output row per segment, never per token, WholeStageCodegen); the census is one
   * segment-keyed aggregate with map-side partial distinct; membership is
   * a segment-keyed equi-join; reassembly is one doc-keyed aggregate
-  * whose ordered concat uses `sort_array(collect_list(struct(idx, seg)))`
-  * — deterministic under any shuffle order. Nothing quadratic, nothing
-  * single-partition; every shuffle key (segment hash, doc id) is
-  * naturally high-cardinality.
+  * whose ordered concat is `array_join` over the `seg` field of
+  * `sort_array(collect_list(struct(idx, seg)))` — Catalyst's own
+  * codegen'd array expressions, deterministic under any shuffle order.
+  * Nothing quadratic, nothing single-partition; every shuffle key
+  * (segment hash, doc id) is naturally high-cardinality.
   *
   * Doc-distinct (not raw occurrence) counting makes the criterion
   * robust to a single spammy document repeating its own segment.
@@ -37,11 +38,11 @@ object Boilerplate {
     require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val toks = split(trim(col(textCol)), "\\s+")
-    // segment construction and reassembly are FUSED expressions
-    // (ChunkSegments / StructFieldJoin) — the transform(sequence(...))
-    // and array_join(transform(...)) HOF chains they replace are
-    // CodegenFallback, and segment construction is the per-token hot
-    // loop of the whole pass (parity spec: WordNGramsFusedSpec)
+    // segment construction is the fused ChunkSegments expression — the
+    // transform(sequence(...)) HOF chain it replaces is CodegenFallback,
+    // and this is the per-token hot loop of the whole pass (parity spec:
+    // WordNGramsFusedSpec). Reassembly needs no lambda: `.getField` over
+    // the sorted struct array is Catalyst's GetArrayStructFields.
     val segs = df
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol),
@@ -53,10 +54,10 @@ object Boilerplate {
     segs.join(census, "__seg")
       .groupBy(col(idCol))
       .agg(
-        graft.functions.StructFieldJoin.column(
+        array_join(
           sort_array(collect_list(when(col("__ndocs") < minDocs,
-            struct(col("__idx"), col("__seg"))))),
-          "__seg", " ").as("clean_text"),
+            struct(col("__idx"), col("__seg"))))).getField("__seg"),
+          " ").as("clean_text"),
         count(when(col("__ndocs") < minDocs, lit(1))).as("n_kept"),
         count(when(col("__ndocs") >= minDocs, lit(1))).as("n_dropped"))
   }

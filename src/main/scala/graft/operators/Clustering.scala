@@ -281,7 +281,7 @@ object Clustering {
       .agg(sort_array(collect_list(struct(col("pos"), col("c"))))
         .as("__pc"))
       .select(col(labelCol).as("__clabel"),
-        expr("transform(__pc, p -> cast(p.c as float))").as("__cvec"))
+        col("__pc").getField("c").cast("array<float>").as("__cvec"))
     val scored = df.select(col(idCol), col(labelCol), col(vecCol))
       .crossJoin(broadcast(cvecs))
       .select(col(idCol), col(labelCol), col("__clabel"),

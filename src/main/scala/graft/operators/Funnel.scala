@@ -384,8 +384,8 @@ object Funnel {
       .where(col("__rn") <= depth)
       .groupBy(col(userCol))
       .agg(array_join(
-        transform(array_sort(collect_list(struct(col("__rn"),
-          col(typeCol).as("t")))), s => s.getField("t")), ">").as("path"))
+        sort_array(collect_list(struct(col("__rn"), col(typeCol).as("t"))))
+          .getField("t"), ">").as("path"))
       .groupBy(col("path"))
       .agg(count(lit(1)).cast("bigint").as("n_users"))
       .orderBy(col("n_users").desc, col("path"))

@@ -85,10 +85,9 @@ object SetSimJoin {
       // null-free struct array
       .agg(sort_array(collect_list(struct(col("__df"), col("__t")))).as("__sd"))
       .select(col("__id"),
-        // fused field extraction — the transform(getField) HOF twin is
-        // CodegenFallback (parity spec: WordNGramsFusedSpec)
-        graft.functions.StructFieldExtract.column(col("__sd"), "__t")
-          .as("__set"),
+        // field access over an array<struct> is Catalyst's own
+        // GetArrayStructFields — codegen'd, no lambda
+        col("__sd").getField("__t").as("__set"),
         size(col("__sd")).as("__n")))
     // three plan references consume `sets` (the prefix explode and both
     // verification joins), and the round-12 q_x_setjoin plan shows ZERO

@@ -56,9 +56,11 @@ object SetSketch {
         element_at(sketch, k).cast("double"))
 
   /** Sketch of the UNION of the underlying sets — exact closure: the k
-    * smallest of K(A) ∪ K(B) are the k smallest of A ∪ B. Map-side. */
+    * smallest of K(A) ∪ K(B) are the k smallest of A ∪ B. Map-side.
+    * `sort_array`, not `array_sort`: the latter plans a comparator
+    * lambda even without one; both order a null-free sketch alike. */
   def unionSketch(a: Column, b: Column, k: Int): Column =
-    slice(array_sort(array_distinct(concat(a, b))), 1, k)
+    slice(sort_array(array_distinct(concat(a, b))), 1, k)
 
   /** Jaccard estimate: the fraction of the union sketch's values present
     * in BOTH input sketches (a value of K(A∪B) that lies in A is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.util.Using
 
 /** Sources and sinks (SURVEY.md §2.1, S1-S6).
   *
@@ -63,10 +64,13 @@ object IO {
     csvSafeColumns(df)
       .coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(dir)
-    val part = Files.list(Paths.get(dir)).filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith("part-") && n.endsWith(".csv")
-    }.findFirst.orElseThrow(() => new IllegalStateException(s"no part file in $dir"))
+    // Files.list holds an open directory handle until the stream closes
+    val part = Using.resource(Files.list(Paths.get(dir))) { files =>
+      files.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".csv")
+      }.findFirst.orElseThrow(() => new IllegalStateException(s"no part file in $dir"))
+    }
     val target = Paths.get(finalFile)
     Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
     target

@@ -158,9 +158,12 @@ class FullBatteryPlanAudit extends SparkSpec {
   // (isotonic apply, 256-bin fit, 10M rows, SURVEY §8.12) to 30× (int8
   // quantizer, round-8 50M rung). The standing rule bans them from
   // data-sized per-row paths; this audit is the rule's enforcement: a new
-  // query that plans a lambda must either fuse (native expression — see
-  // QuantizeSymmetric, StepFloorLookup, NearestCentroid*) or be added
-  // here WITH a justification for why its HOF row volume is acceptable.
+  // query that plans a lambda must first try Catalyst's lambda-free
+  // array forms (`arr.getField(f)` over array<struct>, array_join,
+  // sort_array, a cast of the whole array), then fuse (native
+  // expression — see QuantizeSymmetric, StepFloorLookup,
+  // NearestCentroid*), or else be added here WITH a justification for
+  // why its HOF row volume is acceptable.
   //
   // Whitelist taxonomy (audited round 9):
   //  [panel]   HOF over a config-sized relation (literal ladders, k-row
@@ -179,13 +182,14 @@ class FullBatteryPlanAudit extends SparkSpec {
     // [text] token/segment pipelines over documents — string-dominated,
     // seconds each at sf0.1 in BENCH_LAST.json (fuse the numeric cases
     // first; revisit any of these that crosses ~3 s or a 10× SF)
-    // q_x_repetition / q_x_rep_ratio: REMOVED round 10 — their gram/line
-    // loops are fused (WordNGrams / ChunkJoin) after q_x_repetition
-    // crossed this whitelist's own ~3 s revisit threshold (3.03 s in
-    // BENCH_r09); parity twins live in WordNGramsFusedSpec
-    // q_x_boilerplate: REMOVED round 10 — segment construction and
-    // reassembly fused (ChunkSegments / StructFieldJoin) after it
-    // crossed the ~3 s revisit threshold (3.53 s this round's bench)
+    // q_x_repetition / q_x_rep_ratio: REMOVED round 10 — the gram loop
+    // is the fused WordNGrams, the 8-token lines are ChunkSegments under
+    // a plain array_join, after q_x_repetition crossed this whitelist's
+    // own ~3 s revisit threshold (3.03 s in BENCH_r09); parity twins
+    // live in WordNGramsFusedSpec
+    // q_x_boilerplate: REMOVED round 10 — segments are the fused
+    // ChunkSegments; reassembly is array_join over `.getField` on the
+    // sorted struct array (GetArrayStructFields, no lambda)
     // q_x_minhash_bands: REMOVED round 11 — the band ladder unrolled
     // into literal xxhash64(slice) calls (bands is a build-time
     // constant); shingles/signature were already fused expressions
@@ -198,25 +202,28 @@ class FullBatteryPlanAudit extends SparkSpec {
     // calls (merges can't cross the space symbol), so the per-word
     // transform/filter/flatten lambdas are gone
     // q_x_setjoin / q_x_leakage: REMOVED round 10 — their one remaining
-    // lambda (the sorted-struct token extraction in SetSimJoin) is the
-    // fused StructFieldExtract now
+    // lambda (the sorted-struct token extraction in SetSimJoin) is a
+    // plain `.getField` (GetArrayStructFields) now
     "q_x_chunks" -> "[text] fixed-window chunk transform",
     "q_x_perplexity" -> "[text] token-ngram transform",
     "q_x_pmi" -> "[text] bigram zip_with",
     "q_x_pipeline2" -> "[text] corpus-pipeline shingle transforms",
     "q_f_hof" -> "[text] the HOF-surface gate itself (filter/exists/transform coverage)",
     // [panel] config-sized relations
-    "q_a_kmv_overlap" -> "[panel] set algebra over two k=48 sketch arrays, 1-row relation",
+    // q_a_kmv_overlap: REMOVED — unionSketch sorts with sort_array
+    // (array_sort plans a comparator lambda even without an argument)
     "q_x_ivf_recall" -> "[panel] nprobe-ladder filter over the bounded survivor panel",
     "q_x_ivf_recall_panel" -> "[panel] nprobe-ladder filter over the bounded survivor panel",
-    "q_x_silhouette" -> "[panel] k-row centroid float-cast before the broadcast",
+    // q_x_silhouette: REMOVED — the centroid float cast is
+    // `.getField("c").cast("array<float>")`, no per-element lambda
     // [postagg] HOF over per-entity COLLECTED arrays after the keyed
     // aggregate — row volume = entities, array lengths bounded by the
     // entity's own (filtered) events. Surfaced by the round-10 deep
     // expression walk: the old plan-STRING match truncated these plans
     // before the lambda (the exact blind spot the walk closes)
     "q_w_funnel" -> "[postagg] per-user funnel-slot fold over collected step events",
-    "q_w_paths" -> "[postagg] per-user <=depth path join over collected steps",
+    // q_w_paths: REMOVED — the path is array_join over `.getField` of
+    // the sort_array'd (rn, type) structs, no transform/array_sort
     // [parity] fused-expression twins at gate scale only
     "q_x_quantized" -> "[parity] gates the HOF quantize twin on a 200-row slice; data paths use quantizeFused")
 
@@ -250,14 +257,16 @@ class FullBatteryPlanAudit extends SparkSpec {
 }
 
 /** Shared physical-plan traversal for the audits: collect every node
-  * including subquery plans, unwrapping AdaptiveSparkPlanExec —
-  * a LEAF node whose inner plan `collect` cannot see. */
+  * including subquery plans, unwrapping AdaptiveSparkPlanExec and, once
+  * a query has run, its query stages — LEAF nodes whose inner plans
+  * `collect` cannot see. */
 object PlanWalk {
   import org.apache.spark.sql.execution.SparkPlan
-  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   def allNodes(p: SparkPlan): Seq[SparkPlan] =
     p.collectWithSubqueries { case n => n }.flatMap {
       case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+      case q: QueryStageExec => q +: allNodes(q.plan)
       case n => Seq(n)
     }
 }

@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Parity witnesses for the fused text expressions ([[WordNGrams]],
-  * [[ChunkJoin]]) against the higher-order-function formulations they
-  * replaced in the repetition battery — the HOF twins survive HERE, at
-  * spec scale only (the StepFloorLookup pattern): the data paths plan
-  * the fused expressions inside whole-stage codegen. */
+  * [[ChunkSegments]]) and for the lambda-free Catalyst forms the engine
+  * uses instead of array HOFs (`arr.getField(f)` over array<struct>,
+  * `array_join`, `sort_array`) against the higher-order-function
+  * formulations they replaced — the HOF twins survive HERE, at spec
+  * scale only (the StepFloorLookup pattern): the data paths plan the
+  * native forms inside whole-stage codegen. */
 class WordNGramsFusedSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,17 +72,20 @@ class WordNGramsFusedSpec extends SparkSpec {
     assert(out.find(_.getInt(0) == 2).get.isNullAt(1))
   }
 
-  test("ChunkJoin matches the array_join(transform(sequence)) HOF exactly") {
+  // fixed-width lines as the q_x_repetition gate builds them
+  private def lines(toks: Column, chunk: Int): Column =
+    array_join(ChunkSegments.column(toks, chunk, " "), "\n")
+
+  test("array_join(ChunkSegments) lines match the transform HOF") {
     val rows = fixtures.select(
-      ChunkJoin.column(col("toks"), 8, " ", "\n").as("fused"),
+      lines(col("toks"), 8).as("fused"),
       chunkHof(col("toks"), 8).as("hof")).collect()
     rows.foreach { r => assert(r.getString(0) == r.getString(1), r.toString) }
   }
 
-  test("ChunkJoin of an empty array is one empty line; null array is null") {
+  test("array_join(ChunkSegments) of an empty array is one empty line") {
     val df = Seq((Some(Seq.empty[String]), 1), (None, 2)).toDF("toks", "id")
-    val out = df.select(col("id"),
-      ChunkJoin.column(col("toks"), 8, " ", "\n").as("s")).collect()
+    val out = df.select(col("id"), lines(col("toks"), 8).as("s")).collect()
     assert(out.find(_.getInt(0) == 1).get.getString(1) == "")
     assert(out.find(_.getInt(0) == 2).get.isNullAt(1))
   }
@@ -109,7 +114,7 @@ class WordNGramsFusedSpec extends SparkSpec {
     assert(out.find(_.getInt(0) == 2).get.isNullAt(1))
   }
 
-  test("StructFieldJoin matches array_join(transform(getField)) incl. null skips") {
+  test("array_join(getField) matches array_join(transform(getField))") {
     val df = Seq(1).toDF("x").select(
       array(
         struct(lit(2).as("i"), lit("b").as("s")),
@@ -117,27 +122,27 @@ class WordNGramsFusedSpec extends SparkSpec {
         struct(lit(3).as("i"), lit(null).cast("string").as("s"))).as("arr"))
     val sorted = df.select(sort_array(col("arr")).as("arr"))
     val rows = sorted.select(
-      StructFieldJoin.column(col("arr"), "s", " ").as("fused"),
+      array_join(col("arr").getField("s"), " ").as("fused"),
       array_join(transform(col("arr"), e => e.getField("s")), " ").as("hof"))
       .collect()
     rows.foreach { r =>
       assert(r.getString(0) == r.getString(1), r.toString)
       assert(r.getString(0) == "a b") // null field skipped, order by i
     }
-    // a missing / non-string field is an analysis error, not a crash
+    // a missing field is an analysis error, not a crash
     intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(StructFieldJoin.column(col("arr"), "nope", " ")).collect()
+      df.select(array_join(col("arr").getField("nope"), " ")).collect()
     }
   }
 
-  test("StructFieldExtract matches transform(getField) incl. null elements") {
+  test("getField over array<struct> keeps nulls, like transform") {
     val df = Seq(1).toDF("x").select(
       array(
         struct(lit(2).as("i"), lit("b").as("s")),
         struct(lit(1).as("i"), lit("a").as("s")),
         struct(lit(3).as("i"), lit(null).cast("string").as("s"))).as("arr"))
     val rows = df.select(
-      StructFieldExtract.column(col("arr"), "s").as("fused"),
+      col("arr").getField("s").as("fused"),
       transform(col("arr"), e => e.getField("s")).as("hof")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1), r.toString)
@@ -146,24 +151,80 @@ class WordNGramsFusedSpec extends SparkSpec {
   }
 
   test("the fused expressions stay inside whole-stage codegen (no lambdas)") {
-    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.{GetArrayStructFields, HigherOrderFunction, LambdaFunction}
     // repartition blocks ConvertToLocalRelation from folding the literal
     // fixture away — the projection must actually plan
+    val structs = sort_array(arrays_zip(col("toks"), reverse(col("toks"))))
     val df = fixtures.repartition(2).select(
       WordNGrams.column(col("toks"), Seq(2, 3)).as("g"),
-      ChunkJoin.column(col("toks"), 8, " ", "\n").as("s"))
+      lines(col("toks"), 8).as("s"),
+      structs.getField("toks").as("f"),
+      array_join(structs.getField("toks"), " ").as("j"))
     df.collect() // finalize the adaptive plan so codegen spans are visible
     val plan = df.queryExecution.executedPlan
-    val hasHof = plan.collectWithSubqueries { case n => n }
-      .exists(_.expressions.exists(_.exists {
-        case _: HigherOrderFunction | _: LambdaFunction => true
-        case _ => false
-      }))
-    assert(!hasHof)
+    val exprs = graft.PlanWalk.allNodes(plan)
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists {
+      case _: HigherOrderFunction | _: LambdaFunction => true
+      case _ => false
+    })
+    assert(exprs.exists(_.isInstanceOf[GetArrayStructFields]), plan.toString)
     // the `*(n)` prefix is the WholeStageCodegen marker in the rendered
     // plan — a CodegenFallback expression would strip it from the Project
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan.toString).isDefined,
       plan.toString)
+  }
+
+  test("generated inputs: built-in array forms equal their HOF twins") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def orNull[A](g: Gen[A]): Gen[A] =
+      Gen.frequency(1 -> Gen.const(null.asInstanceOf[A]), 6 -> g)
+    val token = orNull(Gen.oneOf("a", "b", "cc", "", "d\u00e9j\u00e0", "x y"))
+    val toks = orNull(Gen.choose(0, 40).flatMap(Gen.listOfN(_, token)))
+    val struct = orNull(for {
+      i <- orNull(Gen.choose(-2, 2).map(Int.box))
+      s <- token
+    } yield Row(i, s))
+    val structs = orNull(Gen.choose(0, 12).flatMap(Gen.listOfN(_, struct)))
+    val longs = Gen.choose(0, 30).flatMap(Gen.listOfN(_,
+      Gen.oneOf(Gen.choose(-3L, 3L), Gen.oneOf(Long.MinValue, Long.MaxValue))))
+    val row = for { t <- toks; a <- structs; n <- longs } yield (t, a, n)
+    // the generated rows plus the edges every seed must keep covering:
+    // empty and all-null token / struct arrays
+    val edges = Seq(
+      (Nil, Nil, Nil), (List(null, null), List(null, Row(null, null)), List(0L, 0L)))
+    val data = ((0 until 400).map(i => row(Gen.Parameters.default, Seed(1000L + i)).get) ++
+      edges).zipWithIndex.map { case ((t, a, n), i) => Row(i, t, a, n) }
+    val schema = StructType(Seq(
+      StructField("id", IntegerType),
+      StructField("toks", ArrayType(StringType)),
+      StructField("arr", ArrayType(StructType(Seq(
+        StructField("i", IntegerType), StructField("s", StringType))))),
+      StructField("nums", ArrayType(LongType, containsNull = false))))
+    val df = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+      .repartition(3)
+    val chunks = 1 to 9
+    // the HOF twin's domain edge: at chunk 1 an empty array gives
+    // sequence(0, -1), whose i = -1 reaches slice(start = 0) and throws;
+    // the expected value there is the one empty line of every other chunk
+    def chunkHofTotal(toks: Column, c: Int): Column =
+      if (c > 1) chunkHof(toks, c)
+      else when(size(toks) === 0, lit("")).otherwise(chunkHof(toks, c))
+    val hofField = transform(col("arr"), e => e.getField("s"))
+    val out = df.select(Seq(col("id"),
+        col("arr").getField("s"), hofField,
+        array_join(col("arr").getField("s"), " "), array_join(hofField, " "),
+        sort_array(col("nums")), array_sort(col("nums"))) ++
+      chunks.flatMap(c => Seq(lines(col("toks"), c), chunkHofTotal(col("toks"), c))): _*)
+      .collect()
+    assert(out.length == data.length)
+    out.foreach { r =>
+      val at = s"id=${r.getInt(0)} row=${data(r.getInt(0))}"
+      (1 until r.length by 2).foreach(j => assert(r.get(j) == r.get(j + 1), s"col $j $at"))
+    }
   }
 
   test("SimHash60Md5 fused expression matches the oracled HOF ladder bit-for-bit") {
@@ -210,7 +271,7 @@ class WordNGramsFusedSpec extends SparkSpec {
       df.collect(); df.queryExecution.executedPlan
     }
     import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
-    assert(!plan.collectWithSubqueries { case n => n }
+    assert(!graft.PlanWalk.allNodes(plan)
       .exists(_.expressions.exists(_.exists {
         case _: HigherOrderFunction | _: LambdaFunction => true
         case _ => false

@@ -70,6 +70,20 @@ class IOSpec extends SparkSpec {
     assert(lines.size == 3)
   }
 
+  test("writeSingleCsv closes its directory listing (no descriptor leak)") {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val out = tmpDir("csv-fd")
+    val df = Seq((1, "x")).toDF("id", "v")
+    def sink(i: Int) = IO.writeSingleCsv(df, s"$out/dir", s"$out/final$i.csv")
+    (0 until 5).foreach(sink) // warm-up: Spark's own lazily opened files
+    val before = os.getOpenFileDescriptorCount
+    (5 until 35).foreach(sink)
+    val grown = os.getOpenFileDescriptorCount - before
+    info(s"open descriptors after 30 sinks: +$grown")
+    assert(grown < 15, s"30 sinks left $grown more open descriptors")
+  }
+
   test("jsonl sink + schema'd scan round-trips values, types, and nulls") {
     val out = tmpDir("jsonl-out")
     val df = Seq(
